@@ -109,29 +109,7 @@ object Tables {
     * Falls back to a count() job if the footer read fails. */
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
     require(names.contains(name), s"rowCount: not a base table: $name")
-    parquetPathRowCount(spark, s"$sfDir/$name.parquet")
+    Footers.rowCount(spark, Seq(s"$sfDir/$name.parquet"))
       .getOrElse(view(spark, sfDir, name).count())
   }
-
-  /** Footer-metadata row count of an arbitrary parquet path (file or
-    * flat directory) — the same driver-side shortcut as [[rowCount]]
-    * for gate-written intermediates. None when the footers can't be
-    * read; callers fall back to a count() job. */
-  def parquetPathRowCount(spark: SparkSession, path: String): Option[Long] =
-    scala.util.Try {
-      val conf = spark.sessionState.newHadoopConf()
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      val stats =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet"))
-        else Seq(fs.getFileStatus(p))
-      require(stats.nonEmpty)
-      stats.map { st =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try rd.getRecordCount finally rd.close()
-      }.sum
-    }.toOption
 }

@@ -1146,52 +1146,46 @@ private[functions] object PrestoStatements {
     // whole-stage codegen with map-side partial aggregation; packing
     // them into one aggregate plans the 4x-slower Expand, the qj0/q85
     // lesson kept from SURVEY §2.4).
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val (n, colRows) = try {
-      val nF = Future(df.count())
-      // launch every per-column pass before awaiting any: 3 jobs in
-      // flight is enough to fill the tail without fighting for cores
-      val aggFs = df.schema.fields.toSeq.map { f =>
-        val c = F.col(s"`${f.name}`")
-        val statable = f.dataType match {
-          case _: NumericType | StringType | DateType | TimestampType |
-              org.apache.spark.sql.types.TimestampNTZType |
-              org.apache.spark.sql.types.BooleanType => true
-          case _ => false // arrays/maps/structs: stats render NULL
-        }
-        if (!statable) (f, None: Option[Future[org.apache.spark.sql.Row]])
-        else {
+    def statable(f: org.apache.spark.sql.types.StructField): Boolean =
+      f.dataType match {
+        case _: NumericType | StringType | DateType | TimestampType |
+            org.apache.spark.sql.types.TimestampNTZType |
+            org.apache.spark.sql.types.BooleanType => true
+        case _ => false // arrays/maps/structs: stats render NULL
+      }
+    val fields = df.schema.fields.toSeq
+    // every per-column pass is submitted before any is awaited: 3 jobs
+    // in flight is enough to fill the tail without fighting for cores
+    val results = graft.Exec.overlap(3)(
+      (() => org.apache.spark.sql.Row(df.count())) +:
+        fields.filter(statable).map { f =>
+          val c = F.col(s"`${f.name}`")
           val isStr = f.dataType == StringType
-          (f, Some(Future(df.agg(
+          () => df.agg(
             F.count(c).as("nn"), F.countDistinct(c).as("ndv"),
             F.min(c).cast("string").as("lo"),
             F.max(c).cast("string").as("hi"),
             (if (isStr) F.sum(F.length(c)) else F.lit(null).cast("bigint"))
-              .as("sz")).head())))
-        }
+              .as("sz")).head()
+        })
+    val n = results.head.getLong(0)
+    val aggs = results.tail.iterator
+    val colRows = fields.map { f =>
+      if (!statable(f))
+        (f.name, None: Option[Long], None: Option[Long],
+          None: Option[Double], None: Option[Long],
+          None: Option[String], None: Option[String])
+      else {
+        val r = aggs.next()
+        val isStr = f.dataType == StringType
+        (f.name,
+          if (isStr && !r.isNullAt(4)) Some(r.getLong(4)) else None,
+          Some(r.getLong(1)),
+          Some(if (n == 0) 0.0 else 1.0 - r.getLong(0).toDouble / n),
+          None: Option[Long],
+          Option(r.getString(2)), Option(r.getString(3)))
       }
-      val nVal = Await.result(nF, Duration.Inf)
-      val rows = aggFs.map {
-        case (f, None) =>
-          (f.name, None: Option[Long], None: Option[Long],
-            None: Option[Double], None: Option[Long],
-            None: Option[String], None: Option[String])
-        case (f, Some(rf)) =>
-          val r = Await.result(rf, Duration.Inf)
-          val isStr = f.dataType == StringType
-          (f.name,
-            if (isStr && !r.isNullAt(4)) Some(r.getLong(4)) else None,
-            Some(r.getLong(1)),
-            Some(if (nVal == 0) 0.0
-              else 1.0 - r.getLong(0).toDouble / nVal),
-            None: Option[Long],
-            Option(r.getString(2)), Option(r.getString(3)))
-      }
-      (nVal, rows)
-    } finally pool.shutdown()
+    }
     val summary = (null: String, None: Option[Long], None: Option[Long],
       None: Option[Double], Some(n), None: Option[String],
       None: Option[String])

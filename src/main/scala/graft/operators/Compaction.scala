@@ -49,18 +49,9 @@ object Compaction {
     * Row counts read from each file's parquet footer — a metadata-only
     * O(KB) read per file, no data pages, no Spark job (the reference
     * reads `row_count` off its shard-metadata table the same way). */
-  def fileInfos(spark: SparkSession, dir: String): Seq[FileInfo] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
-        val rows = try reader.getRecordCount finally reader.close()
-        FileInfo(s.getPath.toUri.toString, s.getLen, rows)
-      }
-  }
+  def fileInfos(spark: SparkSession, dir: String): Seq[FileInfo] =
+    graft.Footers.read(spark, Seq(dir)).get.map(f =>
+      FileInfo(f.path.toUri.toString, f.bytes, f.rows))
 
   /** Greedy compaction-set planning, `CompactionSetCreator` semantics:
     * sort ascending by size, pack until the NEXT file would push the
@@ -97,51 +88,39 @@ object Compaction {
     * write-then-retire order holds per set regardless of interleaving.
     * Scratch directories are `_`-prefixed, which every parquet reader
     * ignores, so a crash mid-set leaves the table readable and the
-    * pass re-runnable. Failures propagate after all sets settle. */
+    * pass re-runnable. Failures propagate only after all sets settle,
+    * so no orphaned job keeps mutating the directory once compact()
+    * has returned. */
   private def executeSets(spark: SparkSession, dir: String,
       sets: Seq[Seq[String]], maxConcurrentSets: Int): Unit = {
     if (sets.isEmpty) return
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(math.max(1, maxConcurrentSets), sets.size))
-    try {
-      val jobs = sets.zipWithIndex.map { case (paths, i) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = {
-            val tmp = new org.apache.hadoop.fs.Path(dir,
-              s"_graft_compact_$i")
-            spark.read.parquet(paths: _*).coalesce(1)
-              .write.mode("overwrite").parquet(tmp.toString)
-            val part = fs.listStatus(tmp).find { s =>
-              s.isFile && s.getPath.getName.startsWith("part-") &&
-                s.getPath.getName.endsWith(".parquet")
-            }.getOrElse(sys.error(s"compaction set $i wrote no file"))
-            // job-scoped UUIDs keep renamed names collision-free; a
-            // rename that reports false (name collision with a stale
-            // crashed-run file, transient FS refusal) must abort the
-            // set BEFORE any delete — sources outlive every failure
-            val dst =
-              new org.apache.hadoop.fs.Path(dir, part.getPath.getName)
-            if (!fs.rename(part.getPath, dst))
-              sys.error(s"compaction set $i: rename to $dst failed; " +
-                "sources retained")
-            fs.delete(tmp, true)
-            // replacement committed — now retire the sources (the
-            // reference deletes old shards inside the same metadata
-            // transaction)
-            paths.foreach(p =>
-              fs.delete(new org.apache.hadoop.fs.Path(p), false))
-          }
-        })
+    graft.Exec.overlap(maxConcurrentSets)(sets.zipWithIndex.map {
+      case (paths, i) => () => {
+        val tmp = new org.apache.hadoop.fs.Path(dir, s"_graft_compact_$i")
+        spark.read.parquet(paths: _*).coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+        val part = fs.listStatus(tmp).find { s =>
+          s.isFile && s.getPath.getName.startsWith("part-") &&
+            s.getPath.getName.endsWith(".parquet")
+        }.getOrElse(sys.error(s"compaction set $i wrote no file"))
+        // job-scoped UUIDs keep renamed names collision-free; a
+        // rename that reports false (name collision with a stale
+        // crashed-run file, transient FS refusal) must abort the
+        // set BEFORE any delete — sources outlive every failure
+        val dst = new org.apache.hadoop.fs.Path(dir, part.getPath.getName)
+        if (!fs.rename(part.getPath, dst))
+          sys.error(s"compaction set $i: rename to $dst failed; " +
+            "sources retained")
+        fs.delete(tmp, true)
+        // replacement committed — now retire the sources (the
+        // reference deletes old shards inside the same metadata
+        // transaction)
+        paths.foreach(p =>
+          fs.delete(new org.apache.hadoop.fs.Path(p), false))
       }
-      // every set SETTLES (completes or fails) before any failure
-      // propagates — no orphaned job keeps mutating the directory
-      // after compact() has returned control to the caller
-      val failures = jobs.flatMap(j =>
-        scala.util.Try(j.get()).failed.toOption)
-      failures.headOption.foreach(throw _)
-    } finally pool.shutdown()
+    })
   }
 
   /** Compact a parquet directory in place: plan sets, rewrite each as
@@ -200,47 +179,18 @@ object Compaction {
     * the same metadata-only read as [[fileInfos]] (the reference keeps
     * shard ranges in its metadata table, `ShardRange`). The column
     * must be a timestamp (INT64 micros in the footer, converted to
-    * millis). Files without usable statistics are EXCLUDED, mirroring
-    * the reference's `temporalRange.isPresent` filter — a file whose
-    * range is unknown is never organized. */
+    * millis). Files without usable statistics (INT96 timestamps carry
+    * no min/max; an all-null column has no range) are EXCLUDED,
+    * mirroring the reference's `temporalRange.isPresent` filter — a
+    * file whose range is unknown is never organized. */
   def temporalFileInfos(spark: SparkSession, dir: String,
-      column: String): Seq[TemporalFileInfo] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .flatMap { s =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
-        try {
-          var lo = Long.MaxValue
-          var hi = Long.MinValue
-          var rows = 0L
-          reader.getFooter.getBlocks.forEach { block =>
-            rows += block.getRowCount
-            block.getColumns.forEach { cc =>
-              if (cc.getPath.toDotString == column) {
-                val st = cc.getStatistics
-                // INT96 timestamps carry no min/max — such a file has
-                // no usable range and is excluded below (write with
-                // spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS
-                // to organize temporally)
-                if (st != null && !st.isEmpty &&
-                    st.genericGetMin != null && st.genericGetMax != null) {
-                  lo = math.min(lo,
-                    st.genericGetMin.asInstanceOf[Number].longValue())
-                  hi = math.max(hi,
-                    st.genericGetMax.asInstanceOf[Number].longValue())
-                }
-              }
-            }
-          }
-          if (lo > hi) None
-          else Some(TemporalFileInfo(s.getPath.toUri.toString, s.getLen,
-            rows, lo / 1000L, hi / 1000L)) // footer micros → millis
-        } finally reader.close()
+      column: String): Seq[TemporalFileInfo] =
+    graft.Footers.read(spark, Seq(dir), Seq(column)).get.flatMap { f =>
+      f.ranges.get(column).map { case (lo, hi) =>
+        TemporalFileInfo(f.path.toUri.toString, f.bytes, f.rows,
+          lo / 1000L, hi / 1000L) // footer micros → millis
       }
-  }
+    }
 
   /** Temporal compaction-set planning: day buckets first, the
     * range comparator within a bucket, the same greedy bounds; sets

@@ -94,20 +94,11 @@ private[graft] object RankSelect {
   /** Exact input row count from parquet footers — driver-side metadata
     * only, no Spark job. None (→ take the conservative path) when the
     * source is not a small set of parquet files. */
-  private def inputRowCount(base: DataFrame): Option[Long] =
-    scala.util.Try {
-      val files = base.inputFiles
-      if (files.isEmpty || files.length > 64) None
-      else {
-        val conf = base.sparkSession.sessionState.newHadoopConf()
-        Some(files.map { f =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f), conf))
-          try rd.getRecordCount finally rd.close()
-        }.sum)
-      }
-    }.toOption.flatten
+  private def inputRowCount(base: DataFrame): Option[Long] = {
+    val files = base.inputFiles
+    if (files.length > 64) None
+    else graft.Footers.rowCount(base.sparkSession, files.toSeq)
+  }
 
   /** Rows (g, rank, v) of `base` at the requested 1-based ranks per
     * group — the bounded-state fallback. Groups absent from `targets`

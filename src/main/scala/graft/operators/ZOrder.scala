@@ -35,8 +35,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * 100 TB this is the same single shuffle any global sort pays) +
   * `sortWithinPartitions` + a plain parquet write; pruning needs no
   * custom reader because Spark's parquet source already evaluates
-  * row-group and file statistics. `fileRanges` reads footers the same
-  * metadata-only way as [[Compaction]].
+  * row-group and file statistics. `fileRanges` reads footers through
+  * [[graft.Footers]], like [[Compaction]].
   */
 object ZOrder {
 
@@ -114,43 +114,12 @@ object ZOrder {
     * the cost, so read every dimension's min/max from a single open). */
   def fileRangesMulti(spark: SparkSession, dir: String,
       columns: Seq[String]): Map[String, Seq[(String, Long, Long)]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    val perFile = fs.listStatus(p).toSeq
-      .filter(s => s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
-        try {
-          val lo = scala.collection.mutable.Map(
-            columns.map(_ -> Long.MaxValue): _*)
-          val hi = scala.collection.mutable.Map(
-            columns.map(_ -> Long.MinValue): _*)
-          reader.getFooter.getBlocks.forEach { block =>
-            block.getColumns.forEach { cc =>
-              val name = cc.getPath.toDotString
-              if (lo.contains(name)) {
-                val st = cc.getStatistics
-                if (st != null && !st.isEmpty) {
-                  lo(name) = math.min(lo(name),
-                    st.genericGetMin.asInstanceOf[Number].longValue())
-                  hi(name) = math.max(hi(name),
-                    st.genericGetMax.asInstanceOf[Number].longValue())
-                }
-              }
-            }
-          }
-          // a file with no usable statistics must count as
-          // always-overlapping (Spark reads it), never as prunable
-          (s.getPath.getName, columns.map { c =>
-            if (lo(c) > hi(c)) c -> (Long.MinValue, Long.MaxValue)
-            else c -> (lo(c), hi(c))
-          }.toMap)
-        } finally reader.close()
-      }
-    columns.map(c => c -> perFile.map { case (f, m) =>
-      (f, m(c)._1, m(c)._2)
+    val footers = graft.Footers.read(spark, Seq(dir), columns).get
+    // a file with no usable statistics must count as always-overlapping
+    // (Spark reads it), never as prunable
+    columns.map(c => c -> footers.map { f =>
+      val (lo, hi) = f.ranges.getOrElse(c, (Long.MinValue, Long.MaxValue))
+      (f.path.getName, lo, hi)
     }).toMap
   }
 

@@ -465,9 +465,10 @@ object HiveLayout extends QueryPack {
       val ord = tbl("ctw_ord", dir)
       val liU = tbl("ctw_liu", dir)
       Seq(li, ord, liU).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+      import org.apache.hadoop.fs.Path
+      val fs = new Path(base).getFileSystem(s.sessionState.newHadoopConf())
       Seq("_ctw_li", "_ctw_ord", "_ctw_liu").foreach(sfx =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(base + sfx)))
+        fs.delete(new Path(base + sfx), true))
       // r17 OPT (guide §2.6): the three CTAS writes target disjoint
       // tables/directories and share no state — submitting them from a
       // small thread pool overlaps each sorted-bucketed write's 8-task
@@ -475,43 +476,33 @@ object HiveLayout extends QueryPack {
       // tails sequentially. Statement semantics are unchanged (each
       // still routes through prestoStatement; property validation and
       // the written layouts are per-table).
-      locally {
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        try {
-          val fs = Seq(
-            s"""
+      graft.Exec.overlap(3)(Seq(
+        s"""
         CREATE TABLE $li WITH (
           format = 'PARQUET', external_location = '${base}_ctw_li',
           bucketed_by = ARRAY['l_orderkey'], bucket_count = 8,
           sorted_by = ARRAY['l_orderkey'])
         AS SELECT l_orderkey, l_quantity, l_returnflag FROM lineitem""",
-            s"""
+        s"""
         CREATE TABLE $ord WITH (
           format = 'PARQUET', external_location = '${base}_ctw_ord',
           bucketed_by = ARRAY['o_orderkey'], bucket_count = 8,
           sorted_by = ARRAY['o_orderkey'])
         AS SELECT o_orderkey, o_orderstatus FROM orders""",
-            // the unsorted control is only ever PLANNED (never
-            // executed), so a slim slice keeps the gate's write cost
-            // on the real layouts
-            s"""
+        // the unsorted control is only ever PLANNED (never
+        // executed), so a slim slice keeps the gate's write cost
+        // on the real layouts
+        s"""
         CREATE TABLE $liU WITH (
           format = 'PARQUET', external_location = '${base}_ctw_liu',
           bucketed_by = ARRAY['l_orderkey'], bucket_count = 8)
         AS SELECT l_orderkey, l_returnflag FROM lineitem
            WHERE l_orderkey <= 1000""").map(sql =>
-            Future(prestoStatement(s, sql)))
-          fs.foreach(Await.result(_, Duration.Inf))
-        } finally pool.shutdown()
-      }
+        () => prestoStatement(s, sql)))
       // one file per bucket: the HiveWriterFactory contract, and the
       // precondition for Spark exposing the per-bucket sort order
-      val nFiles = new java.io.File(base + "_ctw_li").listFiles()
-        .count(_.getName.startsWith("part-"))
+      val nFiles = fs.listStatus(new Path(base + "_ctw_li"))
+        .count(_.getPath.getName.startsWith("part-"))
       // files internally sorted: distributed per-file monotonicity
       // (scan partitions concatenate whole files; reset at boundaries)
       val filesSorted = s.table(li)

@@ -256,7 +256,7 @@ object Storage extends QueryPack {
         .repartition(16)
         .write.mode("overwrite").parquet(out)
       // row total from the 16 footers — no scan job (r18 OPT)
-      val n = graft.Tables.parquetPathRowCount(s, out)
+      val n = graft.Footers.rowCount(s, Seq(out))
         .getOrElse(s.read.parquet(out).count())
       val maxRows = 4 * ((n + 15) / 16)
       val first = Compaction.compact(s, out, Long.MaxValue / 4, maxRows)
@@ -320,47 +320,42 @@ object Storage extends QueryPack {
         // execution overlap; 1.4 s of sequential jobs → ~0.5 s) and
         // the driver moves the nine part files into `out` — the same
         // nine-file layout the sequential appends produced.
-        val stg = out + "_stg"
-        def rmTree(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-        }
-        rmTree(new java.io.File(stg))
-        rmTree(new java.io.File(out))
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-        try {
-          val futures = slices.zipWithIndex.map { case ((st, w, _), i) =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit =
-                // multiplier large enough that k*M wraps even the 48h
-                // window at the SMALLEST fixture's keys — otherwise a
-                // slice's actual range never reaches its designed end
-                // and the multi-day arm degenerates to same-day. k
-                // reduces modulo a prime BEFORE the multiply: shifted
-                // large-SF keys overflow int64 otherwise (ANSI-loud).
-                base.filter(col("k") % 9 === i)
-                  .withColumn("ts", timestamp_millis(lit(st) +
-                    pmod(pmod(col("k"), lit(1000003L)) * 2654435761L,
-                      lit(w))))
-                  .coalesce(1)
-                  .write.mode("overwrite").parquet(s"$stg/s$i")
-            })
-          }
-          futures.foreach(_.get())
-        } finally pool.shutdown()
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+        import org.apache.hadoop.fs.Path
+        val outP = new Path(out)
+        val stg = new Path(out + "_stg")
+        val fs = outP.getFileSystem(s.sessionState.newHadoopConf())
+        fs.delete(stg, true)
+        fs.delete(outP, true)
+        graft.Exec.overlap(4)(slices.zipWithIndex.map {
+          case ((st, w, _), i) => () =>
+            // multiplier large enough that k*M wraps even the 48h
+            // window at the SMALLEST fixture's keys — otherwise a
+            // slice's actual range never reaches its designed end
+            // and the multi-day arm degenerates to same-day. k
+            // reduces modulo a prime BEFORE the multiply: shifted
+            // large-SF keys overflow int64 otherwise (ANSI-loud).
+            base.filter(col("k") % 9 === i)
+              .withColumn("ts", timestamp_millis(lit(st) +
+                pmod(pmod(col("k"), lit(1000003L)) * 2654435761L,
+                  lit(w))))
+              .coalesce(1)
+              .write.mode("overwrite").parquet(s"$stg/s$i")
+        })
+        fs.mkdirs(outP)
         slices.indices.foreach { i =>
-          new java.io.File(s"$stg/s$i").listFiles()
+          fs.listStatus(new Path(stg, s"s$i"))
+            .map(_.getPath)
             .filter(f => f.getName.startsWith("part-") &&
               f.getName.endsWith(".parquet"))
             .foreach { f =>
-              java.nio.file.Files.move(f.toPath,
-                java.nio.file.Paths.get(out, s"slice_$i.parquet"))
+              val dst = new Path(outP, s"slice_$i.parquet")
+              if (!fs.rename(f, dst)) sys.error(s"q3j: rename to $dst failed")
             }
         }
-        rmTree(new java.io.File(stg))
+        fs.delete(stg, true)
       } finally s.conf.set(tsType, priorTs)
       // row total from the nine footers — no scan job (r18 OPT)
-      val n = graft.Tables.parquetPathRowCount(s, out)
+      val n = graft.Footers.rowCount(s, Seq(out))
         .getOrElse(s.read.parquet(out).count())
       // the operator's day assignment, file-matched to its slice by
       // footer min (windows are disjoint at their starts)
