@@ -200,6 +200,10 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
+    // gates with no successful trial: left out of the total above, so
+    // named here rather than silently shrinking it
+    val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Full per-query map goes to bench_out.json; stdout carries only the
     // TPC-H core + the slowest others. Round 4 proved the full ~120-entry
     // line overflows the driver's stdout tail capture, which then fails to
@@ -212,9 +216,9 @@ object Bench {
     val canaryMedianJson =
       canaryMedian.map(v => f"$v%.3f").getOrElse("null")
     val full =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${toJson(results)},"trial_spread":${toJson(spreads)},"contended":$contended,"canary_end_over_start":$canaryJson,"canary_vs_baseline":$canaryAbsJson,"canary_median":$canaryMedianJson,"machine_slow":$machineSlow,"median_vs_prev":${medianVsPrev.map(v => f"$v%.3f").getOrElse("null")},"wall_sec":${f"$wallSec%.1f"},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${toJson(results)},"trial_spread":${toJson(spreads)},"failed":$failedJson,"contended":$contended,"canary_end_over_start":$canaryJson,"canary_vs_baseline":$canaryAbsJson,"canary_median":$canaryMedianJson,"machine_slow":$machineSlow,"median_vs_prev":${medianVsPrev.map(v => f"$v%.3f").getOrElse("null")},"wall_sec":${f"$wallSec%.1f"},"sf":"$sfDir"}"""
     val line =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"contended":$contended,"canary_end_over_start":$canaryJson,"canary_vs_baseline":$canaryAbsJson,"canary_median":$canaryMedianJson,"machine_slow":$machineSlow,"median_vs_prev":${medianVsPrev.map(v => f"$v%.3f").getOrElse("null")},"wall_sec":${f"$wallSec%.1f"},"queries":${toJson(core ++ rest)},"queries_full":"bench_out.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"contended":$contended,"canary_end_over_start":$canaryJson,"canary_vs_baseline":$canaryAbsJson,"canary_median":$canaryMedianJson,"machine_slow":$machineSlow,"median_vs_prev":${medianVsPrev.map(v => f"$v%.3f").getOrElse("null")},"wall_sec":${f"$wallSec%.1f"},"queries":${toJson(core ++ rest)},"queries_full":"bench_out.json","sf":"$sfDir"}"""
     println(line)
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_out.json"),

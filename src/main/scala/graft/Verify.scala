@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each gate that
+  * throws is listed with its message in failed.json (`{}` when none). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // Optional third arg: comma-separated name prefixes — dev-only filter
@@ -15,11 +16,13 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed(name) = String.valueOf(e.getMessage)
         if (sys.env.contains("GRAFT_VERIFY_TRACE")) e.printStackTrace()
       }
       finally sources.Stores.releaseAll() // no store outlives its gate
@@ -36,9 +39,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter(kv => keep(kv._1))))
+    Files.writeString(Paths.get(s"$outDir/failed.json"), obj(failed))
     spark.stop()
   }
 }

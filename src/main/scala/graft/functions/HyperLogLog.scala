@@ -6,9 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** A real HyperLogLog for Presto's `approx_set` / `merge` /
   * `cardinality` workflow (reference: `presto-main/.../aggregation/
@@ -34,9 +32,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   */
 object HyperLogLog {
 
-  /** Serialization magic — discriminates from SetDigest (leading int is
-    * k=8192), KHLL (0x4b484c4c), and the digest families (leading
-    * doubles). */
+  /** Serialization magic (SketchFamily.of tells the families apart). */
   val Magic: Int = 0x484c4c2b // "HLL+"
 
   /** Presto approx_set precision: 4096 buckets, 1.625% standard error. */
@@ -207,18 +203,16 @@ object HyperLogLog {
   // Column API
   def approxSet(c: Column, p: Int = DefaultP): Column =
     ColumnBridge.toCol(HllAgg(ColumnBridge.toExpr(c), p).toAggregateExpression())
-  def mergeCol(c: Column): Column =
-    ColumnBridge.toCol(HllMergeAgg(ColumnBridge.toExpr(c)).toAggregateExpression())
+  def mergeCol(c: Column): Column = SketchFamily.HllSketch.mergeCol(c)
 }
 
 /** approx_set(x): any atomic input, hashed with xxhash64 → serialized HLL. */
 case class HllAgg(child: Expression, p: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HyperLogLog.State] {
+    extends SketchBuild[HyperLogLog.State] {
 
   override def prettyName: String = "approx_set"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def family = SketchFamily.HllSketch
   override def children: Seq[Expression] = Seq(child)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -239,15 +233,6 @@ case class HllAgg(child: Expression, p: Int,
     b
   }
 
-  override def merge(b: HyperLogLog.State, o: HyperLogLog.State): HyperLogLog.State = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: HyperLogLog.State): Any = b.serialize()
-  override def serialize(b: HyperLogLog.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): HyperLogLog.State =
-    HyperLogLog.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(offset: Int): HllAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): HllAgg =
@@ -255,189 +240,4 @@ case class HllAgg(child: Expression, p: Int,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
-}
-
-/** merge(hll): re-aggregates serialized HLL sketches. */
-case class HllMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HyperLogLog.State] {
-
-  override def prettyName: String = "merge"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a serialized HLL (binary), got ${dt.catalogString}")
-  }
-
-  override def createAggregationBuffer(): HyperLogLog.State =
-    new HyperLogLog.State(HyperLogLog.DefaultP)
-
-  override def update(b: HyperLogLog.State, input: InternalRow): HyperLogLog.State = {
-    val v = child.eval(input)
-    if (v != null) b.mergeWith(HyperLogLog.deserialize(v.asInstanceOf[Array[Byte]]))
-    b
-  }
-
-  override def merge(b: HyperLogLog.State, o: HyperLogLog.State): HyperLogLog.State = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: HyperLogLog.State): Any = b.serialize()
-  override def serialize(b: HyperLogLog.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): HyperLogLog.State =
-    HyperLogLog.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
-}
-
-/** Presto overloads `merge(...)` across its sketch types (HyperLogLog,
-  * SetDigest, KHyperLogLog, qdigest, tdigest); name-only SQL resolution
-  * can't see which binary arrives, so this aggregate discriminates on
-  * serialization CONTENT per input (SketchMergeAgg.familyOf) and keeps
-  * whichever state family shows up — all five families merge through
-  * the one SQL name, mixing families in one group fails loudly. */
-case class SketchMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[SketchMergeAgg.Buf] {
-
-  override def prettyName: String = "merge"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a serialized sketch (binary), got ${dt.catalogString}")
-  }
-
-  override def createAggregationBuffer(): SketchMergeAgg.Buf =
-    new SketchMergeAgg.Buf
-
-  override def update(b: SketchMergeAgg.Buf, input: InternalRow): SketchMergeAgg.Buf = {
-    val v = child.eval(input)
-    if (v != null) b.add(v.asInstanceOf[Array[Byte]])
-    b
-  }
-
-  override def merge(b: SketchMergeAgg.Buf, o: SketchMergeAgg.Buf): SketchMergeAgg.Buf = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: SketchMergeAgg.Buf): Any = b.result()
-  override def serialize(b: SketchMergeAgg.Buf): Array[Byte] = b.serializeBuf()
-  override def deserialize(bytes: Array[Byte]): SketchMergeAgg.Buf =
-    SketchMergeAgg.deserializeBuf(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): SketchMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): SketchMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
-}
-
-object SketchMergeAgg {
-
-  /** Serialization-content family discrimination, mirroring how the
-    * reference resolves its `merge` overload by argument TYPE (we only
-    * have bytes): HLL/KHLL carry explicit magics; otherwise the first
-    * 8 bytes as a double separate DDSketch (alpha ∈ (1e-12, 1)) from
-    * t-digest (compression > 1) from SetDigest (leading int k ≤ ~1e6
-    * reads as a denormal « 1e-12). The same convention DigestVector
-    * already relies on. */
-  private[functions] def familyOf(bytes: Array[Byte]): String =
-    if (HyperLogLog.isHll(bytes)) "hll"
-    else if (KHll.isKhll(bytes)) "khll"
-    else {
-      val d = java.nio.ByteBuffer.wrap(bytes).getDouble
-      if (d > 1e-12 && d < 1.0) "qdigest"
-      else if (d > 1.0) "tdigest"
-      else "setdigest"
-    }
-
-  /** Union buffer: adopts the family of the first sketch it sees;
-    * mixing families in one group fails loudly. */
-  final class Buf {
-    private[functions] var family: String = null
-    private[functions] var hll: HyperLogLog.State = null
-    private[functions] var sd: SetDigest.State = null
-    private[functions] var kh: KHll.State = null
-    private[functions] var td: TDigest.State = null
-    private[functions] var dd: QuantileSketch.State = null
-
-    private def adopt(f: String): Unit = {
-      if (family == null) family = f
-      else require(family == f,
-        s"cannot merge a $f sketch into a $family group")
-    }
-
-    def add(bytes: Array[Byte]): Unit = familyOf(bytes) match {
-      case "hll" =>
-        adopt("hll")
-        if (hll == null) hll = HyperLogLog.deserialize(bytes)
-        else hll.mergeWith(HyperLogLog.deserialize(bytes))
-      case "khll" =>
-        adopt("khll")
-        if (kh == null) kh = KHll.deserialize(bytes)
-        else kh.mergeWith(KHll.deserialize(bytes))
-      case "qdigest" =>
-        adopt("qdigest")
-        if (dd == null) dd = QuantileSketch.deserialize(bytes)
-        else dd.mergeWith(QuantileSketch.deserialize(bytes))
-      case "tdigest" =>
-        adopt("tdigest")
-        if (td == null) td = TDigest.deserialize(bytes)
-        else td.mergeWith(TDigest.deserialize(bytes))
-      case "setdigest" =>
-        adopt("setdigest")
-        if (sd == null) sd = SetDigest.deserialize(bytes)
-        else sd.mergeWith(SetDigest.deserialize(bytes))
-    }
-
-    def mergeWith(o: Buf): Unit = if (o.family != null) {
-      adopt(o.family)
-      o.family match {
-        case "hll" => if (hll == null) hll = o.hll else hll.mergeWith(o.hll)
-        case "khll" => if (kh == null) kh = o.kh else kh.mergeWith(o.kh)
-        case "qdigest" => if (dd == null) dd = o.dd else dd.mergeWith(o.dd)
-        case "tdigest" => if (td == null) td = o.td else td.mergeWith(o.td)
-        case "setdigest" => if (sd == null) sd = o.sd else sd.mergeWith(o.sd)
-      }
-    }
-
-    /** Empty groups yield an empty HLL (Presto merge(HLL) is the common
-      * spelling; an empty digest estimates 0 either way). */
-    def result(): Array[Byte] = family match {
-      case "hll" => hll.serialize()
-      case "khll" => kh.serialize()
-      case "qdigest" => dd.serialize()
-      case "tdigest" => td.serialize()
-      case "setdigest" => sd.serialize()
-      case null => HyperLogLog.empty()
-    }
-
-    /** Zero bytes mark a still-undecided (empty) buffer — an empty
-      * partial must NOT pin the group to the HLL family before a real
-      * sketch arrives. */
-    def serializeBuf(): Array[Byte] =
-      if (family == null) Array.emptyByteArray else result()
-  }
-
-  def deserializeBuf(bytes: Array[Byte]): Buf = {
-    val b = new Buf
-    if (bytes.nonEmpty) b.add(bytes)
-    b
-  }
 }

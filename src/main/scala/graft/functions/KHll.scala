@@ -5,8 +5,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -39,7 +38,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * directly-built ones (gated by qh7's merge check).
   */
 object KHll {
-  val Magic: Int = 0x4b484c4c // "KHLL" — disambiguates from SetDigest bytes
+  val Magic: Int = 0x4b484c4c // "KHLL"
   val DefaultMaxSize: Int = 4096 // KHyperLogLog.DEFAULT_MAX_SIZE
   val ValueSketchK: Int = 256
 
@@ -157,27 +156,28 @@ object KHll {
     * (jaccard_index, intersection_cardinality, cardinality) accept both,
     * like the reference's type-overloaded functions. */
   def anyKeyDigest(bytes: Array[Byte]): SetDigest.State =
-    if (isKhll(bytes)) deserialize(bytes).keyDigest
-    else SetDigest.deserialize(bytes)
+    SketchFamily.of(bytes) match {
+      case SketchFamily.KhllSketch => deserialize(bytes).keyDigest
+      case SketchFamily.SetDigestSketch => SetDigest.deserialize(bytes)
+      case f => throw new IllegalArgumentException(
+        s"expected a setdigest or khll sketch, got a ${f.name} sketch")
+    }
 
   // Column API
   def agg(x: Column, uii: Column): Column =
     ColumnBridge.toCol(KHllAgg(
       ColumnBridge.toExpr(x), ColumnBridge.toExpr(uii), DefaultMaxSize)
       .toAggregateExpression())
-  def merge(c: Column): Column =
-    ColumnBridge.toCol(KHllMergeAgg(ColumnBridge.toExpr(c))
-      .toAggregateExpression())
+  def merge(c: Column): Column = SketchFamily.KhllSketch.mergeCol(c)
 }
 
 /** khyperloglog_agg(x, uii) → binary khll. */
 case class KHllAgg(x: Expression, uii: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KHll.State] {
+    extends SketchBuild[KHll.State] {
 
   override def prettyName: String = "khyperloglog_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def family = SketchFamily.KhllSketch
   override def children: Seq[Expression] = Seq(x, uii)
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -201,15 +201,6 @@ case class KHllAgg(x: Expression, uii: Expression, k: Int,
     b
   }
 
-  override def merge(b: KHll.State, o: KHll.State): KHll.State = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: KHll.State): Any = b.serialize()
-  override def serialize(b: KHll.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): KHll.State =
-    KHll.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(offset: Int): KHllAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): KHllAgg =
@@ -217,49 +208,6 @@ case class KHllAgg(x: Expression, uii: Expression, k: Int,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(x = newChildren(0), uii = newChildren(1))
-}
-
-/** merge_khll(khll) → binary (the reference's type-overloaded `merge`). */
-case class KHllMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KHll.State] {
-
-  override def prettyName: String = "merge_khll"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a serialized khll (binary), got ${dt.catalogString}")
-  }
-
-  override def createAggregationBuffer(): KHll.State =
-    new KHll.State(KHll.DefaultMaxSize)
-
-  override def update(b: KHll.State, input: InternalRow): KHll.State = {
-    val v = child.eval(input)
-    if (v != null) b.mergeWith(KHll.deserialize(v.asInstanceOf[Array[Byte]]))
-    b
-  }
-
-  override def merge(b: KHll.State, o: KHll.State): KHll.State = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: KHll.State): Any = b.serialize()
-  override def serialize(b: KHll.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): KHll.State =
-    KHll.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): KHllMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): KHllMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
 }
 
 /** uniqueness_distribution(khll, histogramSize) → map<bigint, double>. */

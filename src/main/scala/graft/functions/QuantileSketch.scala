@@ -6,7 +6,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, Decimal, DecimalType, DoubleType, NumericType}
@@ -33,6 +32,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, Decimal, DecimalType, D
   *    equality of the two estimates.
   */
 object QuantileSketch {
+
+  /** qdigest_agg's default accuracy. */
+  val DefaultAlpha: Double = 0.01
 
   final class State(val alpha: Double) {
     private[functions] val gamma = (1 + alpha) / (1 - alpha)
@@ -187,14 +189,12 @@ object QuantileSketch {
   }
 
   /** Column API: build a sketch of a double column (Presto qdigest_agg). */
-  def sketch(c: Column, alpha: Double = 0.01): Column =
+  def sketch(c: Column, alpha: Double = DefaultAlpha): Column =
     ColumnBridge.toCol(DDSketchAgg(ColumnBridge.toExpr(c), alpha)
       .toAggregateExpression())
 
   /** Column API: merge pre-built sketches (Presto merge(qdigest)). */
-  def merge(c: Column): Column =
-    ColumnBridge.toCol(DDSketchMergeAgg(ColumnBridge.toExpr(c))
-      .toAggregateExpression())
+  def merge(c: Column): Column = SketchFamily.QDigestSketch.mergeCol(c)
 
   /** Column API: estimate a quantile (Presto value_at_quantile). */
   def valueAt(sketchCol: Column, q: Double): Column =
@@ -214,11 +214,10 @@ object QuantileSketch {
 case class DDSketchAgg(child: Expression, alpha: Double,
     weight: Option[Expression] = None,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[QuantileSketch.State] {
+    extends SketchBuild[QuantileSketch.State] {
 
   override def prettyName: String = "ddsketch_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def family = SketchFamily.QDigestSketch
   override def children: Seq[Expression] = child +: weight.toSeq
 
   // analysis-time contract: any numeric child works (converted per its
@@ -256,15 +255,6 @@ case class DDSketchAgg(child: Expression, alpha: Double,
     b
   }
 
-  override def merge(b: QuantileSketch.State, o: QuantileSketch.State): QuantileSketch.State = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: QuantileSketch.State): Any = b.serialize()
-  override def serialize(b: QuantileSketch.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): QuantileSketch.State =
-    QuantileSketch.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(offset: Int): DDSketchAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): DDSketchAgg =
@@ -273,55 +263,6 @@ case class DDSketchAgg(child: Expression, alpha: Double,
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0),
       weight = weight.map(_ => newChildren(1)))
-}
-
-/** Sketch-merge aggregate: binary sketches in → merged binary sketch. */
-case class DDSketchMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[QuantileSketch.State] {
-
-  override def prettyName: String = "ddsketch_merge"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a serialized sketch (binary), got ${dt.catalogString}")
-  }
-
-  // alpha comes from the first sketch seen; an empty buffer is a neutral
-  // element that adopts the other side's alpha on merge.
-  override def createAggregationBuffer(): QuantileSketch.State =
-    new QuantileSketch.State(Double.NaN)
-
-  private def absorb(b: QuantileSketch.State, o: QuantileSketch.State): QuantileSketch.State =
-    if (o.totalCount == 0) b
-    else if (b.totalCount == 0) o
-    else { b.mergeWith(o); b }
-
-  override def update(b: QuantileSketch.State, input: InternalRow): QuantileSketch.State = {
-    val v = child.eval(input)
-    if (v == null) b
-    else absorb(b, QuantileSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-  }
-
-  override def merge(b: QuantileSketch.State, o: QuantileSketch.State): QuantileSketch.State =
-    absorb(b, o)
-
-  override def eval(b: QuantileSketch.State): Any = b.serialize()
-  override def serialize(b: QuantileSketch.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): QuantileSketch.State =
-    QuantileSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): DDSketchMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): DDSketchMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
 }
 
 /** value_at_quantile(sketch, q): scalar estimate from a serialized sketch.
@@ -351,9 +292,7 @@ case class DDSketchValueAt(left: Expression, right: Expression)
 }
 
 /** Shared base for the vector digest lookups: works over EITHER digest
-  * family. The serialized header's first double discriminates — a
-  * DDSketch starts with alpha ∈ (0, 1), a t-digest with compression > 1
-  * (both constructors enforce their ranges). */
+  * family (SketchFamily.of tells them apart). */
 private[functions] trait DigestVector extends BinaryExpression
     with CodegenFallback {
   override def dataType: DataType =
@@ -375,10 +314,12 @@ private[functions] trait DigestVector extends BinaryExpression
     val bytes = sk.asInstanceOf[Array[Byte]]
     val xs = arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toDoubleArray()
-    val head = java.nio.ByteBuffer.wrap(bytes).getDouble
-    val (dd, td) =
-      if (head < 1.0) (QuantileSketch.deserialize(bytes), null)
-      else (null, TDigest.deserialize(bytes))
+    val (dd, td) = SketchFamily.of(bytes) match {
+      case SketchFamily.QDigestSketch => (QuantileSketch.deserialize(bytes), null)
+      case SketchFamily.TDigestSketch => (null, TDigest.deserialize(bytes))
+      case f => throw new IllegalArgumentException(
+        s"$prettyName expects a qdigest or tdigest sketch, got a ${f.name} sketch")
+    }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       xs.map(lookup(dd, td, _)))
   }

@@ -1182,9 +1182,10 @@ object Registry {
       // estimator's error profile matches the reference above
       // saturation, not just the API. Presto overloads `merge` across
       // sketch types and name-only resolution can't see which binary
-      // arrives, so `merge` sniffs the serialization magic per input
-      // (SketchMergeAgg) and handles both HLL and SetDigest bytes;
-      // digest merges keep merge_tdigest / the Column API.
+      // arrives, so `merge` (SketchMerge with no family) takes each
+      // group's family from its bytes and accepts all five sketch
+      // families; merge_hll / merge_khll / merge_set_digest /
+      // merge_tdigest are the same aggregate fixed to one family.
       colorPack("approx_set") {
         case Seq(v) => HllAgg(v, HyperLogLog.DefaultP).toAggregateExpression()
         case args => sys.error(s"approx_set expects 1 arg, got ${args.length}")
@@ -1221,11 +1222,12 @@ object Registry {
           s"approx_distinct expects (x[, max_standard_error]), got ${args.length} args")
       }
       colorPack("merge") {
-        case Seq(v) => SketchMergeAgg(v).toAggregateExpression()
+        case Seq(v) => SketchMerge(v).toAggregateExpression()
         case args => sys.error(s"merge expects 1 arg, got ${args.length}")
       }
       colorPack("merge_hll") {
-        case Seq(v) => HllMergeAgg(v).toAggregateExpression()
+        case Seq(v) =>
+          SketchMerge(v, Some(SketchFamily.HllSketch)).toAggregateExpression()
         case args => sys.error(s"merge_hll expects 1 arg, got ${args.length}")
       }
       // json_array_get — the reference's streaming element walk (see
@@ -1317,13 +1319,14 @@ object Registry {
         case _ => None
       }
       colorPack("qdigest_agg") {
-        case Seq(v) => DDSketchAgg(v, 0.01).toAggregateExpression()
+        case Seq(v) => DDSketchAgg(v, QuantileSketch.DefaultAlpha).toAggregateExpression()
         // 2-arg disambiguation on a fractional literal (the
         // approx_percentile precedent): weights are bigint in the
         // reference, so a literal in (0,1) can only be the accuracy
         case Seq(v, a) if litDouble(a).exists(d => d > 0 && d < 1) =>
           DDSketchAgg(v, litDouble(a).get).toAggregateExpression()
-        case Seq(v, w) => DDSketchAgg(v, 0.01, Some(w)).toAggregateExpression()
+        case Seq(v, w) =>
+          DDSketchAgg(v, QuantileSketch.DefaultAlpha, Some(w)).toAggregateExpression()
         case Seq(v, w, a) if litDouble(a).isDefined =>
           DDSketchAgg(v, litDouble(a).get, Some(w)).toAggregateExpression()
         case args => sys.error(
@@ -1331,16 +1334,17 @@ object Registry {
       }
       colorPack("tdigest_agg") {
         case Seq(v) =>
-          TDigestAgg(v, None, 100.0).toAggregateExpression()
+          TDigestAgg(v, None, TDigest.DefaultCompression).toAggregateExpression()
         case Seq(v, w) =>
-          TDigestAgg(v, Some(w), 100.0).toAggregateExpression()
+          TDigestAgg(v, Some(w), TDigest.DefaultCompression).toAggregateExpression()
         case Seq(v, w, c) if litDouble(c).isDefined =>
           TDigestAgg(v, Some(w), litDouble(c).get).toAggregateExpression()
         case args => sys.error(
           s"tdigest_agg expects (x[, w[, literal compression]]), got ${args.length} args")
       }
       colorPack("merge_tdigest") {
-        case Seq(v) => TDigestMergeAgg(v).toAggregateExpression()
+        case Seq(v) =>
+          SketchMerge(v, Some(SketchFamily.TDigestSketch)).toAggregateExpression()
         case args => sys.error(s"merge_tdigest expects 1 arg, got ${args.length}")
       }
       // DESCRIBE INPUT's analysis-only parameter probe (never executed;
@@ -1771,7 +1775,7 @@ object Registry {
         agg1("make_set_digest")(v =>
           SetDigestAgg(v, SetDigest.DefaultK).toAggregateExpression())
         agg1("merge_set_digest")(v =>
-          SetDigestMergeAgg(v).toAggregateExpression())
+          SketchMerge(v, Some(SketchFamily.SetDigestSketch)).toAggregateExpression())
         agg1("cardinality")(CardinalityDispatch)
         def bin2(name: String)(mk: (Expression, Expression) => Expression): Unit = {
           val builder: Seq[Expression] => Expression = {
@@ -1813,7 +1817,8 @@ object Registry {
           new ExpressionInfo(getClass.getCanonicalName, "khyperloglog_agg"),
           agg2)
         val mergeB: Seq[Expression] => Expression = {
-          case Seq(v) => KHllMergeAgg(v).toAggregateExpression()
+          case Seq(v) =>
+            SketchMerge(v, Some(SketchFamily.KhllSketch)).toAggregateExpression()
           case args =>
             sys.error(s"merge_khll expects 1 arg, got ${args.length}")
         }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, RuntimeReplaceable, Size, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, MapType, StructType}
@@ -127,9 +126,7 @@ object SetDigest {
   def make(c: Column, k: Int = DefaultK): Column =
     ColumnBridge.toCol(SetDigestAgg(ColumnBridge.toExpr(c), k)
       .toAggregateExpression())
-  def merge(c: Column): Column =
-    ColumnBridge.toCol(SetDigestMergeAgg(ColumnBridge.toExpr(c))
-      .toAggregateExpression())
+  def merge(c: Column): Column = SketchFamily.SetDigestSketch.mergeCol(c)
   def card(c: Column): Column =
     ColumnBridge.toCol(SetDigestCardinality(ColumnBridge.toExpr(c)))
   def jaccardIndex(a: Column, b: Column): Column =
@@ -144,11 +141,10 @@ object SetDigest {
   * hash the reference digest uses, `SetDigest.java`). */
 case class SetDigestAgg(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[SetDigest.State] {
+    extends SketchBuild[SetDigest.State] {
 
   override def prettyName: String = "make_set_digest"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def family = SketchFamily.SetDigestSketch
   override def children: Seq[Expression] = Seq(child)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -168,61 +164,9 @@ case class SetDigestAgg(child: Expression, k: Int,
     b
   }
 
-  override def merge(b: SetDigest.State, o: SetDigest.State): SetDigest.State = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: SetDigest.State): Any = b.serialize()
-  override def serialize(b: SetDigest.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): SetDigest.State =
-    SetDigest.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(offset: Int): SetDigestAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): SetDigestAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
-}
-
-/** merge_set_digest(digest): re-aggregates serialized digests. */
-case class SetDigestMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[SetDigest.State] {
-
-  override def prettyName: String = "merge_set_digest"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a serialized digest (binary), got ${dt.catalogString}")
-  }
-
-  override def createAggregationBuffer(): SetDigest.State =
-    new SetDigest.State(SetDigest.DefaultK)
-
-  override def update(b: SetDigest.State, input: InternalRow): SetDigest.State = {
-    val v = child.eval(input)
-    if (v != null) b.mergeWith(SetDigest.deserialize(v.asInstanceOf[Array[Byte]]))
-    b
-  }
-
-  override def merge(b: SetDigest.State, o: SetDigest.State): SetDigest.State = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: SetDigest.State): Any = b.serialize()
-  override def serialize(b: SetDigest.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): SetDigest.State =
-    SetDigest.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): SetDigestMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): SetDigestMergeAgg =
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -243,12 +187,16 @@ case class SetDigestCardinality(child: Expression)
       s"$prettyName expects a serialized digest (binary), got ${dt.catalogString}")
   }
 
+  // accepts all three set sketches, like the reference's type overloads
   override def nullSafeEval(d: Any): Any = {
     val bytes = d.asInstanceOf[Array[Byte]]
-    // accepts all three sketch kinds, like the reference's type overloads
-    if (HyperLogLog.isHll(bytes)) HyperLogLog.deserialize(bytes).cardinality
-    else if (KHll.isKhll(bytes)) KHll.deserialize(bytes).cardinality
-    else SetDigest.deserialize(bytes).cardinality
+    SketchFamily.of(bytes) match {
+      case SketchFamily.HllSketch => HyperLogLog.deserialize(bytes).cardinality
+      case SketchFamily.KhllSketch => KHll.deserialize(bytes).cardinality
+      case SketchFamily.SetDigestSketch => SetDigest.deserialize(bytes).cardinality
+      case f => throw new IllegalArgumentException(
+        s"cardinality expects an hll, khll or setdigest sketch, got a ${f.name} sketch")
+    }
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

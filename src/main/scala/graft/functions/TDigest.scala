@@ -2,12 +2,10 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, Decimal, DecimalType, DoubleType, NumericType}
@@ -40,6 +38,9 @@ object TDigest {
   // 600k-row sf0.1 build measures 0.8 s/pass (2.6x the DDSketch's
   // hashmap insert — the price of rank-accurate tails).
   private val BufferLimit = 2048
+
+  /** tdigest_agg's default compression (TDigestFunctions.java). */
+  val DefaultCompression: Double = 100.0
 
   final class State(val compression: Double) {
     private[graft] var means: Array[Double] = Array.empty
@@ -273,18 +274,17 @@ object TDigest {
   }
 
   /** Column API: tdigest_agg(x[, w]). */
-  def sketch(c: Column, compression: Double = 100.0): Column =
+  def sketch(c: Column, compression: Double = DefaultCompression): Column =
     ColumnBridge.toCol(TDigestAgg(ColumnBridge.toExpr(c), None, compression)
       .toAggregateExpression())
 
-  def sketchWeighted(c: Column, w: Column, compression: Double = 100.0): Column =
+  def sketchWeighted(c: Column, w: Column,
+      compression: Double = DefaultCompression): Column =
     ColumnBridge.toCol(TDigestAgg(ColumnBridge.toExpr(c),
       Some(ColumnBridge.toExpr(w)), compression).toAggregateExpression())
 
   /** Column API: merge_tdigest over serialized digests. */
-  def merge(c: Column): Column =
-    ColumnBridge.toCol(TDigestMergeAgg(ColumnBridge.toExpr(c))
-      .toAggregateExpression())
+  def merge(c: Column): Column = SketchFamily.TDigestSketch.mergeCol(c)
 
   /** Column API: value_at_quantile(tdigest, q). */
   def valueAt(c: Column, q: Double): Column =
@@ -306,11 +306,10 @@ object TDigest {
 case class TDigestAgg(child: Expression, weight: Option[Expression],
     compression: Double,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TDigest.State] {
+    extends SketchBuild[TDigest.State] {
 
   override def prettyName: String = "tdigest_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def family = SketchFamily.TDigestSketch
   override def children: Seq[Expression] = child +: weight.toSeq
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -341,15 +340,6 @@ case class TDigestAgg(child: Expression, weight: Option[Expression],
     b
   }
 
-  override def merge(b: TDigest.State, o: TDigest.State): TDigest.State = {
-    if (o.total > 0) b.mergeWith(o); b
-  }
-
-  override def eval(b: TDigest.State): Any = b.serialize()
-  override def serialize(b: TDigest.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): TDigest.State =
-    TDigest.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(offset: Int): TDigestAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): TDigestAgg =
@@ -358,55 +348,6 @@ case class TDigestAgg(child: Expression, weight: Option[Expression],
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0),
       weight = weight.map(_ => newChildren(1)))
-}
-
-/** merge_tdigest: serialized digests in → merged digest. */
-case class TDigestMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TDigest.State] {
-
-  override def prettyName: String = "merge_tdigest"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a serialized t-digest (binary), got ${dt.catalogString}")
-  }
-
-  // NaN compression marks the neutral empty buffer; it adopts the first
-  // real digest it absorbs (same shape as DDSketchMergeAgg).
-  override def createAggregationBuffer(): TDigest.State =
-    new TDigest.State(Double.NaN)
-
-  private def absorb(b: TDigest.State, o: TDigest.State): TDigest.State =
-    if (o.total == 0) b
-    else if (b.total == 0) o
-    else { b.mergeWith(o); b }
-
-  override def update(b: TDigest.State, input: InternalRow): TDigest.State = {
-    val v = child.eval(input)
-    if (v == null) b
-    else absorb(b, TDigest.deserialize(v.asInstanceOf[Array[Byte]]))
-  }
-
-  override def merge(b: TDigest.State, o: TDigest.State): TDigest.State =
-    absorb(b, o)
-
-  override def eval(b: TDigest.State): Any = b.serialize()
-  override def serialize(b: TDigest.State): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): TDigest.State =
-    TDigest.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): TDigestMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): TDigestMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
 }
 
 private[functions] trait TDigestScalar extends BinaryExpression

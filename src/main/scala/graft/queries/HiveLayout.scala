@@ -404,11 +404,12 @@ object HiveLayout extends QueryPack {
         .repartition(4, col("o_year"))
         .write.mode("overwrite").option("path", path)
         .partitionBy("o_year").saveAsTable(pt)
+      import org.apache.hadoop.fs.Path
+      val fs = new Path(path).getFileSystem(s.sessionState.newHadoopConf())
       def dirFiles(y: Int): Set[String] = {
-        val d = new java.io.File(new java.net.URI(
-          if (path.startsWith("file:")) path else "file:" + path)
-          .getPath, s"o_year=$y")
-        Option(d.list()).map(_.toSet).getOrElse(Set.empty)
+        val d = new Path(path, s"o_year=$y")
+        if (fs.exists(d)) fs.listStatus(d).map(_.getPath.getName).toSet
+        else Set.empty
       }
       val f1996 = dirFiles(1996)
       val f1998 = dirFiles(1998)

@@ -5,24 +5,35 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Keeps each recurring idiom in its one helper: parquet footers are
-  * read only in Footers, and thread pools are built only in Exec. */
+  * read only in Footers, thread pools are built only in Exec, and sketch
+  * bytes are told apart only in SketchFamily. */
 class SourceGuardSuite extends GraftSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
 
-  private def sourcesUsing(token: String): Seq[String] = {
+  private def sourcesWhere(matches: String => Boolean): Seq[String] = {
     val walk = Files.walk(main)
     try walk.iterator.asScala.toSeq
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(token))
+      .filter(p => matches(new String(Files.readAllBytes(p), "UTF-8")))
       .map(p => main.relativize(p).toString)
     finally walk.close()
   }
 
-  private def only(token: String, owner: Path): Unit = {
+  private def only(token: String, owner: Path,
+      matches: String => Boolean): Unit = {
     assert(Files.isDirectory(main), s"no sources at $main")
-    assert(sourcesUsing(token) == Seq(main.relativize(owner).toString),
+    assert(sourcesWhere(matches) == Seq(main.relativize(owner).toString),
       s"$token belongs in $owner only")
+  }
+
+  private def only(token: String, owner: Path): Unit =
+    only(token, owner, _.contains(token))
+
+  /** Calls of `name`, not its definition. */
+  private def onlyCalls(name: String, owner: Path): Unit = {
+    val call = s"(?<!def )\\b$name\\(".r
+    only(s"$name(", owner, call.findFirstIn(_).isDefined)
   }
 
   test("ParquetFileReader appears only in Footers") {
@@ -31,5 +42,11 @@ class SourceGuardSuite extends GraftSuite {
 
   test("newFixedThreadPool appears only in Exec") {
     only("newFixedThreadPool", main.resolve("graft/Exec.scala"))
+  }
+
+  test("isHll and isKhll are called only in SketchFamily") {
+    val owner = main.resolve("graft/functions/SketchFamily.scala")
+    onlyCalls("isHll", owner)
+    onlyCalls("isKhll", owner)
   }
 }
