@@ -1489,7 +1489,7 @@ object Connectors extends QueryPack {
         |r AS (SELECT k, CASE WHEN k % 10 = 0 THEN '<null>'
         |    ELSE 'n' || (k % 7) END AS name FROM ks)
         |SELECT name, count(*) AS n, CAST(sum(k) AS BIGINT) AS id_sum,
-        |  round(sum(k * 0.5), 2) AS score_sum,
+        |  round(sum(k * CAST(0.5 AS DOUBLE)), 2) AS score_sum,
         |  CAST(count(*) * 2 AS BIGINT) AS tags_total,
         |  CAST(sum(k * 2) AS BIGINT) AS b_sum
         |FROM r GROUP BY name ORDER BY name""".stripMargin,
@@ -1539,7 +1539,7 @@ object Connectors extends QueryPack {
         |r AS (SELECT k, CASE WHEN k % 10 = 0 THEN '<null>'
         |    ELSE 'n' || (k % 7) END AS name FROM ks)
         |SELECT name, count(*) AS n, CAST(sum(k) AS BIGINT) AS id_sum,
-        |  round(sum(k * 0.5), 2) AS score_sum,
+        |  round(sum(k * CAST(0.5 AS DOUBLE)), 2) AS score_sum,
         |  CAST(count(*) * 2 AS BIGINT) AS tags_total,
         |  CAST(sum(k * 2) AS BIGINT) AS b_sum
         |FROM r GROUP BY name ORDER BY name""".stripMargin,

@@ -1032,14 +1032,18 @@ object Geo extends QueryPack {
       // worked in the query comment) + envelope arithmetic.
       "ql6_geometry_simplify" ->
         """SELECT * FROM (VALUES
-          |  (CAST(1 AS BIGINT), CAST(2 AS BIGINT), 2.0, 0.0, 2.0,
-          |   2, CAST(0 AS BIGINT), -1.5, 1.6),
-          |  (CAST(2 AS BIGINT), CAST(3 AS BIGINT), 2.0, 2.0, 4.0,
-          |   2, CAST(0 AS BIGINT), -1.5, 3.5),
-          |  (CAST(3 AS BIGINT), CAST(3 AS BIGINT), 2.0, 1.0, 4.0,
-          |   2, CAST(0 AS BIGINT), -1.5, 2.5),
-          |  (CAST(4 AS BIGINT), CAST(3 AS BIGINT), 1.0, 0.1, 2.0,
-          |   2, CAST(0 AS BIGINT), -1.5, 1.6))
+          |  (CAST(1 AS BIGINT), CAST(2 AS BIGINT), CAST(2.0 AS DOUBLE),
+          |   CAST(0.0 AS DOUBLE), CAST(2.0 AS DOUBLE),
+          |   2, CAST(0 AS BIGINT), CAST(-1.5 AS DOUBLE), CAST(1.6 AS DOUBLE)),
+          |  (CAST(2 AS BIGINT), CAST(3 AS BIGINT), CAST(2.0 AS DOUBLE),
+          |   CAST(2.0 AS DOUBLE), CAST(4.0 AS DOUBLE),
+          |   2, CAST(0 AS BIGINT), CAST(-1.5 AS DOUBLE), CAST(3.5 AS DOUBLE)),
+          |  (CAST(3 AS BIGINT), CAST(3 AS BIGINT), CAST(2.0 AS DOUBLE),
+          |   CAST(1.0 AS DOUBLE), CAST(4.0 AS DOUBLE),
+          |   2, CAST(0 AS BIGINT), CAST(-1.5 AS DOUBLE), CAST(2.5 AS DOUBLE)),
+          |  (CAST(4 AS BIGINT), CAST(3 AS BIGINT), CAST(1.0 AS DOUBLE),
+          |   CAST(0.1 AS DOUBLE), CAST(2.0 AS DOUBLE),
+          |   2, CAST(0 AS BIGINT), CAST(-1.5 AS DOUBLE), CAST(1.6 AS DOUBLE)))
           |  AS t(id, n_simp, x2, y2, xe, cdim, n_holes, exmn, eymx)
           |ORDER BY id""".stripMargin,
 
@@ -1064,9 +1068,10 @@ object Geo extends QueryPack {
       "qm4_convex_clip" ->
         """SELECT * FROM (VALUES
           |  (CAST(1 AS BIGINT), CAST(5 AS BIGINT),
-          |   '0:0,10:0,10:5,5:10,0:10', 87.5),
-          |  (CAST(2 AS BIGINT), CAST(0 AS BIGINT), '', 0.0),
-          |  (CAST(3 AS BIGINT), CAST(4 AS BIGINT), '2:2,4:2,4:4,2:4', 4.0))
+          |   '0:0,10:0,10:5,5:10,0:10', CAST(87.5 AS DOUBLE)),
+          |  (CAST(2 AS BIGINT), CAST(0 AS BIGINT), '', CAST(0.0 AS DOUBLE)),
+          |  (CAST(3 AS BIGINT), CAST(4 AS BIGINT), '2:2,4:2,4:4,2:4',
+          |   CAST(4.0 AS DOUBLE)))
           |  AS t(id, n_clip, clip_txt, clip_area)
           |ORDER BY id""".stripMargin,
 
@@ -1135,21 +1140,28 @@ object Geo extends QueryPack {
       // disjoint row keeps both inputs.
       "ql8_degenerate_boolean" ->
         """SELECT * FROM (VALUES
-          |  (CAST(1 AS BIGINT), CAST(1 AS BIGINT), 200.0, 0.0, 100.0, 200.0),
-          |  (CAST(2 AS BIGINT), CAST(1 AS BIGINT), 108.0, 0.0, 100.0, 108.0),
-          |  (CAST(3 AS BIGINT), CAST(1 AS BIGINT), 3.0, 1.0, 1.0, 2.0))
+          |  (CAST(1 AS BIGINT), CAST(1 AS BIGINT), CAST(200.0 AS DOUBLE),
+          |   CAST(0.0 AS DOUBLE), CAST(100.0 AS DOUBLE),
+          |   CAST(200.0 AS DOUBLE)),
+          |  (CAST(2 AS BIGINT), CAST(1 AS BIGINT), CAST(108.0 AS DOUBLE),
+          |   CAST(0.0 AS DOUBLE), CAST(100.0 AS DOUBLE),
+          |   CAST(108.0 AS DOUBLE)),
+          |  (CAST(3 AS BIGINT), CAST(1 AS BIGINT), CAST(3.0 AS DOUBLE),
+          |   CAST(1.0 AS DOUBLE), CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE)))
           |  AS t(id, n_union, union_area, int_area, diff_area, sym_area)
           |ORDER BY id""".stripMargin,
 
       "qm7_polygon_boolean" ->
         """SELECT * FROM (VALUES
-          |  (CAST(1 AS BIGINT), CAST(1 AS BIGINT), 175.0,
+          |  (CAST(1 AS BIGINT), CAST(1 AS BIGINT), CAST(175.0 AS DOUBLE),
           |   '0:0,10:0,10:5,15:5,15:15,5:15,5:10,0:10',
-          |   CAST(1 AS BIGINT), 75.0, CAST(2 AS BIGINT), 150.0,
+          |   CAST(1 AS BIGINT), CAST(75.0 AS DOUBLE), CAST(2 AS BIGINT),
+          |   CAST(150.0 AS DOUBLE),
           |   CAST(1 AS BIGINT)),
-          |  (CAST(2 AS BIGINT), CAST(2 AS BIGINT), 200.0,
+          |  (CAST(2 AS BIGINT), CAST(2 AS BIGINT), CAST(200.0 AS DOUBLE),
           |   '0:0,10:0,10:10,0:10',
-          |   CAST(1 AS BIGINT), 100.0, CAST(2 AS BIGINT), 200.0,
+          |   CAST(1 AS BIGINT), CAST(100.0 AS DOUBLE), CAST(2 AS BIGINT),
+          |   CAST(200.0 AS DOUBLE),
           |   CAST(2 AS BIGINT)))
           |  AS t(id, n_union, union_area, u1_txt, n_diff, diff_area,
           |       n_sym, sym_area, n_gu)
@@ -1165,21 +1177,25 @@ object Geo extends QueryPack {
       // diff 300, sym 300 + 12).
       "q1g_holed_inputs" ->
         """SELECT * FROM (VALUES
-          |  (CAST(1 AS BIGINT), CAST(2 AS BIGINT), 106.0,
-          |   CAST(2 AS BIGINT), 78.0, 88.0),
-          |  (CAST(2 AS BIGINT), CAST(2 AS BIGINT), 68.0,
-          |   CAST(3 AS BIGINT), 64.0, 68.0),
-          |  (CAST(3 AS BIGINT), CAST(2 AS BIGINT), 396.0,
-          |   CAST(2 AS BIGINT), 300.0, 312.0))
+          |  (CAST(1 AS BIGINT), CAST(2 AS BIGINT), CAST(106.0 AS DOUBLE),
+          |   CAST(2 AS BIGINT), CAST(78.0 AS DOUBLE), CAST(88.0 AS DOUBLE)),
+          |  (CAST(2 AS BIGINT), CAST(2 AS BIGINT), CAST(68.0 AS DOUBLE),
+          |   CAST(3 AS BIGINT), CAST(64.0 AS DOUBLE), CAST(68.0 AS DOUBLE)),
+          |  (CAST(3 AS BIGINT), CAST(2 AS BIGINT), CAST(396.0 AS DOUBLE),
+          |   CAST(2 AS BIGINT), CAST(300.0 AS DOUBLE), CAST(312.0 AS DOUBLE)))
           |  AS t(id, n_in, u_area, n_u, d_area, sd_area)
           |ORDER BY id""".stripMargin,
 
       "q0x_holed_boolean" ->
         """SELECT * FROM (VALUES
-          |  (CAST(1 AS BIGINT), CAST(2 AS BIGINT), 750.0, 100.0,
-          |   CAST(2 AS BIGINT), 700.0, CAST(1 AS BIGINT), 650.0),
-          |  (CAST(2 AS BIGINT), CAST(1 AS BIGINT), 1600.0, 1600.0,
-          |   CAST(2 AS BIGINT), 1200.0, CAST(2 AS BIGINT), 1200.0))
+          |  (CAST(1 AS BIGINT), CAST(2 AS BIGINT), CAST(750.0 AS DOUBLE),
+          |   CAST(100.0 AS DOUBLE),
+          |   CAST(2 AS BIGINT), CAST(700.0 AS DOUBLE), CAST(1 AS BIGINT),
+          |   CAST(650.0 AS DOUBLE)),
+          |  (CAST(2 AS BIGINT), CAST(1 AS BIGINT), CAST(1600.0 AS DOUBLE),
+          |   CAST(1600.0 AS DOUBLE),
+          |   CAST(2 AS BIGINT), CAST(1200.0 AS DOUBLE), CAST(2 AS BIGINT),
+          |   CAST(1200.0 AS DOUBLE)))
           |  AS t(id, n_u, u_area, last_ring_area, n_sd, sd_area, n_d,
           |       d_area)
           |ORDER BY id""".stripMargin,
@@ -1189,7 +1205,7 @@ object Geo extends QueryPack {
       // within a group fold idempotently).
       "qm8_geometry_union_agg" ->
         """SELECT cast(g as bigint) AS g, cast(1 as bigint) AS n_comp,
-          |  424.0 AS total_area
+          |  CAST(424.0 AS DOUBLE) AS total_area
           |FROM (SELECT DISTINCT c_custkey % 3 AS g FROM customer) t
           |ORDER BY g""".stripMargin,
 
@@ -1208,8 +1224,8 @@ object Geo extends QueryPack {
       // Hand-computed: area 100-9-4, centroid (100*5-9*3.5-4*7)/87 =
       // 440.5/87, WKB = 1+4+4 header + 3 rings x (4 + 5 pts x 16) = 261.
       "qn5_holed_polygon" ->
-        """SELECT CAST(1 AS BIGINT) AS id, 87.0 AS area,
-          |  5.063218 AS cx, 5.063218 AS cy,
+        """SELECT CAST(1 AS BIGINT) AS id, CAST(87.0 AS DOUBLE) AS area,
+          |  CAST(5.063218 AS DOUBLE) AS cx, CAST(5.063218 AS DOUBLE) AS cy,
           |  true AS in_solid, false AS in_hole, true AS between_holes,
           |  false AS in_hole2, false AS outside, true AS wkb_rt,
           |  CAST(261 AS BIGINT) AS wkb_len""".stripMargin,
@@ -1219,26 +1235,27 @@ object Geo extends QueryPack {
       // subject has no rings; the splitting bar (x in [4,6]) leaves a
       // 4x10 piece on each side — a 2-component multipolygon (r7).
       "qr0_holed_difference" ->
-        """SELECT CAST(1 AS BIGINT) AS id, 91.0 AS holed_area,
+        """SELECT CAST(1 AS BIGINT) AS id, CAST(91.0 AS DOUBLE) AS holed_area,
           |  CAST(2 AS BIGINT) AS holed_rings,
           |  false AS centre_in_hole, true AS corner_solid,
-          |  true AS wkb_rt, 50.0 AS crossed_area,
+          |  true AS wkb_rt, CAST(50.0 AS DOUBLE) AS crossed_area,
           |  CAST(1 AS BIGINT) AS crossed_rings,
-          |  100.0 AS disjoint_area,
+          |  CAST(100.0 AS DOUBLE) AS disjoint_area,
           |  CAST(0 AS BIGINT) AS swallowed_rings,
           |  CAST(2 AS BIGINT) AS split_rings,
-          |  40.0 AS split_area_lo, 40.0 AS split_area_hi""".stripMargin,
+          |  CAST(40.0 AS DOUBLE) AS split_area_lo,
+          |   CAST(40.0 AS DOUBLE) AS split_area_hi""".stripMargin,
 
       "qm6_geometry_structure" ->
         """SELECT * FROM (VALUES
           |  (CAST(1 AS BIGINT), 'ST_Polygon', 'ST_LineString',
           |   CAST(2 AS BIGINT), CAST(1 AS BIGINT), CAST(3 AS BIGINT),
           |   'POINT (2.0 2.0)', CAST(2 AS BIGINT), CAST(0 AS BIGINT),
-          |   true, true, 6.0, true, CAST(32 AS BIGINT)),
+          |   true, true, CAST(6.0 AS DOUBLE), true, CAST(32 AS BIGINT)),
           |  (CAST(2 AS BIGINT), 'ST_Polygon', 'ST_LineString',
           |   CAST(2 AS BIGINT), CAST(1 AS BIGINT), CAST(2 AS BIGINT),
           |   'POINT (3.0 1.0)', CAST(2 AS BIGINT), CAST(0 AS BIGINT),
-          |   true, true, 16.0, true, CAST(32 AS BIGINT)))
+          |   true, true, CAST(16.0 AS DOUBLE), true, CAST(32 AS BIGINT)))
           |  AS t(id, ptype, ltype, pdim, ldim, npts, second_pt, nbound,
           |       nint, ring_ok, valid_ok, parea, wkb_rt, nbuf)
           |ORDER BY id""".stripMargin

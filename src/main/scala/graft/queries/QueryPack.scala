@@ -11,6 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Keys present in `defs` but absent from `oracles` get the driver's weaker
   * rows-only check (used for non-SQL-expressible ops like LSH dedup).
   *
+  * A gate whose oracle is the same query is written once: the pack keeps
+  * one text that `defs` hands to Spark and `oracles` hands to DuckDB,
+  * behind `QueryPack.withCte` where DuckDB needs the pack's derived views
+  * spelled out. A second text is written only where the dialects differ,
+  * as Presto's `assertQuery(sql)` does against H2.
+  *
   * Column names and types must line up between the two sides — the driver
   * sorts columns by name before hashing values.
   */
@@ -18,4 +24,15 @@ trait QueryPack {
   type Q = (SparkSession, String) => DataFrame
   def defs: Map[String, Q]
   def oracles: Map[String, String]
+}
+
+object QueryPack {
+  private val leadingWith = """(?is)\s*WITH\s+(.*)""".r
+
+  /** `q` with the common table expressions `cte` in front: joined into
+    * q's own WITH list when it has one, else as a new WITH clause. */
+  def withCte(cte: String, q: String): String = q match {
+    case leadingWith(rest) => s"WITH $cte,\n$rest"
+    case _                 => s"WITH $cte\n$q"
+  }
 }

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Keeps each recurring idiom in its one helper: parquet footers are
-  * read only in Footers, thread pools are built only in Exec, and sketch
-  * bytes are told apart only in SketchFamily. */
+  * read only in Footers, thread pools are built only in Exec, sketch
+  * bytes are told apart only in SketchFamily, and an oracle gets its
+  * derived-view CTE only through QueryPack.withCte. */
 class SourceGuardSuite extends GraftSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -48,5 +49,17 @@ class SourceGuardSuite extends GraftSuite {
     val owner = main.resolve("graft/functions/SketchFamily.scala")
     onlyCalls("isHll", owner)
     onlyCalls("isKhll", owner)
+  }
+
+  test("oracle CTEs are spliced only through QueryPack.withCte") {
+    val spliced = sourcesWhere(src =>
+      src.contains("WITH $dsCte") || src.contains("WITH $psCte"))
+    assert(spliced.isEmpty, s"hand-spliced oracle CTE in $spliced")
+  }
+
+  test("queries/ makes no temp directory outside Hadoop FileSystem") {
+    val found = sourcesWhere(_.contains("createTempDirectory"))
+      .filter(_.startsWith("graft/queries/"))
+    assert(found.isEmpty, s"createTempDirectory in $found")
   }
 }

@@ -5,109 +5,38 @@ Usage: after `sbt "runMain graft.Verify <sfDir> <outDir>"`, run
     python3 tools/local_verify.py <sfDir> <outDir>
 
 For every query result parquet in outDir, runs the matching oracle SQL from
-oracle_sql.json in DuckDB (with views over the same fixture parquet), then
-compares as multisets: columns sorted by name, rows sorted, doubles compared
-with 1e-9 relative tolerance.  Dev-only tool — not part of the library.
+oracle_sql.json in DuckDB (with views over the same fixture parquet) and
+compares with perfbench's typed comparator (`perfbench/oracle.py`): columns
+matched by name, rows as a multiset, doubles within 1e-9 relative, and each
+numeric column's type family (integer, floating point, decimal) equal on
+both sides.  Exit status 1 when any query fails.  Dev-only tool — not part
+of the library.
 """
 import json
-import math
 import sys
+from pathlib import Path
 
-import duckdb
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-
-def norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if isinstance(v, list):
-        return tuple(norm_cell(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, norm_cell(x)) for k, x in v.items()))
-    return v
-
-
-def close(a, b):
-    if type(a) is float or type(b) is float:
-        try:
-            fa, fb = float(a), float(b)
-        except (TypeError, ValueError):
-            return False
-        if math.isnan(fa) and math.isnan(fb):
-            return True
-        return abs(fa - fb) <= 1e-9 * max(1.0, abs(fa), abs(fb))
-    return a == b
-
-
-def rows_equal(r1, r2):
-    return len(r1) == len(r2) and all(close(a, b) for a, b in zip(r1, r2))
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
+from oracle import compare, connect  # noqa: E402
 
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     failed = []
     for name, sql in sorted(oracle.items()):
         try:
-            got = con.execute(
-                f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
-            got_cols = [d[0] for d in got.description]
-            got_rows = got.fetchall()
-            exp = con.execute(sql)
-            exp_cols = [d[0] for d in exp.description]
-            exp_rows = exp.fetchall()
+            why, n_rows = compare(con, f"{out_dir}/{name}", sql)
         except Exception as e:
-            print(f"FAIL {name}: exception {e}")
-            n_fail += 1
-            failed.append(name)
-            continue
-        if sorted(got_cols) != sorted(exp_cols):
-            print(f"FAIL {name}: columns {sorted(got_cols)} != {sorted(exp_cols)}")
-            n_fail += 1
-            failed.append(name)
-            continue
-        gi = [got_cols.index(c) for c in sorted(got_cols)]
-        ei = [exp_cols.index(c) for c in sorted(exp_cols)]
-        g = sorted([tuple(norm_cell(r[i]) for i in gi) for r in got_rows],
-                   key=lambda r: tuple(str(x) for x in r))
-        e = sorted([tuple(norm_cell(r[i]) for i in ei) for r in exp_rows],
-                   key=lambda r: tuple(str(x) for x in r))
-        if len(g) != len(e):
-            print(f"FAIL {name}: rowcount {len(g)} != {len(e)}")
-            n_fail += 1
-            failed.append(name)
-            continue
-        bad = [i for i, (r1, r2) in enumerate(zip(g, e)) if not rows_equal(r1, r2)]
-        if bad:
-            i = bad[0]
-            print(f"FAIL {name}: {len(bad)} rows differ; first at {i}:")
-            print(f"   got: {g[i]}")
-            print(f"   exp: {e[i]}")
+            why = f"exception {e}"
+        if why:
+            print(f"FAIL {name}: {why}")
             n_fail += 1
             failed.append(name)
         else:
-            # dtype drift warning (r1 ADVICE): values can match while the
-            # driver's hash still differs on column types (e.g. DuckDB
-            # HUGEINT vs Spark BIGINT). Integer-vs-integer width diffs are
-            # fine; flag float/decimal/object family mismatches.
-            warn = []
-            gt = {d[0]: str(d[1]) for d in got.description}
-            et = {d[0]: str(d[1]) for d in exp.description}
-            INT = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT"}
-            for c in gt:
-                a, b = gt[c], et.get(c, "?")
-                if a != b and not (a in INT and b in INT):
-                    warn.append(f"{c}: spark={a} oracle={b}")
-            note = " (0 rows!)" if len(g) == 0 else ""
-            wnote = f" DTYPE-WARN [{'; '.join(warn)}]" if warn else ""
-            print(f"PASS {name}: {len(g)} rows{note}{wnote}")
+            note = " (0 rows!)" if n_rows == 0 else ""
+            print(f"PASS {name}: {n_rows} rows{note}")
             n_pass += 1
     print(f"\n{n_pass} passed, {n_fail} failed")
     if failed:
