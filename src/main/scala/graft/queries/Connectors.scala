@@ -1358,8 +1358,9 @@ object Connectors extends QueryPack {
   }
 
   /** q0n fixture: 1200 closed-form log lines in 3 rotation files
-    * (0-399 plain, 400-799 gzip, 800-1199 plain), rebuilt on every
-    * call. The SAME arithmetic replays as the DuckDB oracle CTE. */
+    * (0-399 plain, 400-799 gzip, 800-1199 plain), written once per JVM
+    * under the scratch root. The SAME arithmetic replays as the DuckDB
+    * oracle CTE. */
   private def q0nLine(k: Long): String = {
     val ts = java.time.OffsetDateTime.of(2024, 1, 1, 0, 0, 0, 0,
       java.time.ZoneOffset.UTC).plusSeconds(k * 60)
@@ -1372,24 +1373,28 @@ object Connectors extends QueryPack {
       if (k % 10 == 0) "" else s"tok-$k").mkString("\t")
   }
 
-  private[graft] def writeQ0nLogs(): String = {
-    import java.nio.file.{Files, Paths}
-    val logDir = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_q0n_logs")
-    if (Files.isDirectory(logDir))
-      Files.list(logDir).forEach(p => Files.delete(p))
-    else Files.createDirectories(logDir)
+  private[graft] def writeQ0nLogs(): String = q0nLogDir
+
+  // Once per JVM: each Hadoop local create also sets the file's
+  // permissions, which costs milliseconds per file without native libs.
+  private lazy val q0nLogDir: String = {
+    import org.apache.hadoop.fs.Path
+    val logDir = new Path(graft.Scratch.root, "graft_q0n_logs")
+    // the raw local FS writes no .crc siblings, which graft-localfile's
+    // default `*` pattern would read as logs
+    val fs = graft.Scratch.fs.getRawFileSystem
+    fs.mkdirs(logDir)
     def dump(name: String, ks: Range, gzip: Boolean): Unit = {
       val text = ks.map(k => q0nLine(k.toLong)).mkString("", "\n", "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val fos = Files.newOutputStream(logDir.resolve(name))
+      val fos = fs.create(new Path(logDir, name))
       val out = if (gzip) new java.util.zip.GZIPOutputStream(fos) else fos
       try out.write(text) finally out.close()
     }
     dump("http-request.log.1", 0 until 400, gzip = false)
     dump("http-request.log.2.gz", 400 until 800, gzip = true)
     dump("http-request.log.3", 800 until 1200, gzip = false)
-    logDir.toString
+    logDir.toUri.getPath
   }
 
   // DuckDB replay of the generator arithmetic. `//` is integer

@@ -38,12 +38,12 @@ object Dedup extends QueryPack {
   // the query (raise_error) and mirrored literally in the oracle.
   private val SeedStride = 100000L
 
-  /** Runs `body` against a fresh temp directory on the session's
-    * Hadoop filesystem and deletes the directory afterwards, also when
-    * `body` throws. The cross-run ingest gates keep their index there. */
+  /** Runs `body` against a fresh directory under the scratch root and
+    * deletes the directory afterwards, also when `body` throws. The
+    * cross-run ingest gates keep their index there. */
   private def withTempDir[T](s: org.apache.spark.sql.SparkSession,
       prefix: String)(body: Path => T): T = {
-    val dir = new Path(System.getProperty("java.io.tmpdir"),
+    val dir = new Path(graft.Scratch.root,
       s"${prefix}_${java.util.UUID.randomUUID}")
     val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
     try body(dir) finally fs.delete(dir, true)

@@ -27,10 +27,17 @@ object Storage extends QueryPack {
     * (ADVICE r3). Within one session the path is stable, so tests can
     * read back what the query wrote. */
   def ctasPath(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_ctas_${Integer.toHexString(dir.hashCode)}_" +
-        s.sparkContext.applicationId).getAbsolutePath
+    graft.Scratch.path(s"graft_ctas_${Integer.toHexString(dir.hashCode)}_" +
+      s.sparkContext.applicationId)
+
+  /** Keeps Derby's system home, and its derby.log, in the scratch
+    * directory rather than the working directory. */
+  private def useDerbyHome(): Unit = {
+    val home = new org.apache.hadoop.fs.Path(graft.Scratch.root,
+      "graft_derby_home")
+    graft.Scratch.fs.mkdirs(home)
+    System.setProperty("derby.system.home", home.toUri.getPath)
+  }
 
   /** Derby fixture table, built ONCE per (session, dir, table). The
     * JDBC pushdown gates (q1k/q1s/q1q/q2i) measure the pushed-down
@@ -45,11 +52,7 @@ object Storage extends QueryPack {
   private def derbyFixture(s: org.apache.spark.sql.SparkSession,
       dir: String, db: String, table: String)
       (write: String => Unit): String = {
-    val home = new java.io.File(
-      System.getProperty("java.io.tmpdir"), "graft_derby_home")
-    home.mkdirs()
-    // keep derby.log out of the repo working dir
-    System.setProperty("derby.system.home", home.getAbsolutePath)
+    useDerbyHome()
     val url = "jdbc:derby:" + ctasPath(s, dir) + db + ";create=true"
     derbyReady.computeIfAbsent(url + "#" + table, _ => { write(url); "ok" })
     url
@@ -628,11 +631,7 @@ object Storage extends QueryPack {
     // String columns get explicit VARCHAR DDL (Derby's default CLOB
     // mapping can't be compared or pushed down).
     "qh6_jdbc_roundtrip" -> ((s, dir) => {
-      val home = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_derby_home")
-      home.mkdirs()
-      // keep derby.log out of the repo working dir
-      System.setProperty("derby.system.home", home.getAbsolutePath)
+      useDerbyHome()
       val url = "jdbc:derby:" + ctasPath(s, dir) + "_derby;create=true"
       Tables.view(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))

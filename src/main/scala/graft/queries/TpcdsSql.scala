@@ -386,13 +386,10 @@ object TpcdsSql extends QueryPack {
       val dirs = materialized.computeIfAbsent(s,
         _ => scala.collection.mutable.Map.empty)
       val matDir = dirs.getOrElseUpdate(dir, {
-        // Deleted when the JVM exits: Hadoop closes its cached
-        // FileSystems in a shutdown hook, which runs deleteOnExit.
-        val base = new Path(System.getProperty("java.io.tmpdir"),
+        // Deleted with the scratch root when the JVM exits.
+        val base = new Path(graft.Scratch.root,
           s"graft_tpcds_mat_${java.util.UUID.randomUUID}")
-        val fs = base.getFileSystem(s.sessionState.newHadoopConf())
-        fs.mkdirs(base)
-        fs.deleteOnExit(base)
+        base.getFileSystem(s.sessionState.newHadoopConf()).mkdirs(base)
         // r18 note: rewriting the facts at the session's parallelism
         // (32 files) was tried and MEASURED SLOWER suite-wide (qx1
         // 0.24→0.58 s, qv7 1.7→3.3 s): at fixture scale per-task fixed

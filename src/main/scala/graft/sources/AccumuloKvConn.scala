@@ -8,9 +8,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -389,41 +388,29 @@ object AccStore {
   }
 }
 
-class AccumuloKvProvider extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-accumulo"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AccumuloKvTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new AccumuloKvTable(new CaseInsensitiveStringMap(properties))
+class AccumuloKvProvider extends ConnectorProvider("graft-accumulo") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new AccumuloKvTable(options)
 }
 
 object AccumuloKvTable {
   def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    require(name != null && name.nonEmpty,
-      "graft-accumulo requires option 'table'")
-    val t = AccStore.table(name)
+    val t = AccStore.table(Connector.option(options, "graft-accumulo",
+      "table"))
     StructType(StructField(t.rowIdCol, t.rowIdType) +:
       t.columns.map(c => StructField(c.name, c.dt)))
   }
 }
 
 class AccumuloKvTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends ReadTable with SupportsWrite {
 
   private val tableName = options.get("table")
 
   override def name(): String = s"graft-accumulo.$tableName"
   override def schema(): StructType = AccumuloKvTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE)
+  override protected def moreCapabilities: Seq[TableCapability] =
+    Seq(TableCapability.BATCH_WRITE)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new AccScanBuilder(tableName, schema(), o)
@@ -553,243 +540,27 @@ class AccScanBuilder(tableName: String, full: StructType,
       options)
 }
 
-/** A bin of index-determined row IDs (`IndexLookup.binRanges`). */
-final case class AccIndexSplit(table: String, rowIds: Array[String])
-    extends InputPartition
-/** One tablet's slice of a row-id range scan
-  * (`AccumuloClient.splitByTabletBoundaries`). */
-final case class AccRangeSplit(table: String, range: AccStore.KeyRange)
-    extends InputPartition
-
-class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
-    constraints: Seq[AccStore.Constraint], required: StructType,
-    pushedFilters: Array[Filter], options: CaseInsensitiveStringMap)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
-
-  import AccStore._
-
-  private val t = AccStore.table(tableName)
-
-  /** RUNTIME split pruning (Spark's dynamic-pruning hook for DSv2,
-    * SPARK-35779): a join's build-side key values arrive as In/EqualTo
-    * filters after the build side executes. Row-id values intersect
-    * the row-range set (point lookups chopped on tablet boundaries —
-    * the dynamic counterpart of the row-id-range arm); values on
-    * INDEXED columns join the constraint set and ride the SAME
-    * `IndexLookup.applyIndex` decision tree as planning-time
-    * predicates, so a selective join probes the secondary index's
-    * rowId sets instead of scanning tablets. Readers keep the STATIC
-    * constraint set — pruning is an I/O optimization, the join
-    * re-applies exact semantics ([[AccStore.rowsMaterialized]] counts
-    * the saved volume). */
-  @volatile private var runtimeRanges: Seq[KeyRange] = Seq.empty
-  @volatile private var runtimeConstraints: Seq[Constraint] = Seq.empty
-
-  private def normRt(col: String, v: Any): Any = {
-    val dt = if (col == t.rowIdCol) t.rowIdType else t.colByName(col).dt
-    (dt, v) match {
-      case (LongType, n: Number) => n.longValue()
-      case (DoubleType, n: Number) => n.doubleValue()
-      case (StringType, s) => s.toString
-      case _ => v
-    }
-  }
-
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    (t.rowIdCol +: t.columns.filter(_.indexed).map(_.name))
-      .distinct
-      // only columns in the pruned read schema: Spark resolves these
-      // against the scan's OUTPUT and errors on a pruned-away column
-      .filter(required.fieldNames.contains)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
-
-  override def filter(filters: Array[Filter]): Unit = {
-    val rr = Seq.newBuilder[KeyRange]
-    val cs = Seq.newBuilder[Constraint]
-    filters.foreach {
-      case In(a, vs) if a == t.rowIdCol && vs.nonEmpty &&
-          !vs.contains(null) =>
-        vs.foreach { v =>
-          val k = encodeKey(normRt(a, v))
-          rr += KeyRange(Some(k), true, Some(k), true)
-        }
-      case EqualTo(a, v) if a == t.rowIdCol && v != null =>
-        val k = encodeKey(normRt(a, v))
-        rr += KeyRange(Some(k), true, Some(k), true)
-      case In(a, vs) if t.colByName.get(a).exists(_.indexed) &&
-          vs.nonEmpty && !vs.contains(null) =>
-        cs += Constraint(a, ValuesIn(vs.toSeq.map(normRt(a, _))))
-      case EqualTo(a, v) if t.colByName.get(a).exists(_.indexed) &&
-          v != null =>
-        cs += Constraint(a, ValuesIn(Seq(normRt(a, v))))
-      case _ => ()
-    }
-    runtimeRanges = rr.result()
-    runtimeConstraints = cs.result()
-  }
-
-  // AccumuloSessionProperties names and defaults (`:55-110`)
-  private def boolOpt(k: String, d: Boolean) =
-    Option(options.get(k)).map(_.toBoolean).getOrElse(d)
-  private val optimizeIndex = boolOpt("optimize_index_enabled", true)
-  private val metricsEnabled = boolOpt("index_metrics_enabled", true)
-  private val splitRangesEnabled =
-    boolOpt("optimize_split_ranges_enabled", true)
-  private val rowsPerSplit =
-    Option(options.get("index_rows_per_split")).map(_.toInt).getOrElse(10000)
-  private val indexThreshold =
-    Option(options.get("index_threshold")).map(_.toDouble).getOrElse(0.2)
-  private val smallCardThreshold =
-    Option(options.get("index_lowest_cardinality_threshold"))
-      .map(_.toDouble).getOrElse(0.01)
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-accumulo $tableName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
-      s"plan=${AccStore.lastPlan.getOrDefault(tableName, "?")} cols=" +
-      required.fieldNames.mkString(",")
-
-  /** The `AccumuloClient.getTabletSplits:652-715` decision tree. */
-  private def computePlanned(rr: Seq[KeyRange], cs: Seq[Constraint])
-      : Array[InputPartition] = {
-    val indexed = cs.filter(c => t.colByName(c.col).indexed &&
-      (c.spec match {
-        case _: ValuesIn | _: ValueRange => true
-        case _ => false // exists/missing are not index lookups
-      }))
-    val (viaIndex, decision): (Option[Array[InputPartition]], String) =
-      if (!optimizeIndex || indexed.isEmpty)
-        (None, "tabletScan(noIndexedConstraint)")
-      else if (!metricsEnabled) {
-        // `IndexLookup.java:157-173`: no metrics — intersect and bin
-        val sets = indexed.map(indexRowIds(t, _, rr))
-        val hits = sets.reduceLeft((a, b) => a.intersect(b))
-        (Some(bin(hits)), s"index(noMetrics,${hits.size})")
-      }
-      else {
-        val numRows = math.max(t.numRowsMetric.get(), 1L)
-        val byCard = indexed.map(c => metricCardinality(t, c) -> c)
-          .sortBy(_._1)
-        val (lowestCard, lowestC) = byCard.head
-        // which row-id set to consider, per
-        // `IndexLookup.getRangesWithMetrics:225-261`
-        val hitsOpt: Option[(collection.SortedSet[String], String)] =
-          if (lowestCard.toDouble / numRows <= smallCardThreshold)
-            // under the lowest-cardinality threshold: that column ALONE
-            Some((indexRowIds(t, lowestC, rr),
-              s"lowCard(${lowestC.col})"))
-          else if (indexed.size == 1 &&
-            lowestCard.toDouble / numRows >= indexThreshold)
-            None // single column already over the threshold (`:240-247`)
-          else {
-            val sets = indexed.map(indexRowIds(t, _, rr))
-            Some((sets.reduceLeft((a, b) => a.intersect(b)), "intersect"))
-          }
-        hitsOpt match {
-          case None =>
-            (None, s"tabletScan(cardOverThreshold,$lowestCard/$numRows)")
-          case Some((hits, how)) =>
-            // final ratio check + binning (`IndexLookup.java:268-285`)
-            val ratio = hits.size.toDouble / numRows
-            if (ratio < indexThreshold)
-              (Some(bin(hits)), s"index($how,${hits.size}/$numRows)")
-            else
-              (None, s"tabletScan(ratio,${hits.size}/$numRows)")
-        }
-      }
-    AccStore.lastPlan.put(tableName, decision)
-    viaIndex.getOrElse(tabletScan(rr))
-  }
-
-  // stats report the STATIC plan (runtime filters arrive later);
-  // execution re-plans with whatever runtime values Spark handed over
-  private lazy val planned: Array[InputPartition] =
-    computePlanned(rowRanges, constraints)
-
-  private def bin(hits: collection.SortedSet[String])
-      : Array[InputPartition] =
-    hits.toArray.grouped(math.max(rowsPerSplit, 1))
-      .map(g => AccIndexSplit(tableName, g): InputPartition).toArray
-
-  private def tabletScan(rr: Seq[KeyRange]): Array[InputPartition] = {
-    // split each row-id range on tablet boundaries (`:756`)
-    val pieces =
-      if (!splitRangesEnabled) rr
-      else rr.flatMap { r =>
-        val cuts = t.splitPoints.filter(p =>
-          r.lo.forall(l => p > l) && r.hi.forall(h => p < h))
-        // walk [lo, cut1], (cut1, cut2], ..., (cutN, hi]
-        var lo = r.lo; var loInc = r.loInc
-        val out = mutable.ArrayBuffer.empty[KeyRange]
-        cuts.foreach { c =>
-          out += KeyRange(lo, loInc, Some(c), true)
-          lo = Some(c); loInc = false
-        }
-        out += KeyRange(lo, loInc, r.hi, r.hiInc)
-        out.toSeq
-      }
-    pieces.map(p => AccRangeSplit(tableName, p): InputPartition).toArray
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    if (runtimeRanges.isEmpty && runtimeConstraints.isEmpty) planned
-    else {
-      val rr =
-        if (runtimeRanges.isEmpty) rowRanges
-        else rowRanges.flatMap(a => runtimeRanges.flatMap(a.intersect))
-      computePlanned(rr, constraints ++ runtimeConstraints)
-    }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AccReaderFactory(required, constraints, rowRanges)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val rows = planned.map {
-      case AccIndexSplit(_, ids) => ids.length.toLong
-      case AccRangeSplit(_, r) =>
-        var n = 0L
-        val it = t.rows.keySet().iterator()
-        while (it.hasNext) { if (r.contains(it.next())) n += 1 }
-        n
-    }.sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-}
-
-class AccReaderFactory(required: StructType,
+/** What every split of one scan reads: the pruned columns, and the
+  * static constraints and row ranges re-applied to each candidate row
+  * (the filter-iterator analog). */
+final case class AccRead(required: StructType,
     constraints: Seq[AccStore.Constraint],
     rowRanges: Seq[AccStore.KeyRange])
-    extends PartitionReaderFactory with Serializable {
 
-  import AccStore._
+sealed trait AccSplit extends ConnectorSplit {
+  def table: String
+  def read: AccRead
 
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val (tableName, candidates) = p match {
-      case AccIndexSplit(n, ids) =>
-        val t = AccStore.table(n)
-        (n, ids.iterator.flatMap(k => Option(t.rows.get(k)).map(k -> _)))
-      case AccRangeSplit(n, r) =>
-        val t = AccStore.table(n)
-        var sub: java.util.concurrent.ConcurrentNavigableMap[String, AccStore.AccRow] = t.rows
-        r.lo.foreach(l => sub = sub.tailMap(l, r.loInc))
-        r.hi.foreach(h => sub = sub.headMap(h, r.hiInc))
-        (n, sub.entrySet().iterator().asScala
-          .map(e => e.getKey -> e.getValue))
-    }
+  /** The (row id, row) pairs this split visits. */
+  private[sources] def candidates(t: AccStore.AccTable)
+      : Iterator[(String, AccStore.AccRow)]
+
+  override def rows(): Iterator[InternalRow] = {
+    import AccStore._
+    val AccRead(required, constraints, rowRanges) = read
+    val tableName = this.table
     val t = AccStore.table(tableName)
+    val candidates = this.candidates(t)
     // families this task touches: required columns + constraint columns
     // (locality-group pruning — untouched groups read zero cells)
     val neededCols = (required.fieldNames.toSet ++
@@ -892,33 +663,247 @@ class AccReaderFactory(required: StructType,
       matches(k, row)
     }
 
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = hits.hasNext
-      override def get(): InternalRow = {
-        val (_, row) = hits.next()
-        var i = 0
-        while (i < neededFams.length) {
-          localCells(i) +=
-            row.families.getOrElse(neededFams(i), Map.empty).size.toLong
-          i += 1
-        }
-        val out = new Array[Any](fieldFns.length)
-        i = 0
-        while (i < fieldFns.length) { out(i) = fieldFns(i)(row); i += 1 }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+    new ClosingRows(hits.map { case (_, row) =>
+      var i = 0
+      while (i < neededFams.length) {
+        localCells(i) +=
+          row.families.getOrElse(neededFams(i), Map.empty).size.toLong
+        i += 1
       }
-      override def close(): Unit = {
-        AccStore.rowsMaterialized.addAndGet(localMaterialized)
-        localMaterialized = 0L
-        var i = 0
-        while (i < neededFams.length) {
-          if (localCells(i) > 0)
-            AccStore.countCells(tableName, neededFams(i), localCells(i))
-          localCells(i) = 0L
-          i += 1
-        }
+      val out = new Array[Any](fieldFns.length)
+      i = 0
+      while (i < fieldFns.length) { out(i) = fieldFns(i)(row); i += 1 }
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+    }, () => {
+      AccStore.rowsMaterialized.addAndGet(localMaterialized)
+      localMaterialized = 0L
+      var i = 0
+      while (i < neededFams.length) {
+        if (localCells(i) > 0)
+          AccStore.countCells(tableName, neededFams(i), localCells(i))
+        localCells(i) = 0L
+        i += 1
       }
+    })
+  }
+}
+
+/** A bin of index-determined row IDs (`IndexLookup.binRanges`). */
+final case class AccIndexSplit(table: String, rowIds: Array[String],
+    read: AccRead) extends AccSplit {
+  override private[sources] def candidates(t: AccStore.AccTable)
+      : Iterator[(String, AccStore.AccRow)] =
+    rowIds.iterator.flatMap(k => Option(t.rows.get(k)).map(k -> _))
+}
+
+/** One tablet's slice of a row-id range scan
+  * (`AccumuloClient.splitByTabletBoundaries`). */
+final case class AccRangeSplit(table: String, range: AccStore.KeyRange,
+    read: AccRead) extends AccSplit {
+  override private[sources] def candidates(t: AccStore.AccTable)
+      : Iterator[(String, AccStore.AccRow)] = {
+    var sub: java.util.concurrent.ConcurrentNavigableMap[String, AccStore.AccRow] = t.rows
+    range.lo.foreach(l => sub = sub.tailMap(l, range.loInc))
+    range.hi.foreach(h => sub = sub.headMap(h, range.hiInc))
+    sub.entrySet().iterator().asScala.map(e => e.getKey -> e.getValue)
+  }
+}
+
+class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
+    constraints: Seq[AccStore.Constraint], required: StructType,
+    pushedFilters: Array[Filter], options: CaseInsensitiveStringMap)
+    extends ConnectorScan(required)
+    with org.apache.spark.sql.connector.read.SupportsReportStatistics
+    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+
+  import AccStore._
+
+  private val t = AccStore.table(tableName)
+  private val read = AccRead(required, constraints, rowRanges)
+
+  /** RUNTIME split pruning (Spark's dynamic-pruning hook for DSv2,
+    * SPARK-35779): a join's build-side key values arrive as In/EqualTo
+    * filters after the build side executes. Row-id values intersect
+    * the row-range set (point lookups chopped on tablet boundaries —
+    * the dynamic counterpart of the row-id-range arm); values on
+    * INDEXED columns join the constraint set and ride the SAME
+    * `IndexLookup.applyIndex` decision tree as planning-time
+    * predicates, so a selective join probes the secondary index's
+    * rowId sets instead of scanning tablets. Readers keep the STATIC
+    * constraint set — pruning is an I/O optimization, the join
+    * re-applies exact semantics ([[AccStore.rowsMaterialized]] counts
+    * the saved volume). */
+  @volatile private var runtimeRanges: Seq[KeyRange] = Seq.empty
+  @volatile private var runtimeConstraints: Seq[Constraint] = Seq.empty
+
+  private def normRt(col: String, v: Any): Any = {
+    val dt = if (col == t.rowIdCol) t.rowIdType else t.colByName(col).dt
+    (dt, v) match {
+      case (LongType, n: Number) => n.longValue()
+      case (DoubleType, n: Number) => n.doubleValue()
+      case (StringType, s) => s.toString
+      case _ => v
     }
+  }
+
+  override def filterAttributes()
+      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    (t.rowIdCol +: t.columns.filter(_.indexed).map(_.name))
+      .distinct
+      // only columns in the pruned read schema: Spark resolves these
+      // against the scan's OUTPUT and errors on a pruned-away column
+      .filter(required.fieldNames.contains)
+      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
+      .toArray
+
+  override def filter(filters: Array[Filter]): Unit = {
+    val rr = Seq.newBuilder[KeyRange]
+    val cs = Seq.newBuilder[Constraint]
+    filters.foreach {
+      case In(a, vs) if a == t.rowIdCol && vs.nonEmpty &&
+          !vs.contains(null) =>
+        vs.foreach { v =>
+          val k = encodeKey(normRt(a, v))
+          rr += KeyRange(Some(k), true, Some(k), true)
+        }
+      case EqualTo(a, v) if a == t.rowIdCol && v != null =>
+        val k = encodeKey(normRt(a, v))
+        rr += KeyRange(Some(k), true, Some(k), true)
+      case In(a, vs) if t.colByName.get(a).exists(_.indexed) &&
+          vs.nonEmpty && !vs.contains(null) =>
+        cs += Constraint(a, ValuesIn(vs.toSeq.map(normRt(a, _))))
+      case EqualTo(a, v) if t.colByName.get(a).exists(_.indexed) &&
+          v != null =>
+        cs += Constraint(a, ValuesIn(Seq(normRt(a, v))))
+      case _ => ()
+    }
+    runtimeRanges = rr.result()
+    runtimeConstraints = cs.result()
+  }
+
+  // AccumuloSessionProperties names and defaults (`:55-110`)
+  private def boolOpt(k: String, d: Boolean) =
+    Option(options.get(k)).map(_.toBoolean).getOrElse(d)
+  private val optimizeIndex = boolOpt("optimize_index_enabled", true)
+  private val metricsEnabled = boolOpt("index_metrics_enabled", true)
+  private val splitRangesEnabled =
+    boolOpt("optimize_split_ranges_enabled", true)
+  private val rowsPerSplit =
+    Option(options.get("index_rows_per_split")).map(_.toInt).getOrElse(10000)
+  private val indexThreshold =
+    Option(options.get("index_threshold")).map(_.toDouble).getOrElse(0.2)
+  private val smallCardThreshold =
+    Option(options.get("index_lowest_cardinality_threshold"))
+      .map(_.toDouble).getOrElse(0.01)
+
+  override def description(): String =
+    s"graft-accumulo $tableName " +
+      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
+      s"plan=${AccStore.lastPlan.getOrDefault(tableName, "?")} cols=" +
+      required.fieldNames.mkString(",")
+
+  /** The `AccumuloClient.getTabletSplits:652-715` decision tree. */
+  private def computePlanned(rr: Seq[KeyRange], cs: Seq[Constraint])
+      : Array[InputPartition] = {
+    val indexed = cs.filter(c => t.colByName(c.col).indexed &&
+      (c.spec match {
+        case _: ValuesIn | _: ValueRange => true
+        case _ => false // exists/missing are not index lookups
+      }))
+    val (viaIndex, decision): (Option[Array[InputPartition]], String) =
+      if (!optimizeIndex || indexed.isEmpty)
+        (None, "tabletScan(noIndexedConstraint)")
+      else if (!metricsEnabled) {
+        // `IndexLookup.java:157-173`: no metrics — intersect and bin
+        val sets = indexed.map(indexRowIds(t, _, rr))
+        val hits = sets.reduceLeft((a, b) => a.intersect(b))
+        (Some(bin(hits)), s"index(noMetrics,${hits.size})")
+      }
+      else {
+        val numRows = math.max(t.numRowsMetric.get(), 1L)
+        val byCard = indexed.map(c => metricCardinality(t, c) -> c)
+          .sortBy(_._1)
+        val (lowestCard, lowestC) = byCard.head
+        // which row-id set to consider, per
+        // `IndexLookup.getRangesWithMetrics:225-261`
+        val hitsOpt: Option[(collection.SortedSet[String], String)] =
+          if (lowestCard.toDouble / numRows <= smallCardThreshold)
+            // under the lowest-cardinality threshold: that column ALONE
+            Some((indexRowIds(t, lowestC, rr),
+              s"lowCard(${lowestC.col})"))
+          else if (indexed.size == 1 &&
+            lowestCard.toDouble / numRows >= indexThreshold)
+            None // single column already over the threshold (`:240-247`)
+          else {
+            val sets = indexed.map(indexRowIds(t, _, rr))
+            Some((sets.reduceLeft((a, b) => a.intersect(b)), "intersect"))
+          }
+        hitsOpt match {
+          case None =>
+            (None, s"tabletScan(cardOverThreshold,$lowestCard/$numRows)")
+          case Some((hits, how)) =>
+            // final ratio check + binning (`IndexLookup.java:268-285`)
+            val ratio = hits.size.toDouble / numRows
+            if (ratio < indexThreshold)
+              (Some(bin(hits)), s"index($how,${hits.size}/$numRows)")
+            else
+              (None, s"tabletScan(ratio,${hits.size}/$numRows)")
+        }
+      }
+    AccStore.lastPlan.put(tableName, decision)
+    viaIndex.getOrElse(tabletScan(rr))
+  }
+
+  // stats report the STATIC plan (runtime filters arrive later);
+  // execution re-plans with whatever runtime values Spark handed over
+  private lazy val planned: Array[InputPartition] =
+    computePlanned(rowRanges, constraints)
+
+  private def bin(hits: collection.SortedSet[String])
+      : Array[InputPartition] =
+    hits.toArray.grouped(math.max(rowsPerSplit, 1))
+      .map(g => AccIndexSplit(tableName, g, read): InputPartition).toArray
+
+  private def tabletScan(rr: Seq[KeyRange]): Array[InputPartition] = {
+    // split each row-id range on tablet boundaries (`:756`)
+    val pieces =
+      if (!splitRangesEnabled) rr
+      else rr.flatMap { r =>
+        val cuts = t.splitPoints.filter(p =>
+          r.lo.forall(l => p > l) && r.hi.forall(h => p < h))
+        // walk [lo, cut1], (cut1, cut2], ..., (cutN, hi]
+        var lo = r.lo; var loInc = r.loInc
+        val out = mutable.ArrayBuffer.empty[KeyRange]
+        cuts.foreach { c =>
+          out += KeyRange(lo, loInc, Some(c), true)
+          lo = Some(c); loInc = false
+        }
+        out += KeyRange(lo, loInc, r.hi, r.hiInc)
+        out.toSeq
+      }
+    pieces.map(p => AccRangeSplit(tableName, p, read): InputPartition).toArray
+  }
+
+  override def planInputPartitions(): Array[InputPartition] =
+    if (runtimeRanges.isEmpty && runtimeConstraints.isEmpty) planned
+    else {
+      val rr =
+        if (runtimeRanges.isEmpty) rowRanges
+        else rowRanges.flatMap(a => runtimeRanges.flatMap(a.intersect))
+      computePlanned(rr, constraints ++ runtimeConstraints)
+    }
+
+  override def estimateStatistics()
+      : org.apache.spark.sql.connector.read.Statistics = {
+    val rows = planned.map {
+      case AccIndexSplit(_, ids, _) => ids.length.toLong
+      case AccRangeSplit(_, r, _) =>
+        var n = 0L
+        val it = t.rows.keySet().iterator()
+        while (it.hasNext) { if (r.contains(it.next())) n += 1 }
+        n
+    }.sum
+    ScanStats(rows, rows * 128L)
   }
 }
 

@@ -5,9 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -108,31 +107,18 @@ object AtopTables {
   }
 }
 
-class AtopLogProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-atop"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AtopTables.schemaOf(options.get("table"))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new AtopLogTable(new CaseInsensitiveStringMap(properties))
+class AtopLogProvider extends ConnectorProvider("graft-atop") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new AtopLogTable(options)
 }
 
-class AtopLogTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+class AtopLogTable(options: CaseInsensitiveStringMap) extends ReadTable {
 
-  private val store = {
-    val s = options.get("store")
-    require(s != null, "graft-atop requires option 'store'")
-    s
-  }
+  private val store = Connector.option(options, "graft-atop", "store")
   private val tableName = options.get("table")
 
   override def name(): String = s"graft-atop.$store.$tableName"
   override def schema(): StructType = AtopTables.schemaOf(tableName)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new AtopScanBuilder(store, tableName, schema(),
@@ -190,17 +176,69 @@ class AtopScanBuilder(store: String, table: String, full: StructType,
 }
 
 final case class AtopSplit(store: String, table: String, host: String,
-    epochDay: Long, columns: Seq[String]) extends InputPartition {
+    epochDay: Long, required: StructType) extends ConnectorSplit {
   // the reference pins the split to its host (`AtopSplit.getAddresses`)
   override def preferredLocations(): Array[String] = Array(host)
+
+  override def rows(): Iterator[InternalRow] = {
+    val raw = AtopLogStore.lines(store, host, epochDay)
+
+    // the AtopPageSource.getNextPage stream protocol (:132-156)
+    val samples: Vector[Vector[String]] = {
+      val out = Vector.newBuilder[Vector[String]]
+      var i = 0
+      while (i < raw.length) {
+        val row = raw(i)
+        if (row == "SEP") { i += 1 }
+        else if (row == "RESET") {
+          if (table == "reboots") {
+            if (i + 1 < raw.length) {
+              out += raw(i + 1).split(' ').toVector
+            }
+            i += 2
+          } else {
+            // drop the sample right after a RESET: a "since boot"
+            // duration outlier
+            i += 2
+          }
+        } else {
+          if (table != "reboots") out += row.split(' ').toVector
+          i += 1
+        }
+      }
+      out.result()
+    }
+
+    samples.iterator.map { f =>
+      def epoch = f(2).toLong
+      def dur = f(5).toLong
+      def micros(sec: Long): Long = sec * 1000000L
+      InternalRow.fromSeq(required.fieldNames.toSeq.map {
+        case "host_ip" => UTF8String.fromString(host)
+        case "start_time" => micros(epoch - dur)
+        case "end_time" => micros(epoch)
+        case "power_on_time" => micros(epoch - dur)
+        case "device_name" => UTF8String.fromString(f(6))
+        case "utilization_percent" =>
+          // `AtopTable.java:47-55`: round(100·io/durationMs), cap 100
+          val u = math.round(100.0 * f(7).toLong / (dur * 1000.0))
+            .toDouble
+          if (u > 100) 100.0 else u
+        case "io_millis" => f(7).toLong
+        case "read_requests" => f(8).toLong
+        case "sectors_read" => f(9).toLong
+        case "write_requests" => f(10).toLong
+        case "sectors_written" => f(11).toLong
+        case other => sys.error(s"graft-atop: unknown column $other")
+      })
+    }
+  }
 }
 
 class AtopScan(store: String, table: String, required: StructType,
     bounds: Map[String, (Long, Long)], maxHistoryDays: Int)
-    extends Scan with Batch {
+    extends ConnectorScan(required) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-atop $table days<=$maxHistoryDays bounds=${bounds.keys.toSeq.sorted.mkString(",")}"
 
@@ -220,76 +258,7 @@ class AtopScan(store: String, table: String, required: StructType,
         bounds.values.forall { case (lo, hi) => lo <= dayHi && hi >= dayLo }
       }
     }.map { case (host, day) =>
-      AtopSplit(store, table, host, day, required.fieldNames.toSeq)
+      AtopSplit(store, table, host, day, required)
     }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AtopReaderFactory(required)
-}
-
-class AtopReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val split = p.asInstanceOf[AtopSplit]
-    val raw = AtopLogStore.lines(split.store, split.host, split.epochDay)
-
-    // the AtopPageSource.getNextPage stream protocol (:132-156)
-    val samples: Vector[Vector[String]] = {
-      val out = Vector.newBuilder[Vector[String]]
-      var i = 0
-      while (i < raw.length) {
-        val row = raw(i)
-        if (row == "SEP") { i += 1 }
-        else if (row == "RESET") {
-          if (split.table == "reboots") {
-            if (i + 1 < raw.length) {
-              out += raw(i + 1).split(' ').toVector
-            }
-            i += 2
-          } else {
-            // drop the sample right after a RESET: a "since boot"
-            // duration outlier
-            i += 2
-          }
-        } else {
-          if (split.table != "reboots") out += row.split(' ').toVector
-          i += 1
-        }
-      }
-      out.result()
-    }
-
-    val it = samples.iterator
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = it.hasNext
-      override def get(): InternalRow = {
-        val f = it.next()
-        def epoch = f(2).toLong
-        def dur = f(5).toLong
-        def micros(sec: Long): Long = sec * 1000000L
-        InternalRow.fromSeq(required.fieldNames.toSeq.map {
-          case "host_ip" => UTF8String.fromString(split.host)
-          case "start_time" => micros(epoch - dur)
-          case "end_time" => micros(epoch)
-          case "power_on_time" => micros(epoch - dur)
-          case "device_name" => UTF8String.fromString(f(6))
-          case "utilization_percent" =>
-            // `AtopTable.java:47-55`: round(100·io/durationMs), cap 100
-            val u = math.round(100.0 * f(7).toLong / (dur * 1000.0))
-              .toDouble
-            if (u > 100) 100.0 else u
-          case "io_millis" => f(7).toLong
-          case "read_requests" => f(8).toLong
-          case "sectors_read" => f(9).toLong
-          case "write_requests" => f(10).toLong
-          case "sectors_written" => f(11).toLong
-          case other => sys.error(s"graft-atop: unknown column $other")
-        })
-      }
-      override def close(): Unit = ()
-    }
   }
 }

@@ -5,9 +5,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -92,16 +92,13 @@ object BlackholeConn {
   }
 }
 
-class BlackholeTableProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-blackhole"
+class BlackholeTableProvider extends ConnectorProvider("graft-blackhole") {
 
   // A pure sink needs no schema; reads must supply one (the reference
   // reads the created table's declared columns — Spark's analog is
   // .schema() on the reader).
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    new StructType()
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new BlackholeTable(new StructType(), options)
 
   override def supportsExternalMetadata(): Boolean = true
 
@@ -111,7 +108,7 @@ class BlackholeTableProvider extends TableProvider
 }
 
 class BlackholeTable(schema0: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends ReadTable with SupportsWrite {
 
   private def intOpt(key: String, dflt: Int): Int = {
     val v = options.get(key)
@@ -120,9 +117,8 @@ class BlackholeTable(schema0: StructType, options: CaseInsensitiveStringMap)
 
   override def name(): String = "graft-blackhole"
   override def schema(): StructType = schema0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
+  override protected def moreCapabilities: Seq[TableCapability] =
+    Seq(TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.TRUNCATE, TableCapability.ACCEPT_ANY_SCHEMA)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
@@ -150,13 +146,24 @@ class BlackholeTable(schema0: StructType, options: CaseInsensitiveStringMap)
     }
 }
 
-final case class BlackholeSplit(id: Int) extends InputPartition
+/** `count` zero rows, all one shared row: the reference's single
+  * reused zero Page. */
+final case class BlackholeSplit(schema: StructType, count: Long,
+    fieldLength: Int) extends ConnectorSplit {
+  override def rows(): Iterator[InternalRow] = {
+    val row = BlackholeConn.zeroRow(schema, fieldLength)
+    val n = count
+    new Iterator[InternalRow] {
+      private var i = 0L
+      override def hasNext: Boolean = i < n
+      override def next(): InternalRow = { i += 1; row }
+    }
+  }
+}
 
 class BlackholeScan(schema0: StructType, splits: Int, pages: Int,
-    rowsPerPage: Int, fieldLength: Int) extends Scan with Batch
+    rowsPerPage: Int, fieldLength: Int) extends ConnectorScan(schema0)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def readSchema(): StructType = schema0
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-blackhole splits=$splits pages=$pages rows=$rowsPerPage"
 
@@ -169,32 +176,12 @@ class BlackholeScan(schema0: StructType, splits: Int, pages: Int,
       case StringType | BinaryType => fieldLength.toLong
       case _ => 8L
     }).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * math.max(1L, width))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    ScanStats(rows, rows * math.max(1L, width))
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    (0 until splits).map(BlackholeSplit(_)).toArray[InputPartition]
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BlackholeReaderFactory(schema0, pages.toLong * rowsPerPage, fieldLength)
-}
-
-class BlackholeReaderFactory(schema: StructType, rowsPerSplit: Long,
-    fieldLength: Int) extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      // one shared row, the reference's single reused zero Page
-      private val row = BlackholeConn.zeroRow(schema, fieldLength)
-      private var i = 0L
-      override def next(): Boolean = { i += 1; i <= rowsPerSplit }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
+    Array.fill[InputPartition](splits)(
+      BlackholeSplit(schema0, pages.toLong * rowsPerPage, fieldLength))
 }
 
 final case class BlackholeCommit(rows: Long) extends WriterCommitMessage
@@ -211,7 +198,7 @@ class BlackholeBatchWrite(name: String) extends BatchWrite {
 
 class BlackholeStreamingWrite(name: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =

@@ -5,9 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -197,26 +196,14 @@ object CassStore {
   }
 }
 
-class CassandraRingProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-cassandra"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CassandraRingTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new CassandraRingTable(new CaseInsensitiveStringMap(properties))
+class CassandraRingProvider extends ConnectorProvider("graft-cassandra") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new CassandraRingTable(options)
 }
 
 object CassandraRingTable {
   def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    require(name != null && name.nonEmpty,
-      "graft-cassandra requires option 'table'")
+    val name = Connector.option(options, "graft-cassandra", "table")
     StructType(CassStore.table(name).defn.fields.map { case (f, dt) =>
       StructField(f, dt)
     })
@@ -228,7 +215,7 @@ object CassandraRingTable {
 }
 
 class CassandraRingTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends ReadTable with SupportsWrite {
 
   private val tableName = options.get("table")
   private val splitSize =
@@ -237,9 +224,8 @@ class CassandraRingTable(options: CaseInsensitiveStringMap)
 
   override def name(): String = s"graft-cassandra.$tableName"
   override def schema(): StructType = CassandraRingTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE)
+  override protected def moreCapabilities: Seq[TableCapability] =
+    Seq(TableCapability.BATCH_WRITE)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new CassScanBuilder(tableName, splitSize, schema())
@@ -271,16 +257,88 @@ final case class ClusteringBound(eqPrefix: Seq[Any],
     range: Option[(Option[Any], Boolean, Option[Any], Boolean)])
     extends Serializable
 
-sealed trait CassSplit extends InputPartition {
+sealed trait CassSplit extends ConnectorSplit {
   def table: String
   def bound: ClusteringBound
+  def required: StructType
+
+  override def rows(): Iterator[InternalRow] = {
+    this match {
+      case _: TokenRangeSplit => CassStore.tokenSplitsOpened.incrementAndGet()
+      case _: PartitionsSplit => CassStore.partitionSplitsOpened.incrementAndGet()
+    }
+    val t = CassStore.table(table)
+    val idx = t.defn.fields.map(_._1).zipWithIndex.toMap
+    val ckIdx = t.defn.clusteringKeys.map(idx)
+    val outIdx = required.fields.map(f => (idx(f.name), f.dataType))
+
+    def sliceOf(part: CassStore.Partition): Vector[Seq[Any]] = {
+      val rows = part.synchronized(part.rows)
+      val b = bound
+      if (b.eqPrefix.isEmpty && b.range.isEmpty) rows
+      else {
+        // binary-search the clustering slice: [prefix ++ lo, prefix ++ hi]
+        def ckOf(r: Seq[Any]) = ckIdx.map(r)
+        def lowerBound(key: Seq[Any], orEqual: Boolean): Int = {
+          var lo = 0; var hi = rows.length
+          while (lo < hi) {
+            val mid = (lo + hi) >>> 1
+            val c = CassStore.compareTuples(
+              ckOf(rows(mid)).take(key.length), key)
+            if (c < 0 || (!orEqual && c == 0)) lo = mid + 1 else hi = mid
+          }
+          lo
+        }
+        val (rlo, rloInc, rhi, rhiInc) =
+          b.range.getOrElse((None, false, None, false))
+        val loKey = b.eqPrefix ++ rlo.toSeq
+        val hiKey = b.eqPrefix ++ rhi.toSeq
+        val from =
+          if (rlo.isDefined) lowerBound(loKey, rloInc)
+          else lowerBound(b.eqPrefix, orEqual = true)
+        val until =
+          if (rhi.isDefined) lowerBound(hiKey, !rhiInc)
+          else if (b.eqPrefix.nonEmpty)
+            lowerBound(b.eqPrefix, orEqual = false)
+          else rows.length
+        if (from >= until) Vector.empty else rows.slice(from, until)
+      }
+    }
+
+    val parts: Iterator[CassStore.Partition] = this match {
+      case PartitionsSplit(_, pks, _, _) =>
+        pks.iterator.flatMap(pk => Option(t.partitions.get(pk)))
+      case TokenRangeSplit(_, start, end, _, _) =>
+        import scala.jdk.CollectionConverters._
+        t.partitions.entrySet().iterator().asScala
+          .filter { e =>
+            val tok = CassStore.token(e.getKey)
+            tok > start && tok <= end
+          }.map(_.getValue)
+    }
+    parts.flatMap(sliceOf).map { cur =>
+      InternalRow.fromSeq(outIdx.toSeq.map { case (i, dt) =>
+        cur(i) match {
+          case null => null
+          case v => dt match {
+            case StringType => UTF8String.fromString(v.toString)
+            case LongType => v.asInstanceOf[Number].longValue()
+            case IntegerType => v.asInstanceOf[Number].intValue()
+            case DoubleType => v.asInstanceOf[Number].doubleValue()
+            case BooleanType => v.asInstanceOf[Boolean]
+            case other => sys.error(s"graft-cassandra: bad type $other")
+          }
+        }
+      })
+    }
+  }
 }
 /** token(pk) > start AND token(pk) <= end. */
 final case class TokenRangeSplit(table: String, start: Long, end: Long,
-    bound: ClusteringBound) extends CassSplit
+    bound: ClusteringBound, required: StructType) extends CassSplit
 /** A batch of fully-bound partition keys (the IN-clause split). */
 final case class PartitionsSplit(table: String, pks: Seq[Seq[Any]],
-    bound: ClusteringBound) extends CassSplit
+    bound: ClusteringBound, required: StructType) extends CassSplit
 
 class CassScanBuilder(tableName: String, splitSize: Int, full: StructType)
     extends ScanBuilder with SupportsPushDownFilters
@@ -405,8 +463,8 @@ class CassScanBuilder(tableName: String, splitSize: Int, full: StructType)
 
 class CassScan(tableName: String, splitSize: Int,
     pkValues: Option[Seq[Seq[Any]]], bound: ClusteringBound,
-    required: StructType, pushedFilters: Array[Filter]) extends Scan
-    with Batch
+    required: StructType, pushedFilters: Array[Filter])
+    extends ConnectorScan(required)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
@@ -459,8 +517,6 @@ class CassScan(tableName: String, splitSize: Int,
     }
   }
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-cassandra $tableName " +
       s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
@@ -475,18 +531,15 @@ class CassScan(tableName: String, splitSize: Int,
         val single = CassStore.table(tableName).defn.partitionKeys.size == 1
         val batch = if (single) CassandraRingTable.PartitionBatch else 1
         pks.grouped(batch)
-          .map(g => PartitionsSplit(tableName, g, bound): InputPartition)
+          .map(g => PartitionsSplit(tableName, g, bound, required): InputPartition)
           .toArray
       case None =>
         val n = CassStore.tokenRangeCount(
           CassStore.partitionCount(tableName), splitSize)
         CassStore.tokenRanges(n).map { case (s, e) =>
-          TokenRangeSplit(tableName, s, e, bound): InputPartition
+          TokenRangeSplit(tableName, s, e, bound, required): InputPartition
         }.toArray
     }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CassReaderFactory(required)
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
@@ -500,96 +553,7 @@ class CassScan(tableName: String, splitSize: Int,
         t.partitions.forEach((_, p) => n += p.rows.length)
         n
     }
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-}
-
-class CassReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val split = p.asInstanceOf[CassSplit]
-    split match {
-      case _: TokenRangeSplit => CassStore.tokenSplitsOpened.incrementAndGet()
-      case _: PartitionsSplit => CassStore.partitionSplitsOpened.incrementAndGet()
-    }
-    val t = CassStore.table(split.table)
-    val idx = t.defn.fields.map(_._1).zipWithIndex.toMap
-    val ckIdx = t.defn.clusteringKeys.map(idx)
-    val outIdx = required.fields.map(f => (idx(f.name), f.dataType))
-
-    def sliceOf(part: CassStore.Partition): Vector[Seq[Any]] = {
-      val rows = part.synchronized(part.rows)
-      val b = split.bound
-      if (b.eqPrefix.isEmpty && b.range.isEmpty) rows
-      else {
-        // binary-search the clustering slice: [prefix ++ lo, prefix ++ hi]
-        def ckOf(r: Seq[Any]) = ckIdx.map(r)
-        def lowerBound(key: Seq[Any], orEqual: Boolean): Int = {
-          var lo = 0; var hi = rows.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            val c = CassStore.compareTuples(
-              ckOf(rows(mid)).take(key.length), key)
-            if (c < 0 || (!orEqual && c == 0)) lo = mid + 1 else hi = mid
-          }
-          lo
-        }
-        val (rlo, rloInc, rhi, rhiInc) =
-          b.range.getOrElse((None, false, None, false))
-        val loKey = b.eqPrefix ++ rlo.toSeq
-        val hiKey = b.eqPrefix ++ rhi.toSeq
-        val from =
-          if (rlo.isDefined) lowerBound(loKey, rloInc)
-          else lowerBound(b.eqPrefix, orEqual = true)
-        val until =
-          if (rhi.isDefined) lowerBound(hiKey, !rhiInc)
-          else if (b.eqPrefix.nonEmpty)
-            lowerBound(b.eqPrefix, orEqual = false)
-          else rows.length
-        if (from >= until) Vector.empty else rows.slice(from, until)
-      }
-    }
-
-    val parts: Iterator[CassStore.Partition] = split match {
-      case PartitionsSplit(_, pks, _) =>
-        pks.iterator.flatMap(pk => Option(t.partitions.get(pk)))
-      case TokenRangeSplit(_, start, end, _) =>
-        import scala.jdk.CollectionConverters._
-        t.partitions.entrySet().iterator().asScala
-          .filter { e =>
-            val tok = CassStore.token(e.getKey)
-            tok > start && tok <= end
-          }.map(_.getValue)
-    }
-    val rowIter = parts.flatMap(sliceOf)
-
-    new PartitionReader[InternalRow] {
-      private var cur: Seq[Any] = _
-      override def next(): Boolean = {
-        if (rowIter.hasNext) { cur = rowIter.next(); true } else false
-      }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(outIdx.toSeq.map { case (i, dt) =>
-          cur(i) match {
-            case null => null
-            case v => dt match {
-              case StringType => UTF8String.fromString(v.toString)
-              case LongType => v.asInstanceOf[Number].longValue()
-              case IntegerType => v.asInstanceOf[Number].intValue()
-              case DoubleType => v.asInstanceOf[Number].doubleValue()
-              case BooleanType => v.asInstanceOf[Boolean]
-              case other => sys.error(s"graft-cassandra: bad type $other")
-            }
-          }
-        })
-      override def close(): Unit = ()
-    }
+    ScanStats(rows, rows * 128L)
   }
 }
 

@@ -5,10 +5,10 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -129,34 +129,17 @@ object DruidStore {
   def segmentCount(name: String): Int = datasource(name).segments.size()
 }
 
-class DruidSegmentProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-druid"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("datasource")
-    require(name != null && name.nonEmpty,
-      "graft-druid requires option 'datasource'")
-    DruidStore.datasource(name).defn.schema
-  }
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new DruidSegmentTable(new CaseInsensitiveStringMap(properties))
+class DruidSegmentProvider extends ConnectorProvider("graft-druid") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new DruidSegmentTable(options)
 }
 
-class DruidSegmentTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+class DruidSegmentTable(options: CaseInsensitiveStringMap) extends ReadTable {
 
-  private val dsName = options.get("datasource")
+  private val dsName = Connector.option(options, "graft-druid", "datasource")
 
   override def name(): String = s"graft-druid.$dsName"
   override def schema(): StructType = DruidStore.datasource(dsName).defn.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new DruidScanBuilder(dsName)
@@ -258,91 +241,14 @@ class DruidScanBuilder(dsName: String)
       DruidQuerySpec(tsLo, tsHi, dimEq, aggSpec), required, pushed)
 }
 
-final case class DruidSegmentSplit(ds: String, segmentStart: Long,
-    spec: DruidQuerySpec) extends InputPartition
+final case class DruidSegmentSplit(dsName: String, segmentStart: Long,
+    spec: DruidQuerySpec, required: StructType) extends ConnectorSplit {
 
-class DruidScan(dsName: String, spec: DruidQuerySpec,
-    required: StructType, pushedFilters: Array[Filter]) extends Scan
-    with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
-
-  /** RUNTIME segment pruning (Spark's dynamic-pruning hook for DSv2,
-    * SPARK-35779) — the time-dimension DPP every star-schema query
-    * wants: a date-dim join's build-side `__time` values arrive as a
-    * runtime In-filter, and only the segments whose interval holds at
-    * least one of them are read. The static `__time`-bound pruning is
-    * Druid's defining scan optimization; this is the same decision
-    * deferred to execution, when the join has revealed WHICH times
-    * matter. */
-  @volatile private var runtimeTimes: Option[Seq[Long]] = None
-
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions
-      .column("__time"))
-
-  override def filter(filters: Array[Filter]): Unit = {
-    runtimeTimes = filters.collectFirst {
-      case In("__time", vs) if vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Number]) =>
-        vs.toSeq.map(_.asInstanceOf[Number].longValue())
-      case EqualTo("__time", v: Number) => Seq(v.longValue())
-    }
-  }
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-druid $dsName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
-      s"PushedAggregation: ${spec.agg.isDefined} " +
-      "cols=" + required.fieldNames.mkString(",")
-
-  /** Segment pruning by time interval, then one split per survivor. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val ds = DruidStore.datasource(dsName)
-    val g = ds.defn.granularityMs
-    import scala.jdk.CollectionConverters._
-    ds.segments.keySet().asScala.toSeq.sorted
-      .filter(start => start < spec.tsHi && start + g > spec.tsLo)
-      .filter(start => runtimeTimes.forall(_.exists(t =>
-        t >= start && t < start + g)))
-      .map(start => DruidSegmentSplit(dsName, start, spec): InputPartition)
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DruidReaderFactory(required)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val ds = DruidStore.datasource(dsName)
-    var rows = 0L
-    planInputPartitions().foreach { p =>
-      val seg = ds.segments.get(
-        p.asInstanceOf[DruidSegmentSplit].segmentStart)
-      if (seg != null) rows += seg.synchronized(seg.rows.length.toLong)
-    }
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-}
-
-class DruidReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val DruidSegmentSplit(dsName, start, spec) =
-      p.asInstanceOf[DruidSegmentSplit]
+  override def rows(): Iterator[InternalRow] = {
     DruidStore.segmentsOpened.incrementAndGet()
     val ds = DruidStore.datasource(dsName)
     val defn = ds.defn
-    val seg = ds.segments.get(start)
+    val seg = ds.segments.get(segmentStart)
     val dimIdx = defn.dims.zipWithIndex.toMap
     val metricIdx = defn.metrics.map(_._1).zipWithIndex.toMap
 
@@ -423,22 +329,80 @@ class DruidReaderFactory(required: StructType)
         }
     }
 
-    new PartitionReader[InternalRow] {
-      private var cur: Seq[Any] = _
-      override def next(): Boolean =
-        if (out.hasNext) { cur = out.next(); true } else false
-      override def get(): InternalRow =
-        InternalRow.fromSeq(cur.zip(required.fields.toSeq).map {
-          case (null, _) => null
-          case (v: String, _) => UTF8String.fromString(v)
-          case (v, f) => f.dataType match {
-            case LongType => v.asInstanceOf[Number].longValue()
-            case DoubleType => v.asInstanceOf[Number].doubleValue()
-            case StringType => UTF8String.fromString(v.toString)
-            case other => sys.error(s"graft-druid: bad type $other")
-          }
-        })
-      override def close(): Unit = ()
+    out.map { cur =>
+      InternalRow.fromSeq(cur.zip(required.fields.toSeq).map {
+        case (null, _) => null
+        case (v: String, _) => UTF8String.fromString(v)
+        case (v, f) => f.dataType match {
+          case LongType => v.asInstanceOf[Number].longValue()
+          case DoubleType => v.asInstanceOf[Number].doubleValue()
+          case StringType => UTF8String.fromString(v.toString)
+          case other => sys.error(s"graft-druid: bad type $other")
+        }
+      })
     }
+  }
+}
+
+class DruidScan(dsName: String, spec: DruidQuerySpec,
+    required: StructType, pushedFilters: Array[Filter])
+    extends ConnectorScan(required)
+    with org.apache.spark.sql.connector.read.SupportsReportStatistics
+    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+
+  /** RUNTIME segment pruning (Spark's dynamic-pruning hook for DSv2,
+    * SPARK-35779) — the time-dimension DPP every star-schema query
+    * wants: a date-dim join's build-side `__time` values arrive as a
+    * runtime In-filter, and only the segments whose interval holds at
+    * least one of them are read. The static `__time`-bound pruning is
+    * Druid's defining scan optimization; this is the same decision
+    * deferred to execution, when the join has revealed WHICH times
+    * matter. */
+  @volatile private var runtimeTimes: Option[Seq[Long]] = None
+
+  override def filterAttributes()
+      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    Array(org.apache.spark.sql.connector.expressions.Expressions
+      .column("__time"))
+
+  override def filter(filters: Array[Filter]): Unit = {
+    runtimeTimes = filters.collectFirst {
+      case In("__time", vs) if vs.nonEmpty &&
+          vs.forall(_.isInstanceOf[Number]) =>
+        vs.toSeq.map(_.asInstanceOf[Number].longValue())
+      case EqualTo("__time", v: Number) => Seq(v.longValue())
+    }
+  }
+
+  override def description(): String =
+    s"graft-druid $dsName " +
+      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
+      s"PushedAggregation: ${spec.agg.isDefined} " +
+      "cols=" + required.fieldNames.mkString(",")
+
+  /** Segment pruning by time interval, then one split per survivor. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val ds = DruidStore.datasource(dsName)
+    val g = ds.defn.granularityMs
+    import scala.jdk.CollectionConverters._
+    ds.segments.keySet().asScala.toSeq.sorted
+      .filter(start => start < spec.tsHi && start + g > spec.tsLo)
+      .filter(start => runtimeTimes.forall(_.exists(t =>
+        t >= start && t < start + g)))
+      .map(start =>
+        DruidSegmentSplit(dsName, start, spec, required): InputPartition)
+      .toArray
+  }
+
+  override def estimateStatistics()
+      : org.apache.spark.sql.connector.read.Statistics = {
+    val ds = DruidStore.datasource(dsName)
+    var rows = 0L
+    planInputPartitions().foreach { p =>
+      val seg = ds.segments.get(
+        p.asInstanceOf[DruidSegmentSplit].segmentStart)
+      if (seg != null) rows += seg.synchronized(seg.rows.length.toLong)
+    }
+    ScanStats(rows, rows * 128L)
   }
 }

@@ -6,9 +6,8 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -241,28 +240,16 @@ object EsStore {
   }
 }
 
-class EsIndexProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-es"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    EsIndexTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new EsIndexTable(new CaseInsensitiveStringMap(properties))
+class EsIndexProvider extends ConnectorProvider("graft-es") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new EsIndexTable(options)
 }
 
 object EsIndexTable {
   /** `_id` + the mapped fields — `ElasticsearchRecordCursor`'s
     * setFieldIfExists("_id", hit.getId()) plus the _source fields. */
   def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("index")
-    require(name != null && name.nonEmpty,
-      "graft-es requires option 'index'")
+    val name = Connector.option(options, "graft-es", "index")
     StructType(StructField("_id", StringType) +:
       EsStore.index(name).mapping.fields.map { case (f, dt) =>
         StructField(f, dt)
@@ -270,15 +257,12 @@ object EsIndexTable {
   }
 }
 
-class EsIndexTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+class EsIndexTable(options: CaseInsensitiveStringMap) extends ReadTable {
 
   private val indexName = options.get("index")
 
   override def name(): String = s"graft-es.$indexName"
   override def schema(): StructType = EsIndexTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new EsScanBuilder(indexName, schema())
@@ -356,11 +340,39 @@ class EsScanBuilder(indexName: String, full: StructType)
 /** One split per shard (`ElasticsearchSplitManager.java:59-75`), each
   * carrying the compiled query. */
 final case class EsShardSplit(index: String, shard: Int,
-    query: EsStore.Query) extends InputPartition
+    query: EsStore.Query, required: StructType) extends ConnectorSplit {
+
+  override def rows(): Iterator[InternalRow] = {
+    val ix = EsStore.index(index)
+    val sh = ix.shards(shard)
+    require(sh.fresh,
+      s"graft-es: index '$index' has unrefreshed documents — call " +
+        "EsStore.refresh first (the ES index/refresh lifecycle)")
+    val fieldTypes = ix.mapping.fields.toMap
+    val hits = sh.synchronized(EsStore.search(sh, query))
+    hits.iterator.map { off =>
+      EsStore.docsMaterialized.incrementAndGet()
+      val doc = sh.docs(off)
+      InternalRow.fromSeq(required.fields.map { f =>
+        if (f.name == "_id") UTF8String.fromString(sh.ids(off))
+        else doc.get(f.name).filter(_ != null).map { v =>
+          fieldTypes(f.name) match {
+            case StringType => UTF8String.fromString(v.toString)
+            case LongType => v.asInstanceOf[Number].longValue()
+            case IntegerType => v.asInstanceOf[Number].intValue()
+            case DoubleType => v.asInstanceOf[Number].doubleValue()
+            case BooleanType => v.asInstanceOf[Boolean]
+            case other => sys.error(s"graft-es: bad type $other")
+          }
+        }.orNull
+      }.toSeq)
+    }
+  }
+}
 
 class EsScan(indexName: String, query: EsStore.Query,
     required: StructType, pushedFilters: Array[Filter] = Array.empty)
-    extends Scan with Batch
+    extends ConnectorScan(required)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
@@ -401,8 +413,6 @@ class EsScan(indexName: String, query: EsStore.Query,
     }
   }
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-es $indexName " +
       s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
@@ -413,11 +423,9 @@ class EsScan(indexName: String, query: EsStore.Query,
       if (runtimeQs.isEmpty) query
       else EsStore.BoolMust(query +: runtimeQs)
     EsStore.index(indexName).shards.indices
-      .map(i => EsShardSplit(indexName, i, q): InputPartition).toArray
+      .map(i => EsShardSplit(indexName, i, q, required): InputPartition)
+      .toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EsReaderFactory(required)
 
   // exact hit counts from the index (the search-shards count probe) —
   // a selective control query can broadcast
@@ -426,49 +434,6 @@ class EsScan(indexName: String, query: EsStore.Query,
     val ix = EsStore.index(indexName)
     val rows = ix.shards.map(s =>
       s.synchronized(EsStore.search(s, query).length.toLong)).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 256L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-}
-
-class EsReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val EsShardSplit(name, shardIdx, query) = p.asInstanceOf[EsShardSplit]
-    val ix = EsStore.index(name)
-    val shard = ix.shards(shardIdx)
-    require(shard.fresh,
-      s"graft-es: index '$name' has unrefreshed documents — call " +
-        "EsStore.refresh first (the ES index/refresh lifecycle)")
-    val fieldTypes = ix.mapping.fields.toMap
-    val hits = shard.synchronized(EsStore.search(shard, query))
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < hits.length }
-      override def get(): InternalRow = {
-        EsStore.docsMaterialized.incrementAndGet()
-        val off = hits(i)
-        val doc = shard.docs(off)
-        InternalRow.fromSeq(required.fields.map { f =>
-          if (f.name == "_id") UTF8String.fromString(shard.ids(off))
-          else doc.get(f.name).filter(_ != null).map { v =>
-            fieldTypes(f.name) match {
-              case StringType => UTF8String.fromString(v.toString)
-              case LongType => v.asInstanceOf[Number].longValue()
-              case IntegerType => v.asInstanceOf[Number].intValue()
-              case DoubleType => v.asInstanceOf[Number].doubleValue()
-              case BooleanType => v.asInstanceOf[Boolean]
-              case other => sys.error(s"graft-es: bad type $other")
-            }
-          }.orNull
-        }.toSeq)
-      }
-      override def close(): Unit = ()
-    }
+    ScanStats(rows, rows * 256L)
   }
 }

@@ -8,10 +8,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -100,31 +98,18 @@ private[sources] object ExampleCatalog {
   }
 }
 
-class ExampleHttpProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-example-http"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    new ExampleHttpTable(options).schema()
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new ExampleHttpTable(new CaseInsensitiveStringMap(properties))
+class ExampleHttpProvider extends ConnectorProvider("graft-example-http") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new ExampleHttpTable(options)
 }
 
-class ExampleHttpTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+class ExampleHttpTable(options: CaseInsensitiveStringMap) extends ReadTable {
 
-  private val metadataUri = {
-    val u = options.get("metadata_uri")
-    require(u != null, "graft-example-http requires option 'metadata_uri'")
-    u
-  }
+  private val metadataUri =
+    Connector.option(options, "graft-example-http", "metadata_uri")
   private val schemaName = Option(options.get("schema")).getOrElse("example")
-  private val tableName = {
-    val t = options.get("table")
-    require(t != null, "graft-example-http requires option 'table'")
-    t
-  }
+  private val tableName = Connector.option(options, "graft-example-http",
+    "table")
 
   // Suppliers.memoize (`ExampleClient.java:54`): the catalog document
   // is fetched ONCE per table handle, not per scan
@@ -140,8 +125,6 @@ class ExampleHttpTable(options: CaseInsensitiveStringMap)
     s"graft-example-http.$schemaName.$tableName"
   override def schema(): StructType =
     StructType(tableDef.columns.map { case (n, dt) => StructField(n, dt) })
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new ExampleScanBuilder(this)
@@ -164,13 +147,33 @@ class ExampleScanBuilder(table: ExampleHttpTable)
 }
 
 final case class ExampleSplit(uri: String, full: Seq[(String, String)],
-    required: Seq[String]) extends InputPartition
+    required: Seq[String]) extends ConnectorSplit {
+
+  override def rows(): Iterator[InternalRow] = {
+    val colIdx = full.map(_._1).zipWithIndex.toMap
+    val types = full.toMap
+    ExampleHttpStore.fetch(uri).split('\n').iterator.filter(_.nonEmpty)
+      .map { line =>
+        // `ExampleRecordCursor.java:41`: comma split, trimmed results
+        val fields = line.split(',').map(_.trim)
+        InternalRow.fromSeq(required.map { name =>
+          val v = fields(colIdx(name))
+          types(name) match {
+            case "string" => UTF8String.fromString(v)
+            case "bigint" => v.toLong
+            case "double" => v.toDouble
+            case "boolean" => v.toBoolean
+            case other =>
+              sys.error(s"graft-example-http: bad type $other")
+          }
+        })
+      }
+  }
+}
 
 class ExampleScan(t: ExampleTableDef, full: StructType,
-    required: StructType) extends Scan with Batch {
+    required: StructType) extends ConnectorScan(required) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-example-http ${t.schema}.${t.name} sources=${t.sources.size}"
 
@@ -184,41 +187,5 @@ class ExampleScan(t: ExampleTableDef, full: StructType,
         t.columns.map { case (n, dt) => (n, dt.catalogString) },
         required.fieldNames.toSeq)
     }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ExampleReaderFactory()
-}
-
-class ExampleReaderFactory extends PartitionReaderFactory
-    with Serializable {
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val split = p.asInstanceOf[ExampleSplit]
-    val colIdx = split.full.map(_._1).zipWithIndex.toMap
-    val types = split.full.toMap
-    val lines = ExampleHttpStore.fetch(split.uri)
-      .split('\n').iterator.filter(_.nonEmpty)
-
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = lines.hasNext
-      override def get(): InternalRow = {
-        // `ExampleRecordCursor.java:41`: comma split, trimmed results
-        val fields = lines.next().split(',').map(_.trim)
-        InternalRow.fromSeq(split.required.map { name =>
-          val v = fields(colIdx(name))
-          types(name) match {
-            case "string" => UTF8String.fromString(v)
-            case "bigint" => v.toLong
-            case "double" => v.toDouble
-            case "boolean" => v.toBoolean
-            case other =>
-              sys.error(s"graft-example-http: bad type $other")
-          }
-        })
-      }
-      override def close(): Unit = ()
-    }
   }
 }

@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,12 +35,19 @@ trait ClosedFormGen extends Serializable {
   def generator(table: String, column: String, sf: Double): Long => Any
 }
 
+/** `spark.read.format(gen.genName)` entry point: option `table`, plus
+  * `sf` (default 0.01) and `parts` (default 8). */
+abstract class GenProvider(gen: ClosedFormGen)
+    extends ConnectorProvider(gen.genName) {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new GenTable(gen, Connector.option(options, gen.genName, "table")
+      .toLowerCase, options.getDouble("sf", 0.01), options.getInt("parts", 8))
+}
+
 class GenTable(gen: ClosedFormGen, table: String, sf: Double, parts: Int)
-    extends Table with SupportsRead {
+    extends ReadTable {
   override def name(): String = s"${gen.genName}.$table(sf=$sf)"
   override def schema(): StructType = gen.schemaOf(table)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GenScanBuilder(gen, table, sf, parts)
 }
@@ -88,15 +95,28 @@ class GenScanBuilder(gen: ClosedFormGen, table: String, sf: Double, parts: Int)
     new GenScan(gen, table, sf, parts, required, pushed, kLo, kHi)
 }
 
-final case class GenRange(start: Long, end: Long) extends InputPartition
+/** Rows [start, end) of `table`, generated column by column. */
+final case class GenRange(gen: ClosedFormGen, table: String, sf: Double,
+    columns: Array[String], start: Long, end: Long) extends ConnectorSplit {
+  override def rows(): Iterator[InternalRow] = new Iterator[InternalRow] {
+    private val gens = columns.map(gen.generator(table, _, sf))
+    private var k = start
+    override def hasNext: Boolean = k < end
+    override def next(): InternalRow = {
+      val row = new GenericInternalRow(gens.length)
+      var i = 0
+      while (i < gens.length) { row.update(i, gens(i)(k)); i += 1 }
+      k += 1
+      row
+    }
+  }
+}
 
 class GenScan(gen: ClosedFormGen, table: String, sf: Double, parts: Int,
     required: StructType, pushed: Array[Filter], kLo: Long, kHi: Long)
-    extends Scan with Batch
+    extends ConnectorScan(required)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"${gen.genName} $table sf=$sf PushedFilters: [${pushed.mkString(", ")}]"
 
@@ -128,12 +148,7 @@ class GenScan(gen: ClosedFormGen, table: String, sf: Double, parts: Int,
       case StringType => 20L
       case _ => 8L
     }).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * math.max(1L, width))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    ScanStats(rows, rows * math.max(1L, width))
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -141,30 +156,10 @@ class GenScan(gen: ClosedFormGen, table: String, sf: Double, parts: Int,
     if (hi <= lo) return Array.empty
     val span = hi - lo
     val p = math.max(1, math.min(parts, span).toInt)
+    val columns = required.fieldNames
     (0 until p).map { i =>
-      GenRange(lo + span * i / p, lo + span * (i + 1) / p)
+      GenRange(gen, table, sf, columns,
+        lo + span * i / p, lo + span * (i + 1) / p)
     }.filter(r => r.end > r.start).toArray[InputPartition]
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GenReaderFactory(gen, table, sf, required.fieldNames)
-}
-
-class GenReaderFactory(gen: ClosedFormGen, table: String, sf: Double,
-    columns: Array[String]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val r = partition.asInstanceOf[GenRange]
-    new PartitionReader[InternalRow] {
-      private val gens = columns.map(gen.generator(table, _, sf))
-      private var k = r.start - 1
-      override def next(): Boolean = { k += 1; k < r.end }
-      override def get(): InternalRow = {
-        val row = new GenericInternalRow(gens.length)
-        var i = 0
-        while (i < gens.length) { row.update(i, gens(i)(k)); i += 1 }
-        row
-      }
-      override def close(): Unit = ()
-    }
   }
 }

@@ -11,9 +11,9 @@ import javax.management.{MBeanAttributeInfo, ObjectName}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, ScanBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -282,48 +282,31 @@ class JmxCatalog extends TableCatalog with SupportsNamespaces {
       cascade: Boolean): Boolean = throw ro
 }
 
-final case class JmxSplit(table: String, hist: Boolean) extends InputPartition
+/** This JVM's MBeans, read where the split runs. */
+final case class JmxSplit(table: String, hist: Boolean, schema: StructType)
+    extends ConnectorSplit {
+  override def rows(): Iterator[InternalRow] =
+    (if (hist) JmxConn.historyRows(table, schema)
+     else JmxConn.rowsFor(table, schema)).iterator
+}
 
 class JmxTable(table: String, hist: Boolean, schema0: StructType)
-    extends Table with SupportsRead {
+    extends ReadTable {
   override def name(): String =
     s"graft_jmx.${if (hist) "history" else "current"}.$table"
   override def schema(): StructType = schema0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => new JmxScan(table, hist, schema0)
 }
 
 class JmxScan(table: String, hist: Boolean, schema0: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = schema0
-  override def toBatch: Batch = this
+    extends ConnectorScan(schema0) {
   override def description(): String = s"graft-jmx $table"
 
   // One split: this JVM. A cluster build would plan one per executor
   // (the reference's one-split-per-node), each reading its own
   // MBeanServer inside the task.
   override def planInputPartitions(): Array[InputPartition] =
-    Array(JmxSplit(table, hist))
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new JmxReaderFactory(schema0)
-}
-
-class JmxReaderFactory(schema: StructType)
-    extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val s = p.asInstanceOf[JmxSplit]
-    val rows =
-      if (s.hist) JmxConn.historyRows(s.table, schema)
-      else JmxConn.rowsFor(s.table, schema)
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = rows(i)
-      override def close(): Unit = ()
-    }
-  }
+    Array(JmxSplit(table, hist, schema0))
 }

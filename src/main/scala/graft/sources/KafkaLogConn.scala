@@ -5,9 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types._
@@ -163,19 +162,9 @@ final case class KafkaLogOffset(offsets: Map[String, Seq[Long]])
   override def json(): String = KafkaLog.offsetsToJson(offsets)
 }
 
-class KafkaLogProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-kafka"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    KafkaLogTable.Schema
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new KafkaLogTable(new CaseInsensitiveStringMap(properties))
+class KafkaLogProvider extends ConnectorProvider("graft-kafka") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new KafkaLogTable(options)
 }
 
 object KafkaLogTable {
@@ -245,15 +234,14 @@ object KafkaLogTable {
 }
 
 class KafkaLogTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends ReadTable with SupportsWrite {
 
   private val topicList = KafkaLogTable.subscribed(options)
 
   override def name(): String = s"graft-kafka.${topicList.mkString(",")}"
   override def schema(): StructType = KafkaLogTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE)
+  override protected def moreCapabilities: Seq[TableCapability] =
+    Seq(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     () => new KafkaLogScan(topicList, opts)
@@ -272,14 +260,39 @@ class KafkaLogTable(options: CaseInsensitiveStringMap)
   * `KafkaSplitManager.java:97-135` with the begin/end offsets resolved
   * up front. */
 final case class KafkaRange(topic: String, partition: Int,
-    from: Long, until: Long) extends InputPartition
+    from: Long, until: Long) extends ConnectorSplit {
+  override def rows(): Iterator[InternalRow] = {
+    val log = KafkaLog.partitionsOf(topic)(partition)
+    val topicUtf8 = UTF8String.fromString(topic)
+    val part = partition
+    new Iterator[InternalRow] {
+      private var off = from
+      override def hasNext: Boolean = off < until
+      override def next(): InternalRow = {
+        val m = log.synchronized(log(off.toInt))
+        off += 1
+        InternalRow(m.key, m.value, topicUtf8, part, off - 1,
+          m.tsMs * 1000L, 0) // timestampType 0 = CreateTime
+      }
+    }
+  }
+}
+
+object KafkaRange {
+  /** The non-empty [from, until) ranges of every subscribed partition. */
+  def plan(topicList: Seq[String], from: Map[String, Seq[Long]],
+      until: Map[String, Seq[Long]]): Array[InputPartition] =
+    topicList.flatMap { t =>
+      val f = from.getOrElse(t, Seq.empty)
+      val u = until.getOrElse(t, Seq.empty)
+      u.indices.map(p => KafkaRange(t, p, f.lift(p).getOrElse(0L), u(p)))
+    }.filter(r => r.until > r.from).toArray
+}
 
 class KafkaLogScan(topicList: Seq[String], options: CaseInsensitiveStringMap)
-    extends Scan with Batch
+    extends ConnectorScan(KafkaLogTable.Schema)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  override def readSchema(): StructType = KafkaLogTable.Schema
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-kafka ${topicList.mkString(",")}"
 
@@ -297,34 +310,16 @@ class KafkaLogScan(topicList: Seq[String], options: CaseInsensitiveStringMap)
   private def endingOffsets: Map[String, Seq[Long]] =
     pick("endingoffsets", "endingoffsetsbytimestamp", "latest")
 
-  private def ranges(from: Map[String, Seq[Long]],
-      until: Map[String, Seq[Long]]): Array[InputPartition] =
-    topicList.flatMap { t =>
-      val f = from.getOrElse(t, Seq.empty)
-      val u = until.getOrElse(t, Seq.empty)
-      u.indices.map { p =>
-        KafkaRange(t, p, f.lift(p).getOrElse(0L), u(p))
-      }
-    }.filter(r => r.until > r.from).toArray
-
   override def planInputPartitions(): Array[InputPartition] =
-    ranges(startingOffsets, endingOffsets)
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new KafkaLogReaderFactory
+    KafkaRange.plan(topicList, startingOffsets, endingOffsets)
 
   // exact message counts from the log — the same honesty MemoryConn's
   // scan reports, so a small control topic can broadcast
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
-    val rows = ranges(startingOffsets, endingOffsets)
+    val rows = planInputPartitions()
       .map { case KafkaRange(_, _, f, u) => u - f }.sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    ScanStats(rows, rows * 128L)
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -354,40 +349,16 @@ class KafkaLogMicroBatch(topicList: Seq[String], startingSpec: String,
     KafkaLogOffset(KafkaLog.offsetsFromJson(json))
 
   override def planInputPartitions(start: Offset, end: Offset)
-      : Array[InputPartition] = {
-    val from = start.asInstanceOf[KafkaLogOffset].offsets
-    val until = end.asInstanceOf[KafkaLogOffset].offsets
-    topicList.flatMap { t =>
-      val f = from.getOrElse(t, Seq.empty)
-      val u = until.getOrElse(t, Seq.empty)
-      u.indices.map(p => KafkaRange(t, p, f.lift(p).getOrElse(0L), u(p)))
-    }.filter(r => r.until > r.from).toArray
-  }
+      : Array[InputPartition] =
+    KafkaRange.plan(topicList, start.asInstanceOf[KafkaLogOffset].offsets,
+      end.asInstanceOf[KafkaLogOffset].offsets)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KafkaLogReaderFactory
+    SplitReaderFactory
 
   override def commit(end: Offset): Unit = () // log is never truncated
 
   override def stop(): Unit = ()
-}
-
-class KafkaLogReaderFactory extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val KafkaRange(topic, partition, from, until) = p.asInstanceOf[KafkaRange]
-    val log = KafkaLog.partitionsOf(topic)(partition)
-    val topicUtf8 = UTF8String.fromString(topic)
-    new PartitionReader[InternalRow] {
-      private var off = from - 1
-      override def next(): Boolean = { off += 1; off < until }
-      override def get(): InternalRow = {
-        val m = log.synchronized(log(off.toInt))
-        InternalRow(m.key, m.value, topicUtf8, partition, off,
-          m.tsMs * 1000L, 0) // timestampType 0 = CreateTime
-      }
-      override def close(): Unit = ()
-    }
-  }
 }
 
 /** Kafka-sink-shaped write: requires a `value` binary column; `key`

@@ -3,14 +3,12 @@ package graft.sources
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentSkipListMap}
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -238,32 +236,21 @@ object KuduStore {
   final case class NullPred(col: String, isNull: Boolean) extends Pred
 }
 
-class KuduTabletProvider extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-kudu"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    KuduTabletTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new KuduTabletTable(new CaseInsensitiveStringMap(properties))
+class KuduTabletProvider extends ConnectorProvider("graft-kudu") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new KuduTabletTable(options)
 }
 
 object KuduTabletTable {
   def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    require(name != null && name.nonEmpty,
-      "graft-kudu requires option 'table'")
+    val name = Connector.option(options, "graft-kudu", "table")
     StructType(KuduStore.table(name).columns.map(c =>
       StructField(c.name, c.dt, c.nullable)))
   }
 }
 
 class KuduTabletTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends ReadTable with SupportsWrite {
 
   private val tableName = options.get("table")
   // set by KuduCatalog.loadTable: only catalog-loaded scans can have
@@ -274,9 +261,8 @@ class KuduTabletTable(options: CaseInsensitiveStringMap)
 
   override def name(): String = s"graft-kudu.$tableName"
   override def schema(): StructType = KuduTabletTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE)
+  override protected def moreCapabilities: Seq[TableCapability] =
+    Seq(TableCapability.BATCH_WRITE)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new KuduScanBuilder(tableName, schema(), viaCatalog)
@@ -352,17 +338,73 @@ class KuduScanBuilder(tableName: String, full: StructType,
   * Carries its hash-bucket id as the partition key so a scan that
   * reports KeyGroupedPartitioning can group splits per bucket. */
 final case class KuduTokenSplit(table: String, bucket: Int,
-    rangeLo: Option[Long], rangeHi: Option[Long]) extends InputPartition
+    rangeLo: Option[Long], rangeHi: Option[Long], required: StructType,
+    preds: Seq[KuduStore.Pred]) extends ConnectorSplit
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](bucket))
+
+  override def rows(): Iterator[InternalRow] = {
+    import KuduStore._
+    val t = KuduStore.table(this.table)
+    val tablet = t.tablets.get((bucket, RangePart(rangeLo, rangeHi)))
+    val rows: Iterator[Seq[Any]] =
+      if (tablet == null) Iterator.empty
+      else tablet.values().iterator().asScala
+
+    def cmp(col: String, a: Any, b: Any): Int =
+      t.columns(t.colIdx(col)).dt match {
+        case StringType => a.toString.compareTo(b.toString)
+        case LongType => java.lang.Long.compare(
+          a.asInstanceOf[Number].longValue(),
+          b.asInstanceOf[Number].longValue())
+        case DoubleType => java.lang.Double.compare(
+          a.asInstanceOf[Number].doubleValue(),
+          b.asInstanceOf[Number].doubleValue())
+        case BooleanType => java.lang.Boolean.compare(
+          a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
+        case other => sys.error(s"graft-kudu: bad type $other")
+      }
+
+    // the tablet-side KuduPredicate evaluation
+    def matches(values: Seq[Any]): Boolean = preds.forall { pr =>
+      val v = values(t.colIdx(pr.col))
+      pr match {
+        case NullPred(_, isNull) => (v == null) == isNull
+        case EqPred(c, x) => v != null && cmp(c, v, x) == 0
+        case InPred(c, xs) => v != null && xs.exists(cmp(c, v, _) == 0)
+        case CmpPred(c, l, lInc, h, hInc) => v != null &&
+          l.forall(b => { val d = cmp(c, v, b); d > 0 || (lInc && d == 0) }) &&
+          h.forall(b => { val d = cmp(c, v, b); d < 0 || (hInc && d == 0) })
+      }
+    }
+
+    val hits = rows.filter { values =>
+      KuduStore.rowsScanned.incrementAndGet()
+      matches(values)
+    }
+
+    hits.map { values =>
+      InternalRow.fromSeq(required.fields.toSeq.map { f =>
+        val v = values(t.colIdx(f.name))
+        if (v == null) null
+        else f.dataType match {
+          case StringType => UTF8String.fromString(v.toString)
+          case LongType => v.asInstanceOf[Number].longValue()
+          case DoubleType => v.asInstanceOf[Number].doubleValue()
+          case BooleanType => v.asInstanceOf[Boolean]
+          case other => sys.error(s"graft-kudu: bad type $other")
+        }
+      })
+    }
+  }
 }
 
 class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
     required: StructType, pushedFilters: Array[Filter],
     viaCatalog: Boolean = false)
-    extends Scan with Batch
+    extends ConnectorScan(required)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -423,8 +465,6 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
     }
   }
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-kudu $tableName " +
       s"PushedFilters: [${pushedFilters.mkString(", ")}] cols=" +
@@ -493,7 +533,8 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
       (for {
         b <- buckets
         r <- survivingRanges
-      } yield KuduTokenSplit(tableName, b, r.lo, r.hi): InputPartition)
+      } yield KuduTokenSplit(tableName, b, r.lo, r.hi, required, preds)
+        : InputPartition)
         .toArray
     }
   }
@@ -515,91 +556,14 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
       planned
     else computePlanned(preds ++ runtimePreds)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new KuduReaderFactory(required, preds)
-
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val rows = planned.map {
-      case KuduTokenSplit(_, b, lo, hi) =>
+      case KuduTokenSplit(_, b, lo, hi, _, _) =>
         val tab = t.tablets.get((b, RangePart(lo, hi)))
         if (tab == null) 0L else tab.size.toLong
     }.sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-}
-
-class KuduReaderFactory(required: StructType,
-    preds: Seq[KuduStore.Pred])
-    extends PartitionReaderFactory with Serializable {
-
-  import KuduStore._
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val KuduTokenSplit(name, bucket, lo, hi) =
-      p.asInstanceOf[KuduTokenSplit]
-    val t = KuduStore.table(name)
-    val tablet = t.tablets.get((bucket, RangePart(lo, hi)))
-    val rows: Iterator[Seq[Any]] =
-      if (tablet == null) Iterator.empty
-      else tablet.values().iterator().asScala
-
-    def cmp(col: String, a: Any, b: Any): Int =
-      t.columns(t.colIdx(col)).dt match {
-        case StringType => a.toString.compareTo(b.toString)
-        case LongType => java.lang.Long.compare(
-          a.asInstanceOf[Number].longValue(),
-          b.asInstanceOf[Number].longValue())
-        case DoubleType => java.lang.Double.compare(
-          a.asInstanceOf[Number].doubleValue(),
-          b.asInstanceOf[Number].doubleValue())
-        case BooleanType => java.lang.Boolean.compare(
-          a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-        case other => sys.error(s"graft-kudu: bad type $other")
-      }
-
-    // the tablet-side KuduPredicate evaluation
-    def matches(values: Seq[Any]): Boolean = preds.forall { pr =>
-      val v = values(t.colIdx(pr.col))
-      pr match {
-        case NullPred(_, isNull) => (v == null) == isNull
-        case EqPred(c, x) => v != null && cmp(c, v, x) == 0
-        case InPred(c, xs) => v != null && xs.exists(cmp(c, v, _) == 0)
-        case CmpPred(c, l, lInc, h, hInc) => v != null &&
-          l.forall(b => { val d = cmp(c, v, b); d > 0 || (lInc && d == 0) }) &&
-          h.forall(b => { val d = cmp(c, v, b); d < 0 || (hInc && d == 0) })
-      }
-    }
-
-    val hits = rows.filter { values =>
-      KuduStore.rowsScanned.incrementAndGet()
-      matches(values)
-    }
-
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = hits.hasNext
-      override def get(): InternalRow = {
-        val values = hits.next()
-        InternalRow.fromSeq(required.fields.toSeq.map { f =>
-          val v = values(t.colIdx(f.name))
-          if (v == null) null
-          else f.dataType match {
-            case StringType => UTF8String.fromString(v.toString)
-            case LongType => v.asInstanceOf[Number].longValue()
-            case DoubleType => v.asInstanceOf[Number].doubleValue()
-            case BooleanType => v.asInstanceOf[Boolean]
-            case other => sys.error(s"graft-kudu: bad type $other")
-          }
-        })
-      }
-      override def close(): Unit = ()
-    }
+    ScanStats(rows, rows * 128L)
   }
 }
 

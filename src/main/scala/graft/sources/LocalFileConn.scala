@@ -8,9 +8,8 @@ import java.util.zip.GZIPInputStream
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters}
 import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -105,32 +104,17 @@ object LocalFileConn {
   }
 }
 
-class LocalFileTableProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-localfile"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    LocalFileConn.schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new LocalFileTable(new CaseInsensitiveStringMap(properties))
+class LocalFileTableProvider extends ConnectorProvider("graft-localfile") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new LocalFileTable(options)
 }
 
-class LocalFileTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  private val dir = {
-    val d = options.get("dir")
-    require(d != null, "graft-localfile requires option 'dir'")
-    d
-  }
+class LocalFileTable(options: CaseInsensitiveStringMap) extends ReadTable {
+  private val dir = Connector.option(options, "graft-localfile", "dir")
   private val pattern = options.getOrDefault("pattern", "*")
 
   override def name(): String = s"graft-localfile.$dir"
   override def schema(): StructType = LocalFileConn.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new LocalFileScanBuilder(dir, pattern)
@@ -156,13 +140,20 @@ class LocalFileScanBuilder(dir: String, pattern: String)
   override def build(): Scan = new LocalFileScan(dir, pattern, pushed)
 }
 
-final case class LocalFileSplit(path: String) extends InputPartition
+/** One log file; blank lines skip. */
+final case class LocalFileSplit(path: String) extends ConnectorSplit {
+  override def rows(): Iterator[InternalRow] = {
+    val node = JmxConn.nodeId
+    val reader = LocalFileConn.open(path)
+    new ClosingRows(Iterator.continually(reader.readLine())
+      .takeWhile(_ != null).filter(_.trim.nonEmpty)
+      .map(LocalFileConn.parse(_, node)), reader)
+  }
+}
 
 class LocalFileScan(dir: String, pattern: String, pushed: Array[Filter])
-    extends Scan with Batch {
+    extends ConnectorScan(LocalFileConn.schema) {
 
-  override def readSchema(): StructType = LocalFileConn.schema
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-localfile $dir pushed=[${pushed.mkString(", ")}]"
 
@@ -199,27 +190,5 @@ class LocalFileScan(dir: String, pattern: String, pushed: Array[Filter])
         LocalFileConn.firstTimestamp(f.getAbsolutePath).forall(_ <= ub))
     }
     kept.map(f => LocalFileSplit(f.getAbsolutePath)).toArray[InputPartition]
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LocalFileReaderFactory
-}
-
-class LocalFileReaderFactory extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val path = p.asInstanceOf[LocalFileSplit].path
-    val node = JmxConn.nodeId
-    new PartitionReader[InternalRow] {
-      private val reader = LocalFileConn.open(path)
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        var line = reader.readLine()
-        while (line != null && line.trim.isEmpty) line = reader.readLine()
-        if (line == null) false
-        else { current = LocalFileConn.parse(line, node); true }
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = reader.close()
-    }
   }
 }

@@ -5,9 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -60,38 +60,30 @@ object MemoryConn {
     }
 }
 
-class MemoryTableProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+class MemoryTableProvider extends ConnectorProvider("graft-memory") {
 
-  override def shortName(): String = "graft-memory"
-
-  private def name(options: CaseInsensitiveStringMap): String = {
-    val n = options.get("name")
-    require(n != null, "graft-memory requires option 'name'")
-    n
-  }
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val t = MemoryConn.store.get(name(options))
-    require(t != null,
-      s"graft-memory: table '${name(options)}' does not exist")
-    t._1
+  /** The stored table `options` name, with its stored schema. */
+  override def table(options: CaseInsensitiveStringMap): Table = {
+    val name = Connector.option(options, "graft-memory", "name")
+    val t = MemoryConn.store.get(name)
+    require(t != null, s"graft-memory: table '$name' does not exist")
+    new MemoryTable(name, t._1)
   }
 
   override def supportsExternalMetadata(): Boolean = true
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    new MemoryTable(name(new CaseInsensitiveStringMap(properties)), schema)
+    new MemoryTable(Connector.option(new CaseInsensitiveStringMap(properties),
+      "graft-memory", "name"), schema)
 }
 
 class MemoryTable(name: String, schema0: StructType)
-    extends Table with SupportsRead with SupportsWrite {
+    extends ReadTable with SupportsWrite {
   override def name(): String = s"graft-memory.$name"
   override def schema(): StructType = schema0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
+  override protected def moreCapabilities: Seq[TableCapability] =
+    Seq(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => new MemoryScan(name, schema0)
@@ -100,12 +92,16 @@ class MemoryTable(name: String, schema0: StructType)
     new MemoryWriteBuilder(name, info.schema())
 }
 
-final case class MemoryChunk(chunk: Int) extends InputPartition
+/** One committed task chunk, looked up in the JVM-wide store where it
+  * is read: local-mode / same-JVM semantics, per the header. */
+final case class MemoryChunk(name: String, chunk: Int) extends ConnectorSplit {
+  override def rows(): Iterator[InternalRow] =
+    MemoryConn.store.get(name)._2(chunk).iterator
+}
 
-class MemoryScan(name: String, schema0: StructType) extends Scan with Batch
+class MemoryScan(name: String, schema0: StructType)
+    extends ConnectorScan(schema0)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def readSchema(): StructType = schema0
-  override def toBatch: Batch = this
   override def description(): String = s"graft-memory $name"
 
   // exact cardinality from the page store (the reference's memory
@@ -119,36 +115,13 @@ class MemoryScan(name: String, schema0: StructType) extends Scan with Batch
       case org.apache.spark.sql.types.StringType => 20L
       case _ => 8L
     }).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * math.max(1L, width))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    ScanStats(rows, rows * math.max(1L, width))
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val t = MemoryConn.store.get(name)
     require(t != null, s"graft-memory: table '$name' does not exist")
-    t._2.indices.map(MemoryChunk(_)).toArray[InputPartition]
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new MemoryReaderFactory(name)
-}
-
-/** Standalone (serializable) factory: tasks look the chunk up in the
-  * JVM-wide store — local-mode / same-JVM semantics, per the header. */
-class MemoryReaderFactory(name: String)
-    extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val rows = MemoryConn.store.get(name)._2(p.asInstanceOf[MemoryChunk].chunk)
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = rows(i)
-      override def close(): Unit = ()
-    }
+    t._2.indices.map(MemoryChunk(name, _)).toArray[InputPartition]
   }
 }
 

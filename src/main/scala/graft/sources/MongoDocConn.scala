@@ -5,10 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -138,36 +137,21 @@ object MongoStore {
     }
 }
 
-class MongoDocProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-mongo"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("collection")
-    require(name != null && name.nonEmpty,
-      "graft-mongo requires option 'collection'")
-    MongoStore.inferSchema(name)
-  }
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new MongoDocTable(new CaseInsensitiveStringMap(properties))
+class MongoDocProvider extends ConnectorProvider("graft-mongo") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new MongoDocTable(options)
 }
 
 class MongoDocTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends ReadTable with SupportsWrite {
 
-  private val collName = options.get("collection")
+  private val collName = Connector.option(options, "graft-mongo", "collection")
   private val inferred = MongoStore.inferSchema(collName)
 
   override def name(): String = s"graft-mongo.$collName"
   override def schema(): StructType = inferred
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE)
+  override protected def moreCapabilities: Seq[TableCapability] =
+    Seq(TableCapability.BATCH_WRITE)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new MongoScanBuilder(collName, inferred)
@@ -240,41 +224,18 @@ class MongoScanBuilder(collName: String, full: StructType)
 
 /** The reference's single split (`MongoSplitManager.java:46-60`). */
 final case class MongoCollSplit(coll: String,
-    queries: Seq[MongoStore.MQuery]) extends InputPartition
-
-class MongoScan(collName: String, queries: Seq[MongoStore.MQuery],
-    required: StructType, pushedFilters: Array[Filter]) extends Scan
-    with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-mongo $collName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
-      "cols=" + required.fieldNames.mkString(",")
-
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(MongoCollSplit(collName, queries))
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new MongoReaderFactory(required)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val coll = MongoStore.collection(collName)
-    val rows = coll.synchronized(
-      coll.count(d => queries.forall(MongoStore.matches(d, _))).toLong)
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 256L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    queries: Seq[MongoStore.MQuery], required: StructType)
+    extends ConnectorSplit {
+  override def rows(): Iterator[InternalRow] = {
+    val c = MongoStore.collection(coll)
+    c.synchronized(c.toVector).iterator
+      .filter(d => queries.forall(MongoStore.matches(d, _)))
+      .map(d => InternalRow.fromSeq(required.fields.toSeq.map(f =>
+        MongoCollSplit.convert(d.getOrElse(f.name, null), f.dataType))))
   }
 }
 
-object MongoReaderFactory {
+object MongoCollSplit {
   /** Document value -> Catalyst value for the target type; a value
     * whose shape no longer matches the guessed schema reads NULL (the
     * schema-on-read tolerance Mongo users expect). */
@@ -294,25 +255,25 @@ object MongoReaderFactory {
   }
 }
 
-class MongoReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
+class MongoScan(collName: String, queries: Seq[MongoStore.MQuery],
+    required: StructType, pushedFilters: Array[Filter])
+    extends ConnectorScan(required)
+    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val MongoCollSplit(coll, queries) = p.asInstanceOf[MongoCollSplit]
-    val docs = {
-      val c = MongoStore.collection(coll)
-      c.synchronized(c.toVector)
-    }.iterator.filter(d => queries.forall(MongoStore.matches(d, _)))
-    new PartitionReader[InternalRow] {
-      private var cur: Map[String, Any] = _
-      override def next(): Boolean =
-        if (docs.hasNext) { cur = docs.next(); true } else false
-      override def get(): InternalRow =
-        InternalRow.fromSeq(required.fields.toSeq.map(f =>
-          MongoReaderFactory.convert(
-            cur.getOrElse(f.name, null), f.dataType)))
-      override def close(): Unit = ()
-    }
+  override def description(): String =
+    s"graft-mongo $collName " +
+      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
+      "cols=" + required.fieldNames.mkString(",")
+
+  override def planInputPartitions(): Array[InputPartition] =
+    Array(MongoCollSplit(collName, queries, required))
+
+  override def estimateStatistics()
+      : org.apache.spark.sql.connector.read.Statistics = {
+    val coll = MongoStore.collection(collName)
+    val rows = coll.synchronized(
+      coll.count(d => queries.forall(MongoStore.matches(d, _))).toLong)
+    ScanStats(rows, rows * 256L)
   }
 }
 

@@ -4,13 +4,12 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference, SortDirection, SortOrder, Transform}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Avg, Count, CountStar, Max, Min, Sum}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -329,33 +328,17 @@ object PinotStore {
   }
 }
 
-class PinotBrokerProvider extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-pinot"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    require(name != null && name.nonEmpty,
-      "graft-pinot requires option 'table'")
-    PinotStore.table(name).schema
-  }
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new PinotBrokerTable(new CaseInsensitiveStringMap(properties))
+class PinotBrokerProvider extends ConnectorProvider("graft-pinot") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new PinotBrokerTable(options)
 }
 
-class PinotBrokerTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+class PinotBrokerTable(options: CaseInsensitiveStringMap) extends ReadTable {
 
-  private val tableName = options.get("table")
+  private val tableName = Connector.option(options, "graft-pinot", "table")
 
   override def name(): String = s"graft-pinot.$tableName"
   override def schema(): StructType = PinotStore.table(tableName).schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new PinotScanBuilder(tableName)
@@ -514,21 +497,55 @@ class PinotScanBuilder(tableName: String)
       required, pushed)
 }
 
+sealed trait PinotSplit extends ConnectorSplit {
+  def required: StructType
+
+  /** The split's result values, one Seq per row. */
+  private[sources] def values(): Iterator[Seq[Any]]
+
+  override def rows(): Iterator[InternalRow] = values().map { cur =>
+    PinotStore.rowsReturned.incrementAndGet()
+    InternalRow.fromSeq(cur.zip(required.fields.toSeq).map {
+      case (null, _) => null
+      case (v, f) => f.dataType match {
+        case StringType => UTF8String.fromString(v.toString)
+        case LongType => v.asInstanceOf[Number].longValue()
+        case DoubleType => v.asInstanceOf[Number].doubleValue()
+        case BooleanType => v.asInstanceOf[Boolean]
+        case other => sys.error(s"graft-pinot: bad type $other")
+      }
+    })
+  }
+}
+
 /** The single whole-query split (`generateSplitForBrokerBasedScan`). */
 final case class PinotBrokerSplit(table: String,
-    query: PinotStore.PinotQuery) extends InputPartition
+    query: PinotStore.PinotQuery, required: StructType) extends PinotSplit {
+  override private[sources] def values(): Iterator[Seq[Any]] =
+    PinotStore.brokerExecute(PinotStore.table(table), query, required)
+}
+
 /** One split per segment from the routing table
   * (`generateSplitsForSegmentBasedScan`). */
 final case class PinotSegmentSplit(table: String, segmentId: Int,
-    server: String, query: PinotStore.PinotQuery) extends InputPartition
+    server: String, query: PinotStore.PinotQuery, required: StructType)
+    extends PinotSplit {
+  override private[sources] def values(): Iterator[Seq[Any]] = {
+    val t = PinotStore.table(table)
+    val rows = t.synchronized(
+      t.segments.find(_.id == segmentId).map(_.rows.toVector)
+        .getOrElse(Vector.empty))
+    rows.iterator
+      .filter(r => query.preds.forall(PinotStore.evalPred(t, r, _)))
+      .map(r => required.fields.toSeq.map(f => r(t.colIdx(f.name))))
+  }
+}
 
 class PinotScan(tableName: String, query: PinotStore.PinotQuery,
     required: StructType, pushedFilters: Array[Filter])
-    extends Scan with Batch
+    extends ConnectorScan(required)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-pinot $tableName mode=" +
       (if (query.isBrokerQuery) "broker" else "segment") +
@@ -542,67 +559,17 @@ class PinotScan(tableName: String, query: PinotStore.PinotQuery,
   override def planInputPartitions(): Array[InputPartition] = {
     val t = PinotStore.table(tableName)
     if (query.isBrokerQuery)
-      Array(PinotBrokerSplit(tableName, query))
+      Array(PinotBrokerSplit(tableName, query, required))
     else t.synchronized {
       t.segments.map(s => PinotSegmentSplit(tableName, s.id, s.server,
-        query): InputPartition).toArray
+        query, required): InputPartition).toArray
     }
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PinotReaderFactory(required)
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val t = PinotStore.table(tableName)
     val rows = t.synchronized(t.segments.map(_.rows.length.toLong).sum)
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-}
-
-class PinotReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  import PinotStore._
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val out: Iterator[Seq[Any]] = p match {
-      case PinotBrokerSplit(name, q) =>
-        val t = PinotStore.table(name)
-        brokerExecute(t, q, required)
-      case PinotSegmentSplit(name, segId, _, q) =>
-        val t = PinotStore.table(name)
-        val rows = t.synchronized(
-          t.segments.find(_.id == segId).map(_.rows.toVector)
-            .getOrElse(Vector.empty))
-        rows.iterator
-          .filter(r => q.preds.forall(evalPred(t, r, _)))
-          .map(r => required.fields.toSeq.map(f => r(t.colIdx(f.name))))
-    }
-    new PartitionReader[InternalRow] {
-      private var cur: Seq[Any] = _
-      override def next(): Boolean =
-        if (out.hasNext) { cur = out.next(); true } else false
-      override def get(): InternalRow = {
-        PinotStore.rowsReturned.incrementAndGet()
-        InternalRow.fromSeq(cur.zip(required.fields.toSeq).map {
-          case (null, _) => null
-          case (v, f) => f.dataType match {
-            case StringType => UTF8String.fromString(v.toString)
-            case LongType => v.asInstanceOf[Number].longValue()
-            case DoubleType => v.asInstanceOf[Number].doubleValue()
-            case BooleanType => v.asInstanceOf[Boolean]
-            case other => sys.error(s"graft-pinot: bad type $other")
-          }
-        })
-      }
-      override def close(): Unit = ()
-    }
+    ScanStats(rows, rows * 128L)
   }
 }

@@ -6,9 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, ScanBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -154,19 +153,9 @@ object RedisStore {
   }
 }
 
-class RedisKvProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-redis"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    RedisKvTable.Schema
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new RedisKvTable(new CaseInsensitiveStringMap(properties))
+class RedisKvProvider extends ConnectorProvider("graft-redis") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new RedisKvTable(options)
 }
 
 object RedisKvTable {
@@ -193,9 +182,7 @@ object RedisKvTable {
   }
 
   private[graft] def parse(options: CaseInsensitiveStringMap): Opts = {
-    val table = options.get("table")
-    require(table != null && table.nonEmpty,
-      "graft-redis requires option 'table'")
+    val table = Connector.option(options, "graft-redis", "table")
     val keyFormat = Option(options.get("key.format")).getOrElse("string")
     require(keyFormat == "string" || keyFormat == "zset",
       s"graft-redis key.format must be string|zset, got '$keyFormat'")
@@ -237,33 +224,63 @@ object RedisKvTable {
   }
 }
 
-class RedisKvTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+class RedisKvTable(options: CaseInsensitiveStringMap) extends ReadTable {
 
   private val opts = RedisKvTable.parse(options)
 
   override def name(): String = s"graft-redis.${opts.schema}.${opts.table}"
   override def schema(): StructType = RedisKvTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     () => new RedisKvScan(opts)
 }
 
+/** A split's keys, each fetched as one row. A key deleted (or
+  * re-typed) between discovery and fetch skips its row —
+  * `RedisRecordCursor.java:343-349`. */
+sealed trait RedisSplit extends ConnectorSplit {
+  def keys(): Seq[String]
+  def valueFormat: String
+
+  override def rows(): Iterator[InternalRow] =
+    keys().iterator.flatMap { k =>
+      val kUtf = UTF8String.fromString(k)
+      if (valueFormat == "hash")
+        RedisStore.hgetAll(k).map { m =>
+          val entries = m.toSeq.sortBy(_._1)
+          val vlen = entries.map { case (f, v) =>
+            f.length.toLong + v.length.toLong
+          }.sum
+          InternalRow(kUtf, null,
+            ArrayBasedMapData(
+              entries.map(e => UTF8String.fromString(e._1)).toArray,
+              entries.map(e => UTF8String.fromString(e._2)).toArray),
+            k.length.toLong, vlen)
+        }
+      else
+        RedisStore.get(k).map { v =>
+          InternalRow(kUtf, UTF8String.fromString(v), null,
+            k.length.toLong, v.length.toLong)
+        }
+    }
+}
+
 /** zset split: one ZRANGE index chunk (`RedisSplit` start/end). */
 final case class RedisZRange(keyName: String, start: Long, end: Long,
-    valueFormat: String) extends InputPartition
+    valueFormat: String) extends RedisSplit {
+  override def keys(): Seq[String] = RedisStore.zrange(keyName, start, end)
+}
 
 /** string-key split: one SCAN over the match pattern. */
 final case class RedisScanAll(matchGlob: Option[String],
-    valueFormat: String) extends InputPartition
+    valueFormat: String) extends RedisSplit {
+  override def keys(): Seq[String] = RedisStore.scanKeys(matchGlob)
+}
 
-class RedisKvScan(opts: RedisKvTable.Opts) extends Scan with Batch
+class RedisKvScan(opts: RedisKvTable.Opts)
+    extends ConnectorScan(RedisKvTable.Schema)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  override def readSchema(): StructType = RedisKvTable.Schema
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-redis ${opts.schema}.${opts.table} key=${opts.keyFormat} " +
       s"value=${opts.valueFormat}"
@@ -276,9 +293,6 @@ class RedisKvScan(opts: RedisKvTable.Opts) extends Scan with Batch
         }.toArray
     else Array(RedisScanAll(opts.matchGlob, opts.valueFormat))
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new RedisKvReaderFactory
-
   // exact key counts from the store — lets a small control table
   // broadcast, same honesty as the kafka/memory scans
   override def estimateStatistics()
@@ -286,54 +300,6 @@ class RedisKvScan(opts: RedisKvTable.Opts) extends Scan with Batch
     val rows =
       if (opts.keyFormat == "zset") RedisStore.zcard(opts.keyName)
       else RedisStore.scanKeys(opts.matchGlob).length.toLong
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 256L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-}
-
-class RedisKvReaderFactory extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val (keys, valueFormat) = p match {
-      case RedisZRange(k, s, e, vf) => (RedisStore.zrange(k, s, e), vf)
-      case RedisScanAll(glob, vf) => (RedisStore.scanKeys(glob), vf)
-    }
-    new PartitionReader[InternalRow] {
-      private val it = keys.iterator
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        row = null
-        while (row == null && it.hasNext) {
-          val k = it.next()
-          val kUtf = UTF8String.fromString(k)
-          if (valueFormat == "hash") {
-            // a key deleted (or re-typed) between discovery and fetch
-            // skips the row — RedisRecordCursor.java:343-349
-            RedisStore.hgetAll(k).foreach { m =>
-              val entries = m.toSeq.sortBy(_._1)
-              val vlen = entries.map { case (f, v) =>
-                f.length.toLong + v.length.toLong
-              }.sum
-              row = InternalRow(kUtf, null,
-                ArrayBasedMapData(
-                  entries.map(e => UTF8String.fromString(e._1)).toArray,
-                  entries.map(e => UTF8String.fromString(e._2)).toArray),
-                k.length.toLong, vlen)
-            }
-          } else {
-            RedisStore.get(k).foreach { v =>
-              row = InternalRow(kUtf, UTF8String.fromString(v), null,
-                k.length.toLong, v.length.toLong)
-            }
-          }
-        }
-        row != null
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
+    ScanStats(rows, rows * 256L)
   }
 }

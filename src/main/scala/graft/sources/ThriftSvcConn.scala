@@ -4,9 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -110,18 +109,9 @@ object ThriftRegistry {
   }
 }
 
-class ThriftSvcProvider extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-thrift"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ThriftSvcTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new ThriftSvcTable(new CaseInsensitiveStringMap(properties))
+class ThriftSvcProvider extends ConnectorProvider("graft-thrift") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new ThriftSvcTable(options)
 }
 
 object ThriftSvcTable {
@@ -139,15 +129,12 @@ object ThriftSvcTable {
   }
 }
 
-class ThriftSvcTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+class ThriftSvcTable(options: CaseInsensitiveStringMap) extends ReadTable {
 
   override def name(): String =
     s"graft-thrift.${options.get("service")}." +
       s"${options.get("schema")}.${options.get("table")}"
   override def schema(): StructType = ThriftSvcTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new ThriftScanBuilder(options.get("service"), options.get("schema"),
@@ -195,17 +182,58 @@ class ThriftScanBuilder(svc: String, schemaName: String, tableName: String,
 }
 
 final case class ThriftSplit(svc: String, splitId: Array[Byte],
-    hosts: Seq[String], columns: Seq[String], maxBytes: Long)
-    extends InputPartition {
+    hosts: Seq[String], required: StructType, maxBytes: Long)
+    extends ConnectorSplit {
   override def preferredLocations(): Array[String] = hosts.toArray
+
+  override def rows(): Iterator[InternalRow] = {
+    val service = ThriftRegistry.service(svc)
+    val columns = required.fieldNames.toSeq
+
+    // the getRows paging loop (`:114-121`): maxBytes-capped pages
+    // chained by continuation token
+    val rows: Iterator[Seq[Any]] = new Iterator[Seq[Any]] {
+      private var page: ThriftApi.RowsPage = _
+      private var i = 0
+      private var exhausted = false
+      private def advance(): Unit = {
+        while (!exhausted && (page == null || i >= page.rows.length)) {
+          if (page != null && page.nextToken.isEmpty) { exhausted = true }
+          else {
+            ThriftRegistry.rowsCalls.incrementAndGet()
+            page = service.getRows(splitId, columns, maxBytes,
+              Option(page).flatMap(_.nextToken))
+            i = 0
+            if (page.rows.isEmpty && page.nextToken.isEmpty)
+              exhausted = true
+          }
+        }
+      }
+      override def hasNext: Boolean = { advance(); !exhausted }
+      override def next(): Seq[Any] = { advance(); val r = page.rows(i); i += 1; r }
+    }
+
+    rows.map { r =>
+      require(r.length == required.fields.length,
+        "graft-thrift: service returned a row of the wrong width")
+      InternalRow.fromSeq(r.zip(required.fields.toSeq).map {
+        case (null, _) => null
+        case (v, f) => f.dataType match {
+          case StringType => UTF8String.fromString(v.toString)
+          case LongType => v.asInstanceOf[Number].longValue()
+          case DoubleType => v.asInstanceOf[Number].doubleValue()
+          case BooleanType => v.asInstanceOf[Boolean]
+          case other => sys.error(s"graft-thrift: bad type $other")
+        }
+      })
+    }
+  }
 }
 
 class ThriftScan(svc: String, schemaName: String, tableName: String,
     hints: Seq[ThriftApi.Hint], required: StructType,
-    maxSplitCount: Int, maxBytes: Long) extends Scan with Batch {
+    maxSplitCount: Int, maxBytes: Long) extends ConnectorScan(required) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"graft-thrift $schemaName.$tableName hints=${hints.size} cols=" +
       required.fieldNames.mkString(",")
@@ -228,67 +256,11 @@ class ThriftScan(svc: String, schemaName: String, tableName: String,
       batch.splitIds.zipWithIndex.foreach { case (id, i) =>
         out += ThriftSplit(svc, id,
           if (i < batch.hosts.size) batch.hosts(i) else Seq.empty,
-          required.fieldNames.toSeq, maxBytes)
+          required, maxBytes)
       }
       token = batch.nextToken
     }
     out.result().toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ThriftReaderFactory(required)
-}
-
-class ThriftReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val split = p.asInstanceOf[ThriftSplit]
-    val service = ThriftRegistry.service(split.svc)
-
-    // the getRows paging loop (`:114-121`): maxBytes-capped pages
-    // chained by continuation token
-    val rows: Iterator[Seq[Any]] = new Iterator[Seq[Any]] {
-      private var page: ThriftApi.RowsPage = _
-      private var i = 0
-      private var exhausted = false
-      private def advance(): Unit = {
-        while (!exhausted && (page == null || i >= page.rows.length)) {
-          if (page != null && page.nextToken.isEmpty) { exhausted = true }
-          else {
-            ThriftRegistry.rowsCalls.incrementAndGet()
-            page = service.getRows(split.splitId, split.columns,
-              split.maxBytes, Option(page).flatMap(_.nextToken))
-            i = 0
-            if (page.rows.isEmpty && page.nextToken.isEmpty)
-              exhausted = true
-          }
-        }
-      }
-      override def hasNext: Boolean = { advance(); !exhausted }
-      override def next(): Seq[Any] = { advance(); val r = page.rows(i); i += 1; r }
-    }
-
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = rows.hasNext
-      override def get(): InternalRow = {
-        val r = rows.next()
-        require(r.length == required.fields.length,
-          "graft-thrift: service returned a row of the wrong width")
-        InternalRow.fromSeq(r.zip(required.fields.toSeq).map {
-          case (null, _) => null
-          case (v, f) => f.dataType match {
-            case StringType => UTF8String.fromString(v.toString)
-            case LongType => v.asInstanceOf[Number].longValue()
-            case DoubleType => v.asInstanceOf[Number].doubleValue()
-            case BooleanType => v.asInstanceOf[Boolean]
-            case other => sys.error(s"graft-thrift: bad type $other")
-          }
-        })
-      }
-      override def close(): Unit = ()
-    }
   }
 }
 

@@ -1,9 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import TpchGen.h
@@ -628,25 +625,4 @@ object TpcdsGen extends ClosedFormGen {
 }
 
 /** spark.read.format("graft-tpcds") entry point. */
-class TpcdsTableProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-tpcds"
-
-  private def tableName(options: CaseInsensitiveStringMap): String = {
-    val t = options.get("table")
-    require(t != null, "graft-tpcds requires option 'table'")
-    t.toLowerCase
-  }
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TpcdsGen.schemaOf(tableName(options))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val opts = new CaseInsensitiveStringMap(properties)
-    new GenTable(TpcdsGen, tableName(opts),
-      Option(opts.get("sf")).map(_.toDouble).getOrElse(0.01),
-      Option(opts.get("parts")).map(_.toInt).getOrElse(8))
-  }
-}
+class TpcdsTableProvider extends GenProvider(TpcdsGen)

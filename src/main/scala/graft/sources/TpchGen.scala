@@ -1,13 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A deterministic TPC-H-shaped GENERATOR connector — the Spark-native
@@ -222,25 +215,4 @@ object TpchGen extends ClosedFormGen {
 }
 
 /** spark.read.format("graft-tpch") entry point. */
-class TpchTableProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-tpch"
-
-  private def tableName(options: CaseInsensitiveStringMap): String = {
-    val t = options.get("table")
-    require(t != null, "graft-tpch requires option 'table'")
-    t.toLowerCase
-  }
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TpchGen.schemaOf(tableName(options))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val opts = new CaseInsensitiveStringMap(properties)
-    new GenTable(TpchGen, tableName(opts),
-      Option(opts.get("sf")).map(_.toDouble).getOrElse(0.01),
-      Option(opts.get("parts")).map(_.toInt).getOrElse(8))
-  }
-}
+class TpchTableProvider extends GenProvider(TpchGen)

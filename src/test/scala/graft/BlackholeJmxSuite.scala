@@ -1,7 +1,16 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, ScanBuilder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.sources.{ClosingRows, ConnectorProvider, ConnectorScan, ConnectorSplit, ReadTable, SplitReaderFactory}
 
 /** Contracts for the graft-blackhole benchmark connector
   * (sources/BlackholeConn.scala) and the graft_jmx introspection
@@ -159,5 +168,63 @@ class BlackholeJmxSuite extends GraftSuite {
       spark.sql("DROP TABLE graft_jmx.current.`java.lang:type=runtime`")
     }
     assert(e.getMessage.contains("read-only"), e.getMessage)
+  }
+
+  test("connector scaffold closes each cursor once, also after LIMIT 1") {
+    import CountingSource.{closes, opened}
+    def reset(): Unit = { opened.set(0); closes.clear() }
+    def closeCounts: Seq[Int] = (0 until opened.get).map(closes.get(_).get)
+    val src = classOf[CountingSource].getName
+
+    reset()
+    assert(spark.read.format(src).load().count() == 400L)
+    assert(opened.get == 4)
+    assert(closeCounts == Seq(1, 1, 1, 1))
+
+    // a partial read still closes every cursor it opened
+    reset()
+    assert(spark.read.format(src).load().limit(1).collect().length == 1)
+    assert(opened.get >= 1 && opened.get < 4, s"opened ${opened.get}")
+    assert(closeCounts.forall(_ == 1), closeCounts.toString)
+
+    // a reader closed twice closes its cursor once
+    reset()
+    val r = SplitReaderFactory.createReader(CountingSplit(0))
+    assert(r.next() && r.get().getLong(0) == 0L)
+    r.close(); r.close()
+    assert(closeCounts == Seq(1))
+  }
+}
+
+/** A test source of 4 splits x 100 rows whose cursors count how often
+  * each is closed. */
+class CountingSource extends ConnectorProvider("graft-test-counting") {
+  override def table(options: CaseInsensitiveStringMap): Table =
+    new ReadTable {
+      override def name(): String = "graft-test-counting"
+      override def schema(): StructType =
+        StructType(Seq(StructField("id", LongType)))
+      override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+        () => new ConnectorScan(schema()) {
+          override def planInputPartitions(): Array[InputPartition] =
+            Array.tabulate[InputPartition](4)(CountingSplit(_))
+        }
+    }
+}
+
+object CountingSource {
+  /** cursors opened, each numbered in open order */
+  val opened = new AtomicInteger()
+  /** cursor number -> times closed */
+  val closes = new ConcurrentHashMap[Int, AtomicInteger]()
+}
+
+final case class CountingSplit(id: Int) extends ConnectorSplit {
+  override def rows(): Iterator[InternalRow] = {
+    val n = CountingSource.opened.getAndIncrement()
+    val closed = new AtomicInteger()
+    CountingSource.closes.put(n, closed)
+    new ClosingRows(Iterator.range(0, 100).map(i => InternalRow(id * 100L + i)),
+      () => closed.incrementAndGet())
   }
 }

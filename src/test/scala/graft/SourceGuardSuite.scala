@@ -6,8 +6,11 @@ import scala.jdk.CollectionConverters._
 
 /** Keeps each recurring idiom in its one helper: parquet footers are
   * read only in Footers, thread pools are built only in Exec, sketch
-  * bytes are told apart only in SketchFamily, and an oracle gets its
-  * derived-view CTE only through QueryPack.withCte. */
+  * bytes are told apart only in SketchFamily, an oracle gets its
+  * derived-view CTE only through QueryPack.withCte, the DataSource V2
+  * read plumbing (providers, reader factories, readers) lives only in
+  * sources/Connector.scala, and queries/ makes its scratch files only
+  * under Scratch. */
 class SourceGuardSuite extends GraftSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -61,5 +64,18 @@ class SourceGuardSuite extends GraftSuite {
     val found = sourcesWhere(_.contains("createTempDirectory"))
       .filter(_.startsWith("graft/queries/"))
     assert(found.isEmpty, s"createTempDirectory in $found")
+  }
+
+  test("DSv2 read plumbing appears only in sources/Connector.scala") {
+    val owner = main.resolve("graft/sources/Connector.scala")
+    only("extends TableProvider", owner)
+    only("extends PartitionReaderFactory", owner)
+    only("new PartitionReader[", owner)
+  }
+
+  test("queries/ takes no path from java.io.tmpdir") {
+    val found = sourcesWhere(_.contains("java.io.tmpdir"))
+      .filter(_.startsWith("graft/queries/"))
+    assert(found.isEmpty, s"java.io.tmpdir in $found")
   }
 }
