@@ -192,23 +192,12 @@ object GeomAlgebra {
   }
 
   // ---- Column API ----
-  def convexHull(ring: Column): Column =
-    ColumnBridge.toCol(ConvexHull(ColumnBridge.toExpr(ring)))
   def convexHullAgg(point: Column): Column =
     ColumnBridge.toCol(ConvexHullAgg(ColumnBridge.toExpr(point))
       .toAggregateExpression())
-  def intersectionConvex(subject: Column, clip: Column): Column =
-    ColumnBridge.toCol(ConvexClip(ColumnBridge.toExpr(subject),
-      ColumnBridge.toExpr(clip)))
   def relate(a: Column, b: Column, mode: String): Column =
     ColumnBridge.toCol(SegmentRelation(ColumnBridge.toExpr(a),
       ColumnBridge.toExpr(b), mode))
-  def isSimple(line: Column): Column =
-    ColumnBridge.toCol(LineSimplicity(ColumnBridge.toExpr(line), "simple"))
-  def asBinary(line: Column): Column =
-    ColumnBridge.toCol(WkbWrite(ColumnBridge.toExpr(line)))
-  def fromBinary(wkb: Column): Column =
-    ColumnBridge.toCol(WkbRead(ColumnBridge.toExpr(wkb)))
 }
 
 private[functions] trait RingInput {

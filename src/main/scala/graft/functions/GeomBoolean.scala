@@ -1,39 +1,49 @@
 package graft.functions
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Polygon boolean algebra — ST_Union / ST_Difference / ST_SymDifference
-  * / geometry_union (`presto-geospatial/.../GeoFunctions.java:581,589,
-  * 921,1007`) over the geo pack's implicit-closed rings, implemented
-  * from the Greiner–Hormann clipping algorithm (Greiner & Hormann, ACM
-  * TOG 1998 — a public textbook algorithm; the reference delegates to
-  * the Esri runtime instead).
+  * / ST_Intersection / geometry_union (`presto-geospatial/.../
+  * GeoFunctions.java:581,589,921,1007`) over the geo pack's
+  * implicit-closed rings and polygons with holes, implemented from the
+  * Greiner–Hormann clipping algorithm (Greiner & Hormann, ACM TOG 1998 —
+  * a public textbook algorithm; the reference delegates to the Esri
+  * runtime instead) in Foster & Hormann's multi-ring form.
+  *
+  * One clipper answers every op: [[clipMulti]] runs the GH machinery
+  * over all (subject ring, clip ring) pairs at once and
+  * [[clipMultiRobust]] resolves boundary contact. The ring-typed ops
+  * (`union`, `intersection`, `difference`, `symDifference`), the
+  * structural ones (`holed*`, `*Poly`) and every SQL spelling
+  * ([[PolyBool]]) are thin calls of it.
   *
   * Contract and honest limits:
-  *  - inputs are SIMPLE rings (either orientation; normalized to CCW);
-  *  - results are MULTIPOLYGONS: `array<ring>`, each ring canonical
-  *    (CCW from its lexicographically-smallest vertex), components
-  *    sorted by start vertex — deterministic and oracle-replayable.
-  *    Presto's GEOMETRY collapses a 1-component multipolygon to a
-  *    polygon; the structural model keeps the array container.
+  *  - inputs are SIMPLE rings or polygons with holes ([exterior,
+  *    holes...], any orientation; normalized by nesting depth);
+  *  - results are MULTIPOLYGONS with holes: `array<ring>` blocks of
+  *    [exterior CCW, its holes CW...], each ring canonical (from its
+  *    lexicographically-smallest vertex), blocks sorted by start
+  *    vertex — deterministic and oracle-replayable. Presto's GEOMETRY
+  *    collapses a 1-component multipolygon to a polygon; the structural
+  *    model keeps the array container.
+  *  - the ring-typed ops promise hole-free components: a result that
+  *    needs an interior ring (a clip strictly inside the subject, a
+  *    donut union) fails loudly there, which `addRing` relies on.
   *  - BOUNDARY-CONTACT configurations (vertex-on-edge, coincident
   *    vertices, collinear overlapping edges — touching parcels) resolve
-  *    via a deterministic micro-perturbation retry (r8; the standard
+  *    via a deterministic micro-perturbation retry (the standard
   *    degeneracy treatment for GH clipping): areas are correct to
-  *    O(1e-9·scale). Results that would need holes still fail loudly
-  *    (a ring-with-hole is unrepresentable here — e.g. subtracting a
-  *    strictly-interior polygon). General-position inputs — the
-  *    overwhelmingly common case — are exact.
+  *    O(1e-9·scale). General-position inputs — the overwhelmingly
+  *    common case — are exact.
   *
   * Scale: pure per-row scalar work (O((n+m)²) segment pairing on
   * small vertex counts), no joins, no state — scan-speed like the rest
@@ -52,23 +62,6 @@ object GeomBoolean {
     var alpha = 0.0 // parametric position on its source edge
   }
 
-  private def ring(flat: Array[Double]): Node = {
-    val n = flat.length / 2
-    val nodes = (0 until n).map(i => new Node(flat(2 * i), flat(2 * i + 1)))
-    nodes.indices.foreach { i =>
-      nodes(i).next = nodes((i + 1) % n)
-      nodes(i).prev = nodes((i + n - 1) % n)
-    }
-    nodes.head
-  }
-
-  private def vertices(h: Node): Seq[Node] = {
-    val b = ArrayBuffer.empty[Node]
-    var c = h
-    do { b += c; c = c.next } while (c ne h)
-    b.toSeq
-  }
-
   /** Signed area (shoelace) of a flattened implicit-closed ring. */
   private[graft] def signedArea(flat: Array[Double]): Double = {
     val n = flat.length / 2
@@ -82,20 +75,8 @@ object GeomBoolean {
     s / 2.0
   }
 
-  private def ccw(flat: Array[Double]): Array[Double] = {
+  private def requireRing(flat: Array[Double]): Unit =
     require(flat.length >= 6, "polygon boolean ops need >= 3 vertices")
-    if (signedArea(flat) < 0) {
-      val n = flat.length / 2
-      val out = new Array[Double](flat.length)
-      var i = 0
-      while (i < n) {
-        out(2 * i) = flat(2 * (n - 1 - i))
-        out(2 * i + 1) = flat(2 * (n - 1 - i) + 1)
-        i += 1
-      }
-      out
-    } else flat
-  }
 
   /** Strict even-odd point-in-polygon; any on-boundary point is a
     * degeneracy the caller must have excluded. */
@@ -188,218 +169,6 @@ object GeomBoolean {
     true
   }
 
-  /** Core: clip two CCW simple rings; returns the result components as
-    * flattened rings. `invS`/`invC` select the operation (GH entry-flag
-    * inversion): (false,false)=intersection, (true,true)=union,
-    * (true,false)=subject minus clip. */
-  private def clip(subjF: Array[Double], clipF: Array[Double],
-      invS: Boolean, invC: Boolean,
-      allowHoles: Boolean = false): Seq[Array[Double]] = {
-    // vertex-on-edge / coincident-vertex degeneracy sweep (n·m, small)
-    def onSegStrictOrVertex(px: Double, py: Double, poly: Array[Double]): Boolean = {
-      val n = poly.length / 2
-      var i = 0
-      while (i < n) {
-        val j = (i + 1) % n
-        val ax = poly(2 * i); val ay = poly(2 * i + 1)
-        val bx = poly(2 * j); val by = poly(2 * j + 1)
-        val crossV = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        if (crossV == 0 &&
-          math.min(ax, bx) <= px && px <= math.max(ax, bx) &&
-          math.min(ay, by) <= py && py <= math.max(ay, by)) return true
-        i += 1
-      }
-      false
-    }
-    var i = 0
-    while (i < subjF.length) {
-      if (onSegStrictOrVertex(subjF(i), subjF(i + 1), clipF))
-        contactDegenerate("subject vertex on clip boundary")
-      i += 2
-    }
-    i = 0
-    while (i < clipF.length) {
-      if (onSegStrictOrVertex(clipF(i), clipF(i + 1), subjF))
-        contactDegenerate("clip vertex on subject boundary")
-      i += 2
-    }
-
-    val sHead = ring(subjF)
-    val cHead = ring(clipF)
-    val sVerts = vertices(sHead)
-    val cVerts = vertices(cHead)
-
-    // find pairwise proper intersections; alpha==0/1 cannot happen after
-    // the vertex sweep above, collinear overlap still can
-    var found = 0
-    val inserted = ArrayBuffer.empty[(Node, Node, Double, Double, Double, Double)]
-    sVerts.foreach { sv =>
-      val s2 = sv.next
-      cVerts.foreach { cv =>
-        val c2 = cv.next
-        val d1x = s2.x - sv.x; val d1y = s2.y - sv.y
-        val d2x = c2.x - cv.x; val d2y = c2.y - cv.y
-        val denom = d1x * d2y - d1y * d2x
-        if (denom == 0) {
-          // parallel: collinear overlap is degenerate, disjoint is fine
-          val c1 = d1x * (cv.y - sv.y) - d1y * (cv.x - sv.x)
-          if (c1 == 0) {
-            // collinear: overlapping extent?
-            val (alo, ahi, blo, bhi) =
-              if (math.abs(d1x) >= math.abs(d1y))
-                (math.min(sv.x, s2.x), math.max(sv.x, s2.x),
-                  math.min(cv.x, c2.x), math.max(cv.x, c2.x))
-              else
-                (math.min(sv.y, s2.y), math.max(sv.y, s2.y),
-                  math.min(cv.y, c2.y), math.max(cv.y, c2.y))
-            if (math.min(ahi, bhi) - math.max(alo, blo) > 0)
-              contactDegenerate("collinear overlapping edges")
-          }
-        } else {
-          val tS = ((cv.x - sv.x) * d2y - (cv.y - sv.y) * d2x) / denom
-          val tC = ((cv.x - sv.x) * d1y - (cv.y - sv.y) * d1x) / denom
-          if (tS > 0 && tS < 1 && tC > 0 && tC < 1) {
-            inserted += ((sv, cv, tS, tC,
-              sv.x + tS * d1x, sv.y + tS * d1y))
-            found += 1
-          }
-        }
-      }
-    }
-
-    if (found == 0) {
-      // no boundary crossings: containment or disjoint
-      val sInC = inside(subjF(0), subjF(1), clipF)
-      val cInS = inside(clipF(0), clipF(1), subjF)
-      return (invS, invC) match {
-        case (false, false) => // intersection
-          if (sInC) Seq(subjF) else if (cInS) Seq(clipF) else Seq.empty
-        case (true, true) => // union
-          if (sInC) Seq(clipF) else if (cInS) Seq(subjF)
-          else Seq(subjF, clipF)
-        case (true, false) => // difference S - C
-          if (sInC) Seq.empty
-          else if (cInS) {
-            if (allowHoles) Seq(subjF, reversePairs(clipF))
-            else degenerate(
-              "difference would create a hole (clip strictly inside subject)")
-          } else Seq(subjF)
-        case other => throw new IllegalStateException(s"bad op $other")
-      }
-    }
-
-    // insert intersection nodes into both rings, ordered by alpha
-    def insertAfter(edgeStart: Node, node: Node, alpha: Double): Unit = {
-      var at = edgeStart
-      while (at.next.intersect && at.next.alpha < alpha) at = at.next
-      node.alpha = alpha
-      node.next = at.next
-      node.prev = at
-      at.next.prev = node
-      at.next = node
-    }
-    inserted.foreach { case (sv, cv, tS, tC, x, y) =>
-      val ns = new Node(x, y); ns.intersect = true
-      val nc = new Node(x, y); nc.intersect = true
-      ns.neighbor = nc; nc.neighbor = ns
-      insertAfter(sv, ns, tS)
-      insertAfter(cv, nc, tC)
-    }
-
-    // entry/exit flags: alternate from the first vertex's inside status
-    def markEntries(head: Node, other: Array[Double], invert: Boolean): Unit = {
-      var status = !inside(head.x, head.y, other) // next crossing enters?
-      if (invert) status = !status
-      var c = head
-      do {
-        if (c.intersect) { c.entry = status; status = !status }
-        c = c.next
-      } while (c ne head)
-    }
-    markEntries(sHead, clipF, invS)
-    markEntries(cHead, subjF, invC)
-
-    // traverse
-    val results = ArrayBuffer.empty[Array[Double]]
-    def firstUnvisited(): Node = {
-      var c = sHead
-      do {
-        if (c.intersect && !c.visited) return c
-        c = c.next
-      } while (c ne sHead)
-      null
-    }
-    var start = firstUnvisited()
-    var guard = 0L
-    // terminate-check bound scaled to the actual node count (original
-    // vertices plus one inserted node per side per intersection): a
-    // healthy traversal emits each node at most once per result
-    // component, so a generous factor over the node count separates
-    // legitimately large inputs from a genuinely stuck walk — a fixed
-    // constant would spuriously trip on tens-of-thousands-vertex rings
-    val maxSteps = 16L * (subjF.length / 2 + clipF.length / 2 +
-      2 * inserted.length) + 4096L
-    while (start != null) {
-      val out = ArrayBuffer.empty[Double]
-      var cur = start
-      do {
-        cur.visited = true; cur.neighbor.visited = true
-        if (cur.entry) {
-          do {
-            cur = cur.next
-            out += cur.x; out += cur.y
-            guard += 1
-            if (guard > maxSteps) degenerate("traversal did not terminate")
-          } while (!cur.intersect)
-        } else {
-          do {
-            cur = cur.prev
-            out += cur.x; out += cur.y
-            guard += 1
-            if (guard > maxSteps) degenerate("traversal did not terminate")
-          } while (!cur.intersect)
-        }
-        cur = cur.neighbor
-      } while ((cur ne start) && (cur.neighbor ne start))
-      // drop closing duplicate if present
-      var flat = out.toArray
-      val n = flat.length / 2
-      if (n >= 2 && flat(0) == flat(2 * n - 2) && flat(1) == flat(2 * n - 1))
-        flat = flat.dropRight(2)
-      if (flat.length >= 6) {
-        // GH traversal orientation depends on the entry pattern, not on
-        // the op — normalize every component to CCW; holes are detected
-        // structurally below (a component nested inside another).
-        results += canonical(ccw(flat))
-      }
-      start = firstUnvisited()
-    }
-    // hole check: in the ring-typed ops every legal result is a set of
-    // DISJOINT outer boundaries, so a component whose start vertex lies
-    // inside another is unrepresentable there (loud). The holed
-    // (`st_polygon_*`) spellings pass allowHoles and get the nested
-    // component back as a CW interior ring right after its exterior —
-    // for two SIMPLE input rings nesting depth is at most 1 (a hole
-    // cannot itself contain a result component: that component would be
-    // a disconnected piece of a simple input).
-    // IndexedSeq: the nested-component scan below indexes rs inside an
-    // O(n²) loop — a List here turns it cubic on many-component results
-    val rs = results.toIndexedSeq
-    val nestedIn: Seq[Int] = rs.indices.map { i =>
-      rs.indices.find(j => i != j && inside(rs(i)(0), rs(i)(1), rs(j)))
-        .getOrElse(-1)
-    }
-    if (!allowHoles && nestedIn.exists(_ >= 0))
-      degenerate("result needs a hole (nested boundary component)")
-    val exteriors = rs.indices.filter(nestedIn(_) < 0)
-      .sortBy(i => (rs(i)(0), rs(i)(1)))
-    exteriors.flatMap { e =>
-      val holes = rs.indices.filter(nestedIn(_) == e)
-        .map(rs).sortBy(r => (r(0), r(1))).map(reversePairs)
-      rs(e) +: holes
-    }
-  }
-
   /** Rotate a CCW flattened ring to start at its lex-min vertex. */
   private def canonical(flat: Array[Double]): Array[Double] = {
     val n = flat.length / 2
@@ -428,110 +197,6 @@ object GeomBoolean {
     (sx / n, sy / n)
   }
 
-  /** Boundary-contact fallback (the standard perturbation resolution of
-    * Greiner–Hormann degeneracies): translate the CLIP ring by a
-    * deterministic micro-offset along the inter-centroid axis — toward
-    * the subject for union (abutting parcels must FUSE, not detach),
-    * away from it for intersection/difference (a shared edge contributes
-    * no area; an inside-touching clip must detach outward, not become a
-    * hole) — then re-clip. Areas move by O(δ·perimeter) ≈ 1e-9·scale,
-    * invisible at the geometry gates' rounding; results that would need
-    * holes still fail loudly (unrepresentable, not recoverable). */
-  private def clipRobust(a: Array[Double], b: Array[Double],
-      invS: Boolean, invC: Boolean, toward: Boolean,
-      allowHoles: Boolean = false): Seq[Array[Double]] = {
-    val ca = ccw(a); val cb = ccw(b)
-    try clip(ca, cb, invS, invC, allowHoles)
-    catch { case _: ContactDegeneracy =>
-      val (sx, sy) = centroidOf(ca)
-      val (cx, cy) = centroidOf(cb)
-      var dx = sx - cx; var dy = sy - cy
-      val len = math.hypot(dx, dy)
-      if (len < 1e-300) { dx = 0.7985357; dy = 0.6019477 } // fixed oblique
-      else { dx /= len; dy /= len }
-      // twist off any axis-aligned direction: an exactly-horizontal
-      // shift would leave horizontal shared edges collinear forever
-      dx += 0.1370778 * -dy; dy += 0.1370778 * dx
-      val len2 = math.hypot(dx, dy)
-      dx /= len2; dy /= len2
-      if (!toward) { dx = -dx; dy = -dy }
-      var scale = 1.0
-      var i = 0
-      while (i < ca.length) { scale = math.max(scale, math.abs(ca(i))); i += 1 }
-      i = 0
-      while (i < cb.length) { scale = math.max(scale, math.abs(cb(i))); i += 1 }
-      var delta = scale * 1e-9
-      var attempt = 0
-      var out: Seq[Array[Double]] = null
-      while (out == null) {
-        val shifted = new Array[Double](cb.length)
-        i = 0
-        while (i < cb.length) {
-          shifted(i) = cb(i) + dx * delta
-          shifted(i + 1) = cb(i + 1) + dy * delta
-          i += 2
-        }
-        try out = clip(ca, shifted, invS, invC, allowHoles)
-        catch {
-          case _: ContactDegeneracy if attempt < 3 =>
-            attempt += 1; delta *= 1000
-        }
-      }
-      out
-    }
-  }
-
-  private[graft] def union(a: Array[Double], b: Array[Double]): Seq[Array[Double]] =
-    clipRobust(a, b, invS = true, invC = true, toward = true)
-  private[graft] def intersection(a: Array[Double], b: Array[Double]): Seq[Array[Double]] =
-    clipRobust(a, b, invS = false, invC = false, toward = false)
-  private[graft] def difference(a: Array[Double], b: Array[Double]): Seq[Array[Double]] =
-    clipRobust(a, b, invS = true, invC = false, toward = false)
-  private[graft] def symDifference(a: Array[Double], b: Array[Double]): Seq[Array[Double]] =
-    (difference(a, b) ++ difference(b, a)).sortBy(r => (r(0), r(1)))
-
-  /** Proper or touching intersection between segments AB and CD —
-    * orientation signs plus collinear-overlap bounding checks. Any
-    * touch routes to the GH path, which resolves it or fails loudly. */
-  private def segsIntersect(ax: Double, ay: Double, bx: Double, by: Double,
-      cx: Double, cy: Double, dx: Double, dy: Double): Boolean = {
-    @inline def orient(px: Double, py: Double, qx: Double, qy: Double,
-        rx: Double, ry: Double): Double =
-      (qx - px) * (ry - py) - (qy - py) * (rx - px)
-    @inline def onSeg(px: Double, py: Double, qx: Double, qy: Double,
-        rx: Double, ry: Double): Boolean =
-      math.min(px, qx) <= rx && rx <= math.max(px, qx) &&
-        math.min(py, qy) <= ry && ry <= math.max(py, qy)
-    val o1 = orient(ax, ay, bx, by, cx, cy)
-    val o2 = orient(ax, ay, bx, by, dx, dy)
-    val o3 = orient(cx, cy, dx, dy, ax, ay)
-    val o4 = orient(cx, cy, dx, dy, bx, by)
-    if (o1 * o2 < 0 && o3 * o4 < 0) true
-    else if (o1 == 0 && onSeg(ax, ay, bx, by, cx, cy)) true
-    else if (o2 == 0 && onSeg(ax, ay, bx, by, dx, dy)) true
-    else if (o3 == 0 && onSeg(cx, cy, dx, dy, ax, ay)) true
-    else if (o4 == 0 && onSeg(cx, cy, dx, dy, bx, by)) true
-    else false
-  }
-
-  private def ringsTouch(a: Array[Double], b: Array[Double]): Boolean = {
-    val n = a.length / 2
-    val m = b.length / 2
-    var i = 0
-    while (i < n) {
-      val i2 = (i + 1) % n
-      var j = 0
-      while (j < m) {
-        val j2 = (j + 1) % m
-        if (segsIntersect(a(2 * i), a(2 * i + 1), a(2 * i2), a(2 * i2 + 1),
-          b(2 * j), b(2 * j + 1), b(2 * j2), b(2 * j2 + 1))) return true
-        j += 1
-      }
-      i += 1
-    }
-    false
-  }
-
   private def reversePairs(ring: Array[Double]): Array[Double] = {
     val m = ring.length / 2
     val out = new Array[Double](ring.length)
@@ -544,104 +209,25 @@ object GeomBoolean {
     out
   }
 
-  /** Subject − clip as a POLYGON WITH HOLES ([exterior CCW, holes
-    * CW...] — the structural layer, composable with st_polygon_area /
-    * centroid / contains / as_binary). The configuration the ring-typed
-    * `difference` must reject — clip strictly inside the subject — IS a
-    * hole: with no boundary contact the answer is [subject, reversed
-    * clip]. With boundary crossings the GH difference applies (its
-    * components are hole-free); a multi-component result — a clip bar
-    * splitting the subject — comes back as a MULTIPOLYGON in the same
-    * array<ring> shape (r7; orientation disambiguates: holes are CW,
-    * multipolygon components all-CCW exteriors). Reference
-    * GeoFunctions.java:921 (Esri-backed difference yields interior
-    * rings in this configuration). */
-  private[graft] def holedDifference(a0: Array[Double],
-      b0: Array[Double]): Seq[Array[Double]] = {
-    val a = ccw(a0)
-    val b = ccw(b0)
-    if (!ringsTouch(a, b)) {
-      val bInA = inside(b(0), b(1), a)
-      val aInB = inside(a(0), a(1), b)
-      if (bInA) Seq(a, reversePairs(b)) // clip punches a hole
-      else if (aInB) Seq.empty // subject swallowed entirely
-      else Seq(a) // disjoint: clip removes nothing
-    } else {
-      // Boundary crossings take the GH difference with allowHoles: its
-      // components usually stay hole-free (a clip bar splitting the
-      // subject comes back as an all-CCW multipolygon, r7), but a
-      // notch-reaching clip whose removal leaves an enclosed pocket
-      // gets that pocket back as a CW interior ring (r8c). Orientation
-      // disambiguates the two readings by the structural convention.
-      clipRobust(a0, b0, invS = true, invC = false, toward = false,
-        allowHoles = true)
-    }
-  }
-
-  /** A ∪ B as a polygon with holes ([exterior CCW, holes CW...] — the
-    * structural layer). Unlike the ring-typed `union`, a union that
-    * encloses a pocket (a cap ring bridging a U-shape's arms — the
-    * donut configuration) computes instead of failing: the GH traversal
-    * with allowHoles returns the enclosed pocket as a CW interior ring
-    * after its exterior. Two crossing SIMPLE rings yield one connected
-    * union, so the result is exactly one exterior plus its holes; the
-    * no-crossing cases are the ring-typed ones (containment/disjoint,
-    * hole-free). Reference GeoFunctions.java:581 (Esri union yields
-    * interior rings in this configuration). */
-  private[graft] def holedUnion(a0: Array[Double],
-      b0: Array[Double]): Seq[Array[Double]] = {
-    val a = ccw(a0)
-    val b = ccw(b0)
-    if (!ringsTouch(a, b)) {
-      val bInA = inside(b(0), b(1), a)
-      val aInB = inside(a(0), a(1), b)
-      if (bInA) Seq(a)
-      else if (aInB) Seq(b)
-      else Seq(a, b).sortBy(r => (r(0), r(1)))
-    } else {
-      clipRobust(a0, b0, invS = true, invC = true, toward = true,
-        allowHoles = true)
-    }
-  }
-
-  /** A △ B as holed multipolygons: (A − B) components followed by
-    * (B − A) components, each block in the holed-difference shape. The
-    * two blocks have disjoint interiors by construction (they meet only
-    * along shared boundary arcs), so the concatenation is a valid
-    * structural multipolygon; the B-inside-A configuration the
-    * ring-typed `symdifference` rejects returns [A, reversed B]. */
-  private[graft] def holedSymDifference(a0: Array[Double],
-      b0: Array[Double]): Seq[Array[Double]] =
-    holedDifference(a0, b0) ++ holedDifference(b0, a0)
-
-  // ---- r10: Foster–Hormann multi-ring extension — HOLED INPUTS ----
-  // The single-ring GH clipper generalizes to polygons-with-holes by
-  // running the same machinery over ALL ring pairs at once (Foster &
-  // Hormann's multi-component formulation of Greiner–Hormann): even-odd
-  // point-in-polygon over the full ring set seeds the entry/exit flags,
-  // rings that never cross the other polygon are kept or dropped by the
-  // operation's truth table, and the result components nest-assemble by
-  // containment depth (even depth = exterior CCW, odd = hole CW).
-  // Reference: the Esri delegation accepts arbitrary polygons
-  // (GeoFunctions.java:581,921); this closes the holed-INPUT limit the
-  // r8c holed-RESULT layer documented.
-
   /** Even-odd membership w.r.t. a polygon given as ALL its rings
     * (orientation-independent: each ring crossing flips parity). */
   private[graft] def insideMulti(px: Double, py: Double,
       rings: Seq[Array[Double]]): Boolean =
     rings.foldLeft(false)((in, r) => in ^ inside(px, py, r))
 
-  /** Normalize a polygon's ring orientations by nesting depth: even
-    * depth (exteriors) CCW, odd depth (holes) CW — the interior-left
-    * convention the traversal needs. Input order is preserved. */
+  /** Every boolean op's entry: each ring has >= 3 vertices, and ring
+    * orientations follow nesting depth — even depth (exteriors) CCW,
+    * odd depth (holes) CW, the interior-left convention the traversal
+    * needs. A zero-area ring keeps its order. Input order is
+    * preserved. */
   private def orientPoly(rings: Seq[Array[Double]]): Seq[Array[Double]] = {
+    rings.foreach(requireRing)
     val depth = rings.indices.map(i => rings.indices.count(j =>
       j != i && inside(rings(i)(0), rings(i)(1), rings(j))))
     rings.indices.map { i =>
       val r = rings(i)
-      val wantCcw = depth(i) % 2 == 0
-      if ((signedArea(r) > 0) == wantCcw) r else reversePairs(r)
+      val a = signedArea(r)
+      if (a != 0 && (a > 0) != (depth(i) % 2 == 0)) reversePairs(r) else r
     }
   }
 
@@ -654,7 +240,8 @@ object GeomBoolean {
   private def assemble(comps0: Seq[Array[Double]]): Seq[Array[Double]] = {
     // IndexedSeq: the depth/hole scans below index comps inside O(n²)
     // loops — a List argument would turn them cubic
-    val comps = comps0.iterator.map(r => canonical(ccw(r))).toIndexedSeq
+    val comps = comps0.iterator
+      .map(r => canonical(GeomAlgebra.toCcw(r))).toIndexedSeq
     val depth = comps.indices.map(i => comps.indices.count(j =>
       j != i && inside(comps(i)(0), comps(i)(1), comps(j))))
     val out = ArrayBuffer.empty[Array[Double]]
@@ -676,10 +263,15 @@ object GeomBoolean {
     out.toSeq
   }
 
-  /** Multi-ring GH core: subject and clip are polygons-with-holes
-    * (interior-left oriented via [[orientPoly]]); `invS`/`invC` select
-    * the op exactly like the single-ring [[clip]]. Returns structural
-    * [exterior, holes...] blocks. */
+  /** The Greiner–Hormann core over polygons with holes (Foster &
+    * Hormann's multi-ring formulation): subject and clip are
+    * interior-left oriented ring lists ([[orientPoly]]). Even-odd
+    * membership in the whole other polygon seeds the entry/exit flags,
+    * rings that never cross the other polygon are kept or dropped by
+    * the operation's truth table, and [[assemble]] nests the result
+    * components. `invS`/`invC` select the operation (GH entry-flag
+    * inversion): (false,false)=intersection, (true,true)=union,
+    * (true,false)=subject minus clip. */
   private def clipMulti(subj: Seq[Array[Double]], clip: Seq[Array[Double]],
       invS: Boolean, invC: Boolean): Seq[Array[Double]] = {
     // degeneracy sweep: any vertex of either polygon on any ring of the
@@ -702,7 +294,9 @@ object GeomBoolean {
 
     // pure-geometry intersection pass over ORIGINAL edges of every
     // (subject ring, clip ring) pair — insertion happens after, sorted
-    // by alpha, so multi-pair subdivision stays consistent
+    // by alpha, so multi-pair subdivision stays consistent. alpha==0/1
+    // cannot happen after the vertex sweep above; collinear overlap
+    // still can
     final case class Hit(si: Int, se: Int, tS: Double,
         ci: Int, ce: Int, tC: Double, x: Double, y: Double)
     val hits = ArrayBuffer.empty[Hit]
@@ -719,6 +313,7 @@ object GeomBoolean {
           val d2x = b(2 * j2) - b(2 * j); val d2y = b(2 * j2 + 1) - b(2 * j + 1)
           val denom = d1x * d2y - d1y * d2x
           if (denom == 0) {
+            // parallel: collinear overlap is degenerate, disjoint is fine
             val c1 = d1x * (b(2 * j + 1) - a(2 * i + 1)) -
               d1y * (b(2 * j) - a(2 * i))
             if (c1 == 0) {
@@ -810,7 +405,7 @@ object GeomBoolean {
     }
 
     // entry/exit flags per ring, seeded by even-odd membership in the
-    // WHOLE other polygon
+    // WHOLE other polygon, then alternating along the ring
     def markEntries(head: Node, other: Seq[Array[Double]],
         invert: Boolean): Unit = {
       var status = !insideMulti(head.x, head.y, other)
@@ -839,11 +434,13 @@ object GeomBoolean {
     }
     var start = firstUnvisited()
     var guard = 0L
-    // same node-count-scaled termination bound as the single-ring
-    // clipper: the cap accumulates across ALL result components of one
-    // call, so it must grow with the input (subject + clip vertices
-    // plus both inserted nodes per intersection), not sit at a constant
-    // a legitimately large multi-ring input would spuriously trip
+    // terminate-check bound scaled to the actual node count (subject +
+    // clip vertices plus both inserted nodes per intersection): a
+    // healthy traversal emits each node at most once per result
+    // component, and the cap accumulates across ALL components of one
+    // call, so a generous factor over the node count separates
+    // legitimately large inputs from a genuinely stuck walk — a fixed
+    // constant would spuriously trip on tens-of-thousands-vertex rings
     val maxSteps = 16L * (subj.map(_.length / 2).sum +
       clip.map(_.length / 2).sum + 2 * hits.length) + 4096L
     while (start != null) {
@@ -868,6 +465,7 @@ object GeomBoolean {
         }
         cur = cur.neighbor
       } while ((cur ne start) && (cur.neighbor ne start))
+      // drop closing duplicate if present
       var flat = out.toArray
       val n = flat.length / 2
       if (n >= 2 && flat(0) == flat(2 * n - 2) && flat(1) == flat(2 * n - 1))
@@ -878,10 +476,16 @@ object GeomBoolean {
     assemble(results.toSeq ++ kept)
   }
 
-  /** Perturbation wrapper for the multi-ring clipper: boundary contact
-    * retries with ALL clip rings shifted together by the deterministic
-    * micro-offset (the polygon moves rigidly, so its hole structure is
-    * preserved). Same δ policy as [[clipRobust]]. */
+  /** Boundary-contact fallback (the standard perturbation resolution of
+    * Greiner–Hormann degeneracies): translate ALL clip rings together
+    * (the polygon moves rigidly, so its hole structure is preserved) by
+    * a deterministic micro-offset along the inter-centroid axis of the
+    * two exteriors — toward the subject for union (abutting parcels
+    * must FUSE, not detach), away from it for intersection/difference
+    * (a shared edge contributes no area; an inside-touching clip must
+    * detach outward, not become a hole) — then re-clip. Areas move by
+    * O(δ·perimeter) ≈ 1e-9·scale, invisible at the geometry gates'
+    * rounding. */
   private def clipMultiRobust(subj: Seq[Array[Double]],
       clip: Seq[Array[Double]], invS: Boolean, invC: Boolean,
       toward: Boolean): Seq[Array[Double]] = {
@@ -891,8 +495,10 @@ object GeomBoolean {
       val (cx, cy) = centroidOf(clip.head)
       var dx = sx - cx; var dy = sy - cy
       val len = math.hypot(dx, dy)
-      if (len < 1e-300) { dx = 0.7985357; dy = 0.6019477 }
+      if (len < 1e-300) { dx = 0.7985357; dy = 0.6019477 } // fixed oblique
       else { dx /= len; dy /= len }
+      // twist off any axis-aligned direction: an exactly-horizontal
+      // shift would leave horizontal shared edges collinear forever
       dx += 0.1370778 * -dy; dy += 0.1370778 * dx
       val len2 = math.hypot(dx, dy)
       dx /= len2; dy /= len2
@@ -926,20 +532,23 @@ object GeomBoolean {
     }
   }
 
-  /** Polygon-level ops: single-ring inputs keep the r8c paths
-    * (byte-identical results); an input with interior rings routes
-    * through the multi-ring clipper. */
+  private def polyOp(a: Seq[Array[Double]], b: Seq[Array[Double]],
+      invS: Boolean, invC: Boolean, toward: Boolean): Seq[Array[Double]] =
+    clipMultiRobust(orientPoly(a), orientPoly(b), invS, invC, toward)
+
+  // ---- polygon-level ops: structural [exterior, holes...] results ----
+  // A ∪ B encloses a pocket as a CW hole (a cap bridging a U-shape's
+  // arms — the donut); A − B punches one (clip strictly inside the
+  // subject); A △ B is (A − B) then (B − A), blocks with disjoint
+  // interiors. Reference GeoFunctions.java:581,921,1007 (the Esri
+  // delegation yields interior rings in these configurations).
   private[graft] def holedUnionPoly(a: Seq[Array[Double]],
       b: Seq[Array[Double]]): Seq[Array[Double]] =
-    if (a.length == 1 && b.length == 1) holedUnion(a.head, b.head)
-    else clipMultiRobust(orientPoly(a), orientPoly(b),
-      invS = true, invC = true, toward = true)
+    polyOp(a, b, invS = true, invC = true, toward = true)
 
   private[graft] def holedDifferencePoly(a: Seq[Array[Double]],
       b: Seq[Array[Double]]): Seq[Array[Double]] =
-    if (a.length == 1 && b.length == 1) holedDifference(a.head, b.head)
-    else clipMultiRobust(orientPoly(a), orientPoly(b),
-      invS = true, invC = false, toward = false)
+    polyOp(a, b, invS = true, invC = false, toward = false)
 
   private[graft] def holedSymDifferencePoly(a: Seq[Array[Double]],
       b: Seq[Array[Double]]): Seq[Array[Double]] =
@@ -947,9 +556,32 @@ object GeomBoolean {
 
   private[graft] def intersectionPoly(a: Seq[Array[Double]],
       b: Seq[Array[Double]]): Seq[Array[Double]] =
-    if (a.length == 1 && b.length == 1) intersection(a.head, b.head)
-    else clipMultiRobust(orientPoly(a), orientPoly(b),
-      invS = false, invC = false, toward = false)
+    polyOp(a, b, invS = false, invC = false, toward = false)
+
+  private[graft] def holedUnion(a: Array[Double],
+      b: Array[Double]): Seq[Array[Double]] = holedUnionPoly(Seq(a), Seq(b))
+  private[graft] def holedDifference(a: Array[Double],
+      b: Array[Double]): Seq[Array[Double]] = holedDifferencePoly(Seq(a), Seq(b))
+  private[graft] def holedSymDifference(a: Array[Double],
+      b: Array[Double]): Seq[Array[Double]] =
+    holedSymDifferencePoly(Seq(a), Seq(b))
+
+  // ---- ring-typed ops: hole-free components ----
+  // A result that needs an interior ring (CW) fails loudly: `addRing`
+  // would otherwise keep a donut pair as two separate components.
+  private def holeFree(rings: Seq[Array[Double]]): Seq[Array[Double]] =
+    if (rings.exists(signedArea(_) < 0))
+      degenerate("result needs a hole (nested boundary component)")
+    else rings
+
+  private[graft] def union(a: Array[Double], b: Array[Double]): Seq[Array[Double]] =
+    holeFree(holedUnion(a, b))
+  private[graft] def intersection(a: Array[Double], b: Array[Double]): Seq[Array[Double]] =
+    holeFree(intersectionPoly(Seq(a), Seq(b)))
+  private[graft] def difference(a: Array[Double], b: Array[Double]): Seq[Array[Double]] =
+    holeFree(holedDifference(a, b))
+  private[graft] def symDifference(a: Array[Double], b: Array[Double]): Seq[Array[Double]] =
+    (difference(a, b) ++ difference(b, a)).sortBy(r => (r(0), r(1)))
 
   /** Incremental union fold: merge one ring into an accumulator of
     * pairwise-DISJOINT components (fuse with every overlapping
@@ -958,7 +590,7 @@ object GeomBoolean {
     * honest distributed aggregation. */
   private[graft] def addRing(acc: ArrayBuffer[Array[Double]],
       r0: Array[Double]): Unit = {
-    var pending = canonical(ccw(r0))
+    var pending = canonical(GeomAlgebra.toCcw(r0))
     var merged = true
     while (merged) {
       merged = false
@@ -998,8 +630,9 @@ object GeomBoolean {
     * (touches/edge-sharing) is degenerate here, like the clipper. Row
     * order II,IB,IE,BI,BB,BE,EI,EB,EE. */
   private[graft] def de9im(a0: Array[Double], b0: Array[Double]): String = {
-    val a = canonical(ccw(a0))
-    val b = canonical(ccw(b0))
+    requireRing(a0); requireRing(b0)
+    val a = canonical(GeomAlgebra.toCcw(a0))
+    val b = canonical(GeomAlgebra.toCcw(b0))
     if (java.util.Arrays.equals(a, b)) return "2FFF1FFF2"
     if (hasProperCrossing(a, b)) return "212101212"
     var i = 0
@@ -1038,26 +671,13 @@ object GeomBoolean {
     new GenericArrayData(canon.map(GeomAlgebra.toRing).toArray[Any])
   }
 
-  // ---- Column API ----
-  def stUnion(a: Column, b: Column): Column =
-    ColumnBridge.toCol(PolyBool(ColumnBridge.toExpr(a),
-      ColumnBridge.toExpr(b), "union"))
-  def stDifference(a: Column, b: Column): Column =
-    ColumnBridge.toCol(PolyBool(ColumnBridge.toExpr(a),
-      ColumnBridge.toExpr(b), "difference"))
-  def stSymDifference(a: Column, b: Column): Column =
-    ColumnBridge.toCol(PolyBool(ColumnBridge.toExpr(a),
-      ColumnBridge.toExpr(b), "symdifference"))
-  def geometryUnion(rings: Column): Column =
-    ColumnBridge.toCol(GeometryUnionAll(ColumnBridge.toExpr(rings)))
-
   private[functions] val MultiType =
     ArrayType(GeomAlgebra.RingType, containsNull = false)
 
   private[functions] def flatOf(v: Any, xi: Int): Array[Double] =
     LineOps.coords(v, xi)
 
-  /** r10: the boolean expressions accept a RING (array<point>) or a
+  /** The boolean expressions accept a RING (array<point>) or a
     * POLYGON WITH HOLES (array<ring>, the structural [exterior,
     * holes...] form their own results use) — so results compose back
     * as inputs. */
@@ -1086,20 +706,17 @@ object GeomBoolean {
     toMulti(rings)
 }
 
-/** ST_Union / ST_Difference / ST_SymDifference over rings → multipolygon
-  * (array<ring>). See [[GeomBoolean]] for the contract. */
-case class PolyBool(left: Expression, right: Expression, op: String)
-    extends BinaryExpression with CodegenFallback with RingInput {
+/** Every polygon boolean op's SQL spelling → polygon (with holes)
+  * result, keyed by its SQL name (the `prettyName`). Inputs are rings
+  * or polygons with holes; the `st_*` and `st_polygon_*` spellings of
+  * one op compute the same structural result (interior rings CW). See
+  * [[GeomBoolean]] for the contract. */
+case class PolyBool(left: Expression, right: Expression, name: String)
+    extends BinaryExpression with CodegenFallback {
 
-  require(Seq("union", "difference", "symdifference", "intersection")
-    .contains(op), s"unknown polygon op $op")
+  require(PolyBool.ops.contains(name), s"unknown polygon op $name")
 
-  override def prettyName: String = op match {
-    case "union" => "st_union"
-    case "difference" => "st_difference"
-    case "symdifference" => "st_symdifference"
-    case "intersection" => "st_polygon_intersection"
-  }
+  override def prettyName: String = name
   override def dataType: DataType = GeomBoolean.MultiType
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -1109,49 +726,10 @@ case class PolyBool(left: Expression, right: Expression, op: String)
       case f => f
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val fa = GeomBoolean.polyOf(a, left.dataType)
-    val fb = GeomBoolean.polyOf(b, right.dataType)
-    // r8c: union/difference/symdifference route through the holed
-    // implementations — hole-needing configurations (donut union,
-    // clip-inside-subject) COMPUTE (interior rings CW, the structural
-    // convention st_polygon_area/centroid/contains read) instead of
-    // throwing, matching the reference's Esri delegation
-    // (GeoFunctions.java:581,921,1007). r10: holed INPUTS route through
-    // the Foster–Hormann multi-ring clipper; single-ring inputs keep
-    // the r8c paths byte-identically (intersection of two simple rings
-    // is hole-free by construction and keeps the direct GH path).
-    GeomBoolean.multiOf(op match {
-      case "union" => GeomBoolean.holedUnionPoly(fa, fb)
-      case "difference" => GeomBoolean.holedDifferencePoly(fa, fb)
-      case "symdifference" => GeomBoolean.holedSymDifferencePoly(fa, fb)
-      case "intersection" => GeomBoolean.intersectionPoly(fa, fb)
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** st_polygon_difference(subject, clip) → polygon with holes
-  * ([exterior, holes...]). See [[GeomBoolean.holedDifference]]. */
-case class PolyHoledDifference(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with RingInput {
-
-  override def prettyName: String = "st_polygon_difference"
-  override def dataType: DataType = GeomBoolean.MultiType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    GeomBoolean.checkRingOrPoly(prettyName, left.dataType) match {
-      case TypeCheckResult.TypeCheckSuccess =>
-        GeomBoolean.checkRingOrPoly(prettyName, right.dataType)
-      case f => f
-    }
+  @transient private lazy val op = PolyBool.ops(name)
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    GeomBoolean.multiOf(GeomBoolean.holedDifferencePoly(
-      GeomBoolean.polyOf(a, left.dataType),
+    GeomBoolean.multiOf(op(GeomBoolean.polyOf(a, left.dataType),
       GeomBoolean.polyOf(b, right.dataType)))
 
   override protected def withNewChildrenInternal(
@@ -1159,54 +737,19 @@ case class PolyHoledDifference(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** st_polygon_union(a, b) → polygon with holes ([exterior, holes...]).
-  * See [[GeomBoolean.holedUnion]]. */
-case class PolyHoledUnion(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with RingInput {
+object PolyBool {
+  private type Poly = Seq[Array[Double]]
 
-  override def prettyName: String = "st_polygon_union"
-  override def dataType: DataType = GeomBoolean.MultiType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    GeomBoolean.checkRingOrPoly(prettyName, left.dataType) match {
-      case TypeCheckResult.TypeCheckSuccess =>
-        GeomBoolean.checkRingOrPoly(prettyName, right.dataType)
-      case f => f
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeomBoolean.multiOf(GeomBoolean.holedUnionPoly(
-      GeomBoolean.polyOf(a, left.dataType),
-      GeomBoolean.polyOf(b, right.dataType)))
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** st_polygon_symdifference(a, b) → holed multipolygon ((A−B) then
-  * (B−A) components). See [[GeomBoolean.holedSymDifference]]. */
-case class PolyHoledSymDifference(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with RingInput {
-
-  override def prettyName: String = "st_polygon_symdifference"
-  override def dataType: DataType = GeomBoolean.MultiType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    GeomBoolean.checkRingOrPoly(prettyName, left.dataType) match {
-      case TypeCheckResult.TypeCheckSuccess =>
-        GeomBoolean.checkRingOrPoly(prettyName, right.dataType)
-      case f => f
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeomBoolean.multiOf(GeomBoolean.holedSymDifferencePoly(
-      GeomBoolean.polyOf(a, left.dataType),
-      GeomBoolean.polyOf(b, right.dataType)))
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+  /** SQL name → polygon-level op, in registration order. */
+  private[functions] val ops: ListMap[String, (Poly, Poly) => Poly] =
+    ListMap(
+      "st_union" -> GeomBoolean.holedUnionPoly,
+      "st_difference" -> GeomBoolean.holedDifferencePoly,
+      "st_symdifference" -> GeomBoolean.holedSymDifferencePoly,
+      "st_polygon_intersection" -> GeomBoolean.intersectionPoly,
+      "st_polygon_difference" -> GeomBoolean.holedDifferencePoly,
+      "st_polygon_union" -> GeomBoolean.holedUnionPoly,
+      "st_polygon_symdifference" -> GeomBoolean.holedSymDifferencePoly)
 }
 
 /** geometry_union_agg(ring) (GeoFunctions.java geometry_union_agg):

@@ -29,45 +29,21 @@ case class SegmentsIntersect(left: Expression, right: Expression)
   override def prettyName: String = "st_intersects"
   override def dataType: DataType = BooleanType
 
-  private def isPointArray(dt: DataType): Boolean = dt match {
-    case ArrayType(st: StructType, _) =>
-      st.fields.length == 2 &&
-        st.fields.forall(_.dataType == DoubleType) &&
-        st.fieldNames.toSet == Set("x", "y")
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (isPointArray(left.dataType) && isPointArray(right.dataType))
+    if (LineOps.isPointArray(left.dataType) &&
+      LineOps.isPointArray(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects two array<struct<x:double,y:double>> " +
         s"linestrings, got (${left.dataType.catalogString}, " +
         s"${right.dataType.catalogString})")
 
-  private def xIdx(e: Expression): Int =
-    e.dataType.asInstanceOf[ArrayType].elementType
-      .asInstanceOf[StructType].fieldIndex("x")
-
-  @transient private lazy val (lx, rx) = (xIdx(left), xIdx(right))
-
-  private def pts(v: Any, xi: Int): Array[Double] = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = new Array[Double](2 * n)
-    var i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, 2)
-      out(2 * i) = row.getDouble(xi)
-      out(2 * i + 1) = row.getDouble(1 - xi)
-      i += 1
-    }
-    out
-  }
+  @transient private lazy val (lx, rx) =
+    (LineOps.xIdx(left.dataType), LineOps.xIdx(right.dataType))
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val pa = pts(a, lx)
-    val pb = pts(b, rx)
+    val pa = LineOps.coords(a, lx)
+    val pb = LineOps.coords(b, rx)
     if (pa.isEmpty || pb.isEmpty) return false
     val na = math.max(1, pa.length / 2 - 1)
     val nb = math.max(1, pb.length / 2 - 1)

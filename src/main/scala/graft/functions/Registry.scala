@@ -782,19 +782,13 @@ object Registry {
         // exchange for correct ROLLUP/CUBE grand-total rows over empty
         // input. Plans stay correct either way; only the empty-input
         // shortcut is lost, and only on sessions built without
-        // GraftExtensions. An embedding application that never runs
-        // grouping analytics over possibly-empty input can opt back in
-        // with spark.graft.emptyGroupingSets.protect=false (set BEFORE
-        // Registry.install).
+        // GraftExtensions.
         val driverSession = !spark.sessionState.analyzer
           .postHocResolutionRules
           .contains(graft.plans.EmptyGroupingSetsGrandTotal)
-        val protectEmptyGroupingSets = spark.conf
-          .getOption("spark.graft.emptyGroupingSets.protect")
-          .forall(_.toBoolean)
         val rules = Seq(
           "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
-        ) ++ (if (driverSession && protectEmptyGroupingSets) Seq(
+        ) ++ (if (driverSession) Seq(
           "org.apache.spark.sql.catalyst.optimizer.PropagateEmptyRelation"
         ) else Nil)
         val cur = spark.conf.getOption(key).getOrElse("")
@@ -1703,24 +1697,11 @@ object Registry {
           two("st_intersection")(ConvexClip)
           Seq("crosses", "touches", "overlaps").foreach(m =>
             two(s"st_$m")(SegmentRelation(_, _, m)))
-          // polygon boolean algebra (Greiner–Hormann; GeomBoolean.scala)
-          // → multipolygon array<ring>; degenerate configs fail loudly
-          two("st_union")(PolyBool(_, _, "union"))
-          two("st_difference")(PolyBool(_, _, "difference"))
-          two("st_symdifference")(PolyBool(_, _, "symdifference"))
-          // multipolygon intersection (st_intersection keeps the convex
-          // Sutherland-Hodgman single-ring contract used by qm4)
-          two("st_polygon_intersection")(PolyBool(_, _, "intersection"))
-          // difference whose result carries interior rings → the holed
-          // structural type (GeoFunctions.java:921 configuration)
-          two("st_polygon_difference")(PolyHoledDifference(_, _))
-          // union/symdifference whose results carry interior rings —
-          // the donut union (cap bridging a U's arms) and the
-          // clip-inside-subject symdifference (GeoFunctions.java:581,
-          // 1007 configurations); r8c closes the last hole-needing
-          // boolean configurations
-          two("st_polygon_union")(PolyHoledUnion(_, _))
-          two("st_polygon_symdifference")(PolyHoledSymDifference(_, _))
+          // polygon boolean algebra (one multi-ring Greiner–Hormann core,
+          // GeomBoolean.scala) → structural array<ring>, interior rings
+          // CW; st_intersection keeps the convex Sutherland-Hodgman
+          // single-ring contract used by qm4
+          PolyBool.ops.keys.foreach(n => two(n)(PolyBool(_, _, n)))
           one("geometry_union")(GeometryUnionAll)
           one("geometry_union_agg")(a =>
             GeometryUnionAgg(a).toAggregateExpression())

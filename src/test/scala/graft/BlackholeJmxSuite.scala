@@ -71,19 +71,20 @@ class BlackholeJmxSuite extends GraftSuite {
     implicit val sqlCtx = spark.sqlContext
     graft.sources.BlackholeConn.reset("bh_stream")
     val in = MemoryStream[Long]
-    val q = in.toDF().writeStream.format("graft-blackhole")
-      .option("name", "bh_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("bh_ckpt").toString)
-      .start()
-    try {
-      in.addData(1L to 500L: _*)
-      q.processAllAvailable()
-      assert(graft.sources.BlackholeConn.rowsWritten("bh_stream") == 500L)
-      in.addData(501L to 700L: _*)
-      q.processAllAvailable()
-      assert(graft.sources.BlackholeConn.rowsWritten("bh_stream") == 700L)
-    } finally q.stop()
+    withTempDir("bh_ckpt") { ckpt =>
+      val q = in.toDF().writeStream.format("graft-blackhole")
+        .option("name", "bh_stream")
+        .option("checkpointLocation", ckpt.toString)
+        .start()
+      try {
+        in.addData(1L to 500L: _*)
+        q.processAllAvailable()
+        assert(graft.sources.BlackholeConn.rowsWritten("bh_stream") == 500L)
+        in.addData(501L to 700L: _*)
+        q.processAllAvailable()
+        assert(graft.sources.BlackholeConn.rowsWritten("bh_stream") == 700L)
+      } finally q.stop()
+    }
   }
 
   test("blackhole rejects unsupported read types loudly") {

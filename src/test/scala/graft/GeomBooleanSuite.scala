@@ -354,6 +354,20 @@ class GeomBooleanSuite extends GraftSuite {
     assert(row.getDouble(0) == 750.0 && row.getInt(1) == 2)
   }
 
+  test("ring-typed union rejects the donut; unionAll does not split it") {
+    // the donut pair of "st_polygon_union: donut configuration": its
+    // union needs an interior ring, which the ring-typed contract cannot
+    // carry — it must throw, not come back as two rings that the union
+    // fold would keep as two components
+    val u = Array(0.0, 0, 30, 0, 30, 30, 20, 30, 20, 10, 10, 10, 10, 30, 0, 30)
+    val cap = Array(5.0, 20, 25, 20, 25, 25, 5, 25)
+    val e = intercept[IllegalArgumentException](GeomBoolean.union(u, cap))
+    assert(e.getMessage.contains("hole"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      GeomBoolean.unionAll(Seq(u, cap)))
+    assert(e2.getMessage.contains("hole"), e2.getMessage)
+  }
+
   test("st_polygon_symdifference: contained clip and crossing squares") {
     Registry.install(spark)
     // B strictly inside A: A △ B = A with hole B — [A, reversed B]

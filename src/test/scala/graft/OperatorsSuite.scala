@@ -427,22 +427,22 @@ class OperatorsSuite extends GraftSuite {
 
   test("compaction fileInfos reads row counts from parquet footers") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fileinfos").toString
-    (1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(3).write.mode("overwrite").parquet(dir)
-    val infos = graft.operators.Compaction.fileInfos(spark, dir)
-    assert(infos.size == 3)
-    assert(infos.map(_.rows).sum == 10L)
-    assert(infos.forall(f => f.rows > 0 && f.bytes > 0))
-    assert(infos.forall(_.path.endsWith(".parquet")))
+    withTempDir("graft_fileinfos") { tmp =>
+      val dir = tmp.toString
+      (1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+        .repartition(3).write.mode("overwrite").parquet(dir)
+      val infos = graft.operators.Compaction.fileInfos(spark, dir)
+      assert(infos.size == 3)
+      assert(infos.map(_.rows).sum == 10L)
+      assert(infos.forall(f => f.rows > 0 && f.bytes > 0))
+      assert(infos.forall(_.path.endsWith(".parquet")))
+    }
   }
 
   test("IncrementalDedup: index suppression, within-delta first-wins, idempotent replay") {
     import graft.operators.IncrementalDedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc_test")
-    val idx = dir.resolve("idx").toString
-    try {
+    withTempDir("graft_inc_test") { dir =>
+      val idx = dir.resolve("idx").toString
       // run 1 on a MISSING index path (first run): dup text within the
       // delta -> first id wins
       val d1 = Seq((1L, "alpha"), (2L, "alpha"), (3L, "beta"))
@@ -462,11 +462,6 @@ class OperatorsSuite extends GraftSuite {
       assert(a3.count() == 0L)
       // the index accumulated exactly the admitted fingerprints
       assert(spark.read.parquet(idx).count() == 4L)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
     }
   }
 
@@ -479,9 +474,8 @@ class OperatorsSuite extends GraftSuite {
     // over all docs. A full replay then admits nothing.
     import graft.operators.IncrementalDedup
     import graft.streaming.StreamingNearDup
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndinc")
-    val idx = dir.resolve("claims").toString
-    try {
+    withTempDir("graft_ndinc") { dir =>
+      val idx = dir.resolve("claims").toString
       val docs = Tables.view(spark, SfDir, "documents")
         .filter(col("doc_id") < 40)
       val batchKept = StreamingNearDup
@@ -500,11 +494,6 @@ class OperatorsSuite extends GraftSuite {
       val k3 = IncrementalDedup.ingestNearDup(spark, idx,
         docs, "doc_id", "text").filter(col("kept")).count()
       assert(k3 == 0L)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
     }
   }
 }

@@ -9,20 +9,25 @@ import scala.jdk.CollectionConverters._
   * bytes are told apart only in SketchFamily, an oracle gets its
   * derived-view CTE only through QueryPack.withCte, the DataSource V2
   * read plumbing (providers, reader factories, readers) lives only in
-  * sources/Connector.scala, and queries/ makes its scratch files only
-  * under Scratch. */
+  * sources/Connector.scala, queries/ makes its scratch files only
+  * under Scratch, and one Greiner–Hormann clipper answers every polygon
+  * boolean op. */
 class SourceGuardSuite extends GraftSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
 
-  private def sourcesWhere(matches: String => Boolean): Seq[String] = {
+  /** (path relative to src/main/scala, text) of every source file. */
+  private def sources: Seq[(String, String)] = {
     val walk = Files.walk(main)
     try walk.iterator.asScala.toSeq
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => matches(new String(Files.readAllBytes(p), "UTF-8")))
-      .map(p => main.relativize(p).toString)
+      .map(p => (main.relativize(p).toString,
+        new String(Files.readAllBytes(p), "UTF-8")))
     finally walk.close()
   }
+
+  private def sourcesWhere(matches: String => Boolean): Seq[String] =
+    sources.collect { case (p, src) if matches(src) => p }
 
   private def only(token: String, owner: Path,
       matches: String => Boolean): Unit = {
@@ -77,5 +82,11 @@ class SourceGuardSuite extends GraftSuite {
     val found = sourcesWhere(_.contains("java.io.tmpdir"))
       .filter(_.startsWith("graft/queries/"))
     assert(found.isEmpty, s"java.io.tmpdir in $found")
+  }
+
+  test("the Greiner-Hormann traversal helper is defined once") {
+    val defs = sources.map { case (_, src) =>
+      "def insertAfter\\(".r.findAllMatchIn(src).size }.sum
+    assert(defs == 1, s"$defs definitions of insertAfter")
   }
 }

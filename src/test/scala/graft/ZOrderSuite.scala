@@ -53,40 +53,41 @@ class ZOrderSuite extends GraftSuite {
     val data = (0 until n).map { i =>
       ((i.toLong * 37L) % 65536L, (i.toLong * 101L) % 65536L)
     }.toDF("x", "y")
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder")
-      .toString
-    val zDir = s"$base/z"
-    val xDir = s"$base/x"
-    ZOrder.write(data, Seq("x" -> (0L, 65535L), "y" -> (0L, 65535L)),
-      nFiles = 16, zDir)
-    // the single-column baseline: same cost (one range exchange + sort)
-    data.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(xDir)
+    withTempDir("graft_zorder") { tmp =>
+      val base = tmp.toString
+      val zDir = s"$base/z"
+      val xDir = s"$base/x"
+      ZOrder.write(data, Seq("x" -> (0L, 65535L), "y" -> (0L, 65535L)),
+        nFiles = 16, zDir)
+      // the single-column baseline: same cost (one range exchange + sort)
+      data.repartitionByRange(16, col("x")).sortWithinPartitions("x")
+        .write.mode("overwrite").parquet(xDir)
 
-    val zx = ZOrder.fileRanges(spark, zDir, "x")
-    val zy = ZOrder.fileRanges(spark, zDir, "y")
-    val lx = ZOrder.fileRanges(spark, xDir, "x")
-    val ly = ZOrder.fileRanges(spark, xDir, "y")
-    assert(zx.size == 16 && lx.size == 16)
+      val zx = ZOrder.fileRanges(spark, zDir, "x")
+      val zy = ZOrder.fileRanges(spark, zDir, "y")
+      val lx = ZOrder.fileRanges(spark, xDir, "x")
+      val ly = ZOrder.fileRanges(spark, xDir, "y")
+      assert(zx.size == 16 && lx.size == 16)
 
-    val (lo, hi) = (0L, 8191L) // a 1/8 slice of the domain
-    // the x-sorted layout prunes x perfectly and y not at all
-    assert(ZOrder.filesOverlapping(lx, lo, hi) <= 3)
-    assert(ZOrder.filesOverlapping(ly, lo, hi) == 16)
-    // the z layout prunes BOTH dimensions: each file is a compact
-    // z-range = a small tile in (x, y) space
-    val zxHit = ZOrder.filesOverlapping(zx, lo, hi)
-    val zyHit = ZOrder.filesOverlapping(zy, lo, hi)
-    assert(zxHit <= 8, s"x overlap $zxHit of 16")
-    assert(zyHit <= 8, s"y overlap $zyHit of 16")
+      val (lo, hi) = (0L, 8191L) // a 1/8 slice of the domain
+      // the x-sorted layout prunes x perfectly and y not at all
+      assert(ZOrder.filesOverlapping(lx, lo, hi) <= 3)
+      assert(ZOrder.filesOverlapping(ly, lo, hi) == 16)
+      // the z layout prunes BOTH dimensions: each file is a compact
+      // z-range = a small tile in (x, y) space
+      val zxHit = ZOrder.filesOverlapping(zx, lo, hi)
+      val zyHit = ZOrder.filesOverlapping(zy, lo, hi)
+      assert(zxHit <= 8, s"x overlap $zxHit of 16")
+      assert(zyHit <= 8, s"y overlap $zyHit of 16")
 
-    // and the layout loses nothing: both reads return identical rows
-    val zRead = spark.read.parquet(zDir)
-      .filter(col("y") <= hi).agg(count(lit(1)), sum(col("x")))
-      .head()
-    val xRead = spark.read.parquet(xDir)
-      .filter(col("y") <= hi).agg(count(lit(1)), sum(col("x")))
-      .head()
-    assert(zRead == xRead)
+      // and the layout loses nothing: both reads return identical rows
+      val zRead = spark.read.parquet(zDir)
+        .filter(col("y") <= hi).agg(count(lit(1)), sum(col("x")))
+        .head()
+      val xRead = spark.read.parquet(xDir)
+        .filter(col("y") <= hi).agg(count(lit(1)), sum(col("x")))
+        .head()
+      assert(zRead == xRead)
+    }
   }
 }
