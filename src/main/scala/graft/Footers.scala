@@ -6,13 +6,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The one parquet-footer reader: per-file row counts and long-column
-  * value ranges straight from footer metadata — one O(KB) read per
-  * file, no data pages, no Spark job. This is graft's analog of the
-  * reference's shard metadata layer (Raptor keeps `row_count` and
-  * `ShardRange` per shard, and compaction, organization and pruning
-  * all read them from there).
+/** The one parquet-footer reader: per-file row counts, long-column
+  * value ranges and the Spark schema straight from footer metadata —
+  * one O(KB) read per file, no data pages, no Spark job. This is
+  * graft's analog of the reference's shard metadata layer (Raptor keeps
+  * `row_count` and `ShardRange` per shard, and compaction, organization
+  * and pruning all read them from there).
   *
   * Policy stays with the caller: a failed read comes back as a
   * `Failure`, and the caller decides whether that means a `count()`
@@ -67,6 +69,40 @@ object Footers {
       } finally reader.close()
     }
   }
+
+  /** The Spark schema of the parquet data at `path` (a file, or a flat
+    * directory whose first data file by name stands for all of it), as
+    * `spark.read.parquet` infers it without schema merging, but with no
+    * Spark job. The footer's Spark row-metadata JSON wins when present;
+    * otherwise the parquet schema is converted under the session's conf
+    * (so `nanosAsLong` and friends must be set before the call). This is
+    * `ParquetFileFormat.readSchemaFromFooter`, which is private to Spark.
+    * Names starting with `_` or `.` are skipped, as Spark's listing
+    * skips them. */
+  def schema(spark: SparkSession, path: String): Try[StructType] = Try {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val root = fs.getFileStatus(p)
+    val first =
+      if (!root.isDirectory) root
+      else fs.listStatus(p).filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.minByOption(_.getPath.getName).getOrElse(
+        throw new java.io.FileNotFoundException(s"no data file under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get(sparkRowMetadata))
+      .flatMap(json => Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(meta.getSchema))
+  }
+
+  /** The footer key Spark writes its row schema under
+    * (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val sparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Total footer row count under `paths`; None when the read fails or
     * finds no parquet file, so the caller can fall back to a count(). */

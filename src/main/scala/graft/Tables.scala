@@ -7,11 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Mirrors the reference's catalog layer (PrestoDB's connector catalog,
   * `presto-spi/.../ConnectorTableMetadata.java`) in the idiomatic-Spark way:
   * parquet-backed temp views in the session catalog, letting Catalyst drive
-  * pushdown/pruning into the scan.
+  * pushdown/pruning into the scan. Each view's schema comes from its
+  * parquet footer, so registration runs no Spark job.
   *
   * Scale notes: at 100 TB these would be partitioned/bucketed external tables
   * (e.g. `orders` bucketed by `o_orderkey`, date-partitioned on
-  * `o_orderdate`), but the read path below — `spark.read.parquet` + catalyst
+  * `o_orderdate`), but the read path below — a parquet read + catalyst
   * filter/column pushdown — is identical.
   */
 object Tables {
@@ -21,7 +22,15 @@ object Tables {
 
   /** One raw DataFrame for a fixture table. */
   def df(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema taken from the footer
+    * ([[Footers.schema]]), so no schema-inference job runs. Falls back
+    * to Spark's own inference when the footer read fails. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    Footers.schema(spark, path).fold(
+      _ => spark.read.parquet(path),
+      st => spark.read.schema(st).parquet(path))
 
   /** Normalizes events.ts to a session TimestampType (µs) column
     * whatever the fixture's physical type: int64 nanos (a ns-typed
@@ -62,7 +71,8 @@ object Tables {
       // generations: TIMESTAMP(NANOS) (readable only as int64 via the
       // legacy nanosAsLong conf) vs plain TIMESTAMP(MICROS) (read as
       // TIMESTAMP_NTZ). Normalize both to a session TimestampType column
-      // so every downstream query sees one stable schema.
+      // so every downstream query sees one stable schema. Set before the
+      // footer reads: the conf decides how Footers.schema converts ns.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       names.foreach { n =>
         val raw = df(spark, sfDir, n)

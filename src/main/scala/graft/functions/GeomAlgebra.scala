@@ -195,9 +195,6 @@ object GeomAlgebra {
   def convexHullAgg(point: Column): Column =
     ColumnBridge.toCol(ConvexHullAgg(ColumnBridge.toExpr(point))
       .toAggregateExpression())
-  def relate(a: Column, b: Column, mode: String): Column =
-    ColumnBridge.toCol(SegmentRelation(ColumnBridge.toExpr(a),
-      ColumnBridge.toExpr(b), mode))
 }
 
 private[functions] trait RingInput {

@@ -102,7 +102,7 @@ object Registry {
       s"(${cross("i")}))"
 
   /** Presto name → (arity, SQL template over __a/__b/__c). */
-  private val templates: Seq[(String, Int, String)] = Seq(
+  private[graft] val templates: Seq[(String, Int, String)] = Seq(
     // --- string (StringFunctions.java) ---
     ("strpos", 2, "instr(__a, __b)"),
     ("codepoint", 1, "ascii(__a)"),
@@ -800,10 +800,13 @@ object Registry {
       val registry = spark.sessionState.functionRegistry
       // Same-name templates with different arities are overloads (Presto
       // overloads e.g. bing_tile(x, y, zoom) / bing_tile(quadkey)); the
-      // one registered builder dispatches on argument count.
+      // one registered builder dispatches on argument count. A name's
+      // templates are parsed on its first call, so a session pays only
+      // for the functions its queries use (RegistrySuite parses all).
+      val parser = spark.sessionState.sqlParser
       templates.groupBy(_._1).foreach { case (name, overloads) =>
-        val byArity = overloads.map { case (_, arity, sql) =>
-          arity -> spark.sessionState.sqlParser.parseExpression(sql)
+        lazy val byArity = overloads.map { case (_, arity, sql) =>
+          arity -> parser.parseExpression(sql)
         }.toMap
         val builder: Seq[Expression] => Expression = { args =>
           val template = byArity.getOrElse(args.length, sys.error(

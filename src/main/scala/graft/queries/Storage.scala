@@ -1343,7 +1343,7 @@ object Storage extends QueryPack {
       val pred = col("l_discount") > 0.05 && col("l_quantity") < 30
       t.filter(coalesce(pred, lit(false)) === false)
         .write.mode("overwrite").parquet(v2)
-      s.read.parquet(v2)
+      Tables.parquet(s, v2)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_remaining"),
           round(sum(col("l_extendedprice")), 4).as("rev_remaining"))
@@ -1373,7 +1373,7 @@ object Storage extends QueryPack {
           when(hit, col("l_extendedprice") * 0.9)
             .otherwise(col("l_extendedprice")))
         .write.mode("overwrite").parquet(v2)
-      s.read.parquet(v2)
+      Tables.parquet(s, v2)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("l_extendedprice")), 4).as("rev"),

@@ -105,8 +105,8 @@ class QueriesSmokeSuite extends GraftSuite {
   }
 
   test("TPC-DS channel facts scan materialized parquet, not the derivation join") {
-    // registerTpcds materializes the channel facts once per (JVM, dir)
-    // — queries must plan a columnar FileScan over the materialized
+    // a query materializes the channel facts it names once per
+    // (session, dir) — queries must plan a columnar FileScan over the materialized
     // files (pushdown applies there), not re-pay the lineitem⋈orders
     // derivation per reference. inventory stays generated by design.
     import org.apache.spark.sql.execution.SparkPlan

@@ -15,6 +15,18 @@ class RegistrySuite extends GraftSuite {
   private def one[T: org.apache.spark.sql.Encoder](sql: String): T =
     spark.sql(Registry.rewritePrestoSql(s"SELECT $sql AS v")).as[T].head()
 
+  test("every SQL template parses") {
+    // install defers parsing to a function's first call; a malformed
+    // template must still fail here, not in a user's query
+    val parser = spark.sessionState.sqlParser
+    assert(Registry.templates.size > 100)
+    val broken = Registry.templates.flatMap { case (name, arity, sql) =>
+      scala.util.Try(parser.parseExpression(sql)).failed.toOption
+        .map(e => s"$name/$arity: ${e.getClass.getSimpleName}")
+    }
+    assert(broken.isEmpty, broken.mkString("; "))
+  }
+
   test("date_add preserves DATE for date inputs, TIMESTAMP for timestamps") {
     val d = spark.sql(Registry.rewritePrestoSql(
       "SELECT date_add('month', 1, date '2020-01-31') AS v"))
