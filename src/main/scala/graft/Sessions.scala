@@ -23,6 +23,21 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** `spark.broadcast.blockSize`. Spark serializes every broadcast (task
+    * binaries, the Hadoop conf of each scan, broadcast join sides) into
+    * chunks of this size, and allocates each chunk whole, so even a
+    * one-int broadcast allocates one full chunk.
+    *
+    * G1 allocates any object of half a heap region or more as a
+    * humongous object, straight into contiguous old-generation regions,
+    * and a humongous allocation can start a GC cycle on its own ("G1
+    * Humongous Allocation"). A region is the heap divided into about
+    * 2048, rounded down to a power of two and never below 1 MB, so at
+    * `-Xmx4g` it is 2 MB and Spark's 4 MB default chunk is humongous.
+    * 256 KB stays below half of the smallest region, 512 KB, at every
+    * heap size. A broadcast larger than this splits into more blocks. */
+  val BroadcastBlockSize = "256k"
+
   def local(cores: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -45,6 +60,7 @@ object Sessions {
       // engages beyond it.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "4096")
+      .config("spark.broadcast.blockSize", BroadcastBlockSize)
       // analysis-time zoned-instant rewrite (literal-literal
       // comparisons must rewrite BEFORE constant folding; the
       // optimizer-rule installation covers driver-built sessions)

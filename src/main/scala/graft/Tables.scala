@@ -24,13 +24,25 @@ object Tables {
   def df(spark: SparkSession, sfDir: String, name: String): DataFrame =
     parquet(spark, s"$sfDir/$name.parquet")
 
-  /** `spark.read.parquet(path)` with the schema taken from the footer
-    * ([[Footers.schema]]), so no schema-inference job runs. Falls back
-    * to Spark's own inference when the footer read fails. */
+  /** `spark.read.parquet(path)` through [[LeanParquetFileFormat]], with
+    * the schema taken from the footer ([[Footers.schema]]), so no
+    * schema-inference job runs. Falls back to [[readParquet]], Spark's
+    * own inference and partition discovery, when the footer read fails
+    * (a partitioned directory holds no data file at its top level). */
   def parquet(spark: SparkSession, path: String): DataFrame =
     Footers.schema(spark, path).fold(
-      _ => spark.read.parquet(path),
-      st => spark.read.schema(st).parquet(path))
+      _ => readParquet(spark, path),
+      st => leanReader(spark).schema(st).load(path))
+
+  /** `spark.read.parquet(paths: _*)` through [[LeanParquetFileFormat]]:
+    * the same schema inference, partition discovery and plans, with a
+    * cheaper Hadoop-conf broadcast per scan. The one parquet read path
+    * for graft's own code. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    leanReader(spark).load(paths: _*)
+
+  private def leanReader(spark: SparkSession) =
+    spark.read.format(classOf[LeanParquetFileFormat].getName)
 
   /** Normalizes events.ts to a session TimestampType (µs) column
     * whatever the fixture's physical type: int64 nanos (a ns-typed

@@ -45,12 +45,6 @@ object PrestoAggregates {
   def checksum(c: Column): Column =
     bit_xor(TextExpressions.md5Prefix60(c.cast("string")))
 
-  /** Presto count_if / bool_and / bool_or (Spark has these since 3.5;
-    * aliased here under the Presto names for registry completeness). */
-  def countIf(c: Column): Column = count_if(c)
-  def boolAnd(c: Column): Column = bool_and(c)
-  def boolOr(c: Column): Column = bool_or(c)
-
   /** Presto `arbitrary(x)` ≈ any non-null value of the group. Spark's
     * `first(ignoreNulls = true)` has the same contract (nondeterministic
     * under distribution — oracle checks must feed it group-constant input).

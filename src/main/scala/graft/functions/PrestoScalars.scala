@@ -34,10 +34,6 @@ object PrestoScalars {
   def cosineSimilarity(a: Column, b: Column): Column =
     VectorExpressions.cosine(a, b)
 
-  /** L2 (Euclidean) distance of two double arrays — codegen'd. */
-  def l2Distance(a: Column, b: Column): Column =
-    VectorExpressions.l2(a, b)
-
   /** Presto to_base(x, radix): number → string in radix. */
   def toBase(x: Column, radix: Int): Column = conv(x.cast("string"), 10, radix)
 

@@ -132,9 +132,6 @@ object SetDigest {
   def jaccardIndex(a: Column, b: Column): Column =
     ColumnBridge.toCol(
       JaccardIndexExpr(ColumnBridge.toExpr(a), ColumnBridge.toExpr(b)))
-  def intersectionCard(a: Column, b: Column): Column =
-    ColumnBridge.toCol(
-      IntersectionCardinality(ColumnBridge.toExpr(a), ColumnBridge.toExpr(b)))
 }
 
 /** make_set_digest(x[, k]): any atomic input, hashed with xxhash64 (the

@@ -278,11 +278,6 @@ object TDigest {
     ColumnBridge.toCol(TDigestAgg(ColumnBridge.toExpr(c), None, compression)
       .toAggregateExpression())
 
-  def sketchWeighted(c: Column, w: Column,
-      compression: Double = DefaultCompression): Column =
-    ColumnBridge.toCol(TDigestAgg(ColumnBridge.toExpr(c),
-      Some(ColumnBridge.toExpr(w)), compression).toAggregateExpression())
-
   /** Column API: merge_tdigest over serialized digests. */
   def merge(c: Column): Column = SketchFamily.TDigestSketch.mergeCol(c)
 

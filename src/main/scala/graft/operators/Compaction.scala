@@ -99,7 +99,7 @@ object Compaction {
     graft.Exec.overlap(maxConcurrentSets)(sets.zipWithIndex.map {
       case (paths, i) => () => {
         val tmp = new org.apache.hadoop.fs.Path(dir, s"_graft_compact_$i")
-        spark.read.parquet(paths: _*).coalesce(1)
+        graft.Tables.readParquet(spark, paths: _*).coalesce(1)
           .write.mode("overwrite").parquet(tmp.toString)
         val part = fs.listStatus(tmp).find { s =>
           s.isFile && s.getPath.getName.startsWith("part-") &&

@@ -68,7 +68,7 @@ object IncrementalDedup {
     * legs cannot silently diverge on a Spark error-text change. */
   private def readIndexOrEmpty(spark: SparkSession, indexPath: String)(
       empty: => DataFrame): DataFrame =
-    try spark.read.parquet(indexPath)
+    try graft.Tables.readParquet(spark, indexPath)
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.contains("PATH_NOT_FOUND") ||

@@ -40,18 +40,4 @@ object Salt {
     salted.join(dimRep.hint("shuffle_hash"), Seq(key, "__salt"))
       .drop("__salt")
   }
-
-  /** Two-level salted aggregation: partial aggregate on (key, salt), then
-    * final combine on key — the skew-safe shape for hot-key groupBys when
-    * the aggregate is algebraic (sum/count/min/max). */
-  def saltedSum(df: DataFrame, key: String, valueCol: String,
-                salts: Int): DataFrame = {
-    val saltCol = pmod(xxhash64(df.columns.map(col).toSeq: _*),
-      lit(salts.toLong))
-    df.withColumn("__salt", saltCol)
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as(s"sum_$valueCol"))
-  }
 }

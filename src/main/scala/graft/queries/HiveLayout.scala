@@ -188,7 +188,7 @@ object HiveLayout extends QueryPack {
       // one task per flag -> exactly one file per partition directory
       base.repartition(4, col("l_returnflag"))
         .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-      val withMeta = s.read.parquet(out).select(
+      val withMeta = Tables.readParquet(s, out).select(
         col("l_orderkey"),
         col("l_returnflag"),
         col("_metadata.file_path").as("path"),

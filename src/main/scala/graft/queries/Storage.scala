@@ -68,7 +68,7 @@ object Storage extends QueryPack {
         .agg(count(lit(1)).as("n"),
           round(sum(col("l_extendedprice")), 4).as("revenue"))
       derived.write.mode("overwrite").partitionBy("ship_year").parquet(out)
-      s.read.parquet(out)
+      Tables.readParquet(s, out)
         .select(col("l_returnflag"), col("ship_year").cast("int"),
           col("n"), col("revenue"))
         .orderBy(col("l_returnflag"), col("ship_year"))
@@ -260,11 +260,11 @@ object Storage extends QueryPack {
         .write.mode("overwrite").parquet(out)
       // row total from the 16 footers — no scan job (r18 OPT)
       val n = graft.Footers.rowCount(s, Seq(out))
-        .getOrElse(s.read.parquet(out).count())
+        .getOrElse(Tables.readParquet(s, out).count())
       val maxRows = 4 * ((n + 15) / 16)
       val first = Compaction.compact(s, out, Long.MaxValue / 4, maxRows)
       val second = Compaction.compact(s, out, Long.MaxValue / 4, maxRows)
-      s.read.parquet(out)
+      Tables.readParquet(s, out)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("l_extendedprice")), 4).as("rev"))
@@ -359,7 +359,7 @@ object Storage extends QueryPack {
       } finally s.conf.set(tsType, priorTs)
       // row total from the nine footers — no scan job (r18 OPT)
       val n = graft.Footers.rowCount(s, Seq(out))
-        .getOrElse(s.read.parquet(out).count())
+        .getOrElse(Tables.readParquet(s, out).count())
       // the operator's day assignment, file-matched to its slice by
       // footer min (windows are disjoint at their starts)
       val beforeInfos = Compaction.temporalFileInfos(s, out, "ts")
@@ -381,13 +381,13 @@ object Storage extends QueryPack {
       // no output file holds rows of two different assigned days
       val designedDay = when(pmod(col("k"), lit(9)) <= 3, 9282)
         .when(pmod(col("k"), lit(9)) <= 6, 9283).otherwise(9286)
-      val neverMixed = s.read.parquet(out)
+      val neverMixed = Tables.readParquet(s, out)
         .select(col("_metadata.file_name").as("f"),
           designedDay.as("dday"))
         .groupBy(col("f"))
         .agg(countDistinct(col("dday")).as("nd"))
         .agg(max(col("nd"))).as[Long].head() == 1L
-      val dayRows = s.read.parquet(out)
+      val dayRows = Tables.readParquet(s, out)
         .groupBy(designedDay.as("dday"))
         .agg(count(lit(1)).as("nrows"),
           sum(col("l_quantity")).cast("bigint").as("qty"))
@@ -463,7 +463,7 @@ object Storage extends QueryPack {
         smin + (smax - smin) / 8)
       val zc = ZOrder.zvalue(ZOrder.cell(col("l_partkey"), pmin, pmax),
         ZOrder.cell(col("l_suppkey"), smin, smax))
-      s.read.parquet(out)
+      Tables.readParquet(s, out)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), sum(zc).as("z_sum"),
           min(zc).as("z_min"), max(zc).as("z_max"))
@@ -511,7 +511,7 @@ object Storage extends QueryPack {
         scans(df.queryExecution.executedPlan)
           .map(_.metrics("numOutputRows").value).sum
       }
-      def probe(d: String) = s.read.parquet(d).filter(col("y") <= 8191)
+      def probe(d: String) = Tables.readParquet(s, d).filter(col("y") <= 8191)
       val zRows = scannedRows(probe(zDir))
       val xRows = scannedRows(probe(xDir))
       probe(zDir)

@@ -161,9 +161,6 @@ object AccStore {
       }.toArray
     private[sources] val indexedCols: Array[ColumnDef] =
       columns.filter(_.indexed).toArray
-
-    def familyOf(col: String): String =
-      if (col == rowIdCol) "___ROW___" else colByName(col).family
   }
 
   private[graft] val tables = new ConcurrentHashMap[String, AccTable]()

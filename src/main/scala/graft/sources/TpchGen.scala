@@ -65,13 +65,6 @@ object TpchGen extends ClosedFormGen {
     case "region" => "r_regionkey"
   }
 
-  /** key value for row index k (monotone nondecreasing in k). */
-  private def keyOf(table: String, k: Long): Long = table match {
-    case "lineitem" => k / 4 + 1
-    case "nation" | "region" => k
-    case _ => k + 1
-  }
-
   /** Row index range [lo, hi) whose keys satisfy key ∈ [kLo, kHi]. */
   override def indexRangeForKeys(table: String, kLo: Long, kHi: Long,
       n: Long): (Long, Long) = table match {

@@ -10,8 +10,8 @@ import scala.jdk.CollectionConverters._
   * derived-view CTE only through QueryPack.withCte, the DataSource V2
   * read plumbing (providers, reader factories, readers) lives only in
   * sources/Connector.scala, queries/ makes its scratch files only
-  * under Scratch, and one Greiner–Hormann clipper answers every polygon
-  * boolean op. */
+  * under Scratch, one Greiner–Hormann clipper answers every polygon
+  * boolean op, and parquet is read only through Tables' lean format. */
 class SourceGuardSuite extends GraftSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -82,6 +82,12 @@ class SourceGuardSuite extends GraftSuite {
     val found = sourcesWhere(_.contains("java.io.tmpdir"))
       .filter(_.startsWith("graft/queries/"))
     assert(found.isEmpty, s"java.io.tmpdir in $found")
+  }
+
+  test(".read.parquet( appears only in Tables") {
+    val found = sourcesWhere(_.contains(".read.parquet("))
+      .filterNot(_ == "graft/Tables.scala")
+    assert(found.isEmpty, s".read.parquet( in $found: use Tables.readParquet")
   }
 
   test("the Greiner-Hormann traversal helper is defined once") {
