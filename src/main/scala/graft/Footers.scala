@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -30,7 +30,7 @@ object Footers {
 
   /** Footers of every parquet data file under `paths`. Each path is a
     * single file (read whatever its name) or a flat directory (its
-    * `.parquet` files). Fails if any listing or footer read fails. */
+    * [[isDataFile]] files). Fails if any listing or footer read fails. */
   def read(spark: SparkSession, paths: Seq[String],
       longColumns: Seq[String] = Nil): Try[Seq[FileFooter]] = Try {
     val conf = spark.sessionState.newHadoopConf()
@@ -40,8 +40,7 @@ object Footers {
       val fs = path.getFileSystem(conf)
       val st = fs.getFileStatus(path)
       if (st.isDirectory)
-        fs.listStatus(path).toSeq.filter(s =>
-          s.isFile && s.getPath.getName.endsWith(".parquet"))
+        fs.listStatus(path).toSeq.filter(isDataFile)
       else Seq(st)
     }.map { st =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
@@ -76,9 +75,7 @@ object Footers {
     * Spark job. The footer's Spark row-metadata JSON wins when present;
     * otherwise the parquet schema is converted under the session's conf
     * (so `nanosAsLong` and friends must be set before the call). This is
-    * `ParquetFileFormat.readSchemaFromFooter`, which is private to Spark.
-    * Names starting with `_` or `.` are skipped, as Spark's listing
-    * skips them. */
+    * `ParquetFileFormat.readSchemaFromFooter`, which is private to Spark. */
   def schema(spark: SparkSession, path: String): Try[StructType] = Try {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
@@ -86,10 +83,8 @@ object Footers {
     val root = fs.getFileStatus(p)
     val first =
       if (!root.isDirectory) root
-      else fs.listStatus(p).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.minByOption(_.getPath.getName).getOrElse(
+      else fs.listStatus(p).filter(isDataFile)
+        .minByOption(_.getPath.getName).getOrElse(
         throw new java.io.FileNotFoundException(s"no data file under $path"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
     val meta = try reader.getFooter.getFileMetaData finally reader.close()
@@ -98,6 +93,15 @@ object Footers {
       .collect { case st: StructType => st }
       .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
         .convert(meta.getSchema))
+  }
+
+  /** A data file of a directory listing, by Spark's rule
+    * (`PartitioningAwareFileIndex.isDataPath`): a file whose name does
+    * not start with `_` (`_SUCCESS`, committer leftovers) or `.` (`.crc`
+    * checksums, hidden files), whatever its suffix. */
+  private def isDataFile(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    st.isFile && !n.startsWith("_") && !n.startsWith(".")
   }
 
   /** The footer key Spark writes its row schema under

@@ -7,7 +7,11 @@ import org.apache.spark.sql.SparkSession
   * Local defaults mirror what the cluster deployment would set, scaled to
   * one machine:
   *  - `shuffle.partitions` = cores (cluster: ~2-3x total executor cores;
-  *    AQE coalesces down, so err high at scale)
+  *    AQE coalesces down, so err high at scale). A global sort of at
+  *    most AQE's partition floor (`coalescePartitions.minPartitionSize`,
+  *    1 MB) skips the shuffle altogether: `plans.SmallSort`, installed
+  *    through `GraftExtensions`, plans it as one task over `Coalesce 1`
+  *    instead of a range exchange with its sampling job
   *  - AQE on (default in Spark 4): runtime re-plan, skew-join splitting,
   *    partition coalescing — the mechanisms this engine leans on instead
   *    of hand-scheduling (SURVEY §4)

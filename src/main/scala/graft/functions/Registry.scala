@@ -760,6 +760,11 @@ object Registry {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+
             graft.plans.EmptyGroupingSetsGrandTotal
+      // One-task plans for small global sorts (the planner hook a
+      // driver-provided session accepts; see SmallSort).
+      if (!spark.experimental.extraStrategies.contains(graft.plans.SmallSort))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ graft.plans.SmallSort
       // ConvertToLocalRelation eagerly evaluates VALUES-backed
       // projections in the operator batch — BEFORE user rules — which
       // would bake pair semantics into literal-table zoned comparisons.

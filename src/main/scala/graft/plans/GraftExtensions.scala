@@ -14,6 +14,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   * the only hook available on driver-provided sessions; there the
   * literal-literal edge is closed by the ZonedShield anti-folding
   * wrapper (r10), and every column-bearing shape by the optimizer pass.
+  * [[SmallSort]] is installed the same two ways: here as a planner
+  * strategy, and through `spark.experimental.extraStrategies`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
@@ -22,5 +24,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // empty input (ledger item 13, closed r8) — analysis-time so the
     // rewritten Union flows through the full optimizer.
     extensions.injectPostHocResolutionRule(_ => EmptyGroupingSetsGrandTotal)
+    // a global sort of under one partition's worth of input runs as one
+    // task, with no range exchange
+    extensions.injectPlannerStrategy(_ => SmallSort)
   }
 }

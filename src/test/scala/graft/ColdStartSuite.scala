@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.queries.TpcdsSql
@@ -19,26 +18,6 @@ class ColdStartSuite extends GraftSuite {
 
   private val otherDir =
     new java.io.File(SfDir).getParentFile.toPath.resolve("sf0.01").toString
-
-  /** Spark jobs that `body` starts on this thread. */
-  private def jobsIn(body: => Unit): Int = {
-    val group = s"graft_cold_${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          seen.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "cold-start job count")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.graft.StatusBridge.flush(sc)
-    } finally sc.removeSparkListener(listener)
-    seen.get
-  }
 
   /** Row count and a hash of the sorted rows. */
   private def fingerprint(df: DataFrame): (Long, Int) = {

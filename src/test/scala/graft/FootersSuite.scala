@@ -70,18 +70,40 @@ class FootersSuite extends GraftSuite {
     }
   }
 
+  test("directories list data files by Spark's rule, suffix or not") {
+    withTempDir("graft_footers_listing") { tmp =>
+      val dir = tmp.resolve("t")
+      (1L to 10L).toDF("id").repartition(2).write.parquet(dir.toString)
+      val part = Files.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+        .findFirst().get
+      // a hidden parquet file and a `_` leftover are skipped, as Spark
+      // skips them; a data file without the suffix is read, as Spark
+      // reads it
+      Files.copy(part, dir.resolve(".x.parquet"))
+      notParquet(dir.resolve("_leftover.parquet"))
+      Files.copy(part, dir.resolve("extra"))
+      val expected = spark.read.parquet(dir.toString).count()
+      val footers = Footers.read(spark, Seq(dir.toString)).get
+      assert(footers.size == 3 && footers.map(_.rows).sum == expected)
+      assert(!footers.exists(_.path.getName.startsWith(".")))
+      // the schema comes from a data file, not from the `_` leftover
+      assert(Footers.schema(spark, dir.toString).get.map(_.dataType) ==
+        spark.read.parquet(dir.toString).schema.map(_.dataType))
+    }
+  }
+
   test("Tables.rowCount falls back to count() when a footer read fails") {
-    // a fixture dir whose region table also holds a leftover
-    // `_`-prefixed file that is not parquet: Spark's listing skips it,
-    // the footer listing does not, so only count() can answer
+    // a fixture dir whose region table is partitioned: Spark's listing
+    // discovers the partition directories, the flat footer listing finds
+    // no data file, so only count() can answer
     withTempDir("graft_footers_sf") { sf =>
       Tables.names.filter(_ != "region").foreach { n =>
         Files.createSymbolicLink(sf.resolve(s"$n.parquet"),
           Paths.get(SfDir, s"$n.parquet"))
       }
       val region = sf.resolve("region.parquet")
-      spark.read.parquet(s"$SfDir/region.parquet").write.parquet(region.toString)
-      notParquet(region.resolve("_leftover.parquet"))
+      spark.read.parquet(s"$SfDir/region.parquet").write
+        .partitionBy("r_regionkey").parquet(region.toString)
       val expected = spark.read.parquet(s"$SfDir/region.parquet").count()
       try {
         assert(Footers.rowCount(spark, Seq(region.toString)).isEmpty)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +27,26 @@ trait GraftSuite extends AnyFunSuite with BeforeAndAfterAll {
         .forEach(p => Files.deleteIfExists(p))
       finally walk.close()
     }
+  }
+
+  /** Spark jobs that `body` starts on this thread. */
+  def jobsIn(body: => Unit): Int = {
+    val group = s"graft_jobs_${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          seen.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graft.StatusBridge.flush(sc)
+    } finally sc.removeSparkListener(listener)
+    seen.get
   }
 
   override protected def afterAll(): Unit = {
