@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -55,7 +55,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     `splitByTabletBoundaries:756`) — one task per tablet on a
   *     cluster.
   *   - '''Predicates are enforced store-side''' (the filter-iterator
-  *     analog): every pushed filter is re-applied to candidate rows, so
+  *     analog): the pushed filters' [[TupleDomain]] is re-applied to
+  *     every candidate row, so
   *     stale index entries left by Accumulo's append-only `Indexer`
   *     (overwritten rows are NOT un-indexed; metrics cardinalities are
   *     additive upper bounds) never surface — exactly the reference's
@@ -107,21 +108,10 @@ object AccStore {
   private[sources] final class AccRow(val rowId: Any,
       val families: Map[String, Map[String, Any]])
 
-  /** Comparator for index keys of one column (typed, like the
+  /** Index keys of one column in its value order (typed, like the
     * reference's per-type Lexicoders). */
   private def keyComparator(dt: DataType): Comparator[AnyRef] =
-    new Comparator[AnyRef] with Serializable {
-      override def compare(a: AnyRef, b: AnyRef): Int = dt match {
-        case StringType => a.toString.compareTo(b.toString)
-        case LongType => java.lang.Long.compare(
-          a.asInstanceOf[Number].longValue(), b.asInstanceOf[Number].longValue())
-        case DoubleType => java.lang.Double.compare(
-          a.asInstanceOf[Number].doubleValue(), b.asInstanceOf[Number].doubleValue())
-        case BooleanType => java.lang.Boolean.compare(
-          a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-        case other => sys.error(s"graft-accumulo: bad index type $other")
-      }
-    }
+    Domain.ordering(dt).asInstanceOf[Comparator[AnyRef]]
 
   final class AccTable(
       val name: String,
@@ -299,89 +289,49 @@ object AccStore {
     def contains(k: String): Boolean =
       lo.forall(l => if (loInc) k >= l else k > l) &&
         hi.forall(h => if (hiInc) k <= h else k < h)
-    def intersect(o: KeyRange): Option[KeyRange] = {
-      val (nlo, nloInc) = (lo, o.lo) match {
-        case (None, b) => (b, o.loInc)
-        case (a, None) => (a, loInc)
-        case (Some(a), Some(b)) =>
-          if (a > b) (Some(a), loInc)
-          else if (b > a) (Some(b), o.loInc)
-          else (Some(a), loInc && o.loInc)
-      }
-      val (nhi, nhiInc) = (hi, o.hi) match {
-        case (None, b) => (b, o.hiInc)
-        case (a, None) => (a, hiInc)
-        case (Some(a), Some(b)) =>
-          if (a < b) (Some(a), hiInc)
-          else if (b < a) (Some(b), o.hiInc)
-          else (Some(a), hiInc && o.hiInc)
-      }
-      val empty = (nlo, nhi) match {
-        case (Some(l), Some(h)) => l > h || (l == h && !(nloInc && nhiInc))
-        case _ => false
-      }
-      if (empty) None else Some(KeyRange(nlo, nloInc, nhi, nhiInc))
-    }
   }
   val FullRange: KeyRange = KeyRange(None, false, None, false)
 
-  /** One constraint on a data column (`AccumuloColumnConstraint`). */
-  sealed trait Spec
-  final case class ValuesIn(vs: Seq[Any]) extends Spec
-  final case class ValueRange(lo: Option[Any], loInc: Boolean,
-      hi: Option[Any], hiInc: Boolean) extends Spec
-  case object NotNullSpec extends Spec
-  case object NullSpec extends Spec
-  final case class Constraint(col: String, spec: Spec)
+  /** The encoded-row-id ranges of a row-id domain; the full range when
+    * the row id is unconstrained. */
+  private[sources] def keyRanges(rowId: Option[Domain]): Seq[KeyRange] =
+    rowId.fold(Seq(FullRange))(_.ranges.map(r => KeyRange(
+      r.lo.map(b => encodeKey(b.value)), r.lo.exists(_.inclusive),
+      r.hi.map(b => encodeKey(b.value)), r.hi.exists(_.inclusive))))
 
-  /** Row IDs matching one indexed constraint, from the index table and
-    * restricted to the row-id ranges (`IndexLookup.getIndexRanges`'s
-    * inRange check). */
-  private[sources] def indexRowIds(t: AccTable, c: Constraint,
-      rowRanges: Seq[KeyRange]): collection.SortedSet[String] = {
-    val ix = t.index(c.col)
-    val out = mutable.SortedSet.empty[String]
-    def addAll(s: ConcurrentSkipListSet[String]): Unit =
-      s.forEach(k => if (rowRanges.exists(_.contains(k))) out += k)
-    c.spec match {
-      case ValuesIn(vs) =>
-        vs.foreach { v =>
-          val s = ix.get(v.asInstanceOf[AnyRef])
-          if (s != null) addAll(s)
-        }
-      case ValueRange(lo, loInc, hi, hiInc) =>
-        var sub: java.util.concurrent.ConcurrentNavigableMap[AnyRef, ConcurrentSkipListSet[String]] = ix
-        lo.foreach(l => sub = sub.tailMap(l.asInstanceOf[AnyRef], loInc))
-        hi.foreach(h => sub = sub.headMap(h.asInstanceOf[AnyRef], hiInc))
-        sub.values().forEach(addAll)
-      case _ => ()
+  /** The index entries of `column` whose values `d` holds
+    * (`AccumuloColumnConstraint`'s value ranges). */
+  private def indexEntries(t: AccTable, column: String, d: Domain)
+      : Seq[java.util.NavigableMap[AnyRef, ConcurrentSkipListSet[String]]] =
+    d.ranges.map { r =>
+      var sub: java.util.NavigableMap[AnyRef, ConcurrentSkipListSet[String]] =
+        t.index(column)
+      r.lo.foreach(b => sub = sub.tailMap(b.value.asInstanceOf[AnyRef], b.inclusive))
+      r.hi.foreach(b => sub = sub.headMap(b.value.asInstanceOf[AnyRef], b.inclusive))
+      sub
     }
+
+  /** Row IDs matching one indexed column's domain, from the index table
+    * and restricted to the row-id ranges (`IndexLookup.getIndexRanges`'s
+    * inRange check). */
+  private[sources] def indexRowIds(t: AccTable, column: String, d: Domain,
+      rowRanges: Seq[KeyRange]): collection.SortedSet[String] = {
+    val out = mutable.SortedSet.empty[String]
+    indexEntries(t, column, d).foreach(_.values().forEach(_.forEach(k =>
+      if (rowRanges.exists(_.contains(k))) out += k)))
     out
   }
 
-  /** Constraint cardinality from the metrics table
+  /** Cardinality of one indexed column's domain from the metrics table
     * (`ColumnCardinalityCache` reads the same per-value counters). */
-  private[sources] def metricCardinality(t: AccTable,
-      c: Constraint): Long = {
-    val cards = t.cardinality(c.col)
-    c.spec match {
-      case ValuesIn(vs) =>
-        vs.map { v =>
-          val a = cards.get(v.asInstanceOf[AnyRef])
-          if (a == null) 0L else a.get()
-        }.sum
-      case ValueRange(lo, loInc, hi, hiInc) =>
-        // metrics are scanned by value range like the index itself
-        var sub: java.util.concurrent.ConcurrentNavigableMap[AnyRef, ConcurrentSkipListSet[String]] = t.index(c.col)
-        lo.foreach(l => sub = sub.tailMap(l.asInstanceOf[AnyRef], loInc))
-        hi.foreach(h => sub = sub.headMap(h.asInstanceOf[AnyRef], hiInc))
-        var n = 0L
-        sub.keySet().forEach { k =>
-          val a = cards.get(k); if (a != null) n += a.get()
-        }
-        n
-      case _ => 0L
-    }
+  private[sources] def metricCardinality(t: AccTable, column: String,
+      d: Domain): Long = {
+    val cards = t.cardinality(column)
+    var n = 0L
+    indexEntries(t, column, d).foreach(_.keySet().forEach { k =>
+      val a = cards.get(k); if (a != null) n += a.get()
+    })
+    n
   }
 }
 
@@ -391,12 +341,13 @@ class AccumuloKvProvider extends ConnectorProvider("graft-accumulo") {
 }
 
 object AccumuloKvTable {
-  def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val t = AccStore.table(Connector.option(options, "graft-accumulo",
-      "table"))
+  def schemaOf(options: CaseInsensitiveStringMap): StructType =
+    schemaOf(AccStore.table(Connector.option(options, "graft-accumulo",
+      "table")))
+
+  def schemaOf(t: AccStore.AccTable): StructType =
     StructType(StructField(t.rowIdCol, t.rowIdType) +:
       t.columns.map(c => StructField(c.name, c.dt)))
-  }
 }
 
 class AccumuloKvTable(options: CaseInsensitiveStringMap)
@@ -416,115 +367,30 @@ class AccumuloKvTable(options: CaseInsensitiveStringMap)
     new AccWriteBuilder(tableName, info.schema())
 }
 
-/** Compiles Spark source filters onto row-id ranges + column
-  * constraints. Compiled filters are FULLY enforced store-side (the
-  * filter-iterator analog re-applies them to every candidate row), so
-  * they are not residual; anything else stays a Spark filter. */
+/** Pushes the filters whose [[TupleDomain]] is on table columns; the
+  * row id's domain becomes row-id ranges. Pushed filters are FULLY
+  * enforced store-side (the filter-iterator analog re-applies the
+  * domain to every candidate row), so they are not residual; anything
+  * else stays a Spark filter. */
 class AccScanBuilder(tableName: String, full: StructType,
     options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
-  import AccStore._
-
   private val t = AccStore.table(tableName)
   private var pushed: Array[Filter] = Array.empty
-  private var rowRanges: Seq[KeyRange] = Seq(FullRange)
-  private var constraints: Seq[Constraint] = Seq.empty
+  private var domain = TupleDomain.All
   private var required: StructType = full
 
-  private def isRowId(a: String) = a == t.rowIdCol
-  private def isCol(a: String) = t.colByName.contains(a)
-
-  private def norm(col: String, v: Any): Any = {
-    val dt = if (isRowId(col)) t.rowIdType else t.colByName(col).dt
-    (dt, v) match {
-      case (LongType, n: Number) => n.longValue()
-      case (DoubleType, n: Number) => n.doubleValue()
-      case (StringType, s) => s.toString
-      case _ => v
-    }
-  }
-
-  /** Intersect the running row-id range set with one more range set
-    * (top-level filters are conjuncts). */
-  private def constrainRows(rs: Seq[KeyRange]): Unit =
-    rowRanges = rowRanges.flatMap(a => rs.flatMap(a.intersect))
-
-  private def tryCompile(f: Filter, apply: Boolean): Boolean = f match {
-    case EqualTo(a, v) if isRowId(a) && v != null =>
-      if (apply) {
-        val k = encodeKey(norm(a, v))
-        constrainRows(Seq(KeyRange(Some(k), true, Some(k), true)))
-      }
-      true
-    case In(a, vs) if isRowId(a) && vs.nonEmpty && !vs.contains(null) =>
-      if (apply) constrainRows(vs.toSeq.map { v =>
-        val k = encodeKey(norm(a, v))
-        KeyRange(Some(k), true, Some(k), true)
-      })
-      true
-    case GreaterThan(a, v) if isRowId(a) && v != null =>
-      if (apply) constrainRows(
-        Seq(KeyRange(Some(encodeKey(norm(a, v))), false, None, false)))
-      true
-    case GreaterThanOrEqual(a, v) if isRowId(a) && v != null =>
-      if (apply) constrainRows(
-        Seq(KeyRange(Some(encodeKey(norm(a, v))), true, None, false)))
-      true
-    case LessThan(a, v) if isRowId(a) && v != null =>
-      if (apply) constrainRows(
-        Seq(KeyRange(None, false, Some(encodeKey(norm(a, v))), false)))
-      true
-    case LessThanOrEqual(a, v) if isRowId(a) && v != null =>
-      if (apply) constrainRows(
-        Seq(KeyRange(None, false, Some(encodeKey(norm(a, v))), true)))
-      true
-    case IsNotNull(a) if isRowId(a) => true // row ids are never null
-    case EqualTo(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+= Constraint(a, ValuesIn(Seq(norm(a, v))))
-      true
-    case In(a, vs) if isCol(a) && vs.nonEmpty && !vs.contains(null) =>
-      if (apply)
-        constraints :+= Constraint(a, ValuesIn(vs.toSeq.map(norm(a, _))))
-      true
-    case GreaterThan(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+=
-        Constraint(a, ValueRange(Some(norm(a, v)), false, None, false))
-      true
-    case GreaterThanOrEqual(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+=
-        Constraint(a, ValueRange(Some(norm(a, v)), true, None, false))
-      true
-    case LessThan(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+=
-        Constraint(a, ValueRange(None, false, Some(norm(a, v)), false))
-      true
-    case LessThanOrEqual(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+=
-        Constraint(a, ValueRange(None, false, Some(norm(a, v)), true))
-      true
-    case IsNotNull(a) if isCol(a) =>
-      if (apply) constraints :+= Constraint(a, NotNullSpec)
-      true
-    case IsNull(a) if isCol(a) =>
-      if (apply) constraints :+= Constraint(a, NullSpec)
-      true
-    case And(l, r) =>
-      // only take the AND if both sides compile (else fully residual)
-      if (tryCompile(l, false) && tryCompile(r, false)) {
-        if (apply) { tryCompile(l, true); tryCompile(r, true) }
-        true
-      }
-      else false
-    case _ => false
-  }
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(tryCompile(_, false))
-    ok.foreach(tryCompile(_, true))
-    pushed = ok
-    residual
+    val (taken, d) = TupleDomain.push(filters, TupleDomain.types(full)) {
+      // row ids are never null, and encode only as strings and bigints
+      (c, d) => c != t.rowIdCol || (!d.nullAllowed &&
+        (t.rowIdType == StringType || t.rowIdType == LongType))
+    }
+    pushed = taken
+    domain = d
+    filters.filterNot(taken.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -533,16 +399,13 @@ class AccScanBuilder(tableName: String, full: StructType,
     required = requiredSchema
 
   override def build(): Scan =
-    new AccScan(tableName, rowRanges, constraints, required, pushed,
-      options)
+    new AccScan(tableName, domain, required, pushed, options)
 }
 
 /** What every split of one scan reads: the pruned columns, and the
-  * static constraints and row ranges re-applied to each candidate row
-  * (the filter-iterator analog). */
-final case class AccRead(required: StructType,
-    constraints: Seq[AccStore.Constraint],
-    rowRanges: Seq[AccStore.KeyRange])
+  * static domain re-applied to each candidate row (the filter-iterator
+  * analog). */
+final case class AccRead(required: StructType, domain: TupleDomain)
 
 sealed trait AccSplit extends ConnectorSplit {
   def table: String
@@ -554,14 +417,14 @@ sealed trait AccSplit extends ConnectorSplit {
 
   override def rows(): Iterator[InternalRow] = {
     import AccStore._
-    val AccRead(required, constraints, rowRanges) = read
+    val AccRead(required, domain) = read
     val tableName = this.table
     val t = AccStore.table(tableName)
     val candidates = this.candidates(t)
     // families this task touches: required columns + constraint columns
     // (locality-group pruning — untouched groups read zero cells)
     val neededCols = (required.fieldNames.toSet ++
-      constraints.map(_.col)) - t.rowIdCol
+      domain.domains.keySet) - t.rowIdCol
     val neededFams = neededCols.map(c => t.colByName(c).family).toArray
 
     // r18 OPT: the per-row work below ran a type dispatch and map
@@ -569,7 +432,7 @@ sealed trait AccSplit extends ConnectorSplit {
     // set per row, and bumped SHARED atomics per row — 32 concurrent
     // readers serializing on two counters. Everything resolvable from
     // the static scan description is now resolved ONCE per reader
-    // (constraint matchers, field accessors, range check), and the
+    // (column matchers, field accessors), and the
     // proof counters accumulate in task-local longs flushed at
     // close(), so their totals are exact once the action completes.
     def colValue(row: AccStore.AccRow, col: String): Any =
@@ -579,43 +442,14 @@ sealed trait AccSplit extends ConnectorSplit {
         row.families.getOrElse(fam, Map.empty).get(col).orNull
       }
 
-    def cmpFn(dt: DataType): (Any, Any) => Int = dt match {
-      case StringType => (a, b) => a.toString.compareTo(b.toString)
-      case LongType => (a, b) => java.lang.Long.compare(
-        a.asInstanceOf[Number].longValue(),
-        b.asInstanceOf[Number].longValue())
-      case DoubleType => (a, b) => java.lang.Double.compare(
-        a.asInstanceOf[Number].doubleValue(),
-        b.asInstanceOf[Number].doubleValue())
-      case BooleanType => (a, b) => java.lang.Boolean.compare(
-        a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-      case other => sys.error(s"graft-accumulo: bad type $other")
-    }
-
-    // the filter-iterator analog: re-apply every pushed constraint —
-    // compiled to one closure per constraint
-    val consFns: Array[AccStore.AccRow => Boolean] = constraints.map { c =>
-      val cmp = cmpFn(t.colByName(c.col).dt)
-      val name = c.col
-      c.spec match {
-        case NullSpec => (r: AccStore.AccRow) => colValue(r, name) == null
-        case NotNullSpec => (r: AccStore.AccRow) => colValue(r, name) != null
-        case ValuesIn(vs) => (r: AccStore.AccRow) => {
-          val v = colValue(r, name)
-          v != null && vs.exists(cmp(v, _) == 0)
-        }
-        case ValueRange(lo, loInc, hi, hiInc) => (r: AccStore.AccRow) => {
-          val v = colValue(r, name)
-          v != null &&
-            lo.forall(l => { val d = cmp(v, l); d > 0 || (loInc && d == 0) }) &&
-            hi.forall(h => { val d = cmp(v, h); d < 0 || (hiInc && d == 0) })
-        }
+    // the filter-iterator analog: re-apply the pushed domain — one
+    // closure per column
+    val consFns: Array[AccStore.AccRow => Boolean] =
+      domain.domains.toArray.map { case (name, d) =>
+        (r: AccStore.AccRow) => d.contains(colValue(r, name))
       }
-    }.toArray
-    val fullRangeOnly = rowRanges == Seq(FullRange)
 
-    def matches(k: String, row: AccStore.AccRow): Boolean = {
-      if (!fullRangeOnly && !rowRanges.exists(_.contains(k))) return false
+    def matches(row: AccStore.AccRow): Boolean = {
       var i = 0
       while (i < consFns.length) {
         if (!consFns(i)(row)) return false
@@ -655,9 +489,9 @@ sealed trait AccSplit extends ConnectorSplit {
 
     var localMaterialized = 0L
     val localCells = new Array[Long](neededFams.length)
-    val hits = candidates.filter { case (k, row) =>
+    val hits = candidates.filter { case (_, row) =>
       localMaterialized += 1L
-      matches(k, row)
+      matches(row)
     }
 
     new ClosingRows(hits.map { case (_, row) =>
@@ -706,8 +540,7 @@ final case class AccRangeSplit(table: String, range: AccStore.KeyRange,
   }
 }
 
-class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
-    constraints: Seq[AccStore.Constraint], required: StructType,
+class AccScan(tableName: String, domain: TupleDomain, required: StructType,
     pushedFilters: Array[Filter], options: CaseInsensitiveStringMap)
     extends ConnectorScan(required)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
@@ -716,7 +549,7 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
   import AccStore._
 
   private val t = AccStore.table(tableName)
-  private val read = AccRead(required, constraints, rowRanges)
+  private val read = AccRead(required, domain)
 
   /** RUNTIME split pruning (Spark's dynamic-pruning hook for DSv2,
     * SPARK-35779): a join's build-side key values arrive as In/EqualTo
@@ -730,18 +563,7 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
     * constraint set — pruning is an I/O optimization, the join
     * re-applies exact semantics ([[AccStore.rowsMaterialized]] counts
     * the saved volume). */
-  @volatile private var runtimeRanges: Seq[KeyRange] = Seq.empty
-  @volatile private var runtimeConstraints: Seq[Constraint] = Seq.empty
-
-  private def normRt(col: String, v: Any): Any = {
-    val dt = if (col == t.rowIdCol) t.rowIdType else t.colByName(col).dt
-    (dt, v) match {
-      case (LongType, n: Number) => n.longValue()
-      case (DoubleType, n: Number) => n.doubleValue()
-      case (StringType, s) => s.toString
-      case _ => v
-    }
-  }
+  @volatile private var runtimeDomain = TupleDomain.All
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -754,28 +576,11 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
       .toArray
 
   override def filter(filters: Array[Filter]): Unit = {
-    val rr = Seq.newBuilder[KeyRange]
-    val cs = Seq.newBuilder[Constraint]
-    filters.foreach {
-      case In(a, vs) if a == t.rowIdCol && vs.nonEmpty &&
-          !vs.contains(null) =>
-        vs.foreach { v =>
-          val k = encodeKey(normRt(a, v))
-          rr += KeyRange(Some(k), true, Some(k), true)
-        }
-      case EqualTo(a, v) if a == t.rowIdCol && v != null =>
-        val k = encodeKey(normRt(a, v))
-        rr += KeyRange(Some(k), true, Some(k), true)
-      case In(a, vs) if t.colByName.get(a).exists(_.indexed) &&
-          vs.nonEmpty && !vs.contains(null) =>
-        cs += Constraint(a, ValuesIn(vs.toSeq.map(normRt(a, _))))
-      case EqualTo(a, v) if t.colByName.get(a).exists(_.indexed) &&
-          v != null =>
-        cs += Constraint(a, ValuesIn(Seq(normRt(a, v))))
-      case _ => ()
-    }
-    runtimeRanges = rr.result()
-    runtimeConstraints = cs.result()
+    val attributes = filterAttributes().map(_.fieldNames().head).toSet
+    runtimeDomain = TupleDomain.push(filters,
+      TupleDomain.types(AccumuloKvTable.schemaOf(t))) {
+      (c, d) => attributes(c) && d.values.isDefined
+    }._2
   }
 
   // AccumuloSessionProperties names and defaults (`:55-110`)
@@ -800,39 +605,39 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
       required.fieldNames.mkString(",")
 
   /** The `AccumuloClient.getTabletSplits:652-715` decision tree. */
-  private def computePlanned(rr: Seq[KeyRange], cs: Seq[Constraint])
-      : Array[InputPartition] = {
-    val indexed = cs.filter(c => t.colByName(c.col).indexed &&
-      (c.spec match {
-        case _: ValuesIn | _: ValueRange => true
-        case _ => false // exists/missing are not index lookups
-      }))
+  private def computePlanned(d: TupleDomain): Array[InputPartition] = {
+    val rr = keyRanges(d.get(t.rowIdCol))
+    // value sets only: IS [NOT] NULL is not an index lookup
+    val indexed = d.domains.toSeq.filter { case (c, cd) =>
+      t.colByName.get(c).exists(_.indexed) && !cd.nullAllowed && !cd.isNotNull
+    }
     val (viaIndex, decision): (Option[Array[InputPartition]], String) =
       if (!optimizeIndex || indexed.isEmpty)
         (None, "tabletScan(noIndexedConstraint)")
       else if (!metricsEnabled) {
         // `IndexLookup.java:157-173`: no metrics — intersect and bin
-        val sets = indexed.map(indexRowIds(t, _, rr))
+        val sets = indexed.map { case (c, cd) => indexRowIds(t, c, cd, rr) }
         val hits = sets.reduceLeft((a, b) => a.intersect(b))
         (Some(bin(hits)), s"index(noMetrics,${hits.size})")
       }
       else {
         val numRows = math.max(t.numRowsMetric.get(), 1L)
-        val byCard = indexed.map(c => metricCardinality(t, c) -> c)
-          .sortBy(_._1)
-        val (lowestCard, lowestC) = byCard.head
+        val byCard = indexed.map { case (c, cd) =>
+          metricCardinality(t, c, cd) -> (c, cd)
+        }.sortBy(_._1)
+        val (lowestCard, (lowestC, lowestD)) = byCard.head
         // which row-id set to consider, per
         // `IndexLookup.getRangesWithMetrics:225-261`
         val hitsOpt: Option[(collection.SortedSet[String], String)] =
           if (lowestCard.toDouble / numRows <= smallCardThreshold)
             // under the lowest-cardinality threshold: that column ALONE
-            Some((indexRowIds(t, lowestC, rr),
-              s"lowCard(${lowestC.col})"))
+            Some((indexRowIds(t, lowestC, lowestD, rr),
+              s"lowCard($lowestC)"))
           else if (indexed.size == 1 &&
             lowestCard.toDouble / numRows >= indexThreshold)
             None // single column already over the threshold (`:240-247`)
           else {
-            val sets = indexed.map(indexRowIds(t, _, rr))
+            val sets = indexed.map { case (c, cd) => indexRowIds(t, c, cd, rr) }
             Some((sets.reduceLeft((a, b) => a.intersect(b)), "intersect"))
           }
         hitsOpt match {
@@ -853,8 +658,7 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
 
   // stats report the STATIC plan (runtime filters arrive later);
   // execution re-plans with whatever runtime values Spark handed over
-  private lazy val planned: Array[InputPartition] =
-    computePlanned(rowRanges, constraints)
+  private lazy val planned: Array[InputPartition] = computePlanned(domain)
 
   private def bin(hits: collection.SortedSet[String])
       : Array[InputPartition] =
@@ -882,13 +686,8 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    if (runtimeRanges.isEmpty && runtimeConstraints.isEmpty) planned
-    else {
-      val rr =
-        if (runtimeRanges.isEmpty) rowRanges
-        else rowRanges.flatMap(a => runtimeRanges.flatMap(a.intersect))
-      computePlanned(rr, constraints ++ runtimeConstraints)
-    }
+    if (runtimeDomain == TupleDomain.All) planned
+    else computePlanned(domain.intersect(runtimeDomain))
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {

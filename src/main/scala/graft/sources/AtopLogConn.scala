@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -125,44 +125,21 @@ class AtopLogTable(options: CaseInsensitiveStringMap) extends ReadTable {
       Option(options.get("max_history_days")).map(_.toInt).getOrElse(30))
 }
 
-/** Records the time bounds for day pruning; every filter stays
-  * residual (the reference's engine re-filters rows too). */
+/** Records the domains of the time columns' `=`, `IN` and range
+  * filters for day pruning; every filter stays residual (the
+  * reference's engine re-filters rows too). */
 class AtopScanBuilder(store: String, table: String, full: StructType,
     maxHistoryDays: Int) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  // inclusive epoch-second bounds implied by the pushed constraint on
-  // each time column, as (lo, hi)
-  private var bounds = Map.empty[String, (Long, Long)]
+  private var bounds = TupleDomain.All
   private var required: StructType = full
-
-  private def epochOf(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp => Some(t.getTime / 1000)
-    case i: java.time.Instant => Some(i.getEpochSecond)
-    case _ => None
-  }
-
-  private def narrow(col: String, lo: Option[Long], hi: Option[Long]): Unit = {
-    val (l0, h0) = bounds.getOrElse(col, (Long.MinValue, Long.MaxValue))
-    bounds += col -> (math.max(l0, lo.getOrElse(Long.MinValue)),
-      math.min(h0, hi.getOrElse(Long.MaxValue)))
-  }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val timeCols = Set("start_time", "end_time", "power_on_time")
-    filters.foreach {
-      case EqualTo(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, Some(e), Some(e)))
-      case GreaterThan(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, Some(e), None))
-      case GreaterThanOrEqual(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, Some(e), None))
-      case LessThan(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, None, Some(e)))
-      case LessThanOrEqual(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, None, Some(e)))
-      case _ =>
-    }
+    bounds = TupleDomain.push(filters, TupleDomain.types(full)) { (c, d) =>
+      timeCols(c) && (d.values.isDefined || d.interval.isDefined)
+    }._2
     filters // all residual
   }
 
@@ -236,11 +213,11 @@ final case class AtopSplit(store: String, table: String, host: String,
 }
 
 class AtopScan(store: String, table: String, required: StructType,
-    bounds: Map[String, (Long, Long)], maxHistoryDays: Int)
+    bounds: TupleDomain, maxHistoryDays: Int)
     extends ConnectorScan(required) {
 
   override def description(): String =
-    s"graft-atop $table days<=$maxHistoryDays bounds=${bounds.keys.toSeq.sorted.mkString(",")}"
+    s"graft-atop $table days<=$maxHistoryDays bounds=${bounds.domains.keys.toSeq.sorted.mkString(",")}"
 
   /** The `AtopSplitManager.getSplits:68-84` loop: one split per
     * (host, retained day), kept only when the day's time domain
@@ -251,11 +228,12 @@ class AtopScan(store: String, table: String, required: StructType,
     val minDay = maxDay - (maxHistoryDays - 1)
     all.filter { case (_, day) =>
       day >= minDay && {
-        val dayLo = day * 86400L
-        val dayHi = dayLo + 86399L // inclusive, the reference's 23:59:59
         // a row's start/end/power_on always falls inside its own day
-        // domain, so every recorded bound must overlap [dayLo, dayHi]
-        bounds.values.forall { case (lo, hi) => lo <= dayHi && hi >= dayLo }
+        // domain, so every recorded domain must overlap the day
+        val micros = 86400L * 1000000L
+        val inDay = Range(Some(Bound(day * micros, true)),
+          Some(Bound((day + 1) * micros, false)))
+        bounds.domains.values.forall(_.overlaps(inDay))
       }
     }.map { case (host, day) =>
       AtopSplit(store, table, host, day, required)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -47,8 +47,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - '''Clustering-key pushdown''' follows
   *     `CassandraClusteringPredicatesExtractor.getClusteringKeysSet`
   *     (`:65-170`): predicates push in clustering-column ORDER —
-  *     equalities on a prefix, then at most one range, then STOP at the
-  *     first unconstrained column (CQL's restriction model). A pushed
+  *     equalities on a prefix, then one range (the [[Domain]] of every
+  *     range bound on that column), then STOP at the first
+  *     unconstrained column (CQL's restriction model). A pushed
   *     bound becomes a binary-searched SLICE of the partition's
   *     clustering-sorted rows — never a partition scan. Everything
   *     outside the pushable shape stays a residual Spark filter
@@ -251,10 +252,9 @@ class CassandraRingTable(options: CaseInsensitiveStringMap)
 }
 
 /** The pushed clustering bound: equalities on a clustering-column
-  * prefix, then at most one range — the only shapes CQL can serve from
-  * the sorted partition. */
-final case class ClusteringBound(eqPrefix: Seq[Any],
-    range: Option[(Option[Any], Boolean, Option[Any], Boolean)])
+  * prefix, then at most one range, the domain of the next column — the
+  * only shapes CQL can serve from the sorted partition. */
+final case class ClusteringBound(eqPrefix: Seq[Any], range: Option[Domain])
     extends Serializable
 
 sealed trait CassSplit extends ConnectorSplit {
@@ -276,6 +276,7 @@ sealed trait CassSplit extends ConnectorSplit {
       val rows = part.synchronized(part.rows)
       val b = bound
       if (b.eqPrefix.isEmpty && b.range.isEmpty) rows
+      else if (b.range.exists(_.isNone)) Vector.empty
       else {
         // binary-search the clustering slice: [prefix ++ lo, prefix ++ hi]
         def ckOf(r: Seq[Any]) = ckIdx.map(r)
@@ -289,15 +290,14 @@ sealed trait CassSplit extends ConnectorSplit {
           }
           lo
         }
-        val (rlo, rloInc, rhi, rhiInc) =
-          b.range.getOrElse((None, false, None, false))
-        val loKey = b.eqPrefix ++ rlo.toSeq
-        val hiKey = b.eqPrefix ++ rhi.toSeq
-        val from =
-          if (rlo.isDefined) lowerBound(loKey, rloInc)
-          else lowerBound(b.eqPrefix, orEqual = true)
+        val r = b.range.flatMap(_.span).getOrElse(Range.All)
+        val from = r.lo match {
+          case Some(lo) => lowerBound(b.eqPrefix :+ lo.value, lo.inclusive)
+          case None => lowerBound(b.eqPrefix, orEqual = true)
+        }
         val until =
-          if (rhi.isDefined) lowerBound(hiKey, !rhiInc)
+          if (r.hi.isDefined)
+            lowerBound(b.eqPrefix :+ r.hi.get.value, !r.hi.get.inclusive)
           else if (b.eqPrefix.nonEmpty)
             lowerBound(b.eqPrefix, orEqual = false)
           else rows.length
@@ -350,101 +350,60 @@ class CassScanBuilder(tableName: String, splitSize: Int, full: StructType)
   private var bound = ClusteringBound(Seq.empty, None)
   private var required: StructType = full
 
-  private def lit(col: String, v: Any): Option[Any] = {
-    // normalize the filter literal to the stored representation
-    defn.fieldMap.get(col).flatMap {
-      case StringType => Some(String.valueOf(v))
-      case LongType => v match {
-        case n: Number => Some(n.longValue()); case _ => None
-      }
-      case IntegerType => v match {
-        case n: Number => Some(n.intValue()); case _ => None
-      }
-      case DoubleType => v match {
-        case n: Number => Some(n.doubleValue()); case _ => None
-      }
-      case BooleanType => v match {
-        case b: Boolean => Some(b); case _ => None
-      }
-      case _ => None
-    }
-  }
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // --- partition-key binding: equality/IN on EVERY pk column ---
-    val eqs = mutable.Map.empty[String, Seq[Any]]
-    val pkFilters = filters.filter {
-      case EqualTo(a, v) if defn.partitionKeys.contains(a) &&
-          lit(a, v).isDefined =>
-        eqs(a) = Seq(lit(a, v).get); true
-      case In(a, vs) if defn.partitionKeys.contains(a) && vs.nonEmpty &&
-          vs.forall(v => v != null && lit(a, v).isDefined) =>
-        eqs(a) = vs.map(v => lit(a, v).get).toSeq; true
-      case _ => false
-    }
-    val fullyBound = defn.partitionKeys.forall(eqs.contains)
+    // each filter's domain on its one column
+    val domains = filters.flatMap(f =>
+      TupleDomain.of(f, defn.fieldMap.get).flatMap(_.domains match {
+        case m if m.size == 1 => Some((f, m.head._1, m.head._2))
+        case _ => None
+      }))
+    def on(col: String)(shape: Domain => Boolean) =
+      domains.filter { case (_, c, d) => c == col && shape(d) }
+    // --- partition-key binding: values on EVERY pk column ---
+    val pkBound = defn.partitionKeys.map(k => on(k)(_.values.isDefined))
+    val fullyBound = pkBound.forall(_.nonEmpty)
     if (fullyBound) {
       // cartesian of the per-column value lists = the partition list
       // (CassandraPartitionManager enumerates the same combinations)
-      pkValues = Some(defn.partitionKeys.map(eqs)
+      pkValues = Some(pkBound.map(_.map(_._3).reduce(_ intersect _)
+        .values.getOrElse(Seq.empty))
         .foldLeft(Seq(Seq.empty[Any])) { (acc, vs) =>
           acc.flatMap(prefix => vs.map(prefix :+ _))
         })
     }
     // --- clustering predicates: prefix equalities, then one range ---
-    val remaining = mutable.ArrayBuffer.empty[Filter] ++
-      filters.filterNot(f => fullyBound && pkFilters.contains(f))
     val eqPrefix = mutable.ArrayBuffer.empty[Any]
-    var range: Option[(Option[Any], Boolean, Option[Any], Boolean)] = None
+    var range: Option[Domain] = None
     val consumed = mutable.ArrayBuffer.empty[Filter]
     var stop = false
     defn.clusteringKeys.foreach { ck =>
       if (!stop) {
-        val eq = remaining.collectFirst {
-          case f @ EqualTo(a, v) if a == ck && lit(a, v).isDefined =>
-            (f, lit(a, v).get)
-        }
-        eq match {
-          case Some((f, v)) =>
-            eqPrefix += v; consumed += f; remaining -= f
+        on(ck)(_.values.exists(_.size == 1)).headOption match {
+          case Some((f, _, d)) =>
+            eqPrefix += d.values.get.head; consumed += f
           case None =>
-            // at most one range bound pair on THIS column, then stop
-            var lo: Option[Any] = None; var loInc = false
-            var hi: Option[Any] = None; var hiInc = false
-            remaining.toSeq.foreach {
-              case f @ GreaterThan(a, v) if a == ck && lit(a, v).isDefined =>
-                lo = lit(a, v); loInc = false; consumed += f; remaining -= f
-              case f @ GreaterThanOrEqual(a, v)
-                  if a == ck && lit(a, v).isDefined =>
-                lo = lit(a, v); loInc = true; consumed += f; remaining -= f
-              case f @ LessThan(a, v) if a == ck && lit(a, v).isDefined =>
-                hi = lit(a, v); hiInc = false; consumed += f; remaining -= f
-              case f @ LessThanOrEqual(a, v)
-                  if a == ck && lit(a, v).isDefined =>
-                hi = lit(a, v); hiInc = true; consumed += f; remaining -= f
-              case _ =>
+            // every range bound on THIS column, then stop
+            val ranges = on(ck)(_.interval.isDefined)
+            if (ranges.nonEmpty) {
+              range = Some(ranges.map(_._3).reduce(_ intersect _))
+              consumed ++= ranges.map(_._1)
             }
-            if (lo.isDefined || hi.isDefined)
-              range = Some((lo, loInc, hi, hiInc))
             stop = true // range or unconstrained column ends the prefix
         }
       }
     }
     bound = ClusteringBound(eqPrefix.toSeq, range)
-    pushed = (if (fullyBound) pkFilters else Array.empty[Filter]) ++ consumed
+    val pkFilters = pkBound.flatten.map(_._1).toSet
+    val served =
+      (if (fullyBound) filters.filter(pkFilters) else Array.empty[Filter]) ++
+        consumed
     // a pushed equality/range implies NOT NULL, so the isnotnull guards
     // Spark derives for those columns are served too
-    val covered = pushed.flatMap {
-      case EqualTo(a, _) => Some(a)
-      case In(a, _) => Some(a)
-      case GreaterThan(a, _) => Some(a)
-      case GreaterThanOrEqual(a, _) => Some(a)
-      case LessThan(a, _) => Some(a)
-      case LessThanOrEqual(a, _) => Some(a)
-      case _ => None
+    val covered = domains.collect {
+      case (f, c, _) if served.contains(f) => c
     }.toSet
-    pushed = pushed ++ filters.collect {
-      case f @ IsNotNull(a) if covered.contains(a) => f
+    pushed = served ++ domains.collect {
+      case (f, c, d) if d.isNotNull && covered(c) => f
     }
     // handled filters are served EXACTLY (pruned partitions + sorted
     // slice); the rest is Spark's residual — the reference's
@@ -481,24 +440,6 @@ class CassScan(tableName: String, splitSize: Int,
 
   private def defn = CassStore.table(tableName).defn
 
-  private def normalize(col: String, v: Any): Option[Any] =
-    defn.fieldMap.get(col).flatMap {
-      case StringType => Some(String.valueOf(v))
-      case LongType => v match {
-        case n: Number => Some(n.longValue()); case _ => None
-      }
-      case IntegerType => v match {
-        case n: Number => Some(n.intValue()); case _ => None
-      }
-      case DoubleType => v match {
-        case n: Number => Some(n.doubleValue()); case _ => None
-      }
-      case BooleanType => v match {
-        case b: Boolean => Some(b); case _ => None
-      }
-      case _ => None
-    }
-
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     if (defn.partitionKeys.size == 1 && pkValues.isEmpty)
@@ -508,13 +449,9 @@ class CassScan(tableName: String, splitSize: Int,
 
   override def filter(filters: Array[Filter]): Unit = {
     val pk = defn.partitionKeys.head
-    runtimePks = filters.collectFirst {
-      case In(a, vs) if a == pk && vs.nonEmpty &&
-          vs.forall(v => v != null && normalize(pk, v).isDefined) =>
-        vs.toSeq.map(v => Seq(normalize(pk, v).get))
-      case EqualTo(a, v) if a == pk && normalize(pk, v).isDefined =>
-        Seq(Seq(normalize(pk, v).get))
-    }
+    runtimePks = TupleDomain.push(filters, defn.fieldMap.get) {
+      (c, d) => c == pk && d.values.isDefined
+    }._2.get(pk).map(_.values.getOrElse(Seq.empty).map(Seq(_)))
   }
 
   override def description(): String =

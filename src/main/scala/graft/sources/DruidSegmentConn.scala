@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.{Expression => VExpression}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,8 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (`:47-65`): a raw scan plans one split per segment
   *     (`getDataSegmentId` enumeration) — one task per segment on a
   *     cluster, the historical fan-out.
-  *   - '''Time-interval segment PRUNING''': pushed `__time` bounds drop
-  *     whole segments whose interval cannot intersect at PLANNING time
+  *   - '''Time-interval segment PRUNING''': the [[Domain]] of the
+  *     pushed `__time` bounds drops whole segments whose interval
+  *     cannot intersect it at PLANNING time
   *     — Druid's defining scan optimization; dimension equality/IN
   *     pushes into the per-segment row filter
   *     (`DruidFilterExpressionConverter`), everything else residual.
@@ -145,11 +146,10 @@ class DruidSegmentTable(options: CaseInsensitiveStringMap) extends ReadTable {
     new DruidScanBuilder(dsName)
 }
 
-/** The pushed per-segment work: a time window, dimension term filters,
-  * and optionally a grouped aggregation answered segment-side. */
-final case class DruidQuerySpec(
-    tsLo: Long, tsHi: Long, // [tsLo, tsHi)
-    dimEq: Seq[(String, Seq[String])], // dim -> allowed values
+/** The pushed per-segment work: the [[TupleDomain]] of a `__time`
+  * window and dimension values, and optionally a grouped aggregation
+  * answered segment-side. */
+final case class DruidQuerySpec(domain: TupleDomain,
     agg: Option[DruidAggSpec]) extends Serializable
 
 final case class DruidAggSpec(groupDims: Seq[String],
@@ -162,33 +162,23 @@ class DruidScanBuilder(dsName: String)
 
   private val defn = DruidStore.datasource(dsName).defn
   private var pushed: Array[Filter] = Array.empty
-  private var tsLo = Long.MinValue
-  private var tsHi = Long.MaxValue
-  private var dimEq: Seq[(String, Seq[String])] = Seq.empty
+  private var domain = TupleDomain.All
   private var aggSpec: Option[DruidAggSpec] = None
   private var required: StructType = defn.schema
 
   private def isDim(f: String) = defn.dims.contains(f)
 
+  /** `__time` ranges and dimension values push; so does IS NOT NULL
+    * on either. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val eqs = mutable.ArrayBuffer.empty[(String, Seq[String])]
-    val ok = filters.filter {
-      case GreaterThan("__time", v: Long) => tsLo = math.max(tsLo, v + 1); true
-      case GreaterThanOrEqual("__time", v: Long) =>
-        tsLo = math.max(tsLo, v); true
-      case LessThan("__time", v: Long) => tsHi = math.min(tsHi, v); true
-      case LessThanOrEqual("__time", v: Long) =>
-        tsHi = math.min(tsHi, v + 1); true
-      case EqualTo(a, v) if isDim(a) && v != null =>
-        eqs += ((a, Seq(v.toString))); true
-      case In(a, vs) if isDim(a) && vs.nonEmpty && !vs.contains(null) =>
-        eqs += ((a, vs.map(_.toString).toSeq)); true
-      case IsNotNull(a) if a == "__time" || isDim(a) => true // never null
-      case _ => false
+    val (taken, d) = TupleDomain.push(filters,
+      TupleDomain.types(defn.schema)) { (c, d) =>
+      (c == "__time" && (d.isNotNull || d.interval.isDefined)) ||
+        (isDim(c) && (d.isNotNull || d.values.isDefined))
     }
-    dimEq = eqs.toSeq
-    pushed = ok
-    filters.filterNot(ok.contains)
+    pushed = taken
+    domain = d
+    filters.filterNot(taken.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -238,7 +228,7 @@ class DruidScanBuilder(dsName: String)
 
   override def build(): Scan =
     new DruidScan(dsName,
-      DruidQuerySpec(tsLo, tsHi, dimEq, aggSpec), required, pushed)
+      DruidQuerySpec(domain, aggSpec), required, pushed)
 }
 
 final case class DruidSegmentSplit(dsName: String, segmentStart: Long,
@@ -255,10 +245,7 @@ final case class DruidSegmentSplit(dsName: String, segmentStart: Long,
     val rows: Vector[(Long, Seq[String], Seq[Any])] =
       if (seg == null) Vector.empty
       else seg.synchronized(seg.rows.toVector).filter { case (ts, dims, _) =>
-        ts >= spec.tsLo && ts < spec.tsHi &&
-          spec.dimEq.forall { case (d, allowed) =>
-            allowed.contains(dims(dimIdx(d)))
-          }
+        spec.domain.matches(c => if (c == "__time") ts else dims(dimIdx(c)))
       }
 
     val out: Iterator[Seq[Any]] = spec.agg match {
@@ -358,7 +345,7 @@ class DruidScan(dsName: String, spec: DruidQuerySpec,
     * Druid's defining scan optimization; this is the same decision
     * deferred to execution, when the join has revealed WHICH times
     * matter. */
-  @volatile private var runtimeTimes: Option[Seq[Long]] = None
+  @volatile private var runtimeTimes: Option[Domain] = None
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -366,12 +353,10 @@ class DruidScan(dsName: String, spec: DruidQuerySpec,
       .column("__time"))
 
   override def filter(filters: Array[Filter]): Unit = {
-    runtimeTimes = filters.collectFirst {
-      case In("__time", vs) if vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Number]) =>
-        vs.toSeq.map(_.asInstanceOf[Number].longValue())
-      case EqualTo("__time", v: Number) => Seq(v.longValue())
-    }
+    runtimeTimes = TupleDomain.push(filters,
+      TupleDomain.types(DruidStore.datasource(dsName).defn.schema)) {
+      (c, d) => c == "__time" && d.values.isDefined
+    }._2.get("__time")
   }
 
   override def description(): String =
@@ -385,10 +370,12 @@ class DruidScan(dsName: String, spec: DruidQuerySpec,
     val ds = DruidStore.datasource(dsName)
     val g = ds.defn.granularityMs
     import scala.jdk.CollectionConverters._
+    val times = (spec.domain.get("__time") ++ runtimeTimes)
+      .reduceOption(_ intersect _)
     ds.segments.keySet().asScala.toSeq.sorted
-      .filter(start => start < spec.tsHi && start + g > spec.tsLo)
-      .filter(start => runtimeTimes.forall(_.exists(t =>
-        t >= start && t < start + g)))
+      .filter(start => times.forall(_.overlaps(Range(Some(Bound(start, true)),
+        if (start > Long.MaxValue - g) None
+        else Some(Bound(start + g, false))))))
       .map(start =>
         DruidSegmentSplit(dsName, start, spec, required): InputPartition)
       .toArray

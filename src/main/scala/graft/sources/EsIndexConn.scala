@@ -8,7 +8,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,14 +33,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     Documents route to shards by `hash(_id) % shards`, ES's own
   *     routing default.
   *   - '''Predicate pushdown''' carries the surface
-  *     `ElasticsearchQueryBuilder` compiles from the TupleDomain
-  *     (`:128-210`): a bool-MUST of TermQuery (point values, also IN
-  *     disjunctions), RangeQuery (gt/gte/lt/lte), ExistsQuery
-  *     (IS NULL / IS NOT NULL) over varchar/bigint/integer/double/
-  *     boolean columns — and NOTHING more (the reference's SQL surface
-  *     pushes no full-text queries). Everything else stays a residual
-  *     Spark filter, exactly like the reference re-filters outside the
-  *     domain.
+  *     `ElasticsearchQueryBuilder` compiles from the [[TupleDomain]]
+  *     (`:128-210`): a bool-MUST of TermQuery (values of varchar and
+  *     boolean fields, also IN disjunctions), RangeQuery (a range or
+  *     one value of bigint/integer/double fields, compared in the
+  *     field's type), ExistsQuery (IS NULL / IS NOT NULL) — and NOTHING
+  *     more (the reference's SQL surface pushes no full-text queries).
+  *     Everything else stays a residual Spark filter, exactly like the
+  *     reference re-filters outside the domain.
   *   - '''Execution is index-driven, not scan-driven''': each shard
   *     holds posting lists per term (keyword fields) and value-sorted
   *     offset arrays per numeric field, built at [[EsStore.refresh]]
@@ -66,15 +66,17 @@ object EsStore {
 
   final case class Mapping(fields: Seq[(String, DataType)])
 
-  final class Shard {
+  /** One shard of an index whose fields have `types`. */
+  final class Shard(private[sources] val types: Map[String, DataType]) {
     private[sources] val ids = mutable.ArrayBuffer.empty[String]
     private[sources] val docs = mutable.ArrayBuffer.empty[Map[String, Any]]
     // keyword field -> term -> ascending doc offsets (posting list)
     private[sources] var terms
       : Map[String, Map[String, Array[Int]]] = Map.empty
-    // numeric field -> (value, offset) sorted by value (BKD-lite)
+    // numeric field -> (value, offset) sorted by value in the field's
+    // type (BKD-lite)
     private[sources] var sorted
-      : Map[String, Array[(Double, Int)]] = Map.empty
+      : Map[String, Array[(Any, Int)]] = Map.empty
     // field -> offsets where the field exists
     private[sources] var exists: Map[String, Array[Int]] = Map.empty
     private[sources] var fresh = false
@@ -100,7 +102,7 @@ object EsStore {
           "(the reference pushes varchar/bigint/integer/double/boolean)")
     }
     indexes.put(name,
-      Index(name, Array.fill(shards)(new Shard), Mapping(fields)))
+      Index(name, Array.fill(shards)(new Shard(fields.toMap)), Mapping(fields)))
   }
 
   def drop(name: String): Unit = indexes.remove(name)
@@ -142,7 +144,7 @@ object EsStore {
           val terms = mutable.Map.empty[String,
             mutable.Map[String, mutable.ArrayBuffer[Int]]]
           val sorted = mutable.Map.empty[String,
-            mutable.ArrayBuffer[(Double, Int)]]
+            mutable.ArrayBuffer[(Any, Int)]]
           val exists = mutable.Map.empty[String, mutable.ArrayBuffer[Int]]
           ix.mapping.fields.foreach { case (f, dt) =>
             var i = 0
@@ -155,10 +157,7 @@ object EsStore {
                       .getOrElseUpdate(v.toString, mutable.ArrayBuffer.empty) += i
                   case _ =>
                     sorted.getOrElseUpdate(f, mutable.ArrayBuffer.empty) +=
-                      ((v match {
-                        case n: Number => n.doubleValue()
-                        case other => other.toString.toDouble
-                      }, i))
+                      ((v, i))
                 }
               }
               i += 1
@@ -166,8 +165,9 @@ object EsStore {
           }
           s.terms = terms.view.mapValues(
             _.view.mapValues(_.toArray).toMap).toMap
-          s.sorted = sorted.view.mapValues(
-            _.sortBy(_._1).toArray).toMap
+          s.sorted = sorted.map { case (f, vs) =>
+            f -> vs.sortBy(_._1)(Domain.ordering(s.types(f))).toArray
+          }.toMap
           s.exists = exists.view.mapValues(_.toArray).toMap
           s.fresh = true
         }
@@ -181,8 +181,8 @@ object EsStore {
   case object MatchAll extends Query
   /** TermQuery; `values` > 1 is the IN disjunction (a terms query). */
   final case class Terms(field: String, values: Seq[String]) extends Query
-  final case class RangeQ(field: String, lo: Option[Double],
-      loInc: Boolean, hi: Option[Double], hiInc: Boolean) extends Query
+  final case class RangeQ(field: String, lo: Option[Any],
+      loInc: Boolean, hi: Option[Any], hiInc: Boolean) extends Query
   final case class ExistsQ(field: String) extends Query
   final case class MissingQ(field: String) extends Query
   final case class BoolMust(must: Seq[Query]) extends Query
@@ -199,30 +199,21 @@ object EsStore {
       else lists.flatten.distinct.sorted.toArray
     case RangeQ(f, lo, loInc, hi, hiInc) =>
       val arr = s.sorted.getOrElse(f, Array.empty)
-      // binary-search the bounds on the value-sorted array
-      def lower: Int = lo match {
-        case None => 0
-        case Some(v) =>
-          var l = 0; var r = arr.length
-          while (l < r) {
-            val m = (l + r) >>> 1
-            if (arr(m)._1 < v || (!loInc && arr(m)._1 == v)) l = m + 1
-            else r = m
-          }
-          l
+      val ord = Domain.ordering(s.types(f))
+      // binary-search the bounds on the value-sorted array: the first
+      // offset past every value below v (and v itself unless `keep`)
+      def after(v: Any, keep: Boolean): Int = {
+        var l = 0; var r = arr.length
+        while (l < r) {
+          val m = (l + r) >>> 1
+          val c = ord.compare(arr(m)._1, v)
+          if (c < 0 || (!keep && c == 0)) l = m + 1
+          else r = m
+        }
+        l
       }
-      def upper: Int = hi match {
-        case None => arr.length
-        case Some(v) =>
-          var l = 0; var r = arr.length
-          while (l < r) {
-            val m = (l + r) >>> 1
-            if (arr(m)._1 < v || (hiInc && arr(m)._1 == v)) l = m + 1
-            else r = m
-          }
-          l
-      }
-      val from = lower; val until = upper
+      val from = lo.fold(0)(after(_, loInc))
+      val until = hi.fold(arr.length)(after(_, !hiInc))
       if (from >= until) Array.empty
       else arr.slice(from, until).map(_._2).sorted
     case ExistsQ(f) => s.exists.getOrElse(f, Array.empty)
@@ -268,10 +259,11 @@ class EsIndexTable(options: CaseInsensitiveStringMap) extends ReadTable {
     new EsScanBuilder(indexName, schema())
 }
 
-/** Compiles Spark source filters onto the reference's query surface —
-  * the `ElasticsearchQueryBuilder.buildSearchQuery` analog. Filters
-  * that compile are FULLY handled by the index (exact term/range/exists
-  * evaluation, so Spark plans no re-filter); the rest stay residual. */
+/** Compiles each pushed filter's [[TupleDomain]] onto the reference's
+  * query surface — the `ElasticsearchQueryBuilder.buildSearchQuery`
+  * analog. Filters that compile are FULLY handled by the index (exact
+  * term/range/exists evaluation, so Spark plans no re-filter); the rest
+  * stay residual. */
 class EsScanBuilder(indexName: String, full: StructType)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
@@ -282,50 +274,21 @@ class EsScanBuilder(indexName: String, full: StructType)
   private var queries: Seq[EsStore.Query] = Seq.empty
   private var required: StructType = full
 
-  private def num(v: Any): Option[Double] = v match {
-    case n: Number => Some(n.doubleValue())
-    case _ => None
-  }
-
-  private def termable(f: String): Boolean =
-    fieldTypes.get(f).exists(dt => dt == StringType || dt == BooleanType)
-  private def rangeable(f: String): Boolean =
-    fieldTypes.get(f).exists(dt =>
-      dt == LongType || dt == IntegerType || dt == DoubleType)
-
   /** One Spark filter -> one query, or None (stays residual). */
-  private def compile(f: Filter): Option[EsStore.Query] = f match {
-    case EqualTo(a, v) if termable(a) && v != null =>
-      Some(EsStore.Terms(a, Seq(v.toString)))
-    case In(a, vs) if termable(a) && vs.nonEmpty && !vs.contains(null) =>
-      Some(EsStore.Terms(a, vs.map(_.toString).toSeq))
-    case EqualTo(a, v) if rangeable(a) =>
-      num(v).map(d => EsStore.RangeQ(a, Some(d), true, Some(d), true))
-    case GreaterThan(a, v) if rangeable(a) =>
-      num(v).map(d => EsStore.RangeQ(a, Some(d), false, None, false))
-    case GreaterThanOrEqual(a, v) if rangeable(a) =>
-      num(v).map(d => EsStore.RangeQ(a, Some(d), true, None, false))
-    case LessThan(a, v) if rangeable(a) =>
-      num(v).map(d => EsStore.RangeQ(a, None, false, Some(d), false))
-    case LessThanOrEqual(a, v) if rangeable(a) =>
-      num(v).map(d => EsStore.RangeQ(a, None, false, Some(d), true))
-    case IsNotNull(a) if fieldTypes.contains(a) =>
-      Some(EsStore.ExistsQ(a))
-    case IsNull(a) if fieldTypes.contains(a) =>
-      Some(EsStore.MissingQ(a))
-    case And(l, r) =>
-      (compile(l), compile(r)) match {
-        case (Some(a), Some(b)) => Some(EsStore.BoolMust(Seq(a, b)))
-        case _ => None // partial AND stays residual as a whole
-      }
-    case _ => None
-  }
+  private def compile(f: Filter): Option[EsStore.Query] =
+    TupleDomain.of(f, fieldTypes.get).flatMap { td =>
+      val qs = td.domains.toSeq.map { case (c, d) => EsScan.query(c, d) }
+      if (qs.exists(_.isEmpty)) None
+      else if (qs.size == 1) qs.head
+      else Some(EsStore.BoolMust(qs.flatten))
+    }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => compile(f).isDefined)
-    pushed = ok
-    queries = ok.flatMap(compile(_)).toSeq
-    residual // Spark re-applies only what the index cannot answer
+    val compiled = filters.map(f => f -> compile(f))
+    pushed = compiled.collect { case (f, Some(_)) => f }
+    queries = compiled.flatMap(_._2).toSeq
+    // Spark re-applies only what the index cannot answer
+    filters.filterNot(pushed.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -404,13 +367,9 @@ class EsScan(indexName: String, query: EsStore.Query,
       .toArray
 
   override def filter(filters: Array[Filter]): Unit = {
-    runtimeQs = filters.toSeq.flatMap {
-      case In(f, vs) if vs.nonEmpty && !vs.contains(null) =>
-        Some(EsStore.Terms(f, vs.map(_.toString).toSeq))
-      case EqualTo(f, v) if v != null =>
-        Some(EsStore.Terms(f, Seq(v.toString)))
-      case _ => None
-    }
+    runtimeQs = TupleDomain.push(filters, fieldTypes.get) {
+      (_, d) => d.values.isDefined
+    }._2.domains.toSeq.flatMap { case (c, d) => EsScan.query(c, d) }
   }
 
   override def description(): String =
@@ -436,4 +395,26 @@ class EsScan(indexName: String, query: EsStore.Query,
       s.synchronized(EsStore.search(s, query).length.toLong)).sum
     ScanStats(rows, rows * 256L)
   }
+}
+
+object EsScan {
+
+  /** The query of one field's domain: the values of a keyword or
+    * boolean field are terms, a range or one value of a numeric field
+    * is a range, and IS [NOT] NULL is missing / exists. None for any
+    * other shape. */
+  private[sources] def query(field: String, d: Domain): Option[EsStore.Query] =
+    if (d.isNotNull) Some(EsStore.ExistsQ(field))
+    else if (d.isOnlyNull) Some(EsStore.MissingQ(field))
+    else d.dt match {
+      case StringType | BooleanType =>
+        d.values.map(vs => EsStore.Terms(field, vs.map(_.toString)))
+      case LongType | IntegerType | DoubleType =>
+        d.values.collect { case Seq(v) => Range.single(v) }
+          .orElse(d.interval).map { r =>
+            EsStore.RangeQ(field, r.lo.map(_.value), r.lo.exists(_.inclusive),
+              r.hi.map(_.value), r.hi.exists(_.inclusive))
+          }
+      case _ => None
+    }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -52,47 +52,38 @@ class GenTable(gen: ClosedFormGen, table: String, sf: Double, parts: Int)
     new GenScanBuilder(gen, table, sf, parts)
 }
 
-/** Column pruning + key-range predicate pushdown: supported key
-  * predicates are fully absorbed (generation range narrows, Spark does
-  * NOT re-evaluate them); everything else stays with Spark. */
+/** Column pruning + key-range predicate pushdown: a key filter whose
+  * [[Domain]] is a range or one non-negative value is fully absorbed
+  * (generation range narrows, Spark does NOT re-evaluate it);
+  * everything else stays with Spark. */
 class GenScanBuilder(gen: ClosedFormGen, table: String, sf: Double, parts: Int)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var required: StructType = gen.schemaOf(table)
   private var pushed: Array[Filter] = Array.empty
-  private var kLo: Long = Long.MinValue
-  private var kHi: Long = Long.MaxValue
+  private var keys: Option[Domain] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val key = gen.keyColumn(table)
-    val (supported, rest) = filters.partition {
-      case EqualTo(c, v: Number) => c == key && v.longValue() >= 0
-      case GreaterThan(c, _: Number) => c == key
-      case GreaterThanOrEqual(c, _: Number) => c == key
-      case LessThan(c, _: Number) => c == key
-      case LessThanOrEqual(c, _: Number) => c == key
-      case _ => false
+    val (taken, domain) = TupleDomain.push(filters,
+      TupleDomain.types(gen.schemaOf(table))) { (c, d) =>
+      c == key && (d.interval.isDefined || d.values.exists {
+        case Seq(v: Number) => v.longValue() >= 0
+        case _ => false
+      })
     }
-    supported.foreach {
-      case EqualTo(_, v: Number) =>
-        kLo = math.max(kLo, v.longValue()); kHi = math.min(kHi, v.longValue())
-      case GreaterThan(_, v: Number) => kLo = math.max(kLo, v.longValue() + 1)
-      case GreaterThanOrEqual(_, v: Number) => kLo = math.max(kLo, v.longValue())
-      case LessThan(_, v: Number) => kHi = math.min(kHi, v.longValue() - 1)
-      case LessThanOrEqual(_, v: Number) => kHi = math.min(kHi, v.longValue())
-      case _ =>
-    }
-    pushed = supported
-    rest
+    pushed = taken
+    keys = domain.get(key)
+    filters.filterNot(taken.contains)
   }
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    new GenScan(gen, table, sf, parts, required, pushed, kLo, kHi)
+    new GenScan(gen, table, sf, parts, required, pushed, keys)
 }
 
 /** Rows [start, end) of `table`, generated column by column. */
@@ -113,7 +104,7 @@ final case class GenRange(gen: ClosedFormGen, table: String, sf: Double,
 }
 
 class GenScan(gen: ClosedFormGen, table: String, sf: Double, parts: Int,
-    required: StructType, pushed: Array[Filter], kLo: Long, kHi: Long)
+    required: StructType, pushed: Array[Filter], keys: Option[Domain])
     extends ConnectorScan(required)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -122,17 +113,19 @@ class GenScan(gen: ClosedFormGen, table: String, sf: Double, parts: Int,
 
   private def prunedRange: (Long, Long) = {
     val n = gen.rowCount(table, sf)
-    if (kLo == Long.MinValue && kHi == Long.MaxValue) (0L, n)
-    else {
-      // guard the index arithmetic against overflow (a `< Long.MaxValue`
-      // bound times a lines-per-key factor would wrap) WITHOUT clamping
-      // into [0, n] — key spaces may sit far above the row count
-      // (julian d_date_sk, week-based inv_date_sk); each generator's
-      // inverse clamps its OUTPUT to [0, n]
-      val cap = 1L << 40
-      gen.indexRangeForKeys(table,
-        math.max(-cap, math.min(cap, kLo)),
-        math.max(-cap, math.min(cap, kHi)), n)
+    keys.map(_.longSpan) match {
+      case None | Some(Some((Long.MinValue, Long.MaxValue))) => (0L, n)
+      case Some(None) => (0L, 0L)
+      case Some(Some((kLo, kHi))) =>
+        // guard the index arithmetic against overflow (a `< Long.MaxValue`
+        // bound times a lines-per-key factor would wrap) WITHOUT clamping
+        // into [0, n] — key spaces may sit far above the row count
+        // (julian d_date_sk, week-based inv_date_sk); each generator's
+        // inverse clamps its OUTPUT to [0, n]
+        val cap = 1L << 40
+        gen.indexRangeForKeys(table,
+          math.max(-cap, math.min(cap, kLo)),
+          math.max(-cap, math.min(cap, kHi)), n)
     }
   }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -40,9 +40,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - '''Predicate pushdown''' carries the
   *     `KuduClientSession.addConstraintPredicates` surface
   *     (`:468-532`): eq / IN-list / gt / ge / lt / le / IS NULL /
-  *     IS NOT NULL per column, translated one filter to one
-  *     `KuduPredicate` analog and evaluated at the tablet (rows are
-  *     filtered before they reach Spark; a contradictory predicate
+  *     IS NOT NULL per column, as the [[TupleDomain]] the reference
+  *     builds its `KuduPredicate`s from, evaluated at the tablet (rows
+  *     are filtered before they reach Spark; a contradictory predicate
   *     returns zero splits, `:159-161`). Anything else stays a
   *     residual Spark filter.
   *   - '''Column projection''' pushes like
@@ -225,15 +225,6 @@ object KuduStore {
       _ => new ConcurrentSkipListMap[String, Seq[Any]]())
     tablet.put(t.pkOf(values), values)
   }
-
-  // ---- the KuduPredicate surface -----------------------------------
-
-  sealed trait Pred { def col: String }
-  final case class EqPred(col: String, v: Any) extends Pred
-  final case class InPred(col: String, vs: Seq[Any]) extends Pred
-  final case class CmpPred(col: String, lo: Option[Any], loInc: Boolean,
-      hi: Option[Any], hiInc: Boolean) extends Pred
-  final case class NullPred(col: String, isNull: Boolean) extends Pred
 }
 
 class KuduTabletProvider extends ConnectorProvider("graft-kudu") {
@@ -271,58 +262,24 @@ class KuduTabletTable(options: CaseInsensitiveStringMap)
     new KuduWriteBuilder(tableName, info.schema())
 }
 
-/** `addConstraintPredicates:468-532`: one Spark filter to one
-  * KuduPredicate analog; non-translatable filters stay residual. */
+/** `addConstraintPredicates:468-532`: every filter whose
+  * [[TupleDomain]] is on table columns pushes and is evaluated at the
+  * tablet; the rest stay residual. */
 class KuduScanBuilder(tableName: String, full: StructType,
     viaCatalog: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
-  import KuduStore._
-
-  private val t = KuduStore.table(tableName)
   private var pushed: Array[Filter] = Array.empty
-  private var preds: Seq[Pred] = Seq.empty
+  private var domain = TupleDomain.All
   private var required: StructType = full
 
-  private def isCol(a: String) = t.colIdx.contains(a)
-
-  private def norm(col: String, v: Any): Any =
-    (t.columns(t.colIdx(col)).dt, v) match {
-      case (LongType, n: Number) => n.longValue()
-      case (DoubleType, n: Number) => n.doubleValue()
-      case (StringType, s) => s.toString
-      case _ => v
-    }
-
-  private def compile(f: Filter): Option[Seq[Pred]] = f match {
-    case EqualTo(a, v) if isCol(a) && v != null =>
-      Some(Seq(EqPred(a, norm(a, v))))
-    case In(a, vs) if isCol(a) && vs.nonEmpty && !vs.contains(null) =>
-      Some(Seq(InPred(a, vs.toSeq.map(norm(a, _)))))
-    case GreaterThan(a, v) if isCol(a) && v != null =>
-      Some(Seq(CmpPred(a, Some(norm(a, v)), false, None, false)))
-    case GreaterThanOrEqual(a, v) if isCol(a) && v != null =>
-      Some(Seq(CmpPred(a, Some(norm(a, v)), true, None, false)))
-    case LessThan(a, v) if isCol(a) && v != null =>
-      Some(Seq(CmpPred(a, None, false, Some(norm(a, v)), false)))
-    case LessThanOrEqual(a, v) if isCol(a) && v != null =>
-      Some(Seq(CmpPred(a, None, false, Some(norm(a, v)), true)))
-    case IsNull(a) if isCol(a) => Some(Seq(NullPred(a, true)))
-    case IsNotNull(a) if isCol(a) => Some(Seq(NullPred(a, false)))
-    case And(l, r) =>
-      (compile(l), compile(r)) match {
-        case (Some(a), Some(b)) => Some(a ++ b)
-        case _ => None
-      }
-    case _ => None
-  }
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => compile(f).isDefined)
-    pushed = ok
-    preds = ok.flatMap(compile(_).get).toSeq
-    residual
+    val (taken, d) =
+      TupleDomain.push(filters, TupleDomain.types(full))((_, _) => true)
+    pushed = taken
+    domain = d
+    filters.filterNot(taken.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -331,7 +288,7 @@ class KuduScanBuilder(tableName: String, full: StructType,
     required = requiredSchema
 
   override def build(): Scan =
-    new KuduScan(tableName, preds, required, pushed, viaCatalog)
+    new KuduScan(tableName, domain, required, pushed, viaCatalog)
 }
 
 /** One scan token = one surviving tablet (`buildKuduSplits:188-193`).
@@ -339,7 +296,7 @@ class KuduScanBuilder(tableName: String, full: StructType,
   * reports KeyGroupedPartitioning can group splits per bucket. */
 final case class KuduTokenSplit(table: String, bucket: Int,
     rangeLo: Option[Long], rangeHi: Option[Long], required: StructType,
-    preds: Seq[KuduStore.Pred]) extends ConnectorSplit
+    domain: TupleDomain) extends ConnectorSplit
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -353,36 +310,10 @@ final case class KuduTokenSplit(table: String, bucket: Int,
       if (tablet == null) Iterator.empty
       else tablet.values().iterator().asScala
 
-    def cmp(col: String, a: Any, b: Any): Int =
-      t.columns(t.colIdx(col)).dt match {
-        case StringType => a.toString.compareTo(b.toString)
-        case LongType => java.lang.Long.compare(
-          a.asInstanceOf[Number].longValue(),
-          b.asInstanceOf[Number].longValue())
-        case DoubleType => java.lang.Double.compare(
-          a.asInstanceOf[Number].doubleValue(),
-          b.asInstanceOf[Number].doubleValue())
-        case BooleanType => java.lang.Boolean.compare(
-          a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-        case other => sys.error(s"graft-kudu: bad type $other")
-      }
-
     // the tablet-side KuduPredicate evaluation
-    def matches(values: Seq[Any]): Boolean = preds.forall { pr =>
-      val v = values(t.colIdx(pr.col))
-      pr match {
-        case NullPred(_, isNull) => (v == null) == isNull
-        case EqPred(c, x) => v != null && cmp(c, v, x) == 0
-        case InPred(c, xs) => v != null && xs.exists(cmp(c, v, _) == 0)
-        case CmpPred(c, l, lInc, h, hInc) => v != null &&
-          l.forall(b => { val d = cmp(c, v, b); d > 0 || (lInc && d == 0) }) &&
-          h.forall(b => { val d = cmp(c, v, b); d < 0 || (hInc && d == 0) })
-      }
-    }
-
     val hits = rows.filter { values =>
       KuduStore.rowsScanned.incrementAndGet()
-      matches(values)
+      domain.matches(c => values(t.colIdx(c)))
     }
 
     hits.map { values =>
@@ -401,7 +332,7 @@ final case class KuduTokenSplit(table: String, bucket: Int,
   }
 }
 
-class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
+class KuduScan(tableName: String, domain: TupleDomain,
     required: StructType, pushedFilters: Array[Filter],
     viaCatalog: Boolean = false)
     extends ConnectorScan(required)
@@ -447,7 +378,7 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
     * the tablets holding matching keys, decided at execution). Rows
     * are NOT re-filtered with the runtime values: pruning is an I/O
     * optimization, the join re-applies exact semantics. */
-  @volatile private var runtimePreds: Seq[Pred] = Seq.empty
+  @volatile private var runtimeDomain = TupleDomain.All
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -456,13 +387,9 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
       .toArray
 
   override def filter(filters: Array[Filter]): Unit = {
-    runtimePreds = filters.toSeq.flatMap {
-      case org.apache.spark.sql.sources.In(c, vs) if vs.nonEmpty =>
-        Some(InPred(c, vs.toSeq))
-      case org.apache.spark.sql.sources.EqualTo(c, v) =>
-        Some(EqPred(c, v))
-      case _ => None
-    }
+    runtimeDomain = TupleDomain.push(filters,
+      c => t.colIdx.get(c).map(t.columns(_).dt))(
+      (_, d) => d.values.isDefined)._2
   }
 
   override def description(): String =
@@ -473,78 +400,44 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
   /** Tablet pruning, Kudu's planning half: hash levels prune when
     * every hash column carries a bounded value set; range partitions
     * prune against range-column bounds. */
-  private def computePlanned(ps: Seq[Pred]): Array[InputPartition] = {
-    // bounded value sets per column from eq/in predicates
-    val valueSets: Map[String, Seq[Seq[Any]]] =
-      ps.collect {
-        case EqPred(c, v) => c -> Seq(v)
-        case InPred(c, vs) => c -> vs
-      }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    // a contradictory eq pair (a=1 AND a=2) -> zero splits (`:159-161`)
-    val perCol: Map[String, Option[Seq[Any]]] =
-      valueSets.view.mapValues { sets =>
-        val inter = sets.reduceLeft((a, b) => a.filter(b.contains))
-        if (inter.isEmpty) None else Some(inter)
-      }.toMap
-    if (perCol.values.exists(_.isEmpty)) Array.empty
+  private def computePlanned(d: TupleDomain): Array[InputPartition] =
+    if (d.isNone) Array.empty
     else {
       val buckets: Seq[Int] =
-        if (t.hashCols.nonEmpty && t.hashCols.forall(perCol.contains)) {
-          // cartesian product of the hash columns' value sets
-          val combos = t.hashCols.foldLeft(Seq(Seq.empty[Any])) {
-            (acc, c) => acc.flatMap(p => perCol(c).get.map(p :+ _))
-          }
-          if (combos.size > 64) 0 until t.hashBuckets // too wide: no prune
-          else combos.map { combo =>
-            val values = t.columns.map(c =>
-              t.hashCols.indexOf(c.name) match {
-                case -1 => null
-                case i => combo(i)
-              })
-            t.bucketOf(values)
-          }.distinct.sorted
+        t.hashCols.map(c => d.get(c).flatMap(_.values)) match {
+          case vs if t.hashCols.nonEmpty && vs.forall(_.isDefined) =>
+            // cartesian product of the hash columns' value sets
+            val combos = vs.flatten.foldLeft(Seq(Seq.empty[Any])) {
+              (acc, values) => acc.flatMap(p => values.map(p :+ _))
+            }
+            if (combos.size > 64) 0 until t.hashBuckets // too wide: no prune
+            else combos.map { combo =>
+              val values = t.columns.map(c =>
+                t.hashCols.indexOf(c.name) match {
+                  case -1 => null
+                  case i => combo(i)
+                })
+              t.bucketOf(values)
+            }.distinct.sorted
+          case _ => 0 until t.hashBuckets
         }
-        else 0 until t.hashBuckets
-      val (qLo, qHi) = t.rangeCol match {
-        case None => (None, None)
-        case Some(rc) =>
-          var lo: Option[Long] = None; var hi: Option[Long] = None
-          ps.foreach {
-            case EqPred(`rc`, v) =>
-              val x = v.asInstanceOf[Number].longValue()
-              lo = Some(lo.fold(x)(math.max(_, x)))
-              hi = Some(hi.fold(x)(math.min(_, x)))
-            case CmpPred(`rc`, l, lInc, h, hInc) =>
-              l.foreach { b =>
-                val x = b.asInstanceOf[Number].longValue() +
-                  (if (lInc) 0 else 1)
-                lo = Some(lo.fold(x)(math.max(_, x)))
-              }
-              h.foreach { b =>
-                val x = b.asInstanceOf[Number].longValue() +
-                  (if (hInc) 0 else -1)
-                hi = Some(hi.fold(x)(math.min(_, x)))
-              }
-            case _ => ()
-          }
-          (lo, hi)
-      }
-      val survivingRanges = t.ranges.filter(_.intersects(qLo, qHi))
+      val rangeDomain = t.rangeCol.flatMap(d.get)
+      val survivingRanges = t.ranges.filter(r => rangeDomain.forall(
+        _.overlaps(Range(r.lo.map(Bound(_, true)), r.hi.map(Bound(_, false))))))
       (for {
         b <- buckets
         r <- survivingRanges
-      } yield KuduTokenSplit(tableName, b, r.lo, r.hi, required, preds)
+      } yield KuduTokenSplit(tableName, b, r.lo, r.hi, required, domain)
         : InputPartition)
         .toArray
     }
-  }
 
   // stats report the STATIC plan (runtime filters arrive later);
   // execution re-plans with whatever runtime values Spark handed over
-  private lazy val planned: Array[InputPartition] = computePlanned(preds)
+  private lazy val planned: Array[InputPartition] = computePlanned(domain)
 
   override def planInputPartitions(): Array[InputPartition] =
-    if (runtimePreds.isEmpty) planned
+    if (runtimeDomain == TupleDomain.All) planned
     else if (spjEligible)
       // a catalog-loaded SPJ-layout scan may have had its reported
       // KeyGroupedPartitioning honored — runtime In-filters must then
@@ -554,7 +447,7 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
       // Bare format() reads (viaCatalog=false) keep full pruning —
       // their reported partitioning is always dropped by Spark.
       planned
-    else computePlanned(preds ++ runtimePreds)
+    else computePlanned(domain.intersect(runtimeDomain))
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters}
-import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -124,20 +124,22 @@ class LocalFileScanBuilder(dir: String, pattern: String)
     extends ScanBuilder with SupportsPushDownFilters {
 
   private var pushed: Array[Filter] = Array.empty
+  private var domain = TupleDomain.All
 
-  // Accept timestamp bounds for file-level pruning; EVERYTHING stays
+  // Accept timestamp ranges for file-level pruning; EVERYTHING stays
   // residual (returned back) so Spark still filters row-level.
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case GreaterThan("timestamp", _) | GreaterThanOrEqual("timestamp", _) |
-           LessThan("timestamp", _) | LessThanOrEqual("timestamp", _) => true
-      case _ => false
+    val (taken, d) = TupleDomain.push(filters,
+      TupleDomain.types(LocalFileConn.schema)) {
+      (c, d) => c == "timestamp" && d.interval.isDefined
     }
+    pushed = taken
+    domain = d
     filters
   }
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new LocalFileScan(dir, pattern, pushed)
+  override def build(): Scan = new LocalFileScan(dir, pattern, pushed, domain)
 }
 
 /** One log file; blank lines skip. */
@@ -151,26 +153,16 @@ final case class LocalFileSplit(path: String) extends ConnectorSplit {
   }
 }
 
-class LocalFileScan(dir: String, pattern: String, pushed: Array[Filter])
-    extends ConnectorScan(LocalFileConn.schema) {
+class LocalFileScan(dir: String, pattern: String, pushed: Array[Filter],
+    domain: TupleDomain) extends ConnectorScan(LocalFileConn.schema) {
 
   override def description(): String =
     s"graft-localfile $dir pushed=[${pushed.mkString(", ")}]"
 
-  private def tsMicros(v: Any): Long = v match {
-    case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-    case i: java.time.Instant => i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case other => throw new IllegalArgumentException(other.getClass.getName)
-  }
-
-  /** Upper bound from the pushed timestamp predicates, if any. */
-  private def upperBound: Option[Long] = {
-    val ubs = pushed.collect {
-      case LessThan("timestamp", v) => tsMicros(v)
-      case LessThanOrEqual("timestamp", v) => tsMicros(v)
-    }
-    if (ubs.isEmpty) None else Some(ubs.min)
-  }
+  /** Upper bound (micros) of the pushed timestamp ranges, if any. */
+  private def upperBound: Option[Long] =
+    domain.get("timestamp").flatMap(_.span).flatMap(_.hi)
+      .map(_.value.asInstanceOf[Long])
 
   override def planInputPartitions(): Array[InputPartition] = {
     val d = new java.io.File(dir)

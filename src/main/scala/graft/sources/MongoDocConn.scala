@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,10 +35,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     `guessFieldType` empty return. No other connector here derives
   *     its schema from data.
   *   - '''Query-document pushdown''' mirrors `MongoSession.buildQuery`/
-  *     `buildPredicate` (`:243-325`): per-column predicates compile to
-  *     the $eq/$in/$gt/$gte/$lt/$lte/$exists operators, null checks to
-  *     the `$exists: false` arm — applied before documents reach Spark;
-  *     non-compilable filters stay residual.
+  *     `buildPredicate` (`:243-325`), which compile the [[TupleDomain]]
+  *     to the $eq/$in/$gt/$gte/$lt/$lte/$exists operators: the domain of
+  *     each top-level scalar field is applied to the value the field
+  *     reads as, before documents reach Spark; other filters stay
+  *     residual.
   *   - '''Split model''': ONE split per collection, the reference's own
   *     `MongoSplitManager.getSplits` (`:46-60` — a FixedSplitSource of
   *     exactly one split). That single-cursor bound is the reference's,
@@ -104,37 +105,11 @@ object MongoStore {
     })
   }
 
-  // ---- the query-document surface MongoSession.buildPredicate emits ----
-
-  sealed trait MQuery
-  final case class MEq(field: String, value: Any) extends MQuery
-  final case class MIn(field: String, values: Seq[Any]) extends MQuery
-  final case class MRange(field: String, lo: Option[Any], loInc: Boolean,
-      hi: Option[Any], hiInc: Boolean) extends MQuery
-  final case class MExists(field: String, exists: Boolean) extends MQuery
-
-  private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Number, y: Number) =>
-      Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
-    case (x: String, y: String) => Some(x.compareTo(y))
-    case (x: Boolean, y: Boolean) => Some(java.lang.Boolean.compare(x, y))
-    case _ => None
-  }
-
-  private[graft] def matches(doc: Map[String, Any], q: MQuery): Boolean =
-    q match {
-      case MEq(f, v) =>
-        doc.get(f).exists(d => cmp(d, v).contains(0))
-      case MIn(f, vs) =>
-        doc.get(f).exists(d => vs.exists(v => cmp(d, v).contains(0)))
-      case MRange(f, lo, loInc, hi, hiInc) =>
-        doc.get(f).filter(_ != null).exists { d =>
-          lo.forall(v => cmp(d, v).exists(c => c > 0 || (loInc && c == 0))) &&
-          hi.forall(v => cmp(d, v).exists(c => c < 0 || (hiInc && c == 0)))
-        }
-      case MExists(f, e) =>
-        doc.get(f).exists(_ != null) == e
-    }
+  /** Whether `doc` holds `domain`, each field read as `schema` types it. */
+  private[graft] def matches(doc: Map[String, Any], domain: TupleDomain,
+      schema: StructType): Boolean =
+    domain.matches(f => MongoCollSplit.convert(doc.getOrElse(f, null),
+      schema(f).dataType))
 }
 
 class MongoDocProvider extends ConnectorProvider("graft-mongo") {
@@ -170,47 +145,23 @@ class MongoDocTable(options: CaseInsensitiveStringMap)
     }
 }
 
-/** Compiles Spark filters onto the query-document operators —
-  * `MongoSession.buildPredicate`'s surface. Top-level scalar fields
-  * only (nested paths stay residual, like predicates outside the
-  * reference's TupleDomain). */
+/** Pushes the filters whose [[TupleDomain]] is on top-level scalar
+  * fields — `MongoSession.buildPredicate`'s surface. Nested paths stay
+  * residual, like predicates outside the reference's TupleDomain. */
 class MongoScanBuilder(collName: String, full: StructType)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
-  private def scalarField(f: String): Boolean =
-    full.fields.exists(sf => sf.name == f && (sf.dataType match {
-      case StringType | LongType | DoubleType | BooleanType => true
-      case _ => false
-    }))
-
   private var pushed: Array[Filter] = Array.empty
-  private var queries: Seq[MongoStore.MQuery] = Seq.empty
+  private var domain = TupleDomain.All
   private var required: StructType = full
 
-  private def compile(f: Filter): Option[MongoStore.MQuery] = f match {
-    case EqualTo(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MEq(a, v))
-    case In(a, vs) if scalarField(a) && vs.nonEmpty && !vs.contains(null) =>
-      Some(MongoStore.MIn(a, vs.toSeq))
-    case GreaterThan(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MRange(a, Some(v), false, None, false))
-    case GreaterThanOrEqual(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MRange(a, Some(v), true, None, false))
-    case LessThan(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MRange(a, None, false, Some(v), false))
-    case LessThanOrEqual(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MRange(a, None, false, Some(v), true))
-    case IsNull(a) if scalarField(a) => Some(MongoStore.MExists(a, false))
-    case IsNotNull(a) if scalarField(a) => Some(MongoStore.MExists(a, true))
-    case _ => None
-  }
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => compile(f).isDefined)
-    pushed = ok
-    queries = ok.flatMap(compile(_)).toSeq
-    residual
+    val (taken, d) =
+      TupleDomain.push(filters, TupleDomain.types(full))((_, _) => true)
+    pushed = taken
+    domain = d
+    filters.filterNot(taken.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -219,17 +170,16 @@ class MongoScanBuilder(collName: String, full: StructType)
     required = requiredSchema
 
   override def build(): Scan =
-    new MongoScan(collName, queries, required, pushed)
+    new MongoScan(collName, full, domain, required, pushed)
 }
 
 /** The reference's single split (`MongoSplitManager.java:46-60`). */
-final case class MongoCollSplit(coll: String,
-    queries: Seq[MongoStore.MQuery], required: StructType)
-    extends ConnectorSplit {
+final case class MongoCollSplit(coll: String, schema: StructType,
+    domain: TupleDomain, required: StructType) extends ConnectorSplit {
   override def rows(): Iterator[InternalRow] = {
     val c = MongoStore.collection(coll)
     c.synchronized(c.toVector).iterator
-      .filter(d => queries.forall(MongoStore.matches(d, _)))
+      .filter(MongoStore.matches(_, domain, schema))
       .map(d => InternalRow.fromSeq(required.fields.toSeq.map(f =>
         MongoCollSplit.convert(d.getOrElse(f.name, null), f.dataType))))
   }
@@ -255,7 +205,7 @@ object MongoCollSplit {
   }
 }
 
-class MongoScan(collName: String, queries: Seq[MongoStore.MQuery],
+class MongoScan(collName: String, schema: StructType, domain: TupleDomain,
     required: StructType, pushedFilters: Array[Filter])
     extends ConnectorScan(required)
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -266,13 +216,13 @@ class MongoScan(collName: String, queries: Seq[MongoStore.MQuery],
       "cols=" + required.fieldNames.mkString(",")
 
   override def planInputPartitions(): Array[InputPartition] =
-    Array(MongoCollSplit(collName, queries, required))
+    Array(MongoCollSplit(collName, schema, domain, required))
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val coll = MongoStore.collection(collName)
     val rows = coll.synchronized(
-      coll.count(d => queries.forall(MongoStore.matches(d, _))).toLong)
+      coll.count(MongoStore.matches(_, domain, schema)).toLong)
     ScanStats(rows, rows * 256L)
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Avg, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -52,8 +52,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (`:462-463`) holds — limit/TopN pushdown IS what flips the scan
   *     to broker mode.
   *   - '''Predicate pushdown''' (PQL WHERE): eq / IN / range / IS
-  *     (NOT) NULL per column, applied before rows reach Spark;
-  *     anything else residual.
+  *     (NOT) NULL per column, as a [[TupleDomain]] applied before rows
+  *     reach Spark; anything else residual.
   *
   * Read-only (Pinot ingests via its controller, not SQL INSERT);
   * population via [[PinotStore.ingest]] + [[PinotStore.seal]] — the
@@ -152,48 +152,16 @@ object PinotStore {
 
   // ---- the compiled query (the GeneratedPql analog) ----------------
 
-  sealed trait PPred { def col: String }
-  final case class PEq(col: String, v: Any) extends PPred
-  final case class PIn(col: String, vs: Seq[Any]) extends PPred
-  final case class PRange(col: String, lo: Option[Any], loInc: Boolean,
-      hi: Option[Any], hiInc: Boolean) extends PPred
-  final case class PNull(col: String, isNull: Boolean) extends PPred
-
   final case class PAgg(groupCols: Seq[String],
       aggs: Seq[(String, String, DataType)]) // (op, col|"", resultType)
   /** (column, ascending, nullsFirst) triples + the cap. */
   final case class PTopN(orders: Seq[(String, Boolean, Boolean)],
       limit: Int)
 
-  final case class PinotQuery(preds: Seq[PPred],
+  final case class PinotQuery(domain: TupleDomain,
       agg: Option[PAgg], topN: Option[PTopN], limit: Option[Int]) {
     def isBrokerQuery: Boolean =
       agg.isDefined || topN.isDefined || limit.isDefined
-  }
-
-  private[sources] def evalPred(t: PinotTable, values: Seq[Any],
-      p: PPred): Boolean = {
-    val v = values(t.colIdx(p.col))
-    def cmp(a: Any, b: Any): Int = t.columns(t.colIdx(p.col)).dt match {
-      case StringType => a.toString.compareTo(b.toString)
-      case LongType => java.lang.Long.compare(
-        a.asInstanceOf[Number].longValue(),
-        b.asInstanceOf[Number].longValue())
-      case DoubleType => java.lang.Double.compare(
-        a.asInstanceOf[Number].doubleValue(),
-        b.asInstanceOf[Number].doubleValue())
-      case BooleanType => java.lang.Boolean.compare(
-        a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-      case other => sys.error(s"graft-pinot: bad type $other")
-    }
-    p match {
-      case PNull(_, isNull) => (v == null) == isNull
-      case PEq(_, x) => v != null && cmp(v, x) == 0
-      case PIn(_, xs) => v != null && xs.exists(cmp(v, _) == 0)
-      case PRange(_, lo, loInc, hi, hiInc) => v != null &&
-        lo.forall(b => { val d = cmp(v, b); d > 0 || (loInc && d == 0) }) &&
-        hi.forall(b => { val d = cmp(v, b); d < 0 || (hiInc && d == 0) })
-    }
   }
 
   /** The broker: execute the whole compiled query over every segment
@@ -203,7 +171,7 @@ object PinotStore {
       required: StructType): Iterator[Seq[Any]] = {
     val all: Vector[Seq[Any]] = t.synchronized {
       t.segments.flatMap(_.rows).toVector
-    }.filter(r => q.preds.forall(evalPred(t, r, _)))
+    }.filter(r => q.domain.matches(c => r(t.colIdx(c))))
     q.agg match {
       case Some(PAgg(groupCols, aggs)) =>
         val acc = mutable.LinkedHashMap.empty[Seq[Any], Array[Any]]
@@ -251,14 +219,8 @@ object PinotStore {
                 val better = Option(slots(2 * i)) match {
                   case None => true
                   case Some(prev) =>
-                    val d = t.columns(t.colIdx(col)).dt match {
-                      case LongType => java.lang.Long.compare(
-                        cv.asInstanceOf[Number].longValue(),
-                        prev.asInstanceOf[Number].longValue())
-                      case _ => java.lang.Double.compare(
-                        cv.asInstanceOf[Number].doubleValue(),
-                        prev.asInstanceOf[Number].doubleValue())
-                    }
+                    val d = Domain.ordering(t.columns(t.colIdx(col)).dt)
+                      .compare(cv, prev)
                     if (op == "min") d < 0 else d > 0
                 }
                 if (better) slots(2 * i) = cv
@@ -290,26 +252,22 @@ object PinotStore {
           case Some(PTopN(orders, limit)) =>
             // sort the RAW rows: the ORDER BY column need not be in the
             // SELECT list (the pruned schema), exactly like PQL
+            val keys = orders.map { case (c, asc, nullsFirst) =>
+              (t.colIdx(c), Domain.ordering(t.columns(t.colIdx(c)).dt),
+                asc, nullsFirst)
+            }
             val ord = new Ordering[Seq[Any]] {
               override def compare(a: Seq[Any], b: Seq[Any]): Int = {
                 var i = 0
-                while (i < orders.length) {
-                  val (c, asc, nullsFirst) = orders(i)
-                  val (x, y) = (a(t.colIdx(c)), b(t.colIdx(c)))
+                while (i < keys.length) {
+                  val (c, valueOrd, asc, nullsFirst) = keys(i)
+                  val (x, y) = (a(c), b(c))
                   val d =
                     if (x == null && y == null) 0
                     else if (x == null) { if (nullsFirst) -1 else 1 }
                     else if (y == null) { if (nullsFirst) 1 else -1 }
                     else {
-                      val raw = (x, y) match {
-                        case (p: String, r: String) => p.compareTo(r)
-                        case (p: Boolean, r: Boolean) =>
-                          java.lang.Boolean.compare(p, r)
-                        case (p: Number, r: Number) =>
-                          java.lang.Double.compare(p.doubleValue(),
-                            r.doubleValue())
-                        case _ => x.toString.compareTo(y.toString)
-                      }
+                      val raw = valueOrd.compare(x, y)
                       if (asc) raw else -raw
                     }
                   if (d != 0) return d
@@ -357,49 +315,20 @@ class PinotScanBuilder(tableName: String)
 
   private val t = PinotStore.table(tableName)
   private var pushed: Array[Filter] = Array.empty
-  private var preds: Seq[PPred] = Seq.empty
+  private var domain = TupleDomain.All
   private var agg: Option[PAgg] = None
   private var topN: Option[PTopN] = None
   private var limit: Option[Int] = None
   private var required: StructType = t.schema
 
   private def isCol(a: String) = t.colIdx.contains(a)
-  private def norm(col: String, v: Any): Any =
-    (t.columns(t.colIdx(col)).dt, v) match {
-      case (LongType, n: Number) => n.longValue()
-      case (DoubleType, n: Number) => n.doubleValue()
-      case (StringType, s) => s.toString
-      case _ => v
-    }
-
-  private def compile(f: Filter): Option[Seq[PPred]] = f match {
-    case EqualTo(a, v) if isCol(a) && v != null =>
-      Some(Seq(PEq(a, norm(a, v))))
-    case In(a, vs) if isCol(a) && vs.nonEmpty && !vs.contains(null) =>
-      Some(Seq(PIn(a, vs.toSeq.map(norm(a, _)))))
-    case GreaterThan(a, v) if isCol(a) && v != null =>
-      Some(Seq(PRange(a, Some(norm(a, v)), false, None, false)))
-    case GreaterThanOrEqual(a, v) if isCol(a) && v != null =>
-      Some(Seq(PRange(a, Some(norm(a, v)), true, None, false)))
-    case LessThan(a, v) if isCol(a) && v != null =>
-      Some(Seq(PRange(a, None, false, Some(norm(a, v)), false)))
-    case LessThanOrEqual(a, v) if isCol(a) && v != null =>
-      Some(Seq(PRange(a, None, false, Some(norm(a, v)), true)))
-    case IsNull(a) if isCol(a) => Some(Seq(PNull(a, true)))
-    case IsNotNull(a) if isCol(a) => Some(Seq(PNull(a, false)))
-    case And(l, r) =>
-      (compile(l), compile(r)) match {
-        case (Some(a), Some(b)) => Some(a ++ b)
-        case _ => None
-      }
-    case _ => None
-  }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => compile(f).isDefined)
-    pushed = ok
-    preds = ok.flatMap(compile(_).get).toSeq
-    residual
+    val (taken, d) =
+      TupleDomain.push(filters, TupleDomain.types(t.schema))((_, _) => true)
+    pushed = taken
+    domain = d
+    filters.filterNot(taken.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -493,7 +422,7 @@ class PinotScanBuilder(tableName: String)
     if (agg.isEmpty) required = requiredSchema
 
   override def build(): Scan =
-    new PinotScan(tableName, PinotQuery(preds, agg, topN, limit),
+    new PinotScan(tableName, PinotQuery(domain, agg, topN, limit),
       required, pushed)
 }
 
@@ -536,7 +465,7 @@ final case class PinotSegmentSplit(table: String, segmentId: Int,
       t.segments.find(_.id == segmentId).map(_.rows.toVector)
         .getOrElse(Vector.empty))
     rows.iterator
-      .filter(r => query.preds.forall(PinotStore.evalPred(t, r, _)))
+      .filter(r => query.domain.matches(c => r(t.colIdx(c))))
       .map(r => required.fields.toSeq.map(f => r(t.colIdx(f.name))))
   }
 }

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -45,8 +45,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - '''Constraints are ADVISORY''': the reference's ThriftMetadata
   *     returns the constraint UNENFORCED (the remote service may
   *     reduce the scan but promises nothing), so the connector
-  *     forwards eq/range summaries as a hint and Spark ALWAYS keeps
-  *     its own filter — the suite locks exactness even against a
+  *     forwards the eq/range filters' [[TupleDomain]] (the
+  *     `PrestoThriftTupleDomain`) as a hint and Spark ALWAYS keeps its
+  *     own filter — the suite locks exactness even against a
   *     service that applies the hint only partially.
   *
   * Scale stance: the split-batch token loop is driver-side metadata
@@ -56,13 +57,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * lets a thrift-backed system scale without the connector knowing how.
   */
 object ThriftApi {
-
-  /** Advisory constraint summary (the PrestoThriftTupleDomain analog,
-    * flattened to the shapes a remote service typically consumes). */
-  sealed trait Hint { def col: String }
-  final case class EqHint(col: String, values: Seq[Any]) extends Hint
-  final case class RangeHint(col: String, lo: Option[Any],
-      hi: Option[Any]) extends Hint
 
   /** One batch of splits + the continuation token (`PrestoThriftSplit
     * Batch`); a null token ends the drain loop. */
@@ -83,7 +77,7 @@ trait GraftThriftService {
   def listTables(schemaOrNull: Option[String]): Seq[(String, String)]
   def getTableMetadata(schema: String, table: String): StructType
   def getSplits(schema: String, table: String,
-      desiredColumns: Option[Seq[String]], constraint: Seq[Hint],
+      desiredColumns: Option[Seq[String]], constraint: TupleDomain,
       maxSplitCount: Int, nextToken: Option[Array[Byte]]): SplitBatch
   def getRows(splitId: Array[Byte], columns: Seq[String],
       maxBytes: Long, nextToken: Option[Array[Byte]]): RowsPage
@@ -144,7 +138,8 @@ class ThriftSvcTable(options: CaseInsensitiveStringMap) extends ReadTable {
         .getOrElse(16L * 1024 * 1024)) // ThriftConnectorConfig default
 }
 
-/** Builds the advisory constraint hint. CRUCIALLY, every filter stays
+/** Builds the advisory constraint hint from the `=`, `IN` and range
+  * filters. CRUCIALLY, every filter stays
   * RESIDUAL (returned back to Spark): the reference's thrift metadata
   * reports the constraint unenforced, so correctness never depends on
   * the remote service honoring the hint. */
@@ -153,21 +148,16 @@ class ThriftScanBuilder(svc: String, schemaName: String, tableName: String,
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
-  import ThriftApi._
-
-  private var hints: Seq[Hint] = Seq.empty
+  private var hints = 0
+  private var constraint = TupleDomain.All
   private var required: StructType = full
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    hints = filters.toSeq.flatMap {
-      case EqualTo(a, v) if v != null => Seq(EqHint(a, Seq(v)))
-      case In(a, vs) if vs.nonEmpty => Seq(EqHint(a, vs.toSeq))
-      case GreaterThan(a, v) => Seq(RangeHint(a, Some(v), None))
-      case GreaterThanOrEqual(a, v) => Seq(RangeHint(a, Some(v), None))
-      case LessThan(a, v) => Seq(RangeHint(a, None, Some(v)))
-      case LessThanOrEqual(a, v) => Seq(RangeHint(a, None, Some(v)))
-      case _ => Seq.empty
+    val (hinted, d) = TupleDomain.push(filters, TupleDomain.types(full)) {
+      (_, d) => d.values.isDefined || d.interval.isDefined
     }
+    hints = hinted.length
+    constraint = d
     filters // ALL residual — the hint is advisory, never enforced
   }
 
@@ -177,7 +167,7 @@ class ThriftScanBuilder(svc: String, schemaName: String, tableName: String,
     required = requiredSchema
 
   override def build(): Scan =
-    new ThriftScan(svc, schemaName, tableName, hints, required,
+    new ThriftScan(svc, schemaName, tableName, constraint, hints, required,
       maxSplitCount, maxBytes)
 }
 
@@ -230,12 +220,13 @@ final case class ThriftSplit(svc: String, splitId: Array[Byte],
   }
 }
 
+/** `hints` counts the filters `constraint` summarizes. */
 class ThriftScan(svc: String, schemaName: String, tableName: String,
-    hints: Seq[ThriftApi.Hint], required: StructType,
+    constraint: TupleDomain, hints: Int, required: StructType,
     maxSplitCount: Int, maxBytes: Long) extends ConnectorScan(required) {
 
   override def description(): String =
-    s"graft-thrift $schemaName.$tableName hints=${hints.size} cols=" +
+    s"graft-thrift $schemaName.$tableName hints=$hints cols=" +
       required.fieldNames.mkString(",")
 
   /** The `ThriftSplitSource.getNextBatch:132-152` drain loop: batches
@@ -250,7 +241,7 @@ class ThriftScan(svc: String, schemaName: String, tableName: String,
       first = false
       ThriftRegistry.splitCalls.incrementAndGet()
       val batch = service.getSplits(schemaName, tableName,
-        Some(required.fieldNames.toSeq), hints, maxSplitCount, token)
+        Some(required.fieldNames.toSeq), constraint, maxSplitCount, token)
       require(batch.splitIds.size <= maxSplitCount,
         "graft-thrift: service returned more splits than maxSplitCount")
       batch.splitIds.zipWithIndex.foreach { case (id, i) =>
@@ -266,8 +257,9 @@ class ThriftScan(svc: String, schemaName: String, tableName: String,
 
 /** A ready-made in-memory service implementation — what the
   * `presto-thrift-testing-server` is to the reference: holds tables as
-  * row vectors, honors paging/columns, and applies the advisory hint
-  * only when `applyHints` (to exercise both service behaviors). */
+  * row vectors, honors paging/columns, and applies the value domains of
+  * the advisory hint only when `applyHints` (to exercise both service
+  * behaviors). */
 final class InMemoryThriftService(schemaName: String,
     rowsPerSplit: Int = 1000, applyHints: Boolean = true)
     extends GraftThriftService {
@@ -297,24 +289,20 @@ final class InMemoryThriftService(schemaName: String,
     t._1
   }
 
-  private def filtered(table: String, constraint: Seq[Hint])
+  private def filtered(table: String, constraint: TupleDomain)
       : Vector[Seq[Any]] = {
     val (schema, rows) = tables.get(table)
-    if (!applyHints || constraint.isEmpty) rows
+    // partial application only: ranges are left to the engine
+    val values = constraint.domains.filter(_._2.values.isDefined)
+    if (!applyHints || values.isEmpty) rows
     else {
       val idx = schema.fieldNames.zipWithIndex.toMap
-      rows.filter { r =>
-        constraint.forall {
-          case EqHint(c, vs) => idx.get(c).forall(i =>
-            r(i) != null && vs.exists(v => v.toString == r(i).toString))
-          case RangeHint(_, _, _) => true // partial application only
-        }
-      }
+      rows.filter(r => TupleDomain(values).matches(c => r(idx(c))))
     }
   }
 
   override def getSplits(schema: String, table: String,
-      desiredColumns: Option[Seq[String]], constraint: Seq[Hint],
+      desiredColumns: Option[Seq[String]], constraint: TupleDomain,
       maxSplitCount: Int, nextToken: Option[Array[Byte]]): SplitBatch = {
     // plan splits over the hint-filtered view and remember it under the
     // hint hash so getRows pages the same view (a real service plans

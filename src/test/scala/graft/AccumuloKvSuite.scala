@@ -240,8 +240,8 @@ class AccumuloKvSuite extends GraftSuite {
     // a bare scan (no planning-time predicate): static plan = tablet
     // scan; a runtime In on the INDEXED `kind` column must flip the
     // re-plan onto the secondary index's rowId sets
-    val scan = new graft.sources.AccScan(name, Seq(AccStore.FullRange),
-      Seq.empty, read(name).schema, Array.empty,
+    val scan = new graft.sources.AccScan(name, graft.sources.TupleDomain.All,
+      read(name).schema, Array.empty,
       new CaseInsensitiveStringMap(java.util.Map.of()))
     scan.asInstanceOf[SupportsRuntimeFiltering]
       .filter(Array[org.apache.spark.sql.sources.Filter](

@@ -167,4 +167,20 @@ class CassandraRingSuite extends GraftSuite {
       plan.contains("RuntimeFilters: [user"),
       s"no runtime filter on the scan:\n$plan")
   }
+
+  test("every range bound on a clustering column holds, in any order") {
+    val name = "ct_bounds"
+    CassStore.drop(name)
+    CassStore.create(name, partitionKeys = Seq("user"),
+      clusteringKeys = Seq("day"),
+      fields = Seq("user" -> StringType, "day" -> LongType))
+    (1 to 10).foreach(d => CassStore.upsert(name, Seq("u1", d.toLong)))
+    def n(f: org.apache.spark.sql.Column) =
+      read(name).filter(col("user") === "u1" && f).count()
+    // both bounds are pushed, so Spark does not re-apply either
+    assert(n(col("day") > 5L && col("day") > 3L) == 5)
+    assert(n(col("day") > 3L && col("day") > 5L) == 5)
+    assert(n(col("day") < 4L && col("day") <= 8L) == 3)
+    assert(n(col("day") > 5L && col("day") < 3L) == 0)
+  }
 }

@@ -151,4 +151,18 @@ class DruidSegmentSuite extends GraftSuite {
       plan.contains("RuntimeFilters: [__time"),
       s"no runtime filter on the scan:\n$plan")
   }
+
+  test("__time bounds at the ends of bigint do not wrap") {
+    val name = "dr_edge"
+    DruidStore.drop(name)
+    DruidStore.create(name, granularityMs = Hour, dims = Seq("site"),
+      metrics = Seq("hits" -> LongType))
+    DruidStore.ingestBatch(name,
+      (0 until 60).map(m => (m * 60000L, Seq(s"s${m % 3}"), Seq(m.toLong))))
+    def n(f: org.apache.spark.sql.Column) = read(name).filter(f).count()
+    assert(n(col("__time") <= lit(Long.MaxValue)) == 60)
+    assert(n(col("__time") > lit(Long.MaxValue)) == 0)
+    assert(n(col("__time") >= lit(Long.MinValue)) == 60)
+    assert(n(col("__time") < lit(Long.MinValue)) == 0)
+  }
 }

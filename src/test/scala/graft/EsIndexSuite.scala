@@ -186,4 +186,21 @@ class EsIndexSuite extends GraftSuite {
     }
     assert(n == 120, s"runtime terms should drain 120 hits, got $n")
   }
+
+  test("bigint fields compare as bigints, not as doubles") {
+    // 2^53 and 2^53 + 1 are equal as doubles; the sorted arrays and the
+    // range query keep the field's own type
+    val name = "es_long"
+    EsStore.drop(name)
+    EsStore.create(name, 2, Seq("v" -> LongType))
+    Seq(1L << 53, (1L << 53) + 1).foreach(v =>
+      EsStore.indexDoc(name, s"d$v", Map("v" -> v)))
+    EsStore.refresh(name)
+    val eq = read(name).filter(col("v") === lit((1L << 53) + 1))
+    assert(eq.count() == 1)
+    assert(eq.queryExecution.executedPlan.toString.contains(
+      "RangeQ(v,Some(9007199254740993),true,Some(9007199254740993),true)"))
+    assert(read(name).filter(col("v") > lit(1L << 53)).count() == 1)
+    assert(read(name).filter(col("v") >= lit(1L << 53)).count() == 2)
+  }
 }

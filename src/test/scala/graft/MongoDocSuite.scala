@@ -103,4 +103,17 @@ class MongoDocSuite extends GraftSuite {
     assert(plan.contains("BroadcastHashJoin"),
       s"selective mongo query should broadcast:\n$plan")
   }
+
+  test("bigint fields compare as bigints, not as doubles") {
+    // 2^53 and 2^53 + 1 are one double apart from nothing: as doubles
+    // they are equal
+    val name = "mg_long"
+    MongoStore.drop(name)
+    Seq(1L << 53, (1L << 53) + 1).foreach(v =>
+      MongoStore.insert(name, Map("v" -> v)))
+    val df = read(name)
+    assert(df.filter(col("v") === lit((1L << 53) + 1)).count() == 1)
+    assert(df.filter(col("v") > lit(1L << 53)).count() == 1)
+    assert(df.filter(col("v") >= lit(1L << 53)).count() == 2)
+  }
 }

@@ -147,4 +147,16 @@ class PinotBrokerSuite extends GraftSuite {
     assert(plan.contains("mode=segment"), plan) // per-segment fan-out
     assert(q.count() == 3)
   }
+
+  test("a pushed TopN orders bigints as bigints, not as doubles") {
+    val name = "pn_topn_long"
+    PinotStore.drop(name)
+    PinotStore.create(name, Seq(("v", LongType)))
+    // 2^53 and 2^53 + 1 are equal as doubles
+    Seq(1L << 53, (1L << 53) + 1).foreach(v => PinotStore.ingest(name, Seq(v)))
+    val q = read(name).orderBy(col("v").desc).limit(1)
+    assert(q.queryExecution.executedPlan.treeString.contains(
+      "PushedTopN: true"))
+    assert(q.collect().map(_.getLong(0)).toSeq == Seq((1L << 53) + 1))
+  }
 }

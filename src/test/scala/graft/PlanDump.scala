@@ -36,9 +36,10 @@ object PlanDump {
     "@[0-9a-f]{5,}\\b" -> "@H",
     "graft_scratch_[0-9a-f-]+" -> "graft_scratch_X",
     "local-\\d+" -> "local-N",
+    // before the temp suffixes: a UUID may open with six digits
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}" -> "UUID",
     // Files.createTempDirectory / createTempFile suffixes
-    "(/[A-Za-z_]+)-?\\d{6,}" -> "$1N",
-    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}" -> "UUID")
+    "(/[A-Za-z_]+)-?\\d{6,}" -> "$1N")
 
   def mask(plan: String): String = masks.foldLeft(plan) {
     case (text, (pattern, by)) => text.replaceAll(pattern, by)

@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * read plumbing (providers, reader factories, readers) lives only in
   * sources/Connector.scala, queries/ makes its scratch files only
   * under Scratch, one Greiner–Hormann clipper answers every polygon
-  * boolean op, and parquet is read only through Tables' lean format. */
+  * boolean op, parquet is read only through Tables' lean format, and
+  * Spark's pushed filters are translated only in sources/Domain.scala. */
 class SourceGuardSuite extends GraftSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -69,6 +70,10 @@ class SourceGuardSuite extends GraftSuite {
     val found = sourcesWhere(_.contains("createTempDirectory"))
       .filter(_.startsWith("graft/queries/"))
     assert(found.isEmpty, s"createTempDirectory in $found")
+  }
+
+  test("pushed filters are translated only in sources/Domain.scala") {
+    only("GreaterThanOrEqual(", main.resolve("graft/sources/Domain.scala"))
   }
 
   test("DSv2 read plumbing appears only in sources/Connector.scala") {

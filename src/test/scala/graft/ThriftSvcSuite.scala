@@ -117,7 +117,7 @@ class ThriftSvcSuite extends GraftSuite {
         StructType(Seq(StructField("id", LongType),
           StructField("sq", LongType)))
       override def getSplits(s: String, t: String,
-          cols: Option[Seq[String]], c: Seq[Hint], max: Int,
+          cols: Option[Seq[String]], c: graft.sources.TupleDomain, max: Int,
           tok: Option[Array[Byte]]): SplitBatch =
         SplitBatch(Seq("0".getBytes, "1".getBytes, "2".getBytes),
           Seq.fill(3)(Seq.empty), None)

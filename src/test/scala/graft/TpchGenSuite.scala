@@ -115,4 +115,15 @@ class TpchGenSuite extends GraftSuite {
     val p2 = j2.queryExecution.executedPlan.toString
     assert(p2.contains("BroadcastHashJoin"), p2)
   }
+
+  test("key bounds at the ends of bigint do not wrap") {
+    // a bound past Long.MaxValue / Long.MinValue is absorbed by the scan,
+    // so a wrapped `> MaxValue` once generated the whole table
+    val orders = spark.table("graft_tpch.tiny.orders")
+    def n(f: org.apache.spark.sql.Column) = orders.filter(f).count()
+    assert(n(col("o_orderkey") > lit(Long.MaxValue)) == 0L)
+    assert(n(col("o_orderkey") < lit(Long.MinValue)) == 0L)
+    assert(n(col("o_orderkey") <= lit(Long.MaxValue)) == 15000L)
+    assert(n(col("o_orderkey") >= lit(Long.MinValue)) == 15000L)
+  }
 }
