@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.Registry
 import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -21,9 +22,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2.
+    *
+    * The one place a gate's session is prepared, as Presto's coordinator
+    * binds a query's function namespaces and catalogs before it runs:
+    * each entry installs Presto's functions and rules (`Registry.install`)
+    * and registers `dir`'s fixture views (`Tables.register`), then runs
+    * the pack's gate. Both calls are idempotent per session, so a gate
+    * plans the same whichever gates ran before it. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.flatMap(_.defs).toMap
+    packs.flatMap(_.defs).map { case (name, gate) =>
+      name -> { (s: SparkSession, dir: String) =>
+        Registry.install(s)
+        Tables.register(s, dir)
+        gate(s, dir)
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.PrestoAggregates
 
 /** Aggregate-function coverage beyond the relational pack: statistical
@@ -17,11 +15,9 @@ import graft.functions.PrestoAggregates
   */
 object Aggregates extends QueryPack {
 
-  private def t(s: SparkSession, dir: String, n: String) = Tables.view(s, dir, n)
-
   override def defs: Map[String, Q] = Map(
     "q60_stat_moments" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           round(stddev_samp(col("l_quantity")), 6).as("sd_samp"),
@@ -36,7 +32,7 @@ object Aggregates extends QueryPack {
     // Spark reports population skewness/kurtosis; the oracle converts
     // DuckDB's sample statistics to population form.
     "q61_skew_kurt" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           count(lit(1)).as("n"),
@@ -47,7 +43,7 @@ object Aggregates extends QueryPack {
     // Tie-break on (acctbal, name) so duplicate balances can't make the
     // oracle comparison order-dependent (struct ordering is lexicographic).
     "q62_minmax_by" -> ((s, dir) =>
-      t(s, dir, "customer")
+      s.table("customer")
         .groupBy(col("c_nationkey"))
         .agg(
           max_by(col("c_name"), struct(col("c_acctbal"), col("c_name"))).as("richest"),
@@ -57,7 +53,7 @@ object Aggregates extends QueryPack {
         .orderBy(col("c_nationkey"))),
 
     "q63_bool_bit" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           bool_and(col("l_quantity") > 1).as("all_qty_gt1"),
@@ -68,7 +64,7 @@ object Aggregates extends QueryPack {
         .orderBy(col("l_returnflag"))),
 
     "q64_count_variants" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .groupBy(col("l_linestatus"))
         .agg(
           count(lit(1)).as("n_rows"),
@@ -87,7 +83,7 @@ object Aggregates extends QueryPack {
       // pos = 1 + (n-1) * q on the same doubles with bounded task
       // state. (The `percentile`/`median` TypedImperative aggregates
       // remain ~10x slower than either shape — SURVEY §2.4.)
-      val li = t(s, dir, "lineitem")
+      val li = s.table("lineitem")
       def cquantiles(valCol: String, qs: Seq[(Double, String)]) = {
         val base = li.select(col("l_returnflag").as("g"),
           col(valCol).cast("double").as("v"))
@@ -130,7 +126,7 @@ object Aggregates extends QueryPack {
     // rendered to its canonical scale-2 string; the decimal arithmetic
     // itself still runs on the Spark side (long→decimal(18,2)→/100).
     "qb9_decimal_exact" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .select(col("l_returnflag"),
           round(col("l_extendedprice") * 100).cast("long").as("pc"),
           round(col("l_quantity") * 100).cast("long").as("qc"))
@@ -147,7 +143,7 @@ object Aggregates extends QueryPack {
 
     // Custom Presto aggregates (graft.functions.PrestoAggregates).
     "q66_custom_aggs" -> ((s, dir) => {
-      val perSupp = t(s, dir, "lineitem")
+      val perSupp = s.table("lineitem")
         .groupBy(col("l_returnflag"), col("l_suppkey"))
         .agg(count(lit(1)).as("cnt"))
       perSupp.groupBy(col("l_returnflag"))
@@ -166,7 +162,7 @@ object Aggregates extends QueryPack {
     // tiny (Presto bounds n at 10k for the same reason).
     "qd8_minmax_by_n" -> ((s, dir) => {
       val sorted = array_sort(collect_list(struct(col("c_acctbal"), col("c_name"))))
-      t(s, dir, "customer")
+      s.table("customer")
         .groupBy(col("c_nationkey"))
         .agg(sorted.as("sorted"))
         .select(col("c_nationkey"),
@@ -181,7 +177,7 @@ object Aggregates extends QueryPack {
     // row sort can't hash numpy arrays, so both sides project canonical
     // strings (VERDICT r1: q67 harness error).
     "q67_collect" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_orderkey") <= 40)
         .groupBy(col("l_orderkey"))
         .agg(

@@ -35,15 +35,15 @@ object Ann extends QueryPack {
 
   private val Dims = 64
 
-  private def emb(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.view(s, dir, "embeddings")
+  private def emb(s: org.apache.spark.sql.SparkSession) =
+    s.table("embeddings")
       .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("e"))
 
   override def defs: Map[String, Q] = Map(
     // Exact cosine top-3 neighbors for a 10-probe set: broadcast the
     // probes, one codegen'd scan over the corpus, window top-k.
     "q94_cosine_topk" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = emb(s)
       val probes = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("e").as("pe"))
       val scored = e.crossJoin(broadcast(probes))
@@ -65,7 +65,7 @@ object Ann extends QueryPack {
     // (Similarity.planesFor — 4 planes at 500 vectors, 6 at 2k, 21 at
     // 100M). The oracle derives the same count from count(*).
     "q95_lsh_ann" -> ((s, dir) => {
-      val e0 = emb(s, dir)
+      val e0 = emb(s)
       val planes = Similarity.planesFor(
         Tables.rowCount(s, dir, "embeddings"), 32)
       val e = e0.join(
@@ -93,7 +93,7 @@ object Ann extends QueryPack {
     // corpus so per-bucket pair work stays flat (see planesFor). The
     // oracle replays the same derivation, so recall loss fails loudly.
     "q96_embedding_neardup" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = emb(s)
       val ppt = Similarity.planesFor(
         Tables.rowCount(s, dir, "embeddings"), 64)
       val blocked = Similarity.bucketTables(e, "vec_id", "e", 4, ppt, Dims)
@@ -123,7 +123,7 @@ object Ann extends QueryPack {
     // assignment is one scan; the probe-side search shuffles only
     // matching cells — the 100 TB shape (cells ≈ partitions).
     "qb4_ivf_ann" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = emb(s)
       val stride = math.floor(math.sqrt(
         Tables.rowCount(s, dir, "embeddings").toDouble)).toLong
       val cents = e.filter(col("vec_id") % stride === 0)
@@ -162,7 +162,7 @@ object Ann extends QueryPack {
     // booleans (Lloyd inertia non-increasing per round; the IVF answer's
     // exact rank within top-10 for every probe at nprobe=2).
     "qk6_ivf_kmeans" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = emb(s)
       val stride = math.max(1L, math.floor(math.sqrt(
         Tables.rowCount(s, dir, "embeddings").toDouble)).toLong)
       val seed = KMeans.seeds(e, stride)
@@ -232,7 +232,7 @@ object Ann extends QueryPack {
     // ride as constants.
     "q2e_pq_ann" -> ((s, dir) => {
       import graft.operators.Pq
-      val e = emb(s, dir)
+      val e = emb(s)
       val n = Tables.rowCount(s, dir, "embeddings")
       val m = 16
       val stride = math.max(1L, n / 64) // ~64 codewords per subspace
@@ -299,7 +299,7 @@ object Ann extends QueryPack {
     // answer columns).
     "q2k_ivf_pq" -> ((s, dir) => {
       import graft.operators.Pq
-      val e = emb(s, dir)
+      val e = emb(s)
       val n = Tables.rowCount(s, dir, "embeddings")
       val m = 16
       // coarse quantizer: √n stride-seed cells (the qb4 contract)
@@ -378,7 +378,7 @@ object Ann extends QueryPack {
     // each probe's label by majority vote of its 5 nearest neighbors
     // (ties -> smallest label), report a per-label accuracy table.
     "qb7_knn_classify" -> ((s, dir) => {
-      val labeled = Tables.view(s, dir, "embeddings")
+      val labeled = s.table("embeddings")
         .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("e"),
           col("label"))
       val probes = labeled.filter(col("vec_id") < 100)
@@ -418,7 +418,7 @@ object Ann extends QueryPack {
     // single scan at 100 TB. Ratios stay unrounded: integer-count
     // divisions are IEEE-exact, so the oracle hash-matches bitwise.
     "qj3_classification_metrics" -> ((s, dir) => {
-      val li = Tables.view(s, dir, "lineitem")
+      val li = s.table("lineitem")
       // outcome: returned line; score: discount mapped onto [0,1]
       val bk = li.select((col("l_returnflag") === "R").as("pos"),
           floor(col("l_discount") * 100).cast("int").as("bk"))
@@ -448,7 +448,7 @@ object Ann extends QueryPack {
     // lambdas here are CodegenFallback, acceptable for a projection-only
     // scan (the hot aggregate paths keep native expressions per §2.4).
     "qf3_embedding_quantize" -> ((s, dir) => {
-      Tables.view(s, dir, "embeddings")
+      s.table("embeddings")
         .filter(col("vec_id") < 100)
         .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("e"))
         .withColumn("scale",
@@ -472,7 +472,7 @@ object Ann extends QueryPack {
     // kept_id_sum) pins both the drop set and the keep choice; the
     // oracle replays assignment + the blocked pair join verbatim.
     "q0j_semdedup" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = emb(s)
       // k = ⌈√n⌉ is the OPERATOR's invariant (SemDeDup.sqrtStride),
       // not a gate parameter — the gate just supplies n
       val n = Tables.rowCount(s, dir, "embeddings")
@@ -494,7 +494,7 @@ object Ann extends QueryPack {
     // eigensolve's mass without eigendecomposing); orthonormality /
     // eigenvalue ordering / var_pop(pcₖ)=λₖ as invariant booleans.
     "q0y_pca" -> ((s, dir) => {
-      val raw = Tables.view(s, dir, "embeddings")
+      val raw = s.table("embeddings")
       val model = graft.operators.Pca.fit(raw, col("embedding"), 64)
       val orthOk = model.components.indices.forall { i =>
         model.components.indices.forall { j =>

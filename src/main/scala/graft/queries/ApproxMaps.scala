@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.PrestoAggregates
 
 /** Approximate aggregates and the map-valued aggregate family.
@@ -25,9 +24,6 @@ import graft.functions.PrestoAggregates
   */
 object ApproxMaps extends QueryPack {
 
-  private def t(s: org.apache.spark.sql.SparkSession, dir: String, n: String) =
-    Tables.view(s, dir, n)
-
   override def defs: Map[String, Q] = Map(
     "q85_approx_aggs" -> ((s, dir) => {
       // Separate aggregations joined at the end (4-row join keys): mixing
@@ -39,7 +35,7 @@ object ApproxMaps extends QueryPack {
       // r17's collect_list+sort_array buffered each flag's whole value
       // array unspillably; RankSelect bounds task state at any scale).
       // (a+b)/2 is bit-equal to avg of the one or two middle rows.
-      val li = t(s, dir, "lineitem")
+      val li = s.table("lineitem")
       val counts = li.groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("exact_parts"))
       val acd = li.groupBy(col("l_returnflag"))
@@ -75,7 +71,7 @@ object ApproxMaps extends QueryPack {
     // per-nation segment-count map, values doubled, small entries
     // filtered out, serialized sorted for the driver compare.
     "q7a_map_lambda" -> ((s, dir) => {
-      val per = t(s, dir, "customer")
+      val per = s.table("customer")
         .groupBy(col("c_nationkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
       per.groupBy(col("c_nationkey"))
@@ -92,7 +88,7 @@ object ApproxMaps extends QueryPack {
     }),
 
     "q86_map_agg" -> ((s, dir) => {
-      val per = t(s, dir, "customer")
+      val per = s.table("customer")
         .groupBy(col("c_nationkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
       per.groupBy(col("c_nationkey"))
@@ -106,7 +102,7 @@ object ApproxMaps extends QueryPack {
     // histogram(x) (= map value→count) and multimap_agg(k → all values),
     // serialized the same way.
     "q87_histogram_multimap" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = s.table("lineitem")
       val hist = li.groupBy(col("l_returnflag"), col("l_linenumber"))
         .agg(count(lit(1)).as("n"))
       hist.groupBy(col("l_returnflag"))
@@ -130,7 +126,7 @@ object ApproxMaps extends QueryPack {
     // weight conserved exactly, weighted mean equal to the true mean up
     // to float rounding, bins inside the observed range.
     "qj1_numeric_histogram" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = s.table("lineitem")
       li.groupBy(col("l_returnflag"))
         .agg(graft.functions.NumericHistogram.agg(10, col("l_quantity"))
             .as("h"),
@@ -152,7 +148,7 @@ object ApproxMaps extends QueryPack {
     // arbitrary() over a group-constant column (deterministic by
     // construction, so the oracle can pin it with min()).
     "q88_arbitrary" -> ((s, dir) =>
-      t(s, dir, "customer")
+      s.table("customer")
         .groupBy(col("c_nationkey"))
         .agg(
           PrestoAggregates.arbitrary(substring(col("c_name"), 1, 9)).as("name_tag"),
@@ -162,7 +158,7 @@ object ApproxMaps extends QueryPack {
     // reduce_agg instantiated as a product aggregate — custom two-phase
     // Aggregator (compound growth per order: Π(1 + discount)).
     "q89_reduce_product" -> ((s, dir) =>
-      t(s, dir, "lineitem").filter(col("l_orderkey") <= 40)
+      s.table("lineitem").filter(col("l_orderkey") <= 40)
         .groupBy(col("l_orderkey"))
         .agg(
           round(PrestoAggregates.productAgg(col("l_discount") + 1.0), 6)

@@ -87,7 +87,7 @@ object Connectors extends QueryPack {
     // install), read them back, and aggregate — the oracle reads the
     // same fixture directly, so the roundtrip must be lossless.
     "q0d_memory_roundtrip" -> ((s, dir) => {
-      val supp = graft.Tables.view(s, dir, "supplier")
+      val supp = s.table("supplier")
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
       supp.repartition(4).write.format("graft-memory")
         .option("name", "graft_mem_supplier").mode("overwrite").save()
@@ -126,7 +126,7 @@ object Connectors extends QueryPack {
     "q0g_blackhole_sink" -> ((s, dir) => {
       import s.implicits._
       graft.sources.BlackholeConn.reset("q0g_sink")
-      graft.Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
         .write.format("graft-blackhole").option("name", "q0g_sink")
         .mode("append").save()
@@ -181,8 +181,7 @@ object Connectors extends QueryPack {
     "q0k_raw_decoder" -> ((s, dir) => {
       import org.apache.spark.sql.types._
       import graft.functions.RecordDecoders
-      graft.functions.Registry.install(s)
-      graft.Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_orderkey") <= 100)
         .withColumn("msg", expr(
           """concat(to_big_endian_64(l_orderkey),
@@ -206,7 +205,7 @@ object Connectors extends QueryPack {
     "q0l_json_decoder" -> ((s, dir) => {
       import org.apache.spark.sql.types._
       import graft.functions.RecordDecoders
-      graft.Tables.view(s, dir, "documents")
+      s.table("documents")
         .filter(col("doc_id") <= 50)
         .withColumn("ts_s", col("doc_id") * 86400 + lit(1700000000L))
         .withColumn("msg", to_json(struct(
@@ -343,10 +342,9 @@ object Connectors extends QueryPack {
     "q1d_kafka_raw" -> ((s, dir) => {
       import org.apache.spark.sql.types._
       import graft.functions.RecordDecoders
-      graft.functions.Registry.install(s)
       val topic = s"graft_q1d_${Integer.toHexString(dir.hashCode)}"
       graft.sources.KafkaLog.create(topic, 2)
-      graft.Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_orderkey") <= 100)
         .select(
           expr("to_big_endian_64(l_orderkey)").as("key"),
@@ -388,7 +386,7 @@ object Connectors extends QueryPack {
       import graft.functions.RecordDecoders
       val topic = s"graft_q1e_${Integer.toHexString(dir.hashCode)}"
       graft.sources.KafkaLog.create(topic, 2)
-      graft.Tables.view(s, dir, "documents")
+      s.table("documents")
         .filter(col("doc_id") <= 50)
         .select(
           expr("encode(cast(doc_id AS string), 'UTF-8')").as("key"),
@@ -476,7 +474,7 @@ object Connectors extends QueryPack {
     "q1o_redis_scan" -> ((s, dir) => {
       import org.apache.spark.sql.types._
       import graft.functions.RecordDecoders
-      graft.Tables.view(s, dir, "documents")
+      s.table("documents")
         .filter(col("doc_id") <= 200)
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .collect().toSeq.map(r => ("docs:" + r.getLong(0),
@@ -516,7 +514,7 @@ object Connectors extends QueryPack {
     "q1p_redis_zset_hash" -> ((s, dir) => {
       // orders, not lineitem: the key must identify a row, and
       // o_orderkey is the testdata's unique key
-      val rows = graft.Tables.view(s, dir, "orders")
+      val rows = s.table("orders")
         .filter(col("o_orderkey") <= 1200)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderpriority"))
@@ -569,7 +567,7 @@ object Connectors extends QueryPack {
       EsStore.create(ixName, 5, Seq(
         "lang" -> StringType, "source" -> StringType,
         "n_chars" -> LongType, "nc7" -> LongType))
-      EsStore.bulk(ixName, graft.Tables.view(s, dir, "documents")
+      EsStore.bulk(ixName, s.table("documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .collect().toSeq.map { r =>
           val id = r.getLong(0)
@@ -614,7 +612,7 @@ object Connectors extends QueryPack {
         partitionKeys = Seq("o_custkey"), clusteringKeys = Seq("o_orderkey"),
         fields = Seq("o_custkey" -> LongType, "o_orderkey" -> LongType,
           "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType))
-      val src = graft.Tables.view(s, dir, "orders")
+      val src = s.table("orders")
         .filter(col("o_custkey") <= 2000)
         .select(col("o_custkey"), col("o_orderkey"),
           col("o_orderstatus"), col("o_totalprice"))
@@ -658,7 +656,7 @@ object Connectors extends QueryPack {
         "event_id" -> -1L, "etype" -> "seed",
         "user" -> Map("id" -> 0L, "bucket" -> 0L),
         "metrics" -> Map("value" -> 0.0, "k" -> 0L)))
-      graft.Tables.view(s, dir, "events")
+      s.table("events")
         .filter(col("event_id") <= 4000)
         .select(col("event_id"), col("event_type").as("etype"),
           struct(col("user_id").as("id"),
@@ -698,7 +696,7 @@ object Connectors extends QueryPack {
       DruidStore.create(dsName, granularityMs = SixH,
         dims = Seq("etype"), metrics = Seq("value" -> DoubleType,
           "uid" -> LongType))
-      graft.Tables.view(s, dir, "events")
+      s.table("events")
         .select(unix_millis(col("ts")).as("tms"), col("event_type"),
           col("value"), col("user_id"))
         .collect().toSeq.map(r => (r.getLong(0), Seq(r.getString(1)),
@@ -759,7 +757,7 @@ object Connectors extends QueryPack {
       // writers insert at random points and contend (q1y 0.67 -> 0.71,
       // q2m 0.94 -> 1.22 isolated). Parallel page sinks are still the
       // cluster shape; at gate scale the exchange + CAS churn dominates.
-      graft.Tables.view(s, dir, "orders")
+      s.table("orders")
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus"), col("o_orderpriority"),
           col("o_totalprice"))
@@ -808,7 +806,7 @@ object Connectors extends QueryPack {
         rangeCol = Some("event_id"),
         rangeBounds = Seq((None, Some(2000L)), (Some(2000L), Some(4000L)),
           (Some(4000L), None)))
-      val src = graft.Tables.view(s, dir, "events")
+      val src = s.table("events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
       // upsert twice: task-retry idempotence end-to-end
@@ -855,14 +853,14 @@ object Connectors extends QueryPack {
         columns = Seq(("event_id", LongType, false),
           ("event_type", StringType, true), ("value", DoubleType, true)),
         pkCount = 1, hashCols = Seq("event_id"), hashBuckets = 16)
-      graft.Tables.view(s, dir, "events")
+      s.table("events")
         .filter(col("event_id") <= 4000)
         .select(col("event_id"), col("event_type"), col("value"))
         .write.mode("append").format("graft-kudu")
         .option("table", tbl).save()
       val total = s.read.format("graft-kudu").option("table", tbl)
         .load().count()
-      val dim = graft.Tables.view(s, dir, "events")
+      val dim = s.table("events")
         .select(col("event_id"))
         .filter(col("event_id") <= 4000 && col("event_id") % 211 === 0)
       val joined = s.read.format("graft-kudu").option("table", tbl)
@@ -899,7 +897,7 @@ object Connectors extends QueryPack {
       EsStore.create(ixName, 5, Seq(
         "dockey" -> StringType, "source" -> StringType,
         "n_chars" -> LongType))
-      EsStore.bulk(ixName, graft.Tables.view(s, dir, "documents")
+      EsStore.bulk(ixName, s.table("documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
         .collect().toSeq.map { r =>
           val id = r.getLong(0)
@@ -910,7 +908,7 @@ object Connectors extends QueryPack {
         .load().count()
       // a SELECTIVE parquet-side filter (the shape Spark's dynamic
       // pruning rule requires of the build side)
-      val dim = graft.Tables.view(s, dir, "documents")
+      val dim = s.table("documents")
         .filter(col("doc_id") % 97 === 0)
         .select(concat(lit("d"), col("doc_id")).as("dockey"))
       val joined = s.read.format("graft-es").option("index", ixName)
@@ -950,14 +948,14 @@ object Connectors extends QueryPack {
         localityGroups = Map("keys" -> Seq("o_orderstatus"),
           "vals" -> Seq("o_totalprice")))
       AccStore.addSplits(tbl, Seq(1500L, 3000L, 4500L))
-      graft.Tables.view(s, dir, "orders")
+      s.table("orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))
         .write.mode("append").format("graft-accumulo")
         .option("table", tbl).save()
       val total = s.read.format("graft-accumulo").option("table", tbl)
         .load().count()
-      val dim = graft.Tables.view(s, dir, "orders")
+      val dim = s.table("orders")
         .select(col("o_orderkey"))
         .filter(col("o_orderkey") % 211 === 0)
       val joined = s.read.format("graft-accumulo").option("table", tbl)
@@ -1004,7 +1002,7 @@ object Connectors extends QueryPack {
         ("event_type", StringType, true), ("value", DoubleType, true)))
       mk(dim, Seq(("event_id", LongType, false),
         ("user_id", LongType, true)))
-      val src = graft.Tables.view(s, dir, "events")
+      val src = s.table("events")
         .filter(col("event_id") <= 4000)
       src.select(col("event_id"), col("event_type"), col("value"))
         .write.mode("append").format("graft-kudu")
@@ -1071,7 +1069,7 @@ object Connectors extends QueryPack {
       // distinct-triple grain: the store upserts by PK, so duplicate
       // (orderkey, suppkey, linenumber) rows would collapse — dedupe
       // source-side so the oracle replays the same grain
-      val src = graft.Tables.view(s, dir, "lineitem")
+      val src = s.table("lineitem")
         .filter(col("l_orderkey") <= 1500)
         .select(col("l_orderkey"), col("l_suppkey"),
           col("l_linenumber").cast("long").as("l_linenumber"))
@@ -1134,7 +1132,7 @@ object Connectors extends QueryPack {
       PinotStore.create(tbl, Seq(("doc_id", LongType),
         ("lang", StringType), ("source", StringType),
         ("n_chars", LongType)), servers = 3)
-      PinotStore.ingestBatch(tbl, graft.Tables.view(s, dir, "documents")
+      PinotStore.ingestBatch(tbl, s.table("documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .collect().toSeq.map(r => Seq[Any](r.getLong(0), r.getString(1),
           r.getString(2), r.getLong(3))), segmentRows = 100)
@@ -1168,7 +1166,7 @@ object Connectors extends QueryPack {
       PinotStore.create(tbl, Seq(("doc_id", LongType),
         ("lang", StringType), ("source", StringType),
         ("n_chars", LongType)), servers = 3)
-      PinotStore.ingestBatch(tbl, graft.Tables.view(s, dir, "documents")
+      PinotStore.ingestBatch(tbl, s.table("documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .collect().toSeq.map(r => Seq[Any](r.getLong(0), r.getString(1),
           r.getString(2), r.getLong(3))), segmentRows = 100)
@@ -1194,7 +1192,7 @@ object Connectors extends QueryPack {
       val tag = Integer.toHexString(dir.hashCode)
       val meta = s"http://meta.example/cat_$tag.json"
       val srcs = (1 to 3).map(i => s"http://data.example/li_${tag}_$i.csv")
-      val rows = graft.Tables.view(s, dir, "lineitem")
+      val rows = s.table("lineitem")
         .filter(col("l_orderkey") <= 1000)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
         .collect()
@@ -1302,7 +1300,7 @@ object Connectors extends QueryPack {
         StructField("l_quantity", DoubleType),
         StructField("l_extendedprice", DoubleType)))
       svc.putTable("lineitem", schema,
-        graft.Tables.view(s, dir, "lineitem")
+        s.table("lineitem")
           .filter(col("l_orderkey") <= 1000)
           .select(col("l_orderkey"), col("l_returnflag"),
             col("l_quantity"), col("l_extendedprice"))

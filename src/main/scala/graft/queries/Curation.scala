@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.operators.MinHash
 
 /** Dataset-curation operators — the selection half of a training-data
@@ -41,7 +40,7 @@ object Curation extends QueryPack {
       import org.apache.spark.sql.graft.ColumnBridge.{toCol, toExpr}
       def ngrams3(c: org.apache.spark.sql.Column) =
         toCol(graft.functions.WordNgrams(toExpr(c), 3))
-      val d = Tables.view(s, dir, "documents")
+      val d = s.table("documents")
       val scored = d
         .withColumn("w", split(col("text"), " "))
         .withColumn("n_tok", size(col("w")).cast("long"))
@@ -97,7 +96,7 @@ object Curation extends QueryPack {
     // 5-sigma binomial envelope around the 50% target rate. The class
     // list is tiny metadata (like IVF centroids), collected driver-side.
     "qd4_stratified_sample" -> ((s, dir) => {
-      val docs = Tables.view(s, dir, "documents")
+      val docs = s.table("documents")
       val langs = docs.select("lang").distinct()
         .collect().map(_.getString(0))
       val sample = docs.stat.sampleBy("lang",
@@ -118,7 +117,7 @@ object Curation extends QueryPack {
     "qd5_train_test_split" -> ((s, dir) => {
       val h = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
         .cast("long") % 100
-      Tables.view(s, dir, "documents")
+      s.table("documents")
         .withColumn("split", when(h < 80, "train").otherwise("test"))
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n"),
@@ -132,7 +131,7 @@ object Curation extends QueryPack {
     // (longest text, doc_id tie-break) — the canonical keep-one-of-dups
     // policy. Exact oracle: the fingerprint and the argmax both replay.
     "qd6_cluster_retention" -> ((s, dir) => {
-      val fp = Tables.view(s, dir, "documents")
+      val fp = s.table("documents")
         .withColumn("sh", MinHash.shingles(col("text"), 4))
         .withColumn("fp", array_min(transform(col("sh"),
           g => conv(substring(md5(g), 1, 15), 16, 10).cast("long"))))
@@ -160,7 +159,7 @@ object Curation extends QueryPack {
     "qz9_domain_cap" -> ((s, dir) => {
       val w = Window.partitionBy(col("source"))
         .orderBy(col("n_chars").desc, col("doc_id"))
-      Tables.view(s, dir, "documents")
+      s.table("documents")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 10)
         .groupBy(col("source"))
@@ -182,7 +181,6 @@ object Curation extends QueryPack {
     // offsets stay metadata). The position-weighted checksum pins the
     // ENTIRE order, not just membership.
     "qj8_deterministic_shuffle" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql("""WITH keyed AS (
               |  SELECT doc_id,
               |    ((doc_id % 1000000007) * 2654435761 + 12345) % 1000000007 AS h
@@ -241,7 +239,7 @@ object Curation extends QueryPack {
     // the train-side explode, then a semi-join-shaped distinct; never an
     // all-pairs comparison, so the train side stays one scan at 100 TB.
     "qi3_decontamination" -> ((s, dir) => {
-      val docs = Tables.view(s, dir, "documents")
+      val docs = s.table("documents")
       val evalGrams = docs.filter(col("doc_id") % 50 === 0)
         .select(explode(MinHash.shingles(col("text"), 6)).as("g")).distinct()
       val contaminated = docs.filter(col("doc_id") % 50 =!= 0)
@@ -264,8 +262,6 @@ object Curation extends QueryPack {
     // exactly: chunks = 1 + ceil((len-32)/24) (one when len <= 32),
     // words = sum over starts of min(32, len - start).
     "q1m_rag_chunking" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       s.sql(
         """WITH c AS (SELECT doc_id, source,
           |    chunk_text(text, 32, 8) AS chunks,
@@ -298,7 +294,7 @@ object Curation extends QueryPack {
     // exact membership. Plan shape is qi4's: per-source counts are
     // metadata (broadcast), the data pass is a map-only filter.
     "q1i_temperature_mix" -> ((s, dir) => {
-      val docs = Tables.view(s, dir, "documents")
+      val docs = s.table("documents")
       val counts = docs.groupBy(col("source"))
         .agg(count(lit(1)).as("n_src"))
         .withColumn("w", round(sqrt(col("n_src")) * 1000).cast("long"))
@@ -333,7 +329,7 @@ object Curation extends QueryPack {
       import org.apache.spark.sql.graft.ColumnBridge.{toCol, toExpr}
       import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
       import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-      val docs = Tables.view(s, dir, "documents")
+      val docs = s.table("documents")
       val evalGrams = docs.filter(col("doc_id") % 50 === 0)
         .select(explode(MinHash.shingles(col("text"), 6)).as("g"))
         .distinct()
@@ -381,7 +377,7 @@ object Curation extends QueryPack {
     // map-only filter — scan-speed at 100 TB, and the oracle replays the
     // exact membership, not an envelope.
     "qi4_mixture_resample" -> ((s, dir) => {
-      val docs = Tables.view(s, dir, "documents")
+      val docs = s.table("documents")
       val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n_src"))
       val rates = counts.crossJoin(counts.agg(min(col("n_src")).as("n_min")))
       // native md5-prefix hash — bit-identical to the former
@@ -412,7 +408,7 @@ object Curation extends QueryPack {
     // table once (it is the reusable artifact) so the two aggregates
     // share the tokenize pass instead of replaying lineage.
     "q0w_dsir_resample" -> ((s, dir) => {
-      val docs = Tables.view(s, dir, "documents")
+      val docs = s.table("documents")
       // literal-space split (NOT a regex): the session registry shadows
       // `split` with Presto's literal-delimiter semantics, and Spark 4's
       // functions.split resolves by NAME through that shadow — a regex
@@ -461,7 +457,7 @@ object Curation extends QueryPack {
     // pack per (lang, shard); the policy is unchanged. Exact oracle: the
     // window replays in SQL.
     "qi5_sequence_packing" -> ((s, dir) => {
-      val toks = Tables.view(s, dir, "documents")
+      val toks = s.table("documents")
         .select(col("lang"), col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("toks"))
       val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
@@ -489,7 +485,7 @@ object Curation extends QueryPack {
       import org.apache.spark.sql.graft.ColumnBridge.{toCol, toExpr}
       def ngrams(c: org.apache.spark.sql.Column, k: Int) =
         toCol(graft.functions.WordNgrams(toExpr(c), k))
-      val base = Tables.view(s, dir, "documents")
+      val base = s.table("documents")
         .filter(col("doc_id") < 20)
         .select(col("doc_id"), split(col("text"), " ").as("ws"),
           ngrams(col("text"), 2).as("bgs"), ngrams(col("text"), 3).as("tgs"))

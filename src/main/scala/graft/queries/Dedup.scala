@@ -29,9 +29,6 @@ import graft.operators.{ConnectedComponents, MinHash}
   */
 object Dedup extends QueryPack {
 
-  private def t(s: org.apache.spark.sql.SparkSession, dir: String, n: String) =
-    Tables.view(s, dir, n)
-
   private val JacThreshold = 0.8
   // q3c seed-key position stride: doc_id*stride+wpos must be unique
   // across documents, so wpos must stay below it — guarded loudly in
@@ -54,7 +51,7 @@ object Dedup extends QueryPack {
     // At 100 TB one would group on a content digest (md5 below) instead of
     // the full text to keep shuffle rows narrow — both shown here.
     "q90_exact_dedup" -> ((s, dir) =>
-      t(s, dir, "documents")
+      s.table("documents")
         .groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         .select(col("keep_id"), col("n_copies"), col("fp"))
@@ -67,7 +64,7 @@ object Dedup extends QueryPack {
       // both sides of the Jaccard verify — three full shingle passes
       // over the corpus. One materialized pass (within-invocation
       // localCheckpoint, narrow doc_id+shingles rows) serves all three.
-      val docs = t(s, dir, "documents")
+      val docs = s.table("documents")
         .select(col("doc_id"), MinHash.shingles(col("text")).as("sh"))
         .localCheckpoint()
       val sigs = MinHash.signatures(docs, "doc_id", numHashes = 64)
@@ -90,7 +87,7 @@ object Dedup extends QueryPack {
     // the exact kept-SET, not a recall argument.
     "q3x_streaming_neardup" -> ((s, dir) =>
       graft.streaming.StreamingNearDup.firstArrivalBatch(
-        t(s, dir, "documents"), "doc_id", "text")
+        s.table("documents"), "doc_id", "text")
         .orderBy(col("doc_id"))),
 
     // Incremental (cross-run) dedup against a PERSISTED fingerprint
@@ -103,7 +100,7 @@ object Dedup extends QueryPack {
     // oracle replays the same admission algebra in SQL.
     "q3y_incremental_dedup" -> ((s, dir) => {
       import graft.operators.IncrementalDedup
-      val docs = t(s, dir, "documents")
+      val docs = s.table("documents")
       // ingest materializes each run's result, so the same-path
       // snapshot hazard is gone; runs 2/3 read the in-memory union of
       // the earlier runs' appended fingerprints — provably the index's
@@ -148,7 +145,7 @@ object Dedup extends QueryPack {
     // replays the whole algebra over the q3x hash arithmetic.
     "q3z_incremental_neardup" -> ((s, dir) => {
       import graft.operators.IncrementalDedup
-      val docs = t(s, dir, "documents")
+      val docs = s.table("documents")
       // r17 OPT: band keys are row-local and index-independent, so ONE
       // banding pass serves all three runs (runs 2/3 ingest the same
       // full dump; run 1's delta is a filter of it) — the shingle
@@ -200,7 +197,7 @@ object Dedup extends QueryPack {
     "q92_simhash_dedup" -> ((s, dir) => {
       // r18 OPT: one shingle pass shared by the chunk build and both
       // verify sides (see q91's note).
-      val docs = t(s, dir, "documents")
+      val docs = s.table("documents")
         .select(col("doc_id"), MinHash.shingles(col("text")).as("sh"))
         .localCheckpoint()
       val chunked = MinHash.simhashChunks(docs, "doc_id")
@@ -217,7 +214,7 @@ object Dedup extends QueryPack {
       // r18 OPT: the bigram projection fed the size table and both
       // sides of the inverted-index self-join — one materialized pass
       // (within-invocation) serves all three consumers.
-      val docs = t(s, dir, "documents")
+      val docs = s.table("documents")
         .select(col("doc_id"), MinHash.shingles(col("text"), k = 2).as("sh"))
         .localCheckpoint()
       val sizes = docs.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
@@ -254,7 +251,7 @@ object Dedup extends QueryPack {
     // hot-key bound that keeps the join linear when a stopword would
     // otherwise pair every document with every other.
     "qd9_tfidf_cosine" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = s.table("documents")
       // corpus size for idf — parquet footer metadata, no scan job
       val n = Tables.rowCount(s, dir, "documents")
       // r18 OPT (guide §1.2): tf fed the document-frequency aggregate
@@ -301,7 +298,7 @@ object Dedup extends QueryPack {
     // gate, not just a smoke test.
     "qf2_dedup_components" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val d = t(s, dir, "documents")
+      val d = s.table("documents")
         .select(col("doc_id"), col("lang"), col("source"),
           expr("n_chars div 64").as("bin"))
       def starEdges(parts: Seq[String]) = d
@@ -353,7 +350,7 @@ object Dedup extends QueryPack {
     // seeds/coverage), so recall loss or a canonical-rule drift fails
     // the hash.
     "q3c_exactsubstr_dedup" -> ((s, dir) => {
-      val w = t(s, dir, "documents")
+      val w = s.table("documents")
         .select(col("doc_id"), col("source"),
           split(col("text"), " ").as("ws"))
       val totals = w.groupBy(col("source"))
@@ -411,7 +408,7 @@ object Dedup extends QueryPack {
 
     "q0p_chunk_dedup" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val chunks = t(s, dir, "documents")
+      val chunks = s.table("documents")
         .select(col("doc_id"), col("source"),
           split(col("text"), " ").as("ws"))
         .select(col("doc_id"), col("source"), posexplode(expr(

@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Batch twins of the streaming operators over `events`: tumbling-window
   * aggregation (same grouping `graft.streaming.EventStream.windowedCounts`
   * maintains incrementally) and gaps-and-islands sessionization (same
@@ -27,7 +25,7 @@ object Events extends QueryPack {
   override def defs: Map[String, Q] = Map(
     // Tumbling 1h windows per event type (batch twin of windowedCounts).
     "qa6_event_windows" -> ((s, dir) =>
-      Tables.view(s, dir, "events")
+      s.table("events")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 4).as("total_value"))
@@ -43,7 +41,7 @@ object Events extends QueryPack {
       val us = unix_micros(col("ts"))
       val w = Window.partitionBy(col("user_id")).orderBy(us)
         .rangeBetween(-3600L * 1000000L, 0L)
-      Tables.view(s, dir, "events")
+      s.table("events")
         .withColumn("n_1h", count(lit(1)).over(w))
         .withColumn("v_1h", round(sum(col("value")).over(w), 4))
         .filter(col("user_id") < 10)
@@ -58,7 +56,7 @@ object Events extends QueryPack {
       // Gap math in epoch-micros: the fixture's timestamps carry ns
       // precision which Spark truncates to µs — the oracle must compare
       // at the same (µs) resolution or boundary gaps could disagree.
-      val sessions = Tables.view(s, dir, "events")
+      val sessions = s.table("events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("prev_us", lag(col("us"), 1).over(byUser))
         .withColumn("new_session",
@@ -93,7 +91,7 @@ object Events extends QueryPack {
     // for keys tied at µs but distinct at ns).
     "q3w_streaming_dedup" -> ((s, dir) => {
       val deduped = graft.streaming.StreamingDedup.firstArrivalBatch(
-        Tables.view(s, dir, "events"),
+        s.table("events"),
         Seq("user_id", "event_type"), "ts", "event_id")
       deduped.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_kept"),
@@ -110,11 +108,11 @@ object Events extends QueryPack {
     // side broadcasts (dim-sized); a 100 TB stream pays no shuffle and
     // keeps no state.
     "qn8_event_enrichment" -> ((s, dir) => {
-      val dim = Tables.view(s, dir, "customer")
+      val dim = s.table("customer")
         .withColumnRenamed("c_custkey", "user_id")
       graft.streaming.EventStream
-        .enrich(Tables.view(s, dir, "events"), dim)
-        .join(Tables.view(s, dir, "nation"),
+        .enrich(s.table("events"), dim)
+        .join(s.table("nation"),
           col("c_nationkey") === col("n_nationkey"), "left")
         .groupBy(coalesce(col("n_name"), lit("UNKNOWN")).as("n_name"))
         .agg(count(lit(1)).as("n_events"),

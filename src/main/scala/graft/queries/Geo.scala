@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.Registry
 import graft.operators.SpatialJoin
 
@@ -45,8 +44,6 @@ object Geo extends QueryPack {
     // construct/accessors, WKT round-trip, planar distance, great-circle
     // distance (Vincenty form, EARTH_RADIUS_KM = 6371.01).
     "qe0_geo_scalars" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       val (x, y) = coordSql("c_custkey")
       s.sql(
         s"""SELECT c_custkey,
@@ -67,9 +64,9 @@ object Geo extends QueryPack {
     "qe1_spatial_join" -> ((s, dir) => {
       val (xS, yS) = coordSql("s_suppkey")
       val (xC, yC) = coordSql("c_custkey")
-      val sup = Tables.view(s, dir, "supplier")
+      val sup = s.table("supplier")
         .selectExpr("s_suppkey", s"$xS AS x", s"$yS AS y")
-      val cust = Tables.view(s, dir, "customer")
+      val cust = s.table("customer")
         .selectExpr("c_custkey", s"$xC AS x", s"$yC AS y")
       SpatialJoin.withinRadius(sup, cust, "x", "y", radius = 5.0)
         .groupBy(col("s_suppkey"))
@@ -82,8 +79,6 @@ object Geo extends QueryPack {
     // every shoelace/centroid term is exact in double, so the oracle's
     // replay of the same formulas hash-matches bitwise, division included.
     "qf1_geo_polygon" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """SELECT c_custkey,
           |  st_area(ring) AS area,
@@ -111,8 +106,6 @@ object Geo extends QueryPack {
     // points avoid). Map-only (scan-speed); edge rows pin the clip
     // branches at both map poles and zoom 1/23.
     "qi6_bing_tiles" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH base AS (
           |  SELECT c_custkey AS id,
@@ -152,7 +145,7 @@ object Geo extends QueryPack {
     // (pure builtin arithmetic), aggregated per market segment.
     "qe2_geofence" -> ((s, dir) => {
       val (x, y) = coordSql("c_custkey")
-      val pts = Tables.view(s, dir, "customer")
+      val pts = s.table("customer")
         .selectExpr("c_custkey", "c_mktsegment", s"$x AS x", s"$y AS y")
       pts.withColumn("inside",
           SpatialJoin.containsConvex(Fence, col("x"), col("y")))
@@ -171,8 +164,6 @@ object Geo extends QueryPack {
     // lengths are 3-4-5 multiples or single sqrts, so every double here
     // is reproducible bitwise.
     "ql2_geometry_linestring" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(Registry.rewritePrestoSql(
         """WITH ls AS (
           |  SELECT cast(id as bigint) AS id,
@@ -211,8 +202,6 @@ object Geo extends QueryPack {
     // The oracle replays the identical cross-product predicate over
     // unnested segment pairs in DuckDB.
     "ql4_geometry_intersects" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(Registry.rewritePrestoSql(
         """WITH g AS (
           |  SELECT cast(id as bigint) AS id,
@@ -240,8 +229,6 @@ object Geo extends QueryPack {
     // fraction endpoints. The oracle replays projection/argmin and the
     // cumulative-length walk over unnested segments.
     "ql5_line_reference" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(Registry.rewritePrestoSql(
         """WITH g AS (
           |  SELECT cast(id as bigint) AS id, st_linefromtext(w) AS line,
@@ -267,8 +254,6 @@ object Geo extends QueryPack {
     // the tall vertex (the 0.05 bumps fall inside the split chords'
     // tolerance), tolerance 0 is identity.
     "ql6_geometry_simplify" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(Registry.rewritePrestoSql(
         """WITH g AS (
           |  SELECT cast(id as bigint) AS id,
@@ -299,8 +284,6 @@ object Geo extends QueryPack {
     // arithmetically by the oracle. Hull state is tiny and merge is
     // hull-of-union (associative) — one partial+final agg at any scale.
     "qm3_convex_hull" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH pts AS (
           |  SELECT (c_custkey div 10) % 4 AS g,
@@ -325,8 +308,6 @@ object Geo extends QueryPack {
     // disjoint → empty, contained → identity. All intersection vertices
     // land on integers, so the oracle carries the hand-derived shapes.
     "qm4_convex_clip" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH g AS (
           |  SELECT id, st_intersection(subj, clip) AS c FROM (
@@ -359,8 +340,6 @@ object Geo extends QueryPack {
     // cross product is exact in double and the oracle replays the sign
     // logic term-for-term. Map-only relate work — scan-speed at scale.
     "qm5_segment_relations" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH seg AS (
           |  SELECT c_custkey AS k,
@@ -401,8 +380,6 @@ object Geo extends QueryPack {
     // Results are canonical (CCW from lex-min vertex, components
     // sorted), making the vertex text deterministic.
     "qm7_polygon_boolean" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH g AS (
           |  SELECT 1 AS id,
@@ -448,8 +425,6 @@ object Geo extends QueryPack {
     // with B's hole the one surviving pocket. Hand-derived oracle, the
     // q0x stance.
     "q1g_holed_inputs" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH g AS (
           |  SELECT 1 AS id,
@@ -503,8 +478,6 @@ object Geo extends QueryPack {
     // the hole (96 for the 10x10 minus 2x2 case on row 3). Hand-derived
     // oracle constants, the qm7 stance.
     "q0x_holed_boolean" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH g AS (
           |  SELECT 1 AS id,
@@ -541,8 +514,6 @@ object Geo extends QueryPack {
     // triangle touching the square's edge at a vertex. Row 3:
     // rectangles overlapping with collinear top/bottom edges.
     "ql8_degenerate_boolean" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH g AS (
           |  SELECT 1 AS id,
@@ -579,8 +550,6 @@ object Geo extends QueryPack {
     // inclusion-exclusion exact: 5·100 − 4·(2 × 9.5) = 424. State is
     // the fused multipolygon — output-sized, not input-sized.
     "qm8_geometry_union_agg" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH sq AS (
           |  SELECT cast(c_custkey % 3 as bigint) AS g,
@@ -601,8 +570,6 @@ object Geo extends QueryPack {
     // per general-position relationship class; the oracle carries the
     // hand-written matrices (standard area/area DE-9IM values).
     "qm9_relate" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH g AS (
           |  SELECT id,
@@ -636,8 +603,6 @@ object Geo extends QueryPack {
     // containment in/out of each hole, and a byte-exact WKB round-trip
     // (ext CCW, holes CW — the convention the reader normalizes to).
     "qn5_holed_polygon" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH p AS (SELECT array(
           |    array(st_point(0D, 0D), st_point(10D, 0D),
@@ -671,8 +636,6 @@ object Geo extends QueryPack {
     // hand-derived: 10x10 minus the contained 3x3 leaves 91; the
     // crossing half-slab leaves the right half 5x10 = 50.
     "qr0_holed_difference" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH g AS (SELECT
           |  array(st_point(0D, 0D), st_point(10D, 0D),
@@ -723,8 +686,6 @@ object Geo extends QueryPack {
     }),
 
     "qm6_geometry_structure" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH g AS (
           |  SELECT id, st_polygon(w) AS poly, st_linefromtext(l) AS line

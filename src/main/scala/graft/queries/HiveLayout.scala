@@ -43,9 +43,6 @@ import graft.Tables
   */
 object HiveLayout extends QueryPack {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.view(s, dir, n)
-
   private def tbl(prefix: String, dir: String): String =
     s"graft_${prefix}_${Integer.toHexString(dir.hashCode)}"
 
@@ -181,7 +178,7 @@ object HiveLayout extends QueryPack {
     // (4 buckets present, each key in exactly one bucket).
     "q3e_hidden_columns" -> ((s, dir) => {
       import s.implicits._
-      val base = t(s, dir, "lineitem")
+      val base = s.table("lineitem")
         .filter(col("l_quantity") >= 45)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       val out = Storage.ctasPath(s, dir) + "_hid"
@@ -238,12 +235,10 @@ object HiveLayout extends QueryPack {
     // a non-partitioned source.
     "q3f_partitions_system_table" -> ((s, dir) => {
       import s.implicits._
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val pt = tbl("psys", dir)
       s.sql(s"DROP TABLE IF EXISTS $pt")
-      t(s, dir, "orders")
+      s.table("orders")
         .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
         .filter(col("o_year").isin(1995, 1996, 1997))
         .repartition(4, col("o_year"))
@@ -290,11 +285,9 @@ object HiveLayout extends QueryPack {
     // counts replay as CASE arithmetic in the oracle.
     "q3g_insert_existing_partitions" -> ((s, dir) => {
       import s.implicits._
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val pt = tbl("iep", dir)
-      val yearly = t(s, dir, "orders")
+      val yearly = s.table("orders")
         .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
       s.sql(s"DROP TABLE IF EXISTS $pt")
       yearly.filter(col("o_year").isin(1995, 1996, 1997))
@@ -341,12 +334,10 @@ object HiveLayout extends QueryPack {
     // reference's loud arms.
     "q3h_create_empty_partition" -> ((s, dir) => {
       import s.implicits._
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val pt = tbl("cep", dir)
       s.sql(s"DROP TABLE IF EXISTS $pt")
-      t(s, dir, "orders")
+      s.table("orders")
         .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
         .filter(col("o_year").isin(1995, 1996))
         .repartition(2, col("o_year"))
@@ -393,11 +384,9 @@ object HiveLayout extends QueryPack {
     // whose rows all match drops like the whole-partition arm.
     "q3k_metadata_delete" -> ((s, dir) => {
       import s.implicits._
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       val pt = tbl("mdel", dir)
       val path = Storage.ctasPath(s, dir) + "_mdel"
-      val yearly = t(s, dir, "orders")
+      val yearly = s.table("orders")
         .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
       s.sql(s"DROP TABLE IF EXISTS $pt")
       yearly.filter(col("o_year").isin(1995, 1996, 1997, 1998))
@@ -458,8 +447,6 @@ object HiveLayout extends QueryPack {
     // DuckDB over integer-valued quantities (the q1k/q2r drift rule).
     "q3l_sorted_table_properties" -> ((s, dir) => {
       import s.implicits._
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val base = Storage.ctasPath(s, dir)
       val li = tbl("ctw_li", dir)
@@ -577,8 +564,6 @@ object HiveLayout extends QueryPack {
     // hive's empty column-property registry answers as an empty
     // relation, not a missing table.
     "q3m_property_listings" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       graft.functions.Registry.prestoStatement(s,
         """SELECT k, v FROM (
           |  SELECT 'tp_' || property_name AS k,
@@ -609,12 +594,10 @@ object HiveLayout extends QueryPack {
     // partition, never re-scan the table.
     "q3n_analyze_partitions" -> ((s, dir) => {
       import s.implicits._
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val pt = tbl("anp", dir)
       s.sql(s"DROP TABLE IF EXISTS $pt")
-      t(s, dir, "orders")
+      s.table("orders")
         .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
         .filter(col("o_year").isin(1995, 1996, 1997))
         .repartition(3, col("o_year"))
@@ -667,10 +650,9 @@ object HiveLayout extends QueryPack {
     // the metastore instead of listing a million files.
     "q3o_metadata_only_agg" -> ((s, dir) => {
       import s.implicits._
-      Tables.register(s, dir)
       val pt = tbl("moq", dir)
       s.sql(s"DROP TABLE IF EXISTS $pt")
-      t(s, dir, "orders")
+      s.table("orders")
         .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
         .repartition(4, col("o_year"))
         .write.mode("overwrite")

@@ -2,8 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** JSON, URL, and binary/crypto function coverage — finally exercising the
   * `events` fixture (JSON `props` column + nanos-timestamp shim).
   *
@@ -19,12 +17,9 @@ import graft.Tables
   */
 object Json extends QueryPack {
 
-  private def t(s: org.apache.spark.sql.SparkSession, dir: String, n: String) =
-    Tables.view(s, dir, n)
-
   override def defs: Map[String, Q] = Map(
     "q76_json_extract" -> ((s, dir) =>
-      t(s, dir, "events").filter(col("event_id") <= 500)
+      s.table("events").filter(col("event_id") <= 500)
         .select(
           col("event_id"),
           get_json_object(col("props"), "$.k").as("k_str"),
@@ -39,7 +34,7 @@ object Json extends QueryPack {
     // JSON construction + aggregation over extracted values: group on
     // event_type, then re-serialize the rollup row as a JSON object.
     "q77_json_agg" -> ((s, dir) =>
-      t(s, dir, "events")
+      s.table("events")
         .groupBy(col("event_type"))
         .agg(
           sum(get_json_object(col("props"), "$.k").cast("long")).as("sum_k"),
@@ -50,7 +45,7 @@ object Json extends QueryPack {
         .orderBy(col("event_type"))),
 
     "q78_url_funcs" -> ((s, dir) =>
-      t(s, dir, "events").filter(col("event_id") <= 500)
+      s.table("events").filter(col("event_id") <= 500)
         .withColumn("url", concat(
           lit("https://example.com/"), col("event_type"),
           lit("/page?uid="), col("user_id"), lit("&v=2")))
@@ -66,7 +61,7 @@ object Json extends QueryPack {
         .orderBy(col("event_id"))),
 
     "q79_binary_crypto" -> ((s, dir) =>
-      t(s, dir, "customer").filter(col("c_custkey") <= 300)
+      s.table("customer").filter(col("c_custkey") <= 300)
         .select(
           col("c_custkey"),
           md5(col("c_name").cast("binary")).as("name_md5"),

@@ -43,8 +43,6 @@ object Media extends QueryPack {
     // kill the scan. The oracle is closed-form in doc_id — if parsing
     // and byte layout disagree anywhere, dims_ok goes false.
     "q1c_media_headers" -> ((s, dir) => {
-      graft.Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       s.sql(
         """WITH d AS (SELECT doc_id, cast(16 + doc_id % 1024 AS INT) AS w,
           |             cast(9 + doc_id % 512 AS INT) AS h
@@ -161,8 +159,6 @@ object Media extends QueryPack {
     // of killing the scan, and the repetitive fixture corpus genuinely
     // compresses.
     "q1l_gzip_text" -> ((s, dir) => {
-      graft.Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       s.sql(
         """WITH z AS (SELECT doc_id, source, text,
           |    gzip(encode(text, 'UTF-8')) AS blob,

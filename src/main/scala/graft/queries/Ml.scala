@@ -2,9 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-import graft.functions.Registry
-
 /** The presto-ml surface (`presto-ml/.../MLFunctions.java`,
   * `LearnRegressorAggregation.java`, `LearnClassifierAggregation.java`,
   * `EvaluateClassifierPredictionsAggregation.java`) exercised as verbatim
@@ -28,8 +25,6 @@ object Ml extends QueryPack {
     // The oracle replays the same normal equations closed-form; round(3)
     // absorbs the ~1e-10-relative FP divergence between solve orders.
     "qm0_learn_regressor" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """SELECT l_returnflag,
           |  round(regress(features(10.0), m), 3) AS pred10,
@@ -52,7 +47,7 @@ object Ml extends QueryPack {
     // guaranteed, not hoped).
     "q0u_logistic_learn" -> ((s, dir) => {
       import graft.operators.Logistic
-      val d = Tables.view(s, dir, "documents").select(
+      val d = s.table("documents").select(
         lit(1.0).as("x1"), ((col("n_chars") - 300) / 100.0).as("x2"),
         ((col("doc_id") % 7) / 7.0).as("x3"),
         when(col("n_chars") + (col("doc_id") % 13) * 10 > 350, 1.0)
@@ -90,8 +85,6 @@ object Ml extends QueryPack {
     // documented model. 100-unit cluster separation vs ~1e-12 centroid
     // FP noise keeps the argmin deterministic.
     "qm1_learn_classifier" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """WITH feats AS (
           |  SELECT c_custkey, c_custkey % 3 AS lbl,
@@ -112,8 +105,6 @@ object Ml extends QueryPack {
     // the oracle from the same confusion counts (labels sorted — the
     // reference's hash-set iteration order is unspecified).
     "qm2_evaluate_predictions" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """SELECT evaluate_classifier_predictions(c_custkey % 2,
           |  CASE WHEN c_custkey % 7 < 5 THEN c_custkey % 2

@@ -19,6 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Column names and types must line up between the two sides — the driver
   * sorts columns by name before hashing values.
+  *
+  * A gate receives a session with Presto's functions and rules installed
+  * and `dir`'s fixture views registered (`SparkEntry.queries` prepares
+  * it), so it names fixture tables with `s.table(n)` or in SQL text and
+  * prepares nothing itself.
   */
 trait QueryPack {
   type Q = (SparkSession, String) => DataFrame

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.functions.Registry
 
 /** Queries written as raw Presto SQL against `spark.sql(...)` — proof that
@@ -15,12 +14,8 @@ import graft.functions.Registry
   */
 object RegistrySql extends QueryPack {
 
-  private def sql(s: org.apache.spark.sql.SparkSession, dir: String,
-                  q: String) = {
-    Tables.register(s, dir)
-    Registry.install(s)
+  private def sql(s: org.apache.spark.sql.SparkSession, q: String) =
     s.sql(Registry.rewritePrestoSql(q))
-  }
 
   /** Gates whose oracle is the same query, run as it is by both
     * engines. */
@@ -163,9 +158,9 @@ object RegistrySql extends QueryPack {
   )
 
   override def defs: Map[String, Q] =
-    texts.transform[Q]((_, q) => (s, dir) => sql(s, dir, q)) ++ Map[String, Q](
+    texts.transform[Q]((_, q) => (s, dir) => sql(s, q)) ++ Map[String, Q](
     // String/math/bitwise Presto names over `part`.
-    "qa1_presto_sql_scalars" -> ((s, dir) => sql(s, dir,
+    "qa1_presto_sql_scalars" -> ((s, dir) => sql(s,
       """SELECT p_partkey,
         |  cast(strpos(p_type, 'BRASS') as bigint) AS pos_brass,
         |  to_base(p_size, 2) AS size_bin,
@@ -178,7 +173,7 @@ object RegistrySql extends QueryPack {
         |FROM part WHERE p_partkey <= 200 ORDER BY p_partkey""".stripMargin)),
 
     // Presto date/time names (ISO numbering) over `orders`.
-    "qa2_presto_sql_datetime" -> ((s, dir) => sql(s, dir,
+    "qa2_presto_sql_datetime" -> ((s, dir) => sql(s,
       """SELECT o_orderkey,
         |  cast(day_of_week(o_orderdate) as bigint) AS dow,
         |  cast(day_of_year(o_orderdate) as bigint) AS doy,
@@ -203,7 +198,7 @@ object RegistrySql extends QueryPack {
     // hour/minute/second extraction, and date_diff all keep Presto's
     // within-a-day TIME semantics. The oracle replays the same
     // epoch-date representation.
-    "qn0_time_literals" -> ((s, dir) => sql(s, dir,
+    "qn0_time_literals" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  cast(hour(t) as bigint) AS h,
         |  cast(minute(t) as bigint) AS m,
@@ -229,7 +224,7 @@ object RegistrySql extends QueryPack {
     // offset, a documented divergence carried as spelled-out
     // expectations in the oracle), extraction is wall-clock local via
     // zoned_local, and the offset fields replay in DuckDB TIMETZ.
-    "ql9_timetz_literals" -> ((s, dir) => sql(s, dir,
+    "ql9_timetz_literals" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  cast(hour(zoned_local(t)) as bigint) AS h,
         |  cast(minute(zoned_local(t)) as bigint) AS m,
@@ -251,7 +246,7 @@ object RegistrySql extends QueryPack {
     // DOUBLE: the driver's pandas hasher renders Spark parquet decimals
     // as Decimal objects but DuckDB's as floats (round-3 qb9 lesson) —
     // values are identical either way, only the hash path diverges.
-    "qn1_presto_literals" -> ((s, dir) => sql(s, dir,
+    "qn1_presto_literals" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  cast(element_at(xs, 2) as bigint) AS second_x,
         |  cast(size(xs) as bigint) AS n,
@@ -263,7 +258,7 @@ object RegistrySql extends QueryPack {
 
     // Presto's CROSS JOIN UNNEST idiom verbatim (rewritten pre-parse to
     // LATERAL VIEW explode): word frequencies over the document corpus.
-    "qn2_presto_unnest" -> ((s, dir) => sql(s, dir,
+    "qn2_presto_unnest" -> ((s, dir) => sql(s,
       """SELECT w AS word, cast(count(*) as bigint) AS n
         |FROM documents CROSS JOIN UNNEST(split(text, ' ')) AS t(w)
         |WHERE doc_id <= 20
@@ -282,7 +277,7 @@ object RegistrySql extends QueryPack {
     // grammar vs Spark's angle brackets; MapConstructor.java's
     // MAP(ARRAY, ARRAY) zip form): rewritten/dispatched per r7c —
     // verbatim Presto, hand-derived oracle (the qj2 stance).
-    "ql7_presto_cast_types" -> ((s, dir) => sql(s, dir,
+    "ql7_presto_cast_types" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  CAST(row(id, id * 0.5) AS ROW(k BIGINT, half DOUBLE)).half
         |    AS half,
@@ -295,7 +290,7 @@ object RegistrySql extends QueryPack {
         |FROM (SELECT 1 AS id UNION ALL SELECT 2) t
         |ORDER BY id""".stripMargin)),
 
-    "qn3_presto_subscripts" -> ((s, dir) => sql(s, dir,
+    "qn3_presto_subscripts" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  cast(xs[1] as bigint) AS first_x,
         |  cast(xs[id] as bigint) AS by_id,
@@ -314,7 +309,7 @@ object RegistrySql extends QueryPack {
     // shifting with the instant preserved, and ISO re-rendering. The
     // oracle carries hand-derived literals (the qj2 stance): every
     // value below is worked by hand from the offsets.
-    "qp1_zoned_timestamps" -> ((s, dir) => sql(s, dir,
+    "qp1_zoned_timestamps" -> ((s, dir) => sql(s,
       """WITH z AS (SELECT id, zoned_timestamp(s) AS z FROM VALUES
         |    (1, '2020-06-10T15:30:00+05:30'),
         |    (2, '2020-06-10T12:00:00+02:00'),
@@ -348,7 +343,7 @@ object RegistrySql extends QueryPack {
     // (one instant, three zones) contribute ONE element. The oracle
     // makes DuckDB run count(DISTINCT TIMESTAMPTZ) itself; renderings
     // hand-pinned (the qz8 stance).
-    "q0m_zoned_distinct_agg" -> ((s, dir) => sql(s, dir,
+    "q0m_zoned_distinct_agg" -> ((s, dir) => sql(s,
       """WITH z AS (SELECT id, zoned_timestamp(s) AS z FROM VALUES
         |    (1, '2020-06-10T15:30:00+05:30'),
         |    (2, '2020-06-10T12:00:00+02:00'),
@@ -369,7 +364,7 @@ object RegistrySql extends QueryPack {
     // and bare key outputs to first(key) — the reference's
     // TimestampWithTimeZoneType hashes the packed millis only. The
     // oracle makes DuckDB genuinely GROUP BY its own TIMESTAMPTZ.
-    "qz8_zoned_grouping" -> ((s, dir) => sql(s, dir,
+    "qz8_zoned_grouping" -> ((s, dir) => sql(s,
       """WITH z AS (SELECT id, zoned_timestamp(s) AS z FROM VALUES
         |    (1, '2020-06-10T15:30:00+05:30'),
         |    (2, '2020-06-10T12:00:00+02:00'),
@@ -387,7 +382,7 @@ object RegistrySql extends QueryPack {
     // LITERAL, and a function-call result (the three backward-walk
     // shapes); zones cover an IANA name and a negative half-hour
     // offset. Oracle carries hand-derived wall clocks (the qp1 stance).
-    "qq5_at_time_zone" -> ((s, dir) => sql(s, dir,
+    "qq5_at_time_zone" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  zoned_to_iso8601(ts AT TIME ZONE 'Asia/Kolkata') AS kolkata,
         |  zoned_to_iso8601(ts AT TIME ZONE '-03:30') AS nst,
@@ -411,7 +406,7 @@ object RegistrySql extends QueryPack {
     // closes the r5 "per-value zoned timestamps" descope at the
     // literal spelling too. Offsets, an IANA name, and UTC; the
     // New-Year's-Eve case crosses the year at UTC.
-    "qq7_timestamp_tz_literal" -> ((s, dir) => sql(s, dir,
+    "qq7_timestamp_tz_literal" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  zoned_to_iso8601(z) AS iso,
         |  cast(zoned_instant(z) as string) AS instant_utc,
@@ -433,7 +428,7 @@ object RegistrySql extends QueryPack {
     // oracle EXPANDS each row w times and takes the plain interpolated
     // quantile — the definition itself. The 5e-7 epsilon breaks exact
     // .xxx5 interpolation ties (cents-grid data, the qo1 lesson).
-    "qp4_weighted_percentile" -> ((s, dir) => sql(s, dir,
+    "qp4_weighted_percentile" -> ((s, dir) => sql(s,
       """SELECT l_returnflag,
         |  round(approx_percentile(l_extendedprice,
         |    cast(l_quantity as bigint), 0.5) + 5e-7, 4) AS wmed,
@@ -445,7 +440,7 @@ object RegistrySql extends QueryPack {
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin)),
 
-    "qd2_presto_sql_ip" -> ((s, dir) => sql(s, dir,
+    "qd2_presto_sql_ip" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id, ip,
         |  ip_prefix(ip, 24) AS net24,
         |  ip_prefix(ip, 12) AS net12,
@@ -461,7 +456,7 @@ object RegistrySql extends QueryPack {
     // order-independent checksum digest (ChecksumAggregationFunction).
     // Rounded per the gate rules (aggregate sums are order-sensitive in
     // the last ulps); checksum is exact integer XOR, unrounded.
-    "qe3_regr_entropy_checksum" -> ((s, dir) => sql(s, dir,
+    "qe3_regr_entropy_checksum" -> ((s, dir) => sql(s,
       """WITH cnts AS (
         |  SELECT l_returnflag, l_linestatus, count(*) AS cnt
         |  FROM lineitem GROUP BY l_returnflag, l_linestatus),
@@ -482,7 +477,7 @@ object RegistrySql extends QueryPack {
     // to_milliseconds / human_readable_seconds) and the Wilson score
     // interval (MathFunctions.java) — Presto spellings end-to-end; the
     // oracle replays the same IEEE arithmetic so bounds compare unrounded.
-    "qe9_duration_stats" -> ((s, dir) => sql(s, dir,
+    "qe9_duration_stats" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  to_milliseconds(parse_duration(dur)) AS ms,
         |  human_readable_seconds(secs) AS hr,
@@ -499,7 +494,7 @@ object RegistrySql extends QueryPack {
     // Distinct-set aggregates (SetAggregationFunction.java /
     // SetUnionFunction.java); arrays serialize via array_join for the
     // gate (pandas cannot sort array cells).
-    "qf0_set_aggregates" -> ((s, dir) => sql(s, dir,
+    "qf0_set_aggregates" -> ((s, dir) => sql(s,
       """SELECT source,
         |  array_join(set_agg(lang), ',') AS langs,
         |  array_join(set_union(slice(split(text, ' '), 1, 2)), ',')
@@ -515,7 +510,7 @@ object RegistrySql extends QueryPack {
     // array_sort (the Presto lambda text runs unchanged on Spark's
     // builtin), first-delimiter multimap split, binary-unit data sizes.
     // Arrays stringify for the gate (array cells don't hash).
-    "qh4_array_extras_sql" -> ((s, dir) => sql(s, dir,
+    "qh4_array_extras_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  array_join(transform(combinations(arr, 2),
         |    c -> array_join(c, '+')), ',') AS pairs,
@@ -544,7 +539,7 @@ object RegistrySql extends QueryPack {
     // on HSB sector boundaries (f = 0, 0.5, 1) where the float math is
     // exactly representable. Gradient-bar escapes vary per block, so that
     // column is gated on its block count.
-    "qi7_color_sql" -> ((s, dir) => sql(s, dir,
+    "qi7_color_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  color(cname) AS c_sys,
         |  color(hex3) AS c_hex,
@@ -568,7 +563,7 @@ object RegistrySql extends QueryPack {
     // strrpos, URL-safe base64, big-endian two's-complement byte images,
     // IEEE-754 bit images, combine_hash, Joda-style format/parse,
     // url port/fragment extraction, is_json_scalar.
-    "qj4_scalar_extras_sql" -> ((s, dir) => sql(s, dir,
+    "qj4_scalar_extras_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  array_join(split(st, '.'), ',') AS dot_split,
         |  array_join(split(st, '.', 2), '|') AS dot_split2,
@@ -608,7 +603,7 @@ object RegistrySql extends QueryPack {
     // resolution), masked bitwise shifts, week/millisecond/to_iso8601,
     // sha512 (NIST 'abc' vector in the oracle), Presto base64 spellings,
     // IPv4 subnet bounds, json_extract/json_parse/json_format.
-    "qj7_more_names_sql" -> ((s, dir) => sql(s, dir,
+    "qj7_more_names_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  all_match(arr, x -> x > 0) AS allm,
         |  any_match(arr, x -> x > 2) AS anym,
@@ -644,7 +639,7 @@ object RegistrySql extends QueryPack {
     // distributions' exact identities: cdf(0) = 0.5 exactly (erf(0) = 0),
     // symmetry, monotonicity, inverse round-trips, the public z=1.96
     // envelope, and Beta(1,1) = uniform.
-    "qj6_distributions_sql" -> ((s, dir) => sql(s, dir,
+    "qj6_distributions_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  normal_cdf(0.0, 1.0, 0.0) AS ncdf_zero,
         |  abs(normal_cdf(0.0, 1.0, x) + normal_cdf(0.0, 1.0, -x) - 1.0)
@@ -669,7 +664,7 @@ object RegistrySql extends QueryPack {
     // half/quarter-hour zones; the oracle carries hand-derived wall-clock
     // literals (IANA offsets are public constants), so no timezone engine
     // is needed on the oracle side.
-    "qj2_timezone_sql" -> ((s, dir) => sql(s, dir,
+    "qj2_timezone_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  at_timezone(ts, zone) AS local_wall,
         |  with_timezone(ts, zone) AS instant_utc,
@@ -700,7 +695,7 @@ object RegistrySql extends QueryPack {
     // LAST-MAP-WINS duplicate-key policy since r7c (registry override —
     // fold dropping overridden keys, then a disjoint entries concat;
     // RegistrySuite locks the override).
-    "qi8_array_map_sql" -> ((s, dir) => sql(s, dir,
+    "qi8_array_map_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  array_join(array_sort(array_union(a, b)), ',') AS arr_u,
         |  array_join(array_sort(array_intersect(a, b)), ',') AS arr_i,
@@ -734,7 +729,7 @@ object RegistrySql extends QueryPack {
     // are the public RFC 2202/4231 test vectors (the oracle carries the
     // published digests); FNV is replayed computationally by the oracle
     // (list_reduce over bytes with the same multiply/xor recurrences).
-    "qh5_hash_hmac_sql" -> ((s, dir) => sql(s, dir,
+    "qh5_hash_hmac_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  lower(hex(CASE algo
         |    WHEN 'sha256' THEN hmac_sha256(to_utf8(data), from_hex(keyhex))
@@ -762,7 +757,7 @@ object RegistrySql extends QueryPack {
     // failure, out-of-bounds element_at, unparseable date — each yields
     // NULL through TryEval instead of failing the query (qb0 covers the
     // try_* spellings; this is the reference's own syntax).
-    "qi0_try_sql" -> ((s, dir) => sql(s, dir,
+    "qi0_try_sql" -> ((s, dir) => sql(s,
       """SELECT p_partkey,
         |  TRY(cast(substr(p_type, 1, 3) as integer)) AS bad_int,
         |  TRY(cast(cast(p_size as string) as integer)) AS good_int,
@@ -773,7 +768,7 @@ object RegistrySql extends QueryPack {
     // multimap_from_entries over row(key, value) arrays — fed here from
     // map_entries (whose structs carry the key/value field names the
     // reference's row type implies) and from explicit struct literals.
-    "qi2_multimap_sql" -> ((s, dir) => sql(s, dir,
+    "qi2_multimap_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  cast(cardinality(multimap_from_entries(es)) as bigint) AS n_keys,
         |  array_join(element_at(multimap_from_entries(es), 'a'), ',')
@@ -796,7 +791,7 @@ object RegistrySql extends QueryPack {
     // JSON, raw number spellings survive ('1.50' stays '1.50'), a JSON
     // null ELEMENT is SQL NULL while the STRING "null" is the 4-char
     // value (the distinction the old get_json_object template lost).
-    "qi1_json_extras_sql" -> ((s, dir) => sql(s, dir,
+    "qi1_json_extras_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  json_size(j, '$') AS sz_root,
         |  json_size(j, '$.a') AS sz_a,
@@ -829,7 +824,7 @@ object RegistrySql extends QueryPack {
     // representation (unsigned bytewise = ObjectId.compareTo). The
     // zero-arg generator is nondeterministic by contract, so only its
     // SHAPE is gated (12 bytes).
-    "q1n_objectid" -> ((s, dir) => sql(s, dir,
+    "q1n_objectid" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  hex(objectid(oid)) AS oid_hex,
         |  objectid(' ' || substr(oid, 1, 8) || ' ' || substr(oid, 9) || ' ')
@@ -848,7 +843,7 @@ object RegistrySql extends QueryPack {
 
     // Teradata compat plugin (presto-teradata-functions): index,
     // char2hexint (uppercase UTF-16BE hex).
-    "qh9_teradata_sql" -> ((s, dir) => sql(s, dir,
+    "qh9_teradata_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  cast(index(s, 'lo') as bigint) AS idx,
         |  char2hexint(s) AS hx
@@ -857,7 +852,7 @@ object RegistrySql extends QueryPack {
         |ORDER BY id""".stripMargin)),
 
     // Vector math via registry lambdas over `embeddings` pairs.
-    "qa3_presto_sql_vector" -> ((s, dir) => sql(s, dir,
+    "qa3_presto_sql_vector" -> ((s, dir) => sql(s,
       """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
         |  round(cosine_similarity(a.embedding, b.embedding), 4) AS cos,
         |  round(dot_product(a.embedding, b.embedding), 4) AS dot,
@@ -871,7 +866,7 @@ object RegistrySql extends QueryPack {
     // unweighted and weighted. Mergeable O(buckets) state; the oracle
     // replays the same histogram + (-Σ p ln p + ln w)/ln 2 (doubles gate
     // at 1e-9 relative tolerance).
-    "qk3_differential_entropy" -> ((s, dir) => sql(s, dir,
+    "qk3_differential_entropy" -> ((s, dir) => sql(s,
       """SELECT l_returnflag,
         |  differential_entropy(17, l_quantity, 1.0,
         |    'fixed_histogram_mle', 0.0, 51.0) AS ent,
@@ -886,7 +881,7 @@ object RegistrySql extends QueryPack {
     // names through the same metadata the planner resolves): the
     // Presto-name registry is CATALOG-VISIBLE, not a parser hack — the
     // session function catalog enumerates the installed names.
-    "ql1_show_functions_sql" -> ((s, dir) => sql(s, dir,
+    "ql1_show_functions_sql" -> ((s, dir) => sql(s,
       "SHOW FUNCTIONS LIKE 'classification_*'")
       .selectExpr("cast(function as string) as function")
       .orderBy("function")),
@@ -901,7 +896,7 @@ object RegistrySql extends QueryPack {
     // Java `==` where NaN equals nothing — the reference itself groups
     // and sorts NaN as equal/greatest, so only the raw `=` operator
     // differs.
-    "qk9_float_special_sql" -> ((s, dir) => sql(s, dir,
+    "qk9_float_special_sql" -> ((s, dir) => sql(s,
       """WITH v AS (SELECT * FROM VALUES
         |    (1, nan()), (2, infinity()), (3, -infinity()),
         |    (4, 1.5E0), (5, cast(null as double)) AS t(id, x)),
@@ -947,7 +942,7 @@ object RegistrySql extends QueryPack {
     // The oracle runs the GENUINE quantified forms — the gate proves the
     // rewrite matches a real implementation on every branch (empty set,
     // NULL probe, NULL elements, definite hits/misses).
-    "qk8_quantified_sql" -> ((s, dir) => sql(s, dir,
+    "qk8_quantified_sql" -> ((s, dir) => sql(s,
       """WITH probe AS (SELECT * FROM VALUES
         |    (1, 3), (2, 1), (3, CAST(NULL AS INT)), (4, 0) AS p(id, x))
         |SELECT cast(id as bigint) AS id, x,
@@ -1012,7 +1007,7 @@ object RegistrySql extends QueryPack {
     // (TestVarbinaryFunctions.java:338-341) — the oracle carries those
     // digests, the HMAC-vector stance. Determinism/width over corpus
     // data are asserted alongside (DuckDB replays count + widths).
-    "qk5_spooky_sql" -> ((s, dir) => sql(s, dir,
+    "qk5_spooky_sql" -> ((s, dir) => sql(s,
       """SELECT cast(id as bigint) AS id,
         |  lower(hex(spooky_hash_v2_32(to_utf8(data)))) AS h32,
         |  lower(hex(spooky_hash_v2_64(to_utf8(data)))) AS h64,
@@ -1033,7 +1028,7 @@ object RegistrySql extends QueryPack {
     // (weights strictly positive, so the filters coincide) — and the
     // driver's row hasher needs scalar columns. The array aggregates
     // themselves are still what's under test; the explode is reshaping.
-    "qk4_classification_arrays" -> ((s, dir) => sql(s, dir,
+    "qk4_classification_arrays" -> ((s, dir) => sql(s,
       """WITH a AS (SELECT
         |  classification_thresholds(10, l_returnflag = 'R',
         |    l_discount * 10) AS th,
@@ -1063,8 +1058,6 @@ object RegistrySql extends QueryPack {
     // ANALYSIS (the builder reads it then), reset before returning so
     // the shared driver session keeps the documented Spark default.
     "q1r_strict_element_at" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       val key = "spark.graft.elementAt.strict"
       try {
         s.conf.set(key, "true")
@@ -1096,7 +1089,7 @@ object RegistrySql extends QueryPack {
     // and null placement verify against another engine's
     // implementation, not our own arithmetic. Tie-free keys
     // (o_orderkey is unique) keep both engines deterministic.
-    "q3i_agg_order_by" -> ((s, dir) => sql(s, dir,
+    "q3i_agg_order_by" -> ((s, dir) => sql(s,
       """SELECT o_orderpriority,
         |  array_join(array_agg(o_orderkey ORDER BY o_totalprice DESC,
         |      o_orderkey), ',') AS by_price_desc,

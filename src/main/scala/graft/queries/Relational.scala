@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Relational core: scans, filters, projections, joins (inner/outer/semi/
   * anti/cross/theta), aggregation, subqueries, distinct, top-N, having.
@@ -24,13 +21,11 @@ import graft.Tables
   */
 object Relational extends QueryPack {
 
-  private def t(s: SparkSession, dir: String, n: String) = Tables.view(s, dir, n)
-
   override def defs: Map[String, Q] = Map(
     // TPC-H Q1: full-scan aggregation; 6k→600M rows scale path is pure
     // map-side partial agg on 6 grouping values — no skew possible.
     "q01_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_shipdate") <= lit("2000-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -48,7 +43,7 @@ object Relational extends QueryPack {
     // Fused scan+filter+project (reference: ScanFilterAndProjectOperator);
     // predicate + column pruning must reach the parquet reader.
     "q02_scan_filter_project" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_shipdate").between(
           lit("1997-01-01").cast("timestamp"), lit("1997-12-31").cast("timestamp"))
           && col("l_quantity") > 45)
@@ -60,10 +55,10 @@ object Relational extends QueryPack {
 
     // TPC-H Q3: broadcast dim filter + fact-fact shuffle join + topN.
     "q03_shipping_priority" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord = t(s, dir, "orders")
+      val cust = s.table("customer").filter(col("c_mktsegment") === "BUILDING")
+      val ord = s.table("orders")
         .filter(col("o_orderdate") < lit("1998-03-15").cast("timestamp"))
-      val li = t(s, dir, "lineitem")
+      val li = s.table("lineitem")
         .filter(col("l_shipdate") > lit("1998-03-15").cast("timestamp"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
@@ -76,8 +71,8 @@ object Relational extends QueryPack {
 
     // Correlated EXISTS with an inequality — semi join with compound condition.
     "q04_late_shipping" -> ((s, dir) => {
-      val ord = t(s, dir, "orders")
-      val li = t(s, dir, "lineitem")
+      val ord = s.table("orders")
+      val li = s.table("lineitem")
       ord.join(li,
           ord("o_orderkey") === li("l_orderkey") &&
           li("l_shipdate") > ord("o_orderdate") + expr("INTERVAL 60 DAYS"),
@@ -89,13 +84,13 @@ object Relational extends QueryPack {
 
     // TPC-H Q5-style multiway join: two broadcast dims + fact-fact shuffle.
     "q05_nation_revenue" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
+      val li = s.table("lineitem")
+      val ord = s.table("orders")
         .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp")
           && col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
-      val supp = t(s, dir, "supplier")
-      val nat = t(s, dir, "nation")
-      val reg = t(s, dir, "region")
+      val supp = s.table("supplier")
+      val nat = s.table("nation")
+      val reg = s.table("region")
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
@@ -107,7 +102,7 @@ object Relational extends QueryPack {
 
     // TPC-H Q6: tight scan-agg; every predicate must be a PushedFilter.
     "q06_revenue_forecast" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp")
           && col("l_shipdate") < lit("1998-01-01").cast("timestamp")
           && col("l_discount").between(0.05, 0.07)
@@ -117,8 +112,8 @@ object Relational extends QueryPack {
 
     // TPC-H Q13: left outer join + two-level aggregation.
     "q07_order_count_dist" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val ord = t(s, dir, "orders")
+      val cust = s.table("customer")
+      val ord = s.table("orders")
       cust.join(ord, col("c_custkey") === col("o_custkey"), "left_outer")
         .groupBy(col("c_custkey"))
         .agg(count(col("o_orderkey")).as("c_count"))
@@ -129,8 +124,8 @@ object Relational extends QueryPack {
 
     // Anti join: customers with no recent orders.
     "q08_inactive_customers" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val recent = t(s, dir, "orders")
+      val cust = s.table("customer")
+      val recent = s.table("orders")
         .filter(col("o_orderdate") > lit("2001-01-01").cast("timestamp"))
       cust.join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy(col("c_nationkey"))
@@ -139,26 +134,26 @@ object Relational extends QueryPack {
     }),
 
     "q09_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .select(col("l_returnflag"), col("l_linestatus"))
         .distinct()
         .orderBy(col("l_returnflag"), col("l_linestatus"))),
 
     // TopN → TakeOrderedAndProject (reference: TopNOperator.java:35).
     "q10_top_orders" -> ((s, dir) =>
-      t(s, dir, "orders")
+      s.table("orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(15)),
 
     // DistinctLimit (reference: DistinctLimitOperator.java:37).
     "q11_distinct_limit" -> ((s, dir) =>
-      t(s, dir, "customer")
+      s.table("customer")
         .select(col("c_nationkey")).distinct()
         .orderBy(col("c_nationkey")).limit(10)),
 
     "q12_having" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .groupBy(col("l_returnflag"))
         .agg(round(sum(col("l_quantity")), 2).as("total_qty"),
           count(lit(1)).as("n"))
@@ -167,10 +162,10 @@ object Relational extends QueryPack {
 
     // TPC-H Q14-style conditional aggregation over a join.
     "q13_promo_revenue" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = s.table("lineitem")
         .filter(col("l_shipdate") >= lit("1997-09-01").cast("timestamp")
           && col("l_shipdate") < lit("1997-10-01").cast("timestamp"))
-      val part = t(s, dir, "part")
+      val part = s.table("part")
       li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
         .agg(round(
           sum(when(col("p_type") === "PROMO",
@@ -181,8 +176,8 @@ object Relational extends QueryPack {
 
     // IN-subquery → left semi join.
     "q14_in_subquery" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val promo = t(s, dir, "part").filter(col("p_type") === "PROMO")
+      val li = s.table("lineitem")
+      val promo = s.table("part").filter(col("p_type") === "PROMO")
       li.join(broadcast(promo), col("l_partkey") === col("p_partkey"), "left_semi")
         .agg(count(lit(1)).as("n"),
           round(sum(col("l_extendedprice")), 2).as("total"))
@@ -190,7 +185,7 @@ object Relational extends QueryPack {
 
     // Uncorrelated scalar subquery (reference: EnforceSingleRowOperator).
     "q15_above_avg_customers" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
+      val cust = s.table("customer")
       val avgBal = cust.agg(avg(col("c_acctbal")).as("a"))
       cust.join(broadcast(avgBal))
         .filter(col("c_acctbal") > col("a"))
@@ -207,8 +202,8 @@ object Relational extends QueryPack {
     // its output (r1 VERDICT item 9; Presto gets this via
     // `optimizations/PredicatePushDown.java:109` through the subquery).
     "q16_small_quantity_revenue" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val brandParts = t(s, dir, "part")
+      val li = s.table("lineitem")
+      val brandParts = s.table("part")
         .filter(col("p_brand") === "Brand#13").select(col("p_partkey"))
       val liBrand = li.join(broadcast(brandParts),
         col("l_partkey") === col("p_partkey"), "left_semi")
@@ -222,9 +217,9 @@ object Relational extends QueryPack {
 
     // TPC-H Q18: HAVING-filtered IN subquery + 3-way join.
     "q17_large_orders" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-      val cust = t(s, dir, "customer")
+      val li = s.table("lineitem")
+      val ord = s.table("orders")
+      val cust = s.table("customer")
       val big = li.groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity")).as("tq"))
         .filter(col("tq") > 150)
@@ -242,9 +237,9 @@ object Relational extends QueryPack {
     // Theta join (inequality pair-making; reference: NestedLoopJoinOperator
     // with join filter — Catalyst evaluates the extra predicate post-match).
     "q18_nation_pairs" -> ((s, dir) => {
-      val n1 = t(s, dir, "nation").select(
+      val n1 = s.table("nation").select(
         col("n_nationkey").as("k1"), col("n_name").as("name1"), col("n_regionkey").as("rk1"))
-      val n2 = t(s, dir, "nation").select(
+      val n2 = s.table("nation").select(
         col("n_nationkey").as("k2"), col("n_name").as("name2"), col("n_regionkey").as("rk2"))
       n1.join(n2, col("rk1") === col("rk2") && col("k1") < col("k2"))
         .groupBy(col("rk1").as("regionkey"))
@@ -253,17 +248,17 @@ object Relational extends QueryPack {
     }),
 
     "q19_cross_join" -> ((s, dir) => {
-      val reg = t(s, dir, "region").select(col("r_name"))
-      val nat = t(s, dir, "nation").select(col("n_name"))
+      val reg = s.table("region").select(col("r_name"))
+      val nat = s.table("nation").select(col("n_name"))
       reg.crossJoin(nat).orderBy(col("r_name"), col("n_name"))
     }),
 
     // Full outer join of two aggregates.
     "q20_full_outer" -> ((s, dir) => {
-      val custPerNation = t(s, dir, "customer")
+      val custPerNation = s.table("customer")
         .groupBy(col("c_nationkey").as("nationkey"))
         .agg(count(lit(1)).as("n_cust"))
-      val suppPerNation = t(s, dir, "supplier")
+      val suppPerNation = s.table("supplier")
         .groupBy(col("s_nationkey").as("nationkey"))
         .agg(count(lit(1)).as("n_supp"))
       custPerNation.join(suppPerNation, Seq("nationkey"), "full_outer")
@@ -275,11 +270,11 @@ object Relational extends QueryPack {
 
     // TPC-H Q21-style EXISTS + NOT EXISTS with correlated inequalities.
     "q21_waiting_suppliers" -> ((s, dir) => {
-      val supp = t(s, dir, "supplier")
-      val ordF = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-      val l1 = t(s, dir, "lineitem").alias("l1")
-      val l2 = t(s, dir, "lineitem").alias("l2")
-      val l3 = t(s, dir, "lineitem").alias("l3")
+      val supp = s.table("supplier")
+      val ordF = s.table("orders").filter(col("o_orderstatus") === "F")
+      val l1 = s.table("lineitem").alias("l1")
+      val l2 = s.table("lineitem").alias("l2")
+      val l3 = s.table("lineitem").alias("l3")
       val base = l1
         .join(ordF, col("l1.l_orderkey") === col("o_orderkey"))
         .join(broadcast(supp), col("l1.l_suppkey") === col("s_suppkey"))
@@ -297,10 +292,10 @@ object Relational extends QueryPack {
 
     // TPC-H Q22: scalar subquery + NOT EXISTS + aggregation.
     "q22_global_sales_opportunity" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
+      val cust = s.table("customer")
       val avgBal = cust.filter(col("c_acctbal") > 0.0)
         .agg(avg(col("c_acctbal")).as("a"))
-      val recent = t(s, dir, "orders")
+      val recent = s.table("orders")
         .filter(col("o_orderdate") > lit("2001-01-01").cast("timestamp"))
       cust.join(broadcast(avgBal))
         .filter(col("c_acctbal") > col("a"))

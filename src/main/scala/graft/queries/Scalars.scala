@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.PrestoScalars
 
 /** Scalar-function coverage: string, date/time, math (incl. width_bucket /
@@ -28,12 +27,9 @@ import graft.functions.PrestoScalars
   */
 object Scalars extends QueryPack {
 
-  private def t(s: org.apache.spark.sql.SparkSession, dir: String, n: String) =
-    Tables.view(s, dir, n)
-
   override def defs: Map[String, Q] = Map(
     "q70_string_funcs" -> ((s, dir) =>
-      t(s, dir, "part").filter(col("p_partkey") <= 200)
+      s.table("part").filter(col("p_partkey") <= 200)
         .select(
           col("p_partkey"),
           length(col("p_name")).cast("long").as("name_len"),
@@ -55,7 +51,7 @@ object Scalars extends QueryPack {
         .orderBy(col("p_partkey"))),
 
     "q71_datetime_funcs" -> ((s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderkey") <= 600)
+      s.table("orders").filter(col("o_orderkey") <= 600)
         .select(
           col("o_orderkey"),
           // DuckDB date_trunc('month', ts) yields DATE; normalize to DATE.
@@ -81,7 +77,7 @@ object Scalars extends QueryPack {
         .orderBy(col("o_orderkey"))),
 
     "q72_math_scalar" -> ((s, dir) =>
-      t(s, dir, "part").filter(col("p_partkey") <= 200)
+      s.table("part").filter(col("p_partkey") <= 200)
         .select(
           col("p_partkey"),
           abs(col("p_size") - 25).cast("long").as("abs_off"),
@@ -110,7 +106,7 @@ object Scalars extends QueryPack {
     // only (same policy as the reference's oracle tolerance,
     // `presto-tests/.../QueryAssertions.java`).
     "q73_math_transcendental" -> ((s, dir) =>
-      t(s, dir, "part")
+      s.table("part")
         .agg(
           round(avg(log(col("p_retailprice"))), 6).as("avg_ln_price"),
           round(avg(log(10.0, col("p_retailprice"))), 6).as("avg_log10_price"),
@@ -124,7 +120,7 @@ object Scalars extends QueryPack {
           round(lit(Math.PI), 6).as("pi_const"))),
 
     "q74_regex_funcs" -> ((s, dir) =>
-      t(s, dir, "part").filter(col("p_partkey") <= 200)
+      s.table("part").filter(col("p_partkey") <= 200)
         .select(
           col("p_partkey"),
           col("p_type").rlike("BRASS|COPPER").as("is_metal"),
@@ -138,7 +134,7 @@ object Scalars extends QueryPack {
         .orderBy(col("p_partkey"))),
 
     "q75_conditional" -> ((s, dir) =>
-      t(s, dir, "customer").filter(col("c_custkey") <= 300)
+      s.table("customer").filter(col("c_custkey") <= 300)
         .select(
           col("c_custkey"),
           expr("try_cast(replace(c_name, 'Customer#', '') AS BIGINT)").as("cust_num"),

@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Set operations (UNION [ALL] / INTERSECT [ALL] / EXCEPT [ALL]) and
   * grouping-set aggregations (ROLLUP / CUBE / GROUPING SETS).
@@ -16,18 +14,16 @@ import graft.Tables
   */
 object SetOps extends QueryPack {
 
-  private def t(s: SparkSession, dir: String, n: String) = Tables.view(s, dir, n)
-
-  private def custIn(s: SparkSession, dir: String, y0: String, y1: String) =
-    t(s, dir, "orders")
+  private def custIn(s: SparkSession, y0: String, y1: String) =
+    s.table("orders")
       .filter(col("o_orderdate") >= lit(y0).cast("timestamp")
         && col("o_orderdate") < lit(y1).cast("timestamp"))
       .select(col("o_custkey"))
 
   override def defs: Map[String, Q] = Map(
     "q40_union_all" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-      val su = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
+      val c = s.table("customer").select(col("c_nationkey").as("nationkey"))
+      val su = s.table("supplier").select(col("s_nationkey").as("nationkey"))
       c.unionAll(su)
         .groupBy(col("nationkey"))
         .agg(count(lit(1)).as("n"))
@@ -35,37 +31,37 @@ object SetOps extends QueryPack {
     }),
 
     "q41_union_distinct" -> ((s, dir) => {
-      val a = custIn(s, dir, "1995-01-01", "1996-01-01")
-      val b = custIn(s, dir, "2000-01-01", "2001-01-01")
+      val a = custIn(s, "1995-01-01", "1996-01-01")
+      val b = custIn(s, "2000-01-01", "2001-01-01")
       a.union(b).distinct().orderBy(col("o_custkey"))
     }),
 
     "q42_intersect" -> ((s, dir) =>
-      custIn(s, dir, "1995-01-01", "1996-01-01")
-        .intersect(custIn(s, dir, "2000-01-01", "2001-01-01"))
+      custIn(s, "1995-01-01", "1996-01-01")
+        .intersect(custIn(s, "2000-01-01", "2001-01-01"))
         .orderBy(col("o_custkey"))),
 
     "q43_except" -> ((s, dir) =>
-      custIn(s, dir, "1995-01-01", "1996-01-01")
-        .except(custIn(s, dir, "2000-01-01", "2001-01-01"))
+      custIn(s, "1995-01-01", "1996-01-01")
+        .except(custIn(s, "2000-01-01", "2001-01-01"))
         .orderBy(col("o_custkey"))),
 
     // Multiset variants (Presto: UNION/INTERSECT/EXCEPT ALL).
     "q44_intersect_all" -> ((s, dir) =>
-      custIn(s, dir, "1995-01-01", "1996-01-01")
-        .intersectAll(custIn(s, dir, "1996-01-01", "1997-01-01"))
+      custIn(s, "1995-01-01", "1996-01-01")
+        .intersectAll(custIn(s, "1996-01-01", "1997-01-01"))
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
         .orderBy(col("o_custkey"))),
 
     "q45_except_all" -> ((s, dir) =>
-      custIn(s, dir, "1995-01-01", "1997-01-01")
-        .exceptAll(custIn(s, dir, "1996-01-01", "1997-01-01"))
+      custIn(s, "1995-01-01", "1997-01-01")
+        .exceptAll(custIn(s, "1996-01-01", "1997-01-01"))
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
         .orderBy(col("o_custkey"))),
 
     // ROLLUP over (year, status): partial totals + grand total.
     "q46_rollup" -> ((s, dir) =>
-      t(s, dir, "orders")
+      s.table("orders")
         .select(year(col("o_orderdate")).cast("long").as("order_year"),
           col("o_orderstatus"), col("o_totalprice"))
         .rollup(col("order_year"), col("o_orderstatus"))
@@ -76,7 +72,7 @@ object SetOps extends QueryPack {
         .orderBy(col("g_year"), col("g_status"), col("order_year"), col("o_orderstatus"))),
 
     "q47_cube" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(round(sum(col("l_quantity")), 2).as("total_qty"),
           count(lit(1)).as("n"),
@@ -86,7 +82,6 @@ object SetOps extends QueryPack {
 
     // Explicit GROUPING SETS via SQL (Presto grammar parity).
     "q48_grouping_sets" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql(
         """SELECT l_returnflag, l_linestatus,
           | round(sum(l_extendedprice), 2) AS total,
@@ -105,7 +100,6 @@ object SetOps extends QueryPack {
     // replayed verbatim by DuckDB (whose Expand-free aggregation follows
     // the spec natively).
     "q0v_empty_rollup" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql(emptyRollupSql)
     })
   )

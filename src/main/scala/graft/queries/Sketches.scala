@@ -2,8 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** HLL sketch types (SURVEY §2 #61, previously deferred): build, merge,
   * and estimate HyperLogLog sketches as first-class values — the Presto
   * `approx_set` / `merge` / `cardinality` workflow
@@ -77,13 +75,13 @@ object Sketches extends QueryPack {
     * suite; the narrow column-pruned scan it saved is ~30 ms. */
   private def narrowLi(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Tables.view(s, dir, "lineitem")
+    s.table("lineitem")
       .select(col("l_returnflag"), col("l_suppkey"), col("l_extendedprice"))
 
   override def defs: Map[String, Q] = Map(
     // Build + estimate per group, tolerance-checked against exact.
     "qa9_hll_sketch" -> ((s, dir) => {
-      val li = Tables.view(s, dir, "lineitem")
+      val li = s.table("lineitem")
       val est = li.groupBy(col("l_returnflag"))
         .agg(hll_sketch_estimate(
           hll_sketch_agg(col("l_partkey"), lit(12))).as("est"))
@@ -99,7 +97,7 @@ object Sketches extends QueryPack {
     // Merge: per-supplier partial sketches unioned per flag must estimate
     // the same cardinality as a direct sketch (re-aggregation soundness).
     "qb1_hll_merge" -> ((s, dir) => {
-      val li = Tables.view(s, dir, "lineitem")
+      val li = s.table("lineitem")
       val partials = li.groupBy(col("l_returnflag"), col("l_suppkey"))
         .agg(hll_sketch_agg(col("l_partkey"), lit(12)).as("sk"))
       val merged = partials.groupBy(col("l_returnflag"))
@@ -219,7 +217,6 @@ object Sketches extends QueryPack {
     // same serialized digest — same code path, so equality is exact, for
     // both digest families (the expression discriminates on the header).
     "qj5_digest_vectors" -> ((s, dir) => {
-      graft.functions.Registry.install(s)
       val qs = graft.functions.QuantileSketch
       val td = graft.functions.TDigest
       narrowLi(s, dir)
@@ -248,7 +245,7 @@ object Sketches extends QueryPack {
     // replay in the oracle; tie-break (count desc, key asc) is enforced
     // identically on both sides.
     "qe4_approx_most_frequent" -> ((s, dir) => {
-      val li = Tables.view(s, dir, "lineitem")
+      val li = s.table("lineitem")
       val m = li.groupBy(col("l_returnflag"))
         .agg(graft.functions.ApproxMostFrequent(
           5, col("l_quantity").cast("long"), 64).as("m"))
@@ -265,8 +262,6 @@ object Sketches extends QueryPack {
     // flag << k=8192) every answer is exact, so the oracle replays them
     // with plain set algebra — estimator drift fails the hash, loudly.
     "qh0_set_digest" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       s.sql(
         """WITH d AS (
           |  SELECT l_returnflag, make_set_digest(l_suppkey) AS sd
@@ -290,8 +285,6 @@ object Sketches extends QueryPack {
     // and the oracle replays them by counting; the merged-from-partials
     // digest must be byte-identical to the direct build.
     "qh7_khll" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       s.sql(
         """WITH d AS (
           |  SELECT l_linestatus, khyperloglog_agg(l_partkey, l_orderkey)
@@ -323,7 +316,6 @@ object Sketches extends QueryPack {
     // linear-counting small range must be ±4% (~3σ) at n=3000, and the
     // empty-sketch constant estimates exactly 0.
     "qj9_hll_estimator" -> ((s, dir) => {
-      graft.functions.Registry.install(s)
       s.range(400000L).toDF("id").createOrReplaceTempView("graft_hll_ids")
       s.sql(
         """WITH p AS (
@@ -350,7 +342,7 @@ object Sketches extends QueryPack {
     }),
 
     "qh1_set_digest_merge" -> ((s, dir) => {
-      val li = Tables.view(s, dir, "lineitem")
+      val li = s.table("lineitem")
       val sd = graft.functions.SetDigest
       val direct = li.groupBy(col("l_returnflag"))
         .agg(sd.make(col("l_suppkey")).as("d"))

@@ -61,7 +61,7 @@ object Storage extends QueryPack {
   override def defs: Map[String, Q] = Map(
     "qa8_ctas_roundtrip" -> ((s, dir) => {
       val out = ctasPath(s, dir)
-      val derived = Tables.view(s, dir, "lineitem")
+      val derived = s.table("lineitem")
         .filter(col("l_quantity") > 10)
         .groupBy(col("l_returnflag"),
           year(col("l_shipdate")).as("ship_year"))
@@ -83,7 +83,7 @@ object Storage extends QueryPack {
     "qk1_insert_append" -> ((s, dir) => {
       val out = ctasPath(s, dir) + "_ins"
       val t = s"graft_ins_${Integer.toHexString(dir.hashCode)}"
-      val li = Tables.view(s, dir, "lineitem")
+      val li = s.table("lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       li.filter(col("l_orderkey") % 2 === 0)
         .write.mode("overwrite").option("path", out).saveAsTable(t)
@@ -166,7 +166,6 @@ object Storage extends QueryPack {
     // the data — a genuine two-engine agreement on the stats values
     // (Spark's ndv uses HLL++, exact at this cardinality).
     "qq6_analyze_stats" -> ((s, dir) => {
-      Tables.register(s, dir)
       val t = s"graft_an_${Integer.toHexString(dir.hashCode)}"
       s.sql(s"DROP TABLE IF EXISTS $t")
       s.sql(s"CREATE TABLE $t USING parquet AS SELECT * FROM nation")
@@ -214,7 +213,7 @@ object Storage extends QueryPack {
       // 2.5 s). Iceberg's write.distribution-mode=hash makes the same
       // trade at scale. Table contents and the exchange-free join plan
       // are unchanged.
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"),
           col("l_discount"), col("l_returnflag"))
         .repartition(8, col("l_orderkey"))
@@ -222,7 +221,7 @@ object Storage extends QueryPack {
         .sortBy("l_orderkey")
         .option("path", ctasPath(s, dir) + "_li_bucketed")
         .saveAsTable(liT)
-      Tables.view(s, dir, "orders")
+      s.table("orders")
         .select(col("o_orderkey"), col("o_orderstatus"))
         .repartition(8, col("o_orderkey"))
         .write.mode("overwrite").bucketBy(8, "o_orderkey")
@@ -252,7 +251,7 @@ object Storage extends QueryPack {
     "q1h_compaction" -> ((s, dir) => {
       import graft.operators.Compaction
       val out = ctasPath(s, dir) + "_compact"
-      graft.Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_orderkey") % 2 === 0) // half the rows: fixture cost
         .select(col("l_orderkey"), col("l_returnflag"),
           col("l_extendedprice"))
@@ -295,7 +294,7 @@ object Storage extends QueryPack {
       val out = ctasPath(s, dir) + "_tcompact"
       // materialize the slim projection ONCE — nine per-slice writes
       // otherwise re-scan the lineitem parquet nine times
-      val base = graft.Tables.view(s, dir, "lineitem")
+      val base = s.table("lineitem")
         .filter(col("l_orderkey") % 4 === 0)
         .select(col("l_orderkey").as("k"), col("l_quantity"))
         .localCheckpoint()
@@ -419,7 +418,7 @@ object Storage extends QueryPack {
     // mask operators over the same closed form.
     "q2d_zorder_layout" -> ((s, dir) => {
       import graft.operators.ZOrder
-      val src = graft.Tables.view(s, dir, "lineitem")
+      val src = s.table("lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_returnflag"))
       // r18 OPT (guide §1.2/§5): the layout bounds are the fixture's
@@ -541,7 +540,7 @@ object Storage extends QueryPack {
       // the same cold FileSourceScan / warm InMemoryTableScan contract
       // and the same rows; the copy write (~0.4 s/pass) is gone.
       val t = "graft_cache_li"
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
         .createOrReplaceTempView(t)
@@ -593,7 +592,7 @@ object Storage extends QueryPack {
     // inference is a full extra pass over text data).
     "qc8_orc_roundtrip" -> ((s, dir) => {
       val out = ctasPath(s, dir) + "_orc"
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
         .write.mode("overwrite").orc(out)
@@ -607,7 +606,7 @@ object Storage extends QueryPack {
 
     "qd3_json_roundtrip" -> ((s, dir) => {
       val out = ctasPath(s, dir) + "_json"
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
         .write.mode("overwrite").json(out)
@@ -633,7 +632,7 @@ object Storage extends QueryPack {
     "qh6_jdbc_roundtrip" -> ((s, dir) => {
       useDerbyHome()
       val url = "jdbc:derby:" + ctasPath(s, dir) + "_derby;create=true"
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("cnt"), sum(col("l_extendedprice")).as("rev"))
         .write.mode("overwrite").format("jdbc")
@@ -668,7 +667,7 @@ object Storage extends QueryPack {
       // showed: the r10 shape measured a 1.0 scaling exponent on the
       // sf1 sweep, all of it serial insert time
       val url = derbyFixture(s, dir, "_derby2", "li_rows") { u =>
-        graft.Tables.view(s, dir, "lineitem")
+        s.table("lineitem")
           .filter(col("l_orderkey") % 8 === 0)
           .select(col("l_orderkey"), col("l_returnflag"),
             col("l_quantity"), col("l_extendedprice"))
@@ -705,7 +704,7 @@ object Storage extends QueryPack {
     // same raw values, summation-order drift sits ~1e-10 relative.
     "q1s_jdbc_stats_pushdown" -> ((s, dir) => {
       val url = derbyFixture(s, dir, "_derby4", "li_stats") { u =>
-        graft.Tables.view(s, dir, "lineitem")
+        s.table("lineitem")
           .filter(col("l_orderkey") % 8 === 0)
           .select(col("l_returnflag"), col("l_quantity"))
           .repartition(8)
@@ -745,7 +744,7 @@ object Storage extends QueryPack {
     "q1q_jdbc_topn_pushdown" -> ((s, dir) => {
       org.apache.spark.sql.jdbc.GraftDerbyDialect.install()
       val url = derbyFixture(s, dir, "_derby3", "ord_rows") { u =>
-        Tables.view(s, dir, "orders")
+        s.table("orders")
           .filter(col("o_orderkey") <= 1200)
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"))
@@ -785,7 +784,7 @@ object Storage extends QueryPack {
     "q2i_jdbc_offset_pushdown" -> ((s, dir) => {
       org.apache.spark.sql.jdbc.GraftDerbyDialect.install()
       val url = derbyFixture(s, dir, "_derby4", "ord_off") { u =>
-        Tables.view(s, dir, "orders")
+        s.table("orders")
           .filter(col("o_orderkey") <= 1200)
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"))
@@ -832,7 +831,7 @@ object Storage extends QueryPack {
       val url = "jdbc:mysql://graft-shim/g"
       val drv = "graft.sources.GraftMySqlDriver"
       MySqlStore.drop("li_mysql")
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_orderkey") <= 800)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           (col("l_orderkey") % 2 === 0).as("even"))
@@ -889,7 +888,7 @@ object Storage extends QueryPack {
       val url = "jdbc:mysql://graft-shim/g"
       val drv = "graft.sources.GraftMySqlDriver"
       MySqlStore.drop("ord_mysql")
-      Tables.view(s, dir, "orders")
+      s.table("orders")
         .filter(col("o_orderkey") <= 1200)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))
@@ -956,7 +955,7 @@ object Storage extends QueryPack {
       val url = "jdbc:postgresql://graft-shim/g"
       val drv = "graft.sources.GraftPostgresDriver"
       PgStore.drop("li_pg")
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_orderkey") <= 800)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           (col("l_orderkey") % 2 === 0).as("even"))
@@ -1044,7 +1043,7 @@ object Storage extends QueryPack {
       val url = "jdbc:sqlserver://graft-shim;databaseName=g"
       val drv = "graft.sources.GraftSqlServerDriver"
       MsStore.drop("li_ms")
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_orderkey") <= 800)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           (col("l_orderkey") % 2 === 0).as("even"))
@@ -1119,7 +1118,7 @@ object Storage extends QueryPack {
       val url = "jdbc:sqlserver://graft-shim;databaseName=g"
       val drv = "graft.sources.GraftSqlServerDriver"
       MsStore.drop("ord_ms")
-      Tables.view(s, dir, "orders")
+      s.table("orders")
         .filter(col("o_orderkey") <= 1200)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))
@@ -1187,14 +1186,14 @@ object Storage extends QueryPack {
       val drv = "graft.sources.GraftMySqlDriver"
       MySqlStore.drop("ord_jp")
       MySqlStore.drop("li_jp")
-      Tables.view(s, dir, "orders")
+      s.table("orders")
         .filter(col("o_orderkey") <= 600)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))
         .write.format("jdbc").option("url", url)
         .option("dbtable", "ord_jp").option("driver", drv)
         .mode("overwrite").save()
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_orderkey") <= 600)
         .select(col("l_orderkey"), col("l_quantity"),
           col("l_returnflag"))
@@ -1260,7 +1259,7 @@ object Storage extends QueryPack {
       val url = "jdbc:postgresql://graft-shim/g"
       val drv = "graft.sources.GraftPostgresDriver"
       PgStore.drop("ord_pg")
-      val src = Tables.view(s, dir, "orders")
+      val src = s.table("orders")
         .filter(col("o_orderkey") <= 1200)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))
@@ -1337,7 +1336,7 @@ object Storage extends QueryPack {
       // view directly deletes one full write+scan pass of the 5-column
       // slice; v2's row set (and the locked aggregate) is unchanged.
       val v2 = ctasPath(s, dir) + "_delv2"
-      val t = Tables.view(s, dir, "lineitem")
+      val t = s.table("lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_discount"), col("l_extendedprice"))
       val pred = col("l_discount") > 0.05 && col("l_quantity") < 30
@@ -1363,7 +1362,7 @@ object Storage extends QueryPack {
       // "base" copy; the COW rewrite applying the SET expressions is
       // the UPDATE semantics, and it reads the projected view directly.
       val v2 = ctasPath(s, dir) + "_updv2"
-      val t = Tables.view(s, dir, "lineitem")
+      val t = s.table("lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_discount"), col("l_extendedprice"))
       val hit = coalesce(col("l_quantity") > 40, lit(false))
@@ -1383,7 +1382,7 @@ object Storage extends QueryPack {
 
     "qc9_csv_roundtrip" -> ((s, dir) => {
       val out = ctasPath(s, dir) + "_csv"
-      Tables.view(s, dir, "lineitem")
+      s.table("lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
         .write.mode("overwrite").option("header", "true").csv(out)

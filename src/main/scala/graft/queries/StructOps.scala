@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.operators.Salt
 
 /** ROW-type operations and skew-safe joins.
@@ -23,7 +22,7 @@ object StructOps extends QueryPack {
     // Row values: per-nation extremes selected by lexicographic
     // (acctbal, name) struct order — deterministic under balance ties.
     "qb2_row_type_ops" -> ((s, dir) =>
-      Tables.view(s, dir, "customer")
+      s.table("customer")
         .groupBy(col("c_nationkey"))
         .agg(
           min(struct(col("c_acctbal"), col("c_name"))).as("lo"),
@@ -39,7 +38,7 @@ object StructOps extends QueryPack {
     // `presto-common/.../function/OperatorType.IS_DISTINCT_FROM`;
     // null-skipping greatest/least): Spark's <=> over planted nulls.
     "qc1_nullsafe_ops" -> ((s, dir) => {
-      val base = Tables.view(s, dir, "customer")
+      val base = s.table("customer")
         .withColumn("nb", when(col("c_acctbal") >= 0, col("c_acctbal")))
       val a = base.select(col("c_custkey"), col("nb").as("a_nb"))
       val b = base.select((col("c_custkey") - 1).as("c_custkey"),
@@ -57,7 +56,7 @@ object StructOps extends QueryPack {
     // Salted shuffle join on the 3-value l_returnflag key (the canonical
     // hot-key shape), aggregated after the join; output == plain join.
     "qb3_salted_join" -> ((s, dir) => {
-      val li = Tables.view(s, dir, "lineitem")
+      val li = s.table("lineitem")
       val flagDim = s.createDataFrame(Seq(
         ("A", "returned"), ("N", "active"), ("R", "refunded")))
         .toDF("l_returnflag", "flag_name")

@@ -2,8 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-import graft.functions.{Registry, Stemmer}
+import graft.functions.Stemmer
 import graft.operators.MinHash
 
 /** Text-analysis operators over the `documents` corpus — the per-document
@@ -25,9 +24,6 @@ import graft.operators.MinHash
   * ratios, so the DuckDB oracle replays them exactly.
   */
 object TextAnalysis extends QueryPack {
-
-  private def docs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.view(s, dir, "documents")
 
   /** Stopword profiles for the n-gram/stopword language heuristic. The
     * fixture corpus is synthetic word-salad, so the profiles are defined
@@ -60,7 +56,7 @@ object TextAnalysis extends QueryPack {
     // post-merge corpus token count must agree exactly.
     "q1a_bpe_train" -> ((s, dir) => {
       import org.apache.spark.sql.graft.ColumnBridge.{toCol, toExpr}
-      val words = docs(s, dir)
+      val words = s.table("documents")
         .select(explode(split(lower(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
       var vocab = words.groupBy(col("w")).agg(count(lit(1)).as("wc"))
@@ -122,7 +118,7 @@ object TextAnalysis extends QueryPack {
       // r18 OPT (guide §1.2): the exploded word stream feeds the vocab
       // build AND the encoding join — one materialized tokenize pass
       // (within-invocation) instead of two.
-      val d = docs(s, dir)
+      val d = s.table("documents")
         .select(col("doc_id"), col("lang"),
           explode(split(lower(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
@@ -164,7 +160,7 @@ object TextAnalysis extends QueryPack {
     // Language-ID heuristic: stopword-profile hit ratios -> predicted
     // class, reported as a confusion matrix against the labeled lang.
     "q97_langid_confusion" -> ((s, dir) => {
-      val scored = docs(s, dir)
+      val scored = s.table("documents")
         .withColumn("w", split(col("text"), " "))
         .withColumn("fn_ratio", hitRatio(col("w"), FunctionWords))
         .withColumn("tech_ratio", hitRatio(col("w"), TechWords))
@@ -183,7 +179,7 @@ object TextAnalysis extends QueryPack {
     // word length, rare-token share -> composite score, summarized per
     // source (the dedup/filter decision unit of a curation pipeline).
     "q98_quality_score" -> ((s, dir) => {
-      val q = docs(s, dir)
+      val q = s.table("documents")
         .withColumn("w", split(col("text"), " "))
         .withColumn("n_tok", size(col("w")).cast("long"))
         .withColumn("ttr",
@@ -209,7 +205,7 @@ object TextAnalysis extends QueryPack {
     // (words split into <=4-char pieces), chars-per-token — the
     // token-budget accounting of a training pipeline, per lang.
     "q99_token_stats" -> ((s, dir) =>
-      docs(s, dir)
+      s.table("documents")
         .withColumn("ws_tok", size(split(col("text"), " ")).cast("long"))
         .withColumn("bpe_tok",
           size(regexp_extract_all(col("text"), lit("[a-z]{1,4}"), lit(0)))
@@ -231,7 +227,7 @@ object TextAnalysis extends QueryPack {
     // broadcast at this scale and a shuffle join when the vocabulary is
     // genuinely large; either plan is bucket-local, never all-pairs.
     "qh8_ngram_perplexity" -> ((s, dir) => {
-      val words = docs(s, dir)
+      val words = s.table("documents")
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 2)
       val bi = words.select(col("doc_id"), expr(
@@ -258,7 +254,7 @@ object TextAnalysis extends QueryPack {
     // (md5-derived so the oracle replays it) -> collision clusters, the
     // cheap first pass of a fuzzy-dedup cascade.
     "qa0_doc_fingerprint" -> ((s, dir) => {
-      val fp = docs(s, dir)
+      val fp = s.table("documents")
         .withColumn("sh", MinHash.shingles(col("text"), k = 4))
         .withColumn("fp", array_min(transform(col("sh"),
           g => conv(substring(md5(g), 1, 15), 16, 10).cast("long"))))
@@ -279,8 +275,6 @@ object TextAnalysis extends QueryPack {
     // StemmerSuite, including the Porter1-divergent cases (ties, dying,
     // news, generalization).
     "qc4_word_stem" -> ((s, dir) => {
-      Tables.register(s, dir)
-      Registry.install(s)
       s.sql(
         """SELECT word, word_stem(word) AS stem_sql,
           |  word_stem(word, 'en') AS stem_en
@@ -301,7 +295,6 @@ object TextAnalysis extends QueryPack {
     // the decomposition. Inputs built from \u escapes (not SQL literals)
     // so the bytes are unambiguous on both engines.
     "qc5_normalize" -> ((s, dir) => {
-      Registry.install(s)
       s.createDataFrame(Seq(
         (1L, "école"), // decomposed: e + COMBINING ACUTE
         (2L, "école"))) // composed e-acute

@@ -59,17 +59,14 @@ object TpcdsSql extends QueryPack {
   private def registerTpcds(s: SparkSession, dir: String): Unit =
     synchronized {
       // The derived views are SQL text and resolve lineitem, part, ... by
-      // name, and a fact is written from them when a query first names
-      // it: keep the base views on this dir even if another pack's gate
-      // moved them (a no-op lookup otherwise).
-      Tables.register(s, dir)
+      // name: the base views on `dir` are registered before a gate runs
+      // (SparkEntry.queries).
       if (tpcdsRegistered.get(s) == dir) return
       registerTpcdsViews(s, dir)
       tpcdsRegistered.put(s, dir)
     }
 
   private def registerTpcdsViews(s: SparkSession, dir: String): Unit = {
-    Tables.register(s, dir)
     // 6 fixture years of calendar days; sk = days since 1995-01-01 at the
     // Julian-ish 2450000 base the real generator uses.
     s.sql("""CREATE OR REPLACE TEMPORARY VIEW date_dim AS
@@ -451,7 +448,6 @@ object TpcdsSql extends QueryPack {
   private def sql(s: SparkSession, dir: String, q: String) = {
     registerTpcds(s, dir)
     materializeFacts(s, dir, q)
-    Registry.install(s)
     s.sql(Registry.rewritePrestoSql(q))
   }
 

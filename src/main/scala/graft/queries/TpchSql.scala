@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Tables
 import graft.functions.Registry
 import graft.queries.QueryPack.withCte
 
@@ -32,12 +31,8 @@ import graft.queries.QueryPack.withCte
   */
 object TpchSql extends QueryPack {
 
-  private def sql(s: org.apache.spark.sql.SparkSession, dir: String,
-                  q: String) = {
-    Tables.register(s, dir)
-    Registry.install(s)
+  private def sql(s: org.apache.spark.sql.SparkSession, q: String) =
     s.sql(Registry.rewritePrestoSql(q))
-  }
 
   /** Oracle-side replay of the derived partsupp view (Tables.register). */
   private val psCte =
@@ -261,11 +256,11 @@ object TpchSql extends QueryPack {
   )
 
   override def defs: Map[String, Q] =
-    texts.transform[Q]((_, q) => (s, dir) => sql(s, dir, q)) ++ Map[String, Q](
+    texts.transform[Q]((_, q) => (s, dir) => sql(s, q)) ++ Map[String, Q](
     // Q7 volume shipping: bidirectional nation pair over a 6-table
     // implicit join, year extraction, derived-table GROUP BY. Verbatim
     // but for the fixture's nation vocabulary.
-    "qf6_tpch_q7_sql" -> ((s, dir) => sql(s, dir,
+    "qf6_tpch_q7_sql" -> ((s, dir) => sql(s,
       """SELECT supp_nation, cust_nation, l_year, sum(volume) AS revenue
         |FROM (
         |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -286,7 +281,7 @@ object TpchSql extends QueryPack {
 
     // Q8 national market share: 8-table implicit join, conditional
     // aggregation ratio. p_type uses the fixture's single-word vocabulary.
-    "qf7_tpch_q8_sql" -> ((s, dir) => sql(s, dir,
+    "qf7_tpch_q8_sql" -> ((s, dir) => sql(s,
       """SELECT o_year,
         |  sum(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END)
         |    / sum(volume) AS mkt_share
@@ -313,7 +308,7 @@ object TpchSql extends QueryPack {
     // Q9 product-type profit: partsupp cost joined on BOTH lineitem keys,
     // p_name LIKE over the fixture's color vocabulary ('%red%' for
     // '%green%').
-    "qf8_tpch_q9_sql" -> ((s, dir) => sql(s, dir,
+    "qf8_tpch_q9_sql" -> ((s, dir) => sql(s,
       """SELECT nation, o_year, sum(amount) AS sum_profit
         |FROM (
         |  SELECT n_name AS nation,
@@ -335,7 +330,7 @@ object TpchSql extends QueryPack {
     // Q12 shipping modes & priority: two-bucket conditional counts. The
     // fixture has no l_shipmode/l_commitdate/l_receiptdate: groups by
     // l_returnflag and defines "late" as shipped >30 days after ordering.
-    "qg0_tpch_q12_sql" -> ((s, dir) => sql(s, dir,
+    "qg0_tpch_q12_sql" -> ((s, dir) => sql(s,
       """SELECT l_returnflag,
         |  sum(CASE WHEN o_orderpriority = '1-URGENT'
         |        OR o_orderpriority = '2-HIGH'
@@ -356,7 +351,7 @@ object TpchSql extends QueryPack {
     // Q15 is the one TPC-H query that exercises DDL), queried with an
     // uncorrelated MAX subquery. s_address dropped (slim fixture).
     "qg2_tpch_q15_sql" -> ((s, dir) => {
-      sql(s, dir,
+      sql(s,
         """CREATE OR REPLACE TEMPORARY VIEW revenue0 AS
           |SELECT l_suppkey AS supplier_no,
           |  sum(l_extendedprice * (1 - l_discount)) AS total_revenue

@@ -2,8 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Presto TRY / try_cast semantics (SURVEY §2 #48 "hard part"): errors
   * become NULL instead of failing the query.
   *
@@ -23,7 +21,7 @@ object TrySemantics extends QueryPack {
 
   override def defs: Map[String, Q] = Map(
     "qb0_try_semantics" -> ((s, dir) =>
-      Tables.view(s, dir, "part")
+      s.table("part")
         .filter(col("p_partkey") <= 300)
         .select(
           col("p_partkey"),

@@ -2,8 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Unnest / lateral generators, inline VALUES, sampling, and unique-id
   * assignment — the reference's generator surface.
   *
@@ -19,14 +17,11 @@ import graft.Tables
   */
 object Unnest extends QueryPack {
 
-  private def t(s: org.apache.spark.sql.SparkSession, dir: String, n: String) =
-    Tables.view(s, dir, n)
-
   override def defs: Map[String, Q] = Map(
     // UNNEST WITH ORDINALITY over a real array column (float widening to
     // double is exact, so values hash identically).
     "q80_unnest_ordinality" -> ((s, dir) =>
-      t(s, dir, "embeddings").filter(col("vec_id") <= 20)
+      s.table("embeddings").filter(col("vec_id") <= 20)
         .select(col("vec_id"),
           posexplode(col("embedding")).as(Seq("pos0", "v")))
         .select(
@@ -39,7 +34,7 @@ object Unnest extends QueryPack {
     // token-count shape for a 100 TB corpus: generate → partial agg →
     // final agg, one shuffle).
     "q81_word_unnest" -> ((s, dir) =>
-      t(s, dir, "documents")
+      s.table("documents")
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(col("word") =!= "")
         .groupBy(col("word"))
@@ -50,7 +45,7 @@ object Unnest extends QueryPack {
     // Multi-column zipped unnest (Presto UNNEST(a, b) semantics) via
     // zip_with + posexplode.
     "q82_zip_unnest" -> ((s, dir) =>
-      t(s, dir, "embeddings").filter(col("vec_id") <= 10)
+      s.table("embeddings").filter(col("vec_id") <= 10)
         .select(col("vec_id"),
           expr("""posexplode(zip_with(slice(embedding, 1, 4),
                  slice(reverse(embedding), 1, 4),
@@ -67,8 +62,7 @@ object Unnest extends QueryPack {
     // Array-function family breadth (Presto ArrayFunctions: position,
     // overlap, slice, flatten, remove) over the document token arrays.
     "q7b_array_funcs" -> ((s, dir) => {
-      graft.functions.Registry.install(s)
-      Tables.view(s, dir, "documents")
+      s.table("documents")
         .filter(col("doc_id") < 100)
         .withColumn("w", split(col("text"), " "))
         .select(col("doc_id"),
@@ -104,7 +98,7 @@ object Unnest extends QueryPack {
     // sample being a subset of the corpus (anti-join emptiness). A
     // violated invariant flips a boolean and fails the gate loudly.
     "q84_sample_unique_id" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = s.table("documents")
       val sample = docs.sample(withReplacement = false, 0.5, 42L)
         .select(col("doc_id"), monotonically_increasing_id().as("uid"))
       val stats = sample

@@ -2,8 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Views / DDL surface (SURVEY §2; round-3 verdict "What's missing" #1).
   *
   * Reference: `CREATE VIEW` grammar
@@ -29,7 +27,6 @@ object Views extends QueryPack {
     // (testViewCaseSensitivity — Presto resolves view names
     // case-insensitively, as does Spark).
     "qc2_view_query" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql("""CREATE OR REPLACE TEMPORARY VIEW graft_v_rev AS
               |SELECT n.n_name, l.l_extendedprice * (1 - l.l_discount) AS rev
               |FROM lineitem l
@@ -49,7 +46,6 @@ object Views extends QueryPack {
     // SQL binds named markers at execution, the same
     // plan-once-bind-later contract. The oracle replays with literals.
     "qd7_prepared_params" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql(
         """SELECT o_orderpriority, count(*) AS n
           |FROM orders
@@ -73,8 +69,6 @@ object Views extends QueryPack {
     // gate needs determinism); a production deployment answers from
     // catalog statistics (ANALYZE, qq6) or approx_count_distinct.
     "qj0_show_stats" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       graft.functions.Registry.prestoStatement(s,
         """SHOW STATS FOR (SELECT l_orderkey, l_quantity, l_returnflag,
           |  l_shipdate FROM lineitem)""".stripMargin)
@@ -87,7 +81,6 @@ object Views extends QueryPack {
     // Spark catalog strings ('bigint'/'double'/'timestamp' — Presto
     // prints the same names for these), pinned by the oracle literally.
     "qk2_show_columns" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql("DESCRIBE TABLE lineitem")
         .select(col("col_name"), col("data_type"))
         .orderBy(col("col_name"))
@@ -104,7 +97,6 @@ object Views extends QueryPack {
     // 100 TB a SQL UDF costs exactly what its body costs). The listing
     // count rides along as a literal column (catalog metadata).
     "qn4_create_function" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(
               |  p DOUBLE, d DOUBLE) RETURNS DOUBLE
               |RETURN p * (1 - d)""".stripMargin)
@@ -130,8 +122,6 @@ object Views extends QueryPack {
     // coalesce(p, 0) so an unguarded call would return 'small' for
     // NULL: null_is_null = true PROVES the guard, not the body.
     "qn6_create_function_presto" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       s.sql(graft.functions.Registry.rewritePrestoSql(
         """CREATE OR REPLACE FUNCTION graft.default.order_band(p DOUBLE)
           |RETURNS VARCHAR
@@ -155,7 +145,6 @@ object Views extends QueryPack {
     // no data scan. The table listing is LIKE-filtered to fixture names
     // so other packs' session views can't leak into the lock.
     "qp3_show_metadata" -> ((s, dir) => {
-      Tables.register(s, dir)
       val dbs = s.sql("SHOW DATABASES")
         .select(col("namespace").as("name"))
         .withColumn("kind", lit("schema"))
@@ -171,8 +160,6 @@ object Views extends QueryPack {
     // with different bindings, then re-prepared after DEALLOCATE.
     // Complements qd7 (Spark's named-parameter API — the semantic twin).
     "qp5_prepare_execute" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       prestoStatement(s,
         """PREPARE graft_q FROM
@@ -199,8 +186,6 @@ object Views extends QueryPack {
     // OWN information_schema over the identical parquet, so the lock is
     // a genuine two-engine metadata agreement, not a replayed literal.
     "qp6_describe_table" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       graft.functions.Registry.prestoStatement(s, "DESCRIBE lineitem")
         .select(col("Column").as("column_name"),
           col("Type").as("data_type"))
@@ -216,8 +201,6 @@ object Views extends QueryPack {
     // filter pushed, the IO listing names exactly the scanned tables,
     // ANALYZE carries row-count metrics.
     "qp7_explain_surface" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val valid = prestoStatement(s,
         """EXPLAIN (TYPE VALIDATE)
@@ -265,8 +248,6 @@ object Views extends QueryPack {
     // shuffle join — then RESET restores the session's own prior
     // values. Unknown names fail loudly like the reference.
     "qp8_session_properties" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val priorShuffle = s.conf.get("spark.sql.shuffle.partitions")
       val priorBcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -311,8 +292,6 @@ object Views extends QueryPack {
     // Presto type signature and fixed-width size, from ANALYSIS only:
     // nothing executes, placeholders bind NULL for typing).
     "qp9_describe_input_output" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       prestoStatement(s,
         """PREPARE graft_din FROM
@@ -348,8 +327,6 @@ object Views extends QueryPack {
     // CREATE VIEW / FUNCTION replay session-created texts, DROP
     // FUNCTION removes from both catalog and the SHOW CREATE store.
     "qq0_txn_show_create" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val txnOk =
         prestoStatement(s, "START TRANSACTION").collect()(0)
@@ -397,8 +374,6 @@ object Views extends QueryPack {
     // DROP SCHEMA CASCADE removes schema and table. ALTER SCHEMA
     // RENAME stays descoped (Spark has no database rename).
     "qr1_schema_lifecycle" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       prestoStatement(s, "DROP SCHEMA IF EXISTS graft_sch CASCADE")
       prestoStatement(s, "CREATE SCHEMA graft_sch")
@@ -453,8 +428,6 @@ object Views extends QueryPack {
     // information_schema over the identical fixtures: both engines
     // agree on names, 1-based ordinal positions, and rendered types.
     "qz5_infoschema_columns" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       graft.functions.Registry.prestoStatement(s,
         """SELECT column_name, ordinal_position, data_type
           |FROM information_schema.columns
@@ -467,8 +440,6 @@ object Views extends QueryPack {
     // catalog-exploration queries look like. table_type is 'VIEW' in
     // both engines (the fixtures mount as views on both sides).
     "qz6_infoschema_query" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       graft.functions.Registry.prestoStatement(s,
         """SELECT t.table_name, t.table_type, count(*) AS n_cols
           |FROM information_schema.tables t
@@ -489,8 +460,6 @@ object Views extends QueryPack {
     // session-scoped metadata — the reference's AllowAllAccessControl
     // stance (metadata surface without enforcement).
     "qz7_roles_grants" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       graft.functions.Registry.resetSecurityState(s) // idempotent replays
       prestoStatement(s, "CREATE ROLE analyst")
@@ -709,7 +678,6 @@ object Views extends QueryPack {
     "q2x_session_property_manager" -> ((s, dir) => {
       import graft.plans.SessionPropertyManagers
       import graft.plans.SessionPropertyManagers.Context
-      graft.functions.Registry.install(s)
       val specs = SessionPropertyManagers.parse(
         """[
           |  { "user": "etl_.*",
@@ -800,7 +768,6 @@ object Views extends QueryPack {
       import graft.plans.FunctionNamespaces._
       import graft.plans.FunctionNamespaceManager
       import graft.sources.{GraftMySqlDriver, MySqlStore}
-      Tables.register(s, dir)
       GraftMySqlDriver.install()
       val url = "jdbc:mysql://graft-shim/g"
       val drv = "graft.sources.GraftMySqlDriver"
@@ -873,8 +840,6 @@ object Views extends QueryPack {
     }),
 
     "qn9_system_tables" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       prestoStatement(s, "SELECT 17 AS graft_probe_row")
       val nodes = prestoStatement(s,
@@ -936,17 +901,15 @@ object Views extends QueryPack {
     // stages), a completed stage carries positive input rows, and
     // timings are non-negative.
     "q3p_runtime_tasks" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       // a real distributed action so the store holds finished stages
-      Tables.view(s, dir, "lineitem").count()
+      s.table("lineitem").count()
       // an eagerly-executing ROUTED statement: its Spark jobs run inside
       // the statement's job group, so its stage rows carry the query id
       // (the correlation arm below joins tasks back to the query log)
       val at = s"graft_tasks_an_${Integer.toHexString(dir.hashCode)}"
       s.sql(s"DROP TABLE IF EXISTS $at")
-      Tables.view(s, dir, "nation").write.mode("overwrite")
+      s.table("nation").write.mode("overwrite")
         .option("path", Storage.ctasPath(s, dir) + "_tasks_an")
         .saveAsTable(at)
       prestoStatement(s, s"ANALYZE $at")
@@ -1006,8 +969,6 @@ object Views extends QueryPack {
     // + ColumnJdbcTable's jdbcDataType/columnSize), and the five
     // always-empty tables' exact column arity — present, not missing.
     "q3q_jdbc_metadata" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       graft.functions.Registry.prestoStatement(s,
         """SELECT k, v FROM (
           |  SELECT 'a_catalogs_current' AS k,
@@ -1071,8 +1032,6 @@ object Views extends QueryPack {
     // fixture views (the qz5 stance), CASE-mapped to the same
     // java.sql.Types facts — a genuine two-engine agreement.
     "q3r_jdbc_tables_columns" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       graft.functions.Registry.prestoStatement(s,
         """SELECT t.table_name, c.column_name, c.ordinal_position,
           |  c.data_type, c.type_name, c.column_size, c.num_prec_radix,
@@ -1103,7 +1062,6 @@ object Views extends QueryPack {
     "q3s_db_resource_groups" -> ((s, dir) => {
       import graft.plans.{DbResourceGroupManager, ResourceGroups}
       import graft.sources.{GraftMySqlDriver, MySqlStore}
-      Tables.register(s, dir)
       GraftMySqlDriver.install()
       val url = "jdbc:mysql://graft-shim/g"
       val drv = "graft.sources.GraftMySqlDriver"
@@ -1313,8 +1271,6 @@ object Views extends QueryPack {
     // SortMergeJoin, RESET restores broadcast) and
     // join_reordering_strategy drives the CBO join-reorder rule.
     "q3t_session_registry" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.prestoStatement
       val phases =
         scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -1424,8 +1380,6 @@ object Views extends QueryPack {
     // (ALTER FUNCTION) are not re-admitted.
     "q3u_statement_admission" -> ((s, dir) => {
       import graft.plans.ResourceGroups
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.{installResourceGroups,
         prestoStatement, uninstallResourceGroups}
       val phases =
@@ -1562,8 +1516,6 @@ object Views extends QueryPack {
     // QueryFailureInfo, session properties/catalog/schema ride in the
     // QueryContext, and a removed listener hears nothing.
     "q3v_event_listeners" -> ((s, dir) => {
-      Tables.register(s, dir)
-      graft.functions.Registry.install(s)
       import graft.functions.Registry.{addQueryEventListener,
         prestoStatement, removeQueryEventListener}
       import graft.plans.QueryEvents._
@@ -1665,7 +1617,6 @@ object Views extends QueryPack {
     // testViewMetadata analog: created views appear in catalog listings
     // with their temporary-ness, without scanning any data.
     "qc3_view_metadata" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql("CREATE OR REPLACE TEMPORARY VIEW graft_v_meta1 AS SELECT 1 AS x")
       s.sql("CREATE OR REPLACE TEMPORARY VIEW graft_v_meta2 AS SELECT 2 AS y")
       s.catalog.listTables()

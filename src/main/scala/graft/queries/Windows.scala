@@ -1,10 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Window functions: ranking, analytic (lag/lead/first/last/nth), aggregates
   * over ROWS and RANGE frames, and rank-based top-N-per-group.
@@ -23,8 +20,6 @@ import graft.Tables
   */
 object Windows extends QueryPack {
 
-  private def t(s: SparkSession, dir: String, n: String) = Tables.view(s, dir, n)
-
   override def defs: Map[String, Q] = Map(
     // GROUPS frames (SqlBase.g4 has no GROUPS either — Presto matches
     // Spark here — but DuckDB implements the ANSI frame, making it a
@@ -36,7 +31,6 @@ object Windows extends QueryPack {
     // oracle runs DuckDB's NATIVE GROUPS frame over the raw key,
     // proving the equivalence rather than replaying the rewrite.
     "qn7_groups_frame" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql(
         """WITH t AS (SELECT l_orderkey, l_linenumber, l_quantity,
           |    l_extendedprice
@@ -60,7 +54,7 @@ object Windows extends QueryPack {
     "q30_window_rank" -> ((s, dir) => {
       val w = Window.partitionBy(col("c_nationkey"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      t(s, dir, "customer")
+      s.table("customer")
         .filter(col("c_nationkey") < 5)
         .select(
           col("c_nationkey"), col("c_custkey"), col("c_acctbal"),
@@ -76,7 +70,7 @@ object Windows extends QueryPack {
     "q31_running_sum" -> ((s, dir) => {
       val ord = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .filter(col("l_suppkey") <= 5)
         .select(
           col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
@@ -91,7 +85,7 @@ object Windows extends QueryPack {
     "q32_lead_lag" -> ((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders")
+      s.table("orders")
         .filter(col("o_custkey") <= 100)
         .select(
           col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
@@ -104,7 +98,7 @@ object Windows extends QueryPack {
       val full = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      t(s, dir, "orders")
+      s.table("orders")
         .filter(col("o_custkey") <= 100)
         .select(
           col("o_custkey"), col("o_orderkey"),
@@ -116,7 +110,6 @@ object Windows extends QueryPack {
     // RANGE frame over a numeric order key: peers counted by value distance.
     // (SQL form: the typed rangeBetween API only accepts long offsets.)
     "q34_range_frame" -> ((s, dir) => {
-      Tables.register(s, dir)
       s.sql(
         """SELECT o_orderstatus, o_orderkey, o_totalprice,
           | count(*) OVER w AS n_within_5k,
@@ -130,7 +123,7 @@ object Windows extends QueryPack {
     "q35_top3_per_nation" -> ((s, dir) => {
       val w = Window.partitionBy(col("c_nationkey"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      t(s, dir, "customer")
+      s.table("customer")
         .select(col("c_nationkey"), col("c_custkey"), col("c_acctbal"),
           row_number().over(w).as("rn"))
         .filter(col("rn") <= 3)
@@ -140,7 +133,7 @@ object Windows extends QueryPack {
     // Unordered whole-partition aggregate window: share-of-total.
     "q36_revenue_share" -> ((s, dir) => {
       val w = Window.partitionBy(col("l_returnflag"))
-      t(s, dir, "lineitem")
+      s.table("lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_extendedprice")).as("rev"))
         .select(col("l_returnflag"), col("l_linestatus"),
@@ -155,7 +148,7 @@ object Windows extends QueryPack {
     // balances.
     "q37_ignore_nulls" -> ((s, dir) => {
       val w = Window.partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-      t(s, dir, "customer")
+      s.table("customer")
         .withColumn("pos_bal",
           when(col("c_acctbal") >= 0, col("c_acctbal")))
         .select(col("c_custkey"), col("c_nationkey"), col("pos_bal"),
@@ -172,7 +165,7 @@ object Windows extends QueryPack {
     // NULLS FIRST — a real portability trap; both sides are explicit
     // here so the contract is pinned, not inherited).
     "q38_null_ordering" -> ((s, dir) =>
-      t(s, dir, "customer")
+      s.table("customer")
         .withColumn("pos_bal",
           when(col("c_acctbal") >= 0, col("c_acctbal")))
         .filter(col("c_custkey") <= 200)

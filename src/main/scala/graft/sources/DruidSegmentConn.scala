@@ -104,16 +104,26 @@ object DruidStore {
     ds
   }
 
-  /** Ingest one row into its interval's segment (`__time` floored at
-    * the granularity — Druid's segment assignment). */
+  /** The interval `[start, end)` of the segment that holds `tsMs`:
+    * `__time` floored at the granularity `g` (Druid's segment
+    * assignment), cut to the bigint range. The first segment starts at
+    * Long.MinValue and the last one is open above (`end` None), so no
+    * bound wraps where `g` does not divide 2^63. */
+  def interval(tsMs: Long, g: Long): (Long, Option[Long]) = {
+    val n = Math.floorDiv(tsMs, g)
+    (if (n < Long.MinValue / g) Long.MinValue else n * g,
+      if (n >= Long.MaxValue / g) None else Some((n + 1) * g))
+  }
+
+  /** Ingest one row into its interval's segment, keyed by the
+    * interval's start. */
   def ingest(name: String, tsMs: Long, dims: Seq[String],
       metrics: Seq[Any]): Unit = {
     val ds = datasource(name)
     require(dims.length == ds.defn.dims.length &&
       metrics.length == ds.defn.metrics.length,
       "graft-druid: row arity mismatch")
-    val start = Math.floorDiv(tsMs, ds.defn.granularityMs) *
-      ds.defn.granularityMs
+    val start = interval(tsMs, ds.defn.granularityMs)._1
     val seg = ds.segments.computeIfAbsent(start, new Segment(_))
     seg.synchronized { seg.rows += ((tsMs, dims, metrics)) }
   }
@@ -373,9 +383,11 @@ class DruidScan(dsName: String, spec: DruidQuerySpec,
     val times = (spec.domain.get("__time") ++ runtimeTimes)
       .reduceOption(_ intersect _)
     ds.segments.keySet().asScala.toSeq.sorted
-      .filter(start => times.forall(_.overlaps(Range(Some(Bound(start, true)),
-        if (start > Long.MaxValue - g) None
-        else Some(Bound(start + g, false))))))
+      .filter { start =>
+        val (lo, hi) = DruidStore.interval(start, g)
+        times.forall(_.overlaps(
+          Range(Some(Bound(lo, true)), hi.map(Bound(_, false)))))
+      }
       .map(start =>
         DruidSegmentSplit(dsName, start, spec, required): InputPartition)
       .toArray

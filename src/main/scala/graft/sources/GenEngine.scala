@@ -1,8 +1,11 @@
 package graft.sources
 
+import java.util
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
@@ -25,6 +28,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 trait ClosedFormGen extends Serializable {
   /** connector short name, used in scan descriptions */
   def genName: String
+  /** the family's table names, as its catalog lists them */
+  def tables: Seq[String]
   def rowCount(table: String, sf: Double): Long
   /** monotone primary-key column; predicates on it prune generation */
   def keyColumn(table: String): String
@@ -51,6 +56,89 @@ class GenTable(gen: ClosedFormGen, table: String, sf: Double, parts: Int)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GenScanBuilder(gen, table, sf, parts)
 }
+
+/** The catalog face of a generator family — Presto's `tpch` / `tpcds`
+  * catalog spelling verbatim (`presto-tpch/.../TpchMetadata.java`
+  * schemas `tiny, sf1, sf100, ...`; `SELECT * FROM tpch.tiny.orders`):
+  * a DataSource V2 TableCatalog whose namespaces are scale factors and
+  * whose tables are the family's generators. Wired in Sessions.local by
+  * class name, so the qualified SQL spelling resolves with no
+  * registration step:
+  * {{{ SELECT count(*) FROM graft_tpch.tiny.orders }}}
+  *
+  * Namespaces: `tiny` = sf 0.01 (the reference's convention) and
+  * `sfN` for integer N (sf1, sf10, ...). Read-only — DDL against the
+  * generator fails loudly, like the reference's generator connectors.
+  */
+abstract class GenCatalog(gen: ClosedFormGen)
+    extends TableCatalog with SupportsNamespaces {
+
+  private var catalogName = gen.genName.replace('-', '_')
+  private val namedSfs = Seq("tiny", "sf1", "sf10", "sf100", "sf1000")
+
+  override def initialize(name: String,
+      options: CaseInsensitiveStringMap): Unit = catalogName = name
+
+  override def name(): String = catalogName
+
+  private def sfOf(namespace: Array[String]): Option[Double] =
+    namespace match {
+      case Array("tiny") => Some(0.01)
+      case Array(s) if s.matches("(?i)sf\\d+") => Some(s.drop(2).toDouble)
+      case _ => None
+    }
+
+  private def ro = new UnsupportedOperationException(
+    s"$catalogName is a read-only generator catalog")
+
+  override def listTables(namespace: Array[String]): Array[Identifier] = {
+    require(sfOf(namespace).isDefined,
+      s"$catalogName: unknown schema ${namespace.mkString(".")}")
+    gen.tables.map(Identifier.of(namespace, _)).toArray
+  }
+
+  override def loadTable(ident: Identifier): Table = {
+    val sf = sfOf(ident.namespace()).getOrElse(
+      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
+    if (!gen.tables.contains(ident.name().toLowerCase))
+      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
+    new GenTable(gen, ident.name().toLowerCase, sf, 8)
+  }
+
+  override def createTable(ident: Identifier, schema: StructType,
+      partitions: Array[Transform],
+      properties: util.Map[String, String]): Table = throw ro
+  override def alterTable(ident: Identifier, changes: TableChange*): Table =
+    throw ro
+  override def dropTable(ident: Identifier): Boolean = throw ro
+  override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
+    throw ro
+
+  override def listNamespaces(): Array[Array[String]] =
+    namedSfs.map(Array(_)).toArray
+  override def listNamespaces(namespace: Array[String]): Array[Array[String]] =
+    if (namespace.isEmpty) listNamespaces() else Array.empty
+  override def namespaceExists(namespace: Array[String]): Boolean =
+    sfOf(namespace).isDefined
+  override def loadNamespaceMetadata(
+      namespace: Array[String]): util.Map[String, String] = {
+    require(sfOf(namespace).isDefined,
+      s"$catalogName: unknown schema ${namespace.mkString(".")}")
+    util.Collections.emptyMap()
+  }
+  override def createNamespace(namespace: Array[String],
+      metadata: util.Map[String, String]): Unit = throw ro
+  override def alterNamespace(namespace: Array[String],
+      changes: NamespaceChange*): Unit = throw ro
+  override def dropNamespace(namespace: Array[String],
+      cascade: Boolean): Boolean = throw ro
+}
+
+/** `graft_tpch`: the seven TPC-H generators (`tpch.tiny.orders`). */
+class TpchCatalog extends GenCatalog(TpchGen)
+
+/** `graft_tpcds`: the 24 TPC-DS generators (`tpcds.tiny.store_sales`). */
+class TpcdsCatalog extends GenCatalog(TpcdsGen)
 
 /** Column pruning + key-range predicate pushdown: a key filter whose
   * [[Domain]] is a range or one non-negative value is fully absorbed

@@ -36,6 +36,9 @@ object TpchGen extends ClosedFormGen {
 
   override def genName: String = "graft-tpch"
 
+  val tables: Seq[String] = Seq("lineitem", "orders", "customer", "supplier",
+    "part", "nation", "region")
+
   /** Shared mixing hash — nonneg, overflow-free in any 64-bit engine:
     * max k·2654435761 ≈ 1.6e16 « 2^63. Replayed verbatim in DuckDB. */
   @inline def h(k: Long, salt: Long): Long =

@@ -165,4 +165,24 @@ class DruidSegmentSuite extends GraftSuite {
     assert(n(col("__time") >= lit(Long.MinValue)) == 60)
     assert(n(col("__time") < lit(Long.MinValue)) == 0)
   }
+
+  test("a row at Long.MinValue keeps a segment that starts there") {
+    // An hour does not divide 2^63: flooring Long.MinValue to the hour
+    // lies below the bigint range, and an unclamped start wrapped to a
+    // positive segment that `__time < 0` pruned.
+    val name = "dr_min"
+    DruidStore.drop(name)
+    DruidStore.create(name, granularityMs = Hour, dims = Seq("site"),
+      metrics = Seq("hits" -> LongType))
+    DruidStore.ingestBatch(name, Seq(
+      (Long.MinValue, Seq("a"), Seq(1L)), (0L, Seq("b"), Seq(2L)),
+      (Long.MaxValue, Seq("c"), Seq(3L))))
+    assert(DruidStore.segmentCount(name) == 3)
+    def sites(f: org.apache.spark.sql.Column) =
+      read(name).filter(f).select("site").collect().map(_.getString(0)).sorted
+    assert(sites(col("__time") < lit(0L)).toSeq == Seq("a"))
+    assert(sites(col("__time") <= lit(Long.MinValue + Hour)).toSeq == Seq("a"))
+    assert(sites(col("__time") >= lit(0L)).toSeq == Seq("b", "c"))
+    assert(sites(col("__time") > lit(Long.MaxValue - Hour)).toSeq == Seq("c"))
+  }
 }

@@ -39,6 +39,21 @@ class QueriesSmokeSuite extends GraftSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("a gate plans the same whichever gate ran before it") {
+    // q2j answers with a literal relation. Planned on a session no gate
+    // had prepared, ConvertToLocalRelation folded its projection into
+    // the relation; after an earlier gate's Registry.install it did not.
+    val q = SparkEntry.queries
+    def plan(s: org.apache.spark.sql.SparkSession): String =
+      try PlanDump.mask(q("q2j_kudu_runtime_pruning")(s, SfDir)
+        .queryExecution.optimizedPlan.toString)
+      finally sources.Stores.releaseAll()
+    val first = plan(spark.newSession())
+    val after = spark.newSession()
+    q("qb5_tpch_q1_sql")(after, SfDir).collect()
+    assert(plan(after) == first)
+  }
+
   test("view query inlines: lineitem scan pruned through two view layers") {
     // qc2 reads lineitem through graft_v_rev -> graft_v_rev_by_nation;
     // Catalyst must inline both views so column pruning reaches the scan

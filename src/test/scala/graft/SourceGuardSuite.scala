@@ -11,8 +11,9 @@ import scala.jdk.CollectionConverters._
   * read plumbing (providers, reader factories, readers) lives only in
   * sources/Connector.scala, queries/ makes its scratch files only
   * under Scratch, one Greiner–Hormann clipper answers every polygon
-  * boolean op, parquet is read only through Tables' lean format, and
-  * Spark's pushed filters are translated only in sources/Domain.scala. */
+  * boolean op, parquet is read only through Tables' lean format,
+  * Spark's pushed filters are translated only in sources/Domain.scala,
+  * and a gate's session is prepared only in SparkEntry.queries. */
 class SourceGuardSuite extends GraftSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -87,6 +88,14 @@ class SourceGuardSuite extends GraftSuite {
     val found = sourcesWhere(_.contains("java.io.tmpdir"))
       .filter(_.startsWith("graft/queries/"))
     assert(found.isEmpty, s"java.io.tmpdir in $found")
+  }
+
+  test("queries/ leaves session preparation to SparkEntry") {
+    for (call <- Seq("Registry.install(", "Tables.register(", "Tables.view(")) {
+      val found = sourcesWhere(_.contains(call))
+        .filter(_.startsWith("graft/queries/"))
+      assert(found.isEmpty, s"$call in $found: SparkEntry.queries prepares it")
+    }
   }
 
   test(".read.parquet( appears only in Tables") {
